@@ -1,6 +1,6 @@
 """Whole-Dataset categorical encoding driven by the feature schema.
 
-Fits one :class:`~replay_spark.preprocessing.label_encoder.LabelEncodingRule`
+Builds one :class:`~replay_spark.preprocessing.label_encoder.LabelEncodingRule`
 (or ``SequenceEncodingRule`` for ``CATEGORICAL_LIST`` columns) per
 categorical feature of a :class:`~replay_spark.data.Dataset`, choosing
 the fit table by role: id columns fit on their feature table when one
@@ -8,9 +8,12 @@ exists (its id universe is a superset of the interactions' by the
 Dataset consistency contract), everything else fits on its source
 table. Parity: reference ``data/dataset_utils/dataset_label_encoder.py:20``.
 
-Every mapping stays a Spark DataFrame joined at transform time — the
-whole-dataset encode is a chain of broadcast-or-shuffle joins, no
-driver-side dictionaries at any cardinality.
+All rules are fitted together in ONE Spark action: their distinct
+values are stacked and numbered at once, and each mapping is a lazy
+projection over the shared persisted code table, which this encoder
+owns. Every mapping stays a Spark DataFrame joined at transform time
+(no driver-side dictionaries at any cardinality), and a transform
+runs a single unknown-value check covering every ``'error'`` column.
 """
 
 from __future__ import annotations
@@ -29,17 +32,45 @@ from replay_spark.preprocessing.label_encoder import (
     LabelEncoder,
     LabelEncodingRule,
     SequenceEncodingRule,
+    _fit_rules,
+    _raise_on_unknown,
+    _release,
 )
 
 __all__ = ["DatasetLabelEncoder", "LabelEncoderTransformWarning"]
+
+_TABLE_BY_SOURCE = {
+    FeatureSource.INTERACTIONS: "interactions",
+    FeatureSource.QUERY_FEATURES: "query_features",
+    FeatureSource.ITEM_FEATURES: "item_features",
+}
+_FEATURE_TABLE_BY_HINT = {
+    FeatureHint.QUERY_ID: "query_features",
+    FeatureHint.ITEM_ID: "item_features",
+}
 
 
 class LabelEncoderTransformWarning(Warning):
     """A categorical column could not be transformed as fitted."""
 
 
+def _target_tables(info, dataset: Dataset) -> list:
+    """The Dataset attributes a fitted column is encoded in; the last
+    one is its fit table."""
+    feature_table = _FEATURE_TABLE_BY_HINT.get(info.feature_hint)
+    if feature_table is None:
+        return [_TABLE_BY_SOURCE[info.feature_source]]
+    if getattr(dataset, feature_table) is None:
+        return ["interactions"]
+    return ["interactions", feature_table]
+
+
 class DatasetLabelEncoder:
-    """Encode every categorical feature of a Dataset to dense ids."""
+    """Encode every categorical feature of a Dataset to dense ids.
+
+    Owns the code table its ``fit`` persists and unpersists it on the
+    next ``fit``; rules handed out by :meth:`get_encoder` read it.
+    """
 
     def __init__(
         self,
@@ -49,52 +80,48 @@ class DatasetLabelEncoder:
         self._handle_unknown_rule = handle_unknown_rule
         self._default_value_rule = default_value_rule
         self._encoding_rules: dict[str, LabelEncodingRule] = {}
+        self._fit_tables: dict[str, str] = {}
         self._features_columns: dict = {}
+        self._tables: list = []
 
     def fit(self, dataset: Dataset) -> "DatasetLabelEncoder":
-        """Fit one encoding rule per categorical feature."""
+        """Fit one encoding rule per categorical feature, all in one
+        Spark action."""
         self._fill_features_columns(dataset.feature_schema)
+        rules, fit_tables = {}, {}
         for column, info in dataset.feature_schema.categorical_features.items():
             rule_cls = (
                 SequenceEncodingRule
                 if info.feature_type == FeatureType.CATEGORICAL_LIST
                 else LabelEncodingRule
             )
-            rule = rule_cls(
+            rules[column] = rule_cls(
                 column,
                 handle_unknown=self._handle_unknown_rule,
                 default_value=self._default_value_rule,
             )
-            if info.feature_hint == FeatureHint.QUERY_ID:
-                rule.fit(
-                    dataset.interactions
-                    if dataset.query_features is None
-                    else dataset.query_features
-                )
-            elif info.feature_hint == FeatureHint.ITEM_ID:
-                rule.fit(
-                    dataset.interactions
-                    if dataset.item_features is None
-                    else dataset.item_features
-                )
-            elif info.feature_source == FeatureSource.INTERACTIONS:
-                rule.fit(dataset.interactions)
-            elif info.feature_source == FeatureSource.QUERY_FEATURES:
-                rule.fit(dataset.query_features)
-            elif info.feature_source == FeatureSource.ITEM_FEATURES:
-                rule.fit(dataset.item_features)
-            else:  # pragma: no cover - sources are filled by Dataset
-                raise AssertionError(f"Unknown feature source for {column}")
-            self._encoding_rules[column] = rule
+            fit_tables[column] = _target_tables(info, dataset)[-1]
+        _release(self._tables)
+        self._tables = _fit_rules(
+            [(rules[c], getattr(dataset, fit_tables[c])) for c in rules]
+        )
+        self._encoding_rules, self._fit_tables = rules, fit_tables
         return self
 
     def transform(self, dataset: Dataset) -> Dataset:
         """Return a new Dataset with all fitted columns encoded."""
-        self._check_if_initialized()
-        interactions = dataset.interactions
-        query_features = dataset.query_features
-        item_features = dataset.item_features
+        return self._transform(dataset)
 
+    def _transform(self, dataset: Dataset, fitted_on_it: bool = False) -> Dataset:
+        """``fitted_on_it``: ``dataset`` is the one just fitted, so a
+        column encoded in its own fit table needs no unknown check
+        unless its fit saw a null."""
+        self._check_if_initialized()
+        tables = {
+            name: getattr(dataset, name)
+            for name in ("interactions", "query_features", "item_features")
+        }
+        probes = []
         for column, info in dataset.feature_schema.categorical_features.items():
             rule = self._encoding_rules.get(column)
             if rule is None:
@@ -104,32 +131,20 @@ class DatasetLabelEncoder:
                     LabelEncoderTransformWarning,
                 )
                 continue
-            if info.feature_hint == FeatureHint.QUERY_ID:
-                interactions = rule.transform(interactions)
-                if query_features is not None:
-                    query_features = rule.transform(query_features)
-            elif info.feature_hint == FeatureHint.ITEM_ID:
-                interactions = rule.transform(interactions)
-                if item_features is not None:
-                    item_features = rule.transform(item_features)
-            elif info.feature_source == FeatureSource.INTERACTIONS:
-                interactions = rule.transform(interactions)
-            elif info.feature_source == FeatureSource.QUERY_FEATURES:
-                query_features = rule.transform(query_features)
-            else:
-                item_features = rule.transform(item_features)
-
+            for name in _target_tables(info, dataset):
+                own_table = fitted_on_it and name == self._fit_tables[column]
+                probes += rule._probes(tables[name], own_table)
+                tables[name] = rule._encode(tables[name])
+        _raise_on_unknown(probes)
         return Dataset(
             feature_schema=dataset.feature_schema,
-            interactions=interactions,
-            query_features=query_features,
-            item_features=item_features,
             check_consistency=False,
             categorical_encoded=True,
+            **tables,
         )
 
     def fit_transform(self, dataset: Dataset) -> Dataset:
-        return self.fit(dataset).transform(dataset)
+        return self.fit(dataset)._transform(dataset, fitted_on_it=True)
 
     def get_encoder(
         self, columns: Union[str, Iterable[str]]

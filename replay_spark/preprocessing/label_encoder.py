@@ -5,15 +5,22 @@ the key scale fix flagged in SURVEY §4: the fitted mapping stays a
 DataFrame joined at transform time — the reference pulls it to the
 driver with ``rdd.collectAsMap`` (``label_encoder.py:185``), which
 dies at 10^9 distinct ids; a broadcast-or-shuffle join does not.
+
+Fitting numbers every column of a fit in ONE Spark action
+(:func:`_number_columns`), and a transform runs at most one
+unknown-value check, covering every ``handle_unknown='error'`` rule.
 """
 
 from __future__ import annotations
 
 import json
+import operator
+from functools import reduce
 from pathlib import Path
 from typing import Optional, Sequence, Union
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 __all__ = ["LabelEncodingRule", "SequenceEncodingRule", "LabelEncoder"]
@@ -21,53 +28,138 @@ __all__ = ["LabelEncodingRule", "SequenceEncodingRule", "LabelEncoder"]
 _HANDLE_UNKNOWN = ("error", "use_default_value", "drop")
 
 
-def _dense_ordered_codes(
-    distinct_df: DataFrame, column: str, encoded_column: str, offset: int = 0
-) -> DataFrame:
-    """Dense codes ``offset..offset+n-1`` in ascending ``column`` order
-    WITHOUT a single-task global sort. Returns a MATERIALIZED
-    (cached) mapping DataFrame.
+def _number_columns(
+    values: Sequence[DataFrame], bases: Sequence[int]
+) -> tuple[DataFrame, list]:
+    """Dense ascending codes for several columns in ONE Spark action.
 
-    Two-phase numbering (the ``zipWithIndex`` pattern):
-    range-partition by the value (contiguous, ordered ranges), number
-    rows within each partition, then add per-partition offsets. The
-    offsets come from an O(#partitions) driver-side cumsum of the
-    per-partition counts — bounded by ``spark.sql.shuffle.partitions``,
-    not by the data — broadcast back as a tiny join table, so the plan
-    has no single-partition exchange at any cardinality.
+    ``values[i]`` is a one-column frame (column ``_v``) of column
+    ``i``'s fit values; its codes start at ``bases[i]``. Returns the
+    persisted code table and, per column, ``(mapping, saw_null)``:
+    ``mapping`` is a lazy ``(_v, _code)`` projection over the table and
+    ``saw_null`` says whether the fit values held a null (which, as in
+    the reference's ``row_number().over(orderBy)``, takes the first
+    code).
+
+    The distinct values of every column are stacked into one frame
+    ``(_c, _v0.._vn)``, each ``_vi`` keeping its column's type (null
+    outside column ``i``'s rows). The frame is range-partitioned and
+    sorted within partitions by ``(_c, _v0.._vn)``, so each column's
+    values run in ascending order over contiguous partitions, and
+    ``_local`` is the row's 0-based index in its partition
+    (``monotonically_increasing_id`` minus the partition bits): no
+    single-task sort and no window exchange. The one action is a
+    ``groupBy(_pid, _c)`` collect of row counts and null flags;
+    from it the driver computes, per column and partition, the offset
+    that turns ``_local`` into the code: the column's rows in earlier
+    partitions, minus the rows of earlier columns in the same
+    partition. That is O(partitions x columns) driver work, and the
+    offsets ride each mapping's plan as an array literal.
+
+    The table is persisted MEMORY_AND_DISK: evicted blocks spill
+    instead of being dropped, so the codes every mapping reads are
+    never renumbered by a recompute. The caller owns the table and
+    unpersists it when it is refitted.
     """
-    spark = distinct_df.sparkSession
-    numbered = (
-        distinct_df.repartitionByRange(F.col(column))
+    keys = [f"_v{i}" for i in range(len(values))]
+    types = [v.schema["_v"].dataType for v in values]
+    stacked = reduce(
+        DataFrame.unionByName,
+        [
+            v.select(
+                F.lit(i).alias("_c"),
+                *[
+                    (F.col("_v") if j == i else F.lit(None).cast(t)).alias(k)
+                    for j, (k, t) in enumerate(zip(keys, types))
+                ],
+            )
+            for i, v in enumerate(values)
+        ],
+    ).distinct()
+    order = ["_c", *keys]
+    table = (
+        stacked.repartitionByRange(*order)
+        .sortWithinPartitions(*order)
         .withColumn("_pid", F.spark_partition_id())
         .withColumn(
             "_local",
-            F.row_number()
-            .over(Window.partitionBy("_pid").orderBy(column))
-            .cast("long")
-            - 1,
+            F.monotonically_increasing_id()
+            - F.shiftleft(F.col("_pid").cast("long"), 33),
         )
-        .persist()
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    counts = sorted(
-        (r["_pid"], r["count"])
-        for r in numbered.groupBy("_pid").count().collect()
-    )
-    rows, acc = [], int(offset)
-    for pid, cnt in counts:
-        rows.append((pid, acc))
-        acc += cnt
-    from replay_spark.utils.spark_utils import local_df
+    all_null = reduce(operator.and_, [F.col(k).isNull() for k in keys])
+    stats = table.groupBy("_pid", "_c").agg(
+        F.count(F.lit(1)).alias("n"), F.max(all_null).alias("has_null")
+    ).collect()
+    counts = {(r["_c"], r["_pid"]): r["n"] for r in stats}
+    saw_null = [False] * len(values)
+    for r in stats:
+        saw_null[r["_c"]] = saw_null[r["_c"]] or r["has_null"]
+    n_parts = max((r["_pid"] for r in stats), default=0) + 1
+    offsets = [[0] * n_parts for _ in values]
+    before = [int(b) for b in bases]  # column c's codes in earlier partitions
+    for pid in range(n_parts):
+        earlier = 0  # rows of earlier columns in this partition
+        for c in range(len(values)):
+            offsets[c][pid] = before[c] - earlier
+            n = counts.get((c, pid), 0)
+            before[c] += n
+            earlier += n
+    mappings = [
+        (
+            table.filter(F.col("_c") == c).select(
+                F.col(keys[c]).alias("_v"),
+                (
+                    F.col("_local")
+                    + F.element_at(
+                        F.array(*map(F.lit, offsets[c])).cast("array<bigint>"),
+                        F.col("_pid") + 1,
+                    )
+                ).alias("_code"),
+            ),
+            saw_null[c],
+        )
+        for c in range(len(values))
+    ]
+    return table, mappings
 
-    offsets = local_df(spark, rows, "_pid int, _offset long")
-    out = numbered.join(F.broadcast(offsets), on="_pid").select(
-        column,
-        (F.col("_local") + F.col("_offset")).alias(encoded_column),
+
+def _fit_rules(fits: Sequence[tuple]) -> list:
+    """Fit every ``(rule, df)`` pair in one action; returns the code
+    tables persisted (none for no rules), which the caller owns."""
+    if not fits:
+        return []
+    table, mappings = _number_columns(
+        [rule._fit_values(df) for rule, df in fits], [0] * len(fits)
     )
-    out = out.cache()
-    out.count()
-    numbered.unpersist()
-    return out
+    for (rule, _), (mapping, saw_null) in zip(fits, mappings):
+        rule._set_fit(mapping, saw_null)
+    return [table]
+
+
+def _release(tables: Sequence[DataFrame]) -> None:
+    for table in tables:
+        table.unpersist()
+
+
+def _raise_on_unknown(probes: Sequence[tuple]) -> None:
+    """One ``limit(1)`` action over every ``(column, unknown_rows)``
+    probe; the error names the column of the row it found."""
+    if not probes:
+        return
+    found = (
+        reduce(
+            DataFrame.unionByName,
+            [rows.select(F.lit(column).alias("_column")) for column, rows in probes],
+        )
+        .limit(1)
+        .collect()
+    )
+    if found:
+        raise ValueError(
+            f"Found unknown values in column {found[0]['_column']} during transform"
+        )
 
 
 class LabelEncodingRule:
@@ -75,10 +167,14 @@ class LabelEncodingRule:
 
     Same mapping as the reference's ``distinct`` +
     ``row_number().over(Window.orderBy(col)) - 1``
-    (``label_encoder.py:172-185``) but numbered with the two-phase
-    range-partition scheme — no single-task global sort.
-    ``partial_fit`` appends codes for unseen values after the
-    current max.
+    (``label_encoder.py:172-185``) but numbered by
+    :func:`_number_columns`: no single-task global sort. The mapping
+    is a lazy projection over a persisted code table. A standalone
+    ``fit``/``partial_fit`` owns the tables it persisted and releases
+    them on the next ``fit``; a rule fitted by a :class:`LabelEncoder`
+    or ``DatasetLabelEncoder`` shares that owner's table and never
+    releases it. ``partial_fit`` appends codes for unseen values after
+    the current max.
     """
 
     def __init__(
@@ -95,6 +191,8 @@ class LabelEncodingRule:
         self.handle_unknown = handle_unknown
         self.default_value = default_value
         self._mapping_df: Optional[DataFrame] = None
+        self._tables: list = []  # code tables this rule's own fits persisted
+        self._fit_saw_null = True  # unknown unless this rule's fit saw its data
         if mapping is not None:
             from replay_spark.utils.spark_utils import local_df
 
@@ -141,46 +239,78 @@ class LabelEncodingRule:
             for row in self._mapping_df.collect()
         }
 
-    def fit(self, df: DataFrame) -> "LabelEncodingRule":
-        self._mapping_df = _dense_ordered_codes(
-            df.select(self.column).distinct(), self.column, self.encoded_column
+    def _fit_values(self, df: DataFrame) -> DataFrame:
+        """The values this rule numbers, as one column ``_v``."""
+        return df.select(F.col(self.column).alias("_v"))
+
+    def _unknown_values(self, df: DataFrame) -> DataFrame:
+        """Rows of ``df`` whose value has no code (nulls included)."""
+        return self._fit_values(df).join(
+            self._mapping_df.select(F.col(self.column).alias("_v")),
+            on="_v",
+            how="left_anti",
         )
+
+    def _set_fit(self, mapping: DataFrame, saw_null: bool) -> None:
+        self._mapping_df = mapping.select(
+            F.col("_v").alias(self.column),
+            F.col("_code").alias(self.encoded_column),
+        )
+        self._fit_saw_null = saw_null
         self._is_fitted = True
+
+    def fit(self, df: DataFrame) -> "LabelEncodingRule":
+        _release(self._tables)
+        self._tables = _fit_rules([(self, df)])
         return self
 
     def partial_fit(self, df: DataFrame) -> "LabelEncodingRule":
         if not self._is_fitted:
             return self.fit(df)
-        old = self._mapping_df
+        old, old_saw_null = self._mapping_df, self._fit_saw_null
         max_code = old.agg(F.max(self.encoded_column)).first()[0]
-        new_values = _dense_ordered_codes(
-            df.select(self.column)
-            .distinct()
-            .join(old.select(self.column), on=self.column, how="left_anti"),
-            self.column,
-            self.encoded_column,
-            offset=max_code + 1,
+        new_values = self._fit_values(df).join(
+            old.select(F.col(self.column).alias("_v")), on="_v", how="left_anti"
         )
-        merged = old.unionByName(new_values).cache()
-        merged.count()
-        old.unpersist()
-        new_values.unpersist()
-        self._mapping_df = merged
+        # older tables stay persisted: the merged mapping still reads them
+        table, [(mapping, saw_null)] = _number_columns(
+            [new_values], [0 if max_code is None else max_code + 1]
+        )
+        self._tables.append(table)
+        self._set_fit(mapping, old_saw_null or saw_null)
+        self._mapping_df = old.unionByName(self._mapping_df)
         return self
 
-    def transform(self, df: DataFrame) -> DataFrame:
+    def _probes(self, df: DataFrame, fitted_on_df: bool = False) -> list:
+        """The unknown-value probe ``transform(df)`` must run: none
+        unless ``handle_unknown='error'``, and none when ``df`` is the
+        table this rule was just fitted on and the fit saw no null,
+        where unknowns are impossible by construction."""
+        if self.handle_unknown != "error" or (
+            fitted_on_df and not self._fit_saw_null
+        ):
+            return []
+        return [(self.column, self._unknown_values(df))]
+
+    def _check_fitted(self) -> None:
         if not self._is_fitted:
-            raise RuntimeError("LabelEncodingRule is not fitted")
+            raise RuntimeError(f"{type(self).__name__} is not fitted")
+
+    def transform(self, df: DataFrame) -> DataFrame:
+        return self._transform(df)
+
+    def _transform(self, df: DataFrame, fitted_on_df: bool = False) -> DataFrame:
+        self._check_fitted()
+        _raise_on_unknown(self._probes(df, fitted_on_df))
+        return self._encode(df)
+
+    def _encode(self, df: DataFrame) -> DataFrame:
+        """Lazy encode; unknowns are handled per policy but under
+        ``'error'`` pass through as null (checked by the caller)."""
         joined = df.join(self._mapping_df, on=self.column, how="left")
-        unknown = joined.filter(F.col(self.encoded_column).isNull())
-        if self.handle_unknown == "error":
-            if unknown.limit(1).count() > 0:
-                raise ValueError(
-                    f"Found unknown values in column {self.column} during transform"
-                )
-        elif self.handle_unknown == "drop":
+        if self.handle_unknown == "drop":
             joined = joined.filter(F.col(self.encoded_column).isNotNull())
-        else:  # use_default_value
+        elif self.handle_unknown == "use_default_value":
             default = self._default_code()
             if default is not None:
                 joined = joined.fillna({self.encoded_column: default})
@@ -190,8 +320,7 @@ class LabelEncodingRule:
         )
 
     def inverse_transform(self, df: DataFrame) -> DataFrame:
-        if not self._is_fitted:
-            raise RuntimeError("LabelEncodingRule is not fitted")
+        self._check_fitted()
         mapping = self._mapping_df.withColumnRenamed(self.column, "_decoded")
         return (
             df.withColumnRenamed(self.column, self.encoded_column)
@@ -210,7 +339,7 @@ class LabelEncodingRule:
         self.default_value = value
 
     def fit_transform(self, df: DataFrame) -> DataFrame:
-        return self.fit(df).transform(df)
+        return self.fit(df)._transform(df, fitted_on_df=True)
 
 
 class SequenceEncodingRule(LabelEncodingRule):
@@ -227,17 +356,10 @@ class SequenceEncodingRule(LabelEncodingRule):
     Parity: reference ``label_encoder.py:568``.
     """
 
-    def fit(self, df: DataFrame) -> "SequenceEncodingRule":
-        flat = df.select(F.explode(self.column).alias(self.column))
-        return super().fit(flat)
+    def _fit_values(self, df: DataFrame) -> DataFrame:
+        return df.select(F.explode(self.column).alias("_v"))
 
-    def partial_fit(self, df: DataFrame) -> "SequenceEncodingRule":
-        flat = df.select(F.explode(self.column).alias(self.column))
-        return super().partial_fit(flat)
-
-    def transform(self, df: DataFrame) -> DataFrame:
-        if not self._is_fitted:
-            raise RuntimeError("SequenceEncodingRule is not fitted")
+    def _encode(self, df: DataFrame) -> DataFrame:
         other_cols = [c for c in df.columns if c != self.column]
         code = self.encoded_column
         exploded = df.withColumn(
@@ -250,14 +372,9 @@ class SequenceEncodingRule(LabelEncodingRule):
         encoded = exploded.join(self._mapping_df, on=self.column, how="left")
         known = F.col("_pos").isNotNull() & F.col(code).isNotNull()
         unknown = F.col("_pos").isNotNull() & F.col(code).isNull()
-        if self.handle_unknown == "error":
-            if encoded.filter(unknown).limit(1).count() > 0:
-                raise ValueError(
-                    f"Found unknown values in column {self.column} during transform"
-                )
-        elif self.handle_unknown == "drop":
+        if self.handle_unknown == "drop":
             encoded = encoded.filter(F.col("_pos").isNull() | ~unknown)
-        else:
+        elif self.handle_unknown == "use_default_value":
             default = self._default_code()
             if default is not None:
                 encoded = encoded.withColumn(
@@ -283,15 +400,19 @@ class SequenceEncodingRule(LabelEncodingRule):
 class LabelEncoder:
     """Apply several encoding rules; save/load mappings.
 
+    ``fit`` numbers every rule's column in one action and owns the
+    shared code table, releasing it on the next ``fit``; ``transform``
+    runs one unknown-value check covering every ``'error'`` rule.
     Parity: reference ``label_encoder.py:794``.
     """
 
     def __init__(self, rules: Sequence[LabelEncodingRule]):
         self.rules = list(rules)
+        self._tables: list = []
 
     def fit(self, df: DataFrame) -> "LabelEncoder":
-        for rule in self.rules:
-            rule.fit(df)
+        _release(self._tables)
+        self._tables = _fit_rules([(rule, df) for rule in self.rules])
         return self
 
     def partial_fit(self, df: DataFrame) -> "LabelEncoder":
@@ -300,8 +421,15 @@ class LabelEncoder:
         return self
 
     def transform(self, df: DataFrame) -> DataFrame:
+        return self._transform(df)
+
+    def _transform(self, df: DataFrame, fitted_on_df: bool = False) -> DataFrame:
+        probes = []
         for rule in self.rules:
-            df = rule.transform(df)
+            rule._check_fitted()
+            probes += rule._probes(df, fitted_on_df)
+            df = rule._encode(df)
+        _raise_on_unknown(probes)
         return df
 
     def inverse_transform(self, df: DataFrame) -> DataFrame:
@@ -310,7 +438,7 @@ class LabelEncoder:
         return df
 
     def fit_transform(self, df: DataFrame) -> DataFrame:
-        return self.fit(df).transform(df)
+        return self.fit(df)._transform(df, fitted_on_df=True)
 
     def _rules_by_column(self) -> dict:
         return {rule.column: rule for rule in self.rules}

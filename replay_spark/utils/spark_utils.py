@@ -63,14 +63,15 @@ def local_df(spark: SparkSession, rows, schema) -> DataFrame:
     per action at 32 cores). Use for SMALL metadata/control frames
     of plain values (int/float/str/bytes, no nulls in numeric
     columns — pandas would promote those to NaN floats); falls back
-    to the plain path for empty input.
+    to the plain path for empty input and for dict rows, which the
+    fast lane cannot read by position.
     """
     import pandas as pd
 
     from pyspark.sql.types import NumericType, StructType
 
     rows = list(rows)
-    if not rows:
+    if not rows or not all(isinstance(row, (tuple, list)) for row in rows):
         return spark.createDataFrame(rows, schema)
     # real DDL parse (a naive comma-split mis-reads nested types like
     # map<string,int> / decimal(10,2)); None in a NUMERIC column would
@@ -206,8 +207,7 @@ def ordered_row_numbers(
     df: DataFrame, order_exprs: list, out_col: str = "rank"
 ) -> DataFrame:
     """Global 1-based ``row_number`` over ``order_exprs`` WITHOUT a
-    single-task sort (generalizes the label encoder's two-phase
-    numbering to arbitrary sort orders).
+    single-task sort, over any total sort order.
 
     One range exchange + a narrow Arrow numbering pass
     (:func:`_ordered_partition_scan`), then driver-computed

@@ -622,3 +622,168 @@ def test_tfrecord_float32_narrowing_warns_nothing():
     assert vals[0] == float(np.float32("inf"))
     assert vals[1] == float(np.float32("-inf"))
     assert vals[2] == 0.25
+
+
+def _id_schema(*extra):
+    return FeatureSchema(
+        [
+            FeatureInfo("query_id", FeatureType.CATEGORICAL, FeatureHint.QUERY_ID),
+            FeatureInfo("item_id", FeatureType.CATEGORICAL, FeatureHint.ITEM_ID),
+            *extra,
+        ]
+    )
+
+
+@pytest.fixture()
+def session_conf(spark):
+    """Set session confs for one test; restored afterwards."""
+    saved = {}
+
+    def set_conf(key, value):
+        saved.setdefault(key, spark.conf.get(key, None))
+        spark.conf.set(key, value)
+
+    yield set_conf
+    for key, value in saved.items():
+        if value is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, value)
+
+
+@pytest.mark.parametrize("aqe", [True, False])
+def test_dataset_label_encoder_codes_are_dense_ranks(spark, session_conf, aqe):
+    """String query ids, int item ids and array<string> elements get
+    their column's ascending ``dense_rank() - 1``. With AQE off and 37
+    shuffle partitions several columns share a range partition, which
+    pins the subtraction of earlier columns' rows from each offset."""
+    from pyspark.sql import Window
+
+    from replay_spark.data import DatasetLabelEncoder, FeatureSource
+
+    if not aqe:
+        session_conf("spark.sql.adaptive.enabled", "false")
+        session_conf("spark.sql.shuffle.partitions", "37")
+    rows = [
+        (f"u{(7 * i) % 53:02d}", (11 * i) % 41 - 5, [f"t{(3 * i) % 29}", f"t{i % 13}"])
+        for i in range(300)
+    ]
+    inter = spark.createDataFrame(
+        rows, "query_id string, item_id int, tags array<string>"
+    )
+    schema = _id_schema(
+        FeatureInfo(
+            "tags",
+            FeatureType.CATEGORICAL_LIST,
+            feature_source=FeatureSource.INTERACTIONS,
+        )
+    )
+    enc = DatasetLabelEncoder()
+    out = enc.fit_transform(Dataset(schema, inter, check_consistency=False))
+
+    values = {
+        "query_id": inter.select("query_id"),
+        "item_id": inter.select("item_id"),
+        "tags": inter.select(F.explode("tags").alias("tags")),
+    }
+    expected = {}
+    for column, frame in values.items():
+        ranks = frame.distinct().select(
+            column, F.dense_rank().over(Window.orderBy(column)) - 1
+        )
+        expected[column] = dict(ranks.collect())
+        assert enc.get_encoder(column).rules[0].get_mapping() == expected[column]
+    got = sorted(
+        (r.query_id, r.item_id, tuple(r.tags)) for r in out.interactions.collect()
+    )
+    assert got == sorted(
+        (
+            expected["query_id"][q],
+            expected["item_id"][i],
+            tuple(expected["tags"][t] for t in tags),
+        )
+        for q, i, tags in rows
+    )
+
+
+def test_dataset_label_encoder_null_id_raises(spark):
+    """A null id has no code: fit_transform under 'error' still checks
+    the column whose fit saw a null."""
+    from replay_spark.data import DatasetLabelEncoder
+
+    inter = spark.createDataFrame(
+        [("u1", "a"), (None, "b")], "query_id string, item_id string"
+    )
+    with pytest.raises(ValueError, match="query_id"):
+        DatasetLabelEncoder().fit_transform(
+            Dataset(_id_schema(), inter, check_consistency=False)
+        )
+
+
+def test_dataset_label_encoder_unknown_item_named(spark):
+    from replay_spark.data import DatasetLabelEncoder
+
+    train = spark.createDataFrame(
+        [("u1", "a"), ("u2", "b")], "query_id string, item_id string"
+    )
+    test = spark.createDataFrame(
+        [("u1", "b"), ("u2", "zz")], "query_id string, item_id string"
+    )
+    enc = DatasetLabelEncoder().fit(
+        Dataset(_id_schema(), train, check_consistency=False)
+    )
+    with pytest.raises(ValueError, match="item_id"):
+        enc.transform(Dataset(_id_schema(), test, check_consistency=False))
+
+
+def test_partial_fit_keeps_shared_code_table(spark):
+    """A rule's partial_fit appends its own codes and leaves the
+    encoder-owned code table, which its siblings read, persisted."""
+    from pyspark import StorageLevel
+
+    from replay_spark.data import DatasetLabelEncoder
+
+    train = spark.createDataFrame(
+        [("u1", "a"), ("u2", "b")], "query_id string, item_id string"
+    )
+    enc = DatasetLabelEncoder().fit(
+        Dataset(_id_schema(), train, check_consistency=False)
+    )
+    [table] = enc._tables
+    assert table.storageLevel == StorageLevel.MEMORY_AND_DISK
+    query_rule = enc.get_encoder("query_id").rules[0]
+    item_rule = enc.get_encoder("item_id").rules[0]
+    query_rule.partial_fit(
+        spark.createDataFrame([("u0",), ("u2",)], "query_id string")
+    )
+    assert table.is_cached
+    assert query_rule.get_mapping() == {"u1": 0, "u2": 1, "u0": 2}
+    assert item_rule.get_mapping() == {"a": 0, "b": 1}
+
+
+# Measured 6-10 jobs in the test session (local[4], AQE on, 4 shuffle
+# partitions), against 27-31 with two fit actions and one unknown scan
+# per rule; the slack absorbs AQE re-submitting a stage job.
+JOB_BOUND = 12
+
+
+def test_dataset_label_encoder_job_count(spark):
+    """Tripwire: fitting and applying every rule of a two-id Dataset
+    costs a fixed handful of Spark jobs. One action per rule, or an
+    unknown scan per rule, pushes it over the bound."""
+    from replay_spark.data import DatasetLabelEncoder
+
+    inter = spark.createDataFrame(
+        [(f"u{i % 5}", i % 7) for i in range(40)], "query_id string, item_id int"
+    )
+    ds = Dataset(_id_schema(), inter, check_consistency=False)
+    sc = spark.sparkContext
+    group = "test_dataset_label_encoder_job_count"
+    sc.setJobGroup(group, "DatasetLabelEncoder.fit_transform")
+    try:
+        assert DatasetLabelEncoder().fit_transform(ds).interactions.count() == 40
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= JOB_BOUND, jobs

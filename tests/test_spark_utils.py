@@ -478,3 +478,15 @@ def test_default_session_conf_carries_engine_defaults():
         _os.path.join(_os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))), "bench.py")
     ).read()
     assert "default_session_conf" in bench_src
+
+
+def test_local_df_dict_rows(spark):
+    """Dict rows match schema fields by name, nulls in numeric
+    columns included; tuple rows keep the positional fast lane."""
+    from replay_spark.utils.spark_utils import local_df
+
+    schema = "k string, v long"
+    from_dicts = local_df(spark, [{"v": 1, "k": "a"}, {"k": "b", "v": None}], schema)
+    assert sorted(from_dicts.collect(), key=lambda r: r.k) == [("a", 1), ("b", None)]
+    from_tuples = local_df(spark, [("a", 1), ("b", 2)], schema)
+    assert sorted(from_tuples.collect()) == [("a", 1), ("b", 2)]
