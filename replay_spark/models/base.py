@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from replay_spark.data.dataset import Dataset
 from replay_spark.utils.spark_utils import (
+    bucketed_apply_in_pandas,
     filter_cold,
     get_top_k_recs,
     get_unique_entities,
@@ -646,7 +647,10 @@ class NonPersonalizedRecommender(BaseRecommender, ABC):
                 f"{self.max_items_to_collect}); raise the cap explicitly "
                 "or use the non-sampling predict at this item scale"
             )
-        items_pd = selected.toPandas()
+        # draw over item order, not the partition order toPandas returns
+        items_pd = selected.toPandas().sort_values(
+            self.item_column, ignore_index=True
+        )
         if len(items_pd) == 0:
             return queries.withColumn(self.item_column, F.lit(None)).withColumn(
                 self.rating_column, F.lit(None)
@@ -689,11 +693,6 @@ class NonPersonalizedRecommender(BaseRecommender, ABC):
             return [query_id] * n, item_ids[chosen], ratings[chosen]
 
         def sample_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-            # one applyInPandas group per BUCKET of queries, not per
-            # query: the per-group pandas construction overhead
-            # (~1-2 ms) dominates at 10⁴+ queries. Per-query draws
-            # stay seeded by query id, so the output is identical to
-            # the per-query grouping.
             qs, its, rs = [], [], []
             for qid, ni in zip(pdf[query_col], pdf["num_items"]):
                 a, b, c = sample_for_query(qid, ni)
@@ -709,28 +708,12 @@ class NonPersonalizedRecommender(BaseRecommender, ABC):
             )
 
         schema_item_type = dict(selected.dtypes)[item_col]
-        n_buckets = max(
-            2 * queries.sparkSession.sparkContext.defaultParallelism, 8
-        )
-        return (
-            queries.withColumn(
-                "_bucket", F.pmod(F.xxhash64(query_col), F.lit(n_buckets))
-            )
-            # numbered repartition pins the sampling stage's
-            # parallelism (AQE never coalesces REPARTITION_BY_NUM):
-            # the exchange carries a few bytes per query but each
-            # bucket is CPU-bound Python draws, and predict() caches
-            # the result — the cached-plan AQE conf would otherwise
-            # coalesce the tiny-byte shuffle onto one task (the SLIM
-            # solve measured 6.6 -> 20.9 s under exactly this
-            # collapse). groupBy reuses the pinned partitioning.
-            .repartition(n_buckets, "_bucket")
-            .groupBy("_bucket")
-            .applyInPandas(
-                sample_bucket,
-                schema=f"{query_col} long, {item_col} {schema_item_type}, "
-                f"{rating_col} double",
-            )
+        return bucketed_apply_in_pandas(
+            queries,
+            query_col,
+            sample_bucket,
+            f"{query_col} long, {item_col} {schema_item_type}, "
+            f"{rating_col} double",
         )
 
     def _predict_pairs(

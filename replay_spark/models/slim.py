@@ -24,7 +24,6 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as st
 
 from replay_spark.data.dataset import Dataset
@@ -179,9 +178,6 @@ class SLIM(NeighbourRec):
             return items_b[good], target_item, w[good]
 
         def slim_bucket(group: pd.DataFrame) -> pd.DataFrame:
-            # several target items per applyInPandas group: amortizes
-            # the per-group pandas overhead; each column's coordinate
-            # descent is unchanged, so weights are identical
             ones, twos, sims = [], [], []
             for target_item in group["item_idx_one"]:
                 a, t, c = slim_column(target_item)
@@ -200,33 +196,20 @@ class SLIM(NeighbourRec):
                 }
             )
 
-        from replay_spark.utils.spark_utils import local_df
+        from replay_spark.utils.spark_utils import (
+            bucketed_apply_in_pandas,
+            local_df,
+        )
 
         # driver-local id frame via pandas: O(rows) partitions instead
         # of defaultParallelism Python slices
         item_df = local_df(
             spark, [(int(i),) for i in items], "item_idx_one long"
         )
-        n_buckets = max(2 * sc.defaultParallelism, 8)
-        self.similarity = (
-            item_df.withColumn(
-                "_bucket",
-                F.pmod(F.xxhash64("item_idx_one"), F.lit(n_buckets)),
-            )
-            # PIN the solve's parallelism with a numbered repartition
-            # (REPARTITION_BY_NUM — the one shuffle origin AQE never
-            # coalesces): the bucket exchange carries a few KB of item
-            # ids but each bucket is seconds of coordinate-descent
-            # CPU, so byte-targeted coalescing (which the cached-plan
-            # AQE conf applies to this cached frame) would collapse
-            # the whole solve onto one task — measured 6.6 -> 20.9 s
-            # on the ml1m-shaped corpus. groupBy reuses the pinned
-            # partitioning (same key), so no extra exchange.
-            .repartition(n_buckets, "_bucket")
-            .groupBy("_bucket")
-            .applyInPandas(
-                slim_bucket,
-                "item_idx_one long, item_idx_two long, similarity double",
-            )
+        self.similarity = bucketed_apply_in_pandas(
+            item_df,
+            "item_idx_one",
+            slim_bucket,
+            "item_idx_one long, item_idx_two long, similarity double",
         )
         self.similarity.cache().count()

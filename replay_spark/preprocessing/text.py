@@ -15,7 +15,10 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from replay_spark.utils.spark_utils import stable_round
+from replay_spark.utils.spark_utils import (
+    bucketed_apply_in_pandas,
+    stable_round,
+)
 
 __all__ = [
     "tokenize_expr",
@@ -1493,12 +1496,6 @@ class TextRankSummarizer:
             return (doc_id, summary, n, len(keep))
 
         def summarize_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-            # one pandas groupby per BUCKET of complete documents:
-            # applyInPandas pays ~1-2 ms of DataFrame construction
-            # per group, so one group per document is 10 s of pure
-            # overhead at 5 000 docs — bucketing by hash(id) keeps
-            # each document intact while amortizing that cost over
-            # hundreds of docs per group
             pdf = pdf.sort_values([idc, "sentence_index"])
             rows = [
                 summarize_doc(doc_id, g)
@@ -1511,24 +1508,12 @@ class TextRankSummarizer:
 
         import pandas as pd  # noqa: F811
 
-        n_buckets = max(
-            2 * df.sparkSession.sparkContext.defaultParallelism, 8
-        )
-        return (
-            sentences.withColumn(
-                "_bucket", F.pmod(F.xxhash64(idc), F.lit(n_buckets))
-            )
-            # numbered repartition: pin the TextRank stage's
-            # parallelism against byte-targeted AQE coalescing (see
-            # the SLIM solve note in models/slim.py — the per-bucket
-            # power-iteration is CPU-bound at small shuffle bytes)
-            .repartition(n_buckets, "_bucket")
-            .groupBy("_bucket")
-            .applyInPandas(
-                summarize_bucket,
-                schema=f"{idc} long, summary string, "
-                "n_sentences_in long, n_sentences_out long",
-            )
+        return bucketed_apply_in_pandas(
+            sentences,
+            idc,
+            summarize_bucket,
+            f"{idc} long, summary string, "
+            "n_sentences_in long, n_sentences_out long",
         )
 
 

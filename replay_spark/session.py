@@ -5,6 +5,10 @@ Counterpart of the reference's ``State`` singleton
 AQE + skew-join handling on by default, Arrow transfer enabled for
 pandas-UDF paths, shuffle partitions sized to cores (AQE coalesces
 at runtime so oversizing is safe at scale).
+
+``get_spark_session`` is the only session builder in the repo: the
+library, ``bench.py``, the ``tools/`` scripts and the test fixture
+all take their session from it, varying only its parameters.
 """
 
 from __future__ import annotations
@@ -18,7 +22,7 @@ __all__ = ["default_session_conf", "get_spark_session", "State"]
 
 
 def default_session_conf(shuffle_partitions: int) -> dict:
-    """The engine's session defaults (also mirrored by bench.py).
+    """The engine's session defaults, applied by ``get_spark_session``.
 
     Each entry is scale-parameterised, not a local constant:
     AQE sizes partitions from observed data volume; the
@@ -60,6 +64,10 @@ def get_spark_session(
     override an active one); locally we mirror the reference's
     defaults (``session_handler.py:70-97``) with modern additions:
     adaptive query execution, skew-join splitting, and Arrow.
+
+    The local session carries ``default_session_conf``, an 8g driver
+    (``$REPLAY_SPARK_DRIVER_MEM``) and no UI; ``extra_conf`` is
+    applied last, so a caller can override any of them.
     """
     active = SparkSession.getActiveSession()
     if active is not None:

@@ -49,6 +49,7 @@ __all__ = [
     "grouped_exact_quantiles",
     "diagnose_skew",
     "local_df",
+    "bucketed_apply_in_pandas",
 ]
 
 
@@ -452,6 +453,36 @@ def drop_temp_view(name: str) -> None:
     spark.catalog.dropTempView(name)
 
 
+def bucketed_apply_in_pandas(
+    df: DataFrame, key: str, fn, schema: str
+) -> DataFrame:
+    """Run the CPU-bound pandas ``fn`` over buckets of whole ``key``
+    groups: ``pmod(xxhash64(key), n)`` with
+    ``n = max(2 * defaultParallelism, 8)``.
+
+    One ``applyInPandas`` group per BUCKET, not per key: each group
+    pays ~1-2 ms of pandas construction, which dominates at 10⁴+
+    keys. ``fn`` gets every row of its bucket's keys (plus the
+    ``_bucket`` column) and returns rows of ``schema``.
+
+    The numbered repartition pins the stage's parallelism
+    (REPARTITION_BY_NUM is the one shuffle origin AQE never
+    coalesces): the bucket exchange carries few bytes but each bucket
+    is seconds of Python CPU, so byte-targeted coalescing — which the
+    cached-plan AQE conf also applies to cached results — would
+    collapse the stage onto one task (the SLIM solve measured
+    6.6 -> 20.9 s on the ml1m-shaped corpus). ``groupBy`` reuses the
+    pinned partitioning, so there is no second exchange.
+    """
+    n_buckets = max(2 * df.sparkSession.sparkContext.defaultParallelism, 8)
+    return (
+        df.withColumn("_bucket", F.pmod(F.xxhash64(key), F.lit(n_buckets)))
+        .repartition(n_buckets, "_bucket")
+        .groupBy("_bucket")
+        .applyInPandas(fn, schema)
+    )
+
+
 def sample_top_k_recs(
     pairs: DataFrame,
     k: int,
@@ -480,6 +511,9 @@ def sample_top_k_recs(
         local_rng = np.random.default_rng(
             None if seed is None else seed + int(query_id)
         )
+        # draw over item order, not arrival order: the rows of a
+        # query reach its bucket in partitioning-dependent order
+        pdf = pdf.sort_values(item_column)
         n = min(k, len(pdf))
         probs = pdf["_prob"].to_numpy()
         probs = probs / probs.sum()
@@ -487,10 +521,6 @@ def sample_top_k_recs(
         return pdf.iloc[chosen]
 
     def sample_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        # bucket of complete query groups per applyInPandas call —
-        # per-query grouping pays ~1-2 ms of pandas construction per
-        # group, which dominates at 10⁴+ queries; draws stay seeded
-        # per query id so the output rows are identical
         out = [
             sample_group(g)
             for _, g in pdf.groupby(query_column, sort=False)
@@ -501,20 +531,8 @@ def sample_top_k_recs(
         f"{f.name} {f.dataType.simpleString()}"
         for f in pairs.drop("_prob").schema.fields
     )
-    n_buckets = max(
-        2 * pairs.sparkSession.sparkContext.defaultParallelism, 8
-    )
-    return (
-        pairs.withColumn(
-            "_bucket", F.pmod(F.xxhash64(query_column), F.lit(n_buckets))
-        )
-        # numbered repartition: pin the CPU-dense sampling stage's
-        # parallelism against byte-targeted AQE coalescing (see the
-        # SLIM solve note in models/slim.py — tiny shuffle bytes,
-        # seconds of per-bucket Python)
-        .repartition(n_buckets, "_bucket")
-        .groupBy("_bucket")
-        .applyInPandas(sample_bucket, schema_fields)
+    return bucketed_apply_in_pandas(
+        pairs, query_column, sample_bucket, schema_fields
     )
 
 

@@ -5,27 +5,21 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
 import pyspark.sql.functions as F  # noqa: F401
+
+from replay_spark.session import get_spark_session
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
 @pytest.fixture(scope="session")
 def spark():
-    session = (
-        SparkSession.builder.appName("replay_spark_tests")
-        .master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "4g")
-        .getOrCreate()
+    yield get_spark_session(
+        app_name="replay_spark_tests",
+        master="local[4]",
+        shuffle_partitions=4,
+        extra_conf={"spark.driver.memory": "4g"},
     )
-    yield session
 
 
 @pytest.fixture(scope="session")

@@ -150,6 +150,11 @@ def test_random_rec(dataset):
     # deterministic under fixed seed
     recs2 = RandomRec(seed=42).fit_predict(dataset, k=2)
     assert sorted(map(tuple, recs.collect())) == sorted(map(tuple, recs2.collect()))
+    # and independent of the order the candidate items arrive in (no
+    # dataset, so each query draws only k of the 4 items)
+    fwd = model.predict(None, k=2, queries=[0, 1, 2], items=[0, 1, 2, 3])
+    rev = model.predict(None, k=2, queries=[0, 1, 2], items=[3, 2, 1, 0])
+    assert sorted(map(tuple, fwd.collect())) == sorted(map(tuple, rev.collect()))
 
 
 def test_item_knn(dataset):

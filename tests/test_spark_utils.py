@@ -471,13 +471,26 @@ def test_default_session_conf_carries_engine_defaults():
     assert conf["spark.sql.execution.arrow.pyspark.enabled"] == "true"
     assert conf["spark.sql.parquet.outputTimestampType"] == "TIMESTAMP_MICROS"
 
-    # bench.py mirrors the engine defaults instead of re-declaring them
+
+def test_sessions_come_from_the_engine_factory(spark):
+    """The test session is the one the engine ships (only its
+    partition count differs), and no entry point builds its own."""
+    import glob
     import os as _os
 
-    bench_src = open(
-        _os.path.join(_os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))), "bench.py")
-    ).read()
-    assert "default_session_conf" in bench_src
+    from replay_spark.session import default_session_conf
+
+    for key, value in default_session_conf(16).items():
+        if key != "spark.sql.shuffle.partitions":
+            assert spark.conf.get(key) == value, key
+
+    root = _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
+    paths = [_os.path.join(root, "bench.py")]
+    for sub in ("tools", "tests"):
+        paths += glob.glob(_os.path.join(root, sub, "*.py"))
+    marker = "SparkSession" + ".builder"
+    builders = [p for p in paths if marker in open(p).read()]
+    assert builders == []
 
 
 def test_local_df_dict_rows(spark):

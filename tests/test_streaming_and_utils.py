@@ -84,6 +84,9 @@ def test_sample_top_k_recs(spark):
     assert counts == {0: 3, 1: 3, 2: 3}
     out2 = sample_top_k_recs(pairs, k=3, seed=42)
     assert sorted(map(tuple, out.collect())) == sorted(map(tuple, out2.collect()))
+    # the draw must not depend on the order rows reach their group
+    out3 = sample_top_k_recs(pairs.repartition(7, "item_id"), k=3, seed=42)
+    assert sorted(map(tuple, out.collect())) == sorted(map(tuple, out3.collect()))
 
 
 def test_csr_converter(spark, interactions):

@@ -21,7 +21,6 @@ CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
 
 
 def main():
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     import replay_spark.datasets as rsd
@@ -35,21 +34,14 @@ def main():
     from replay_spark.metrics import NDCG
     from replay_spark.models import ALSWrap, ItemKNN, PopRec, SLIM, Word2VecRec
 
-    # mirror the ENGINE session defaults (replay_spark.session), the
-    # same way bench.py does — this bench previously built a bare
-    # session without the Arrow driver-transfer conf, so SLIM's
-    # 1M-row toPandas collect ran on the pickled-row path (~4 s of
-    # its ~6 s warm fit) — a configuration a library user would
-    # never see
-    from replay_spark.session import default_session_conf
+    from replay_spark.session import get_spark_session
 
-    builder = SparkSession.builder.master(f"local[{CPUS}]")
-    for _k, _v in default_session_conf(int(CPUS)).items():
-        builder = builder.config(_k, _v)
-    spark = (
-        builder.config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "16g")
-        .getOrCreate()
+    # the engine's session, Arrow driver transfer included: this bench
+    # once built a bare session without it, so SLIM's 1M-row toPandas
+    # collect ran on the pickled-row path (~4 s of its ~6 s warm fit)
+    spark = get_spark_session(
+        shuffle_partitions=int(CPUS),
+        extra_conf={"spark.driver.memory": "16g"},
     )
     spark.sparkContext.setLogLevel("ERROR")
 

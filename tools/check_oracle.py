@@ -54,21 +54,12 @@ def table_hash(rows, columns):
 
 def main():
     import duckdb
-    from pyspark.sql import SparkSession
 
     import __spark_entry__ as entrymod
+    from replay_spark.session import get_spark_session
 
     only = set(sys.argv[1:])
-    spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', 8)}]")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
-        .appName("check_oracle")
-        .getOrCreate()
-    )
+    spark = get_spark_session(app_name="check_oracle")
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in TABLES:

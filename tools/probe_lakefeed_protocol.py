@@ -20,8 +20,8 @@ def note(msg):
 
 
 def main():
-    from pyspark.sql import SparkSession
     from replay_spark.lake import LakeTable
+    from replay_spark.session import get_spark_session
     import replay_spark.streaming.lakefeed as lf
 
     # instrument the reader class: every method logs
@@ -42,12 +42,7 @@ def main():
     for m in orig:
         setattr(lf._LakeFeedReader, m, wrap(m))
 
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark_session(master="local[4]", shuffle_partitions=4)
     base = "/tmp/lf_probe"
     shutil.rmtree(base, ignore_errors=True)
     os.makedirs(base)

@@ -1,8 +1,8 @@
 #!/usr/bin/env python
 """Per-query profiler for the optimization rounds (guide §1).
 
-Builds the SAME session shape as bench.py (plus the UI so the REST
-API can report job/stage metrics), then for each named query:
+Builds the SAME session as bench.py (plus the UI so the REST API
+can report job/stage metrics), then for each named query:
 
 * runs it once cold + N warm (count() action, like the bench),
 * reports per-run wall seconds and the Spark job/stage breakdown of
@@ -45,28 +45,20 @@ def main():
                     help="print per-job REST breakdown of the last warm run")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as entrymod
+    from replay_spark.session import get_spark_session
 
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .config("spark.sql.shuffle.partitions", str(int(CPUS)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config(
-            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-            "true",
-        )
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.port", "4045")
-        .config("spark.driver.memory",
-                os.environ.get("REPLAY_SPARK_DRIVER_MEM", "16g"))
-        .appName("replay_spark_profile")
-        .getOrCreate()
+    # the bench's session, plus the UI for the REST scraping below
+    spark = get_spark_session(
+        app_name="replay_spark_profile",
+        shuffle_partitions=int(CPUS),
+        extra_conf={
+            "spark.driver.memory": os.environ.get(
+                "REPLAY_SPARK_DRIVER_MEM", "16g"
+            ),
+            "spark.ui.enabled": "true",
+            "spark.ui.port": "4045",
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
     queries = entrymod.queries()

@@ -1,12 +1,10 @@
 import os, sys, time, json
-sys.path.insert(0, "/root/repo"); sys.path.insert(0, "/root/repo/tools")
+TOOLS = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, os.path.dirname(TOOLS)); sys.path.insert(0, TOOLS)
 CPUS = int(os.environ.get("SM_CPUS", "32"))
-from pyspark.sql import SparkSession
-from replay_spark.session import default_session_conf
-b = SparkSession.builder.master(f"local[{CPUS}]")
-for k, v in default_session_conf(CPUS).items():
-    b = b.config(k, v)
-spark = b.config("spark.ui.enabled", "false").config("spark.driver.memory", "16g").appName("scale").getOrCreate()
+from replay_spark.session import get_spark_session
+spark = get_spark_session(app_name="scale", master=f"local[{CPUS}]", shuffle_partitions=CPUS,
+                          extra_conf={"spark.driver.memory": "16g"})
 spark.sparkContext.setLogLevel("ERROR")
 from make_scale_replica import ensure_replica
 sf1 = ensure_replica()
