@@ -185,70 +185,76 @@ def main():
             h = hashlib.md5(h).digest()
         return time.time() - t0
 
-    def run_once(name):
+    def run_once(name, sf_dir):
         start = time.time()
-        n = queries[name](spark, SF_DIR).count()
+        n = queries[name](spark, sf_dir).count()
         return n, round(time.time() - start, 3)
 
-    # warm-run protocol: run 1 absorbs session/JIT/page-cache warm-up
-    # (recorded as queries_cold); the headline is the MEDIAN of three
-    # warm runs — this box has noisy-neighbour CPU (observed 3-10×
-    # swings on identical plans). Best-of-2 let a real 3.4× regression
-    # ship unflagged in round 5 (warm exceeded cold in the same file);
-    # median-of-3 tames outliers in BOTH directions.
     timings, cold_timings = {}, {}
     headline_canaries = {}
+    sf1_timings = {}
+    sf1_canaries = {}
     reprobed = {}
     # contention floor: the quietest canary observed this run (seeded
     # by one probe before any query) — a per-query canary far above
     # it means THAT query's slot was contended
     canary_floor = _cpu_canary()
+
+    def measure(name, sf_dir, canaries, label):
+        """One leg under the warm-run protocol; returns ``(rows, cold,
+        warms)`` with ``warms`` the sorted three warm runs.
+
+        Run 1 absorbs session/JIT/page-cache warm-up (the cold run);
+        the headline is the MEDIAN of three warm runs — this box has
+        noisy-neighbour CPU (observed 3-10× swings on identical
+        plans). Best-of-2 let a real 3.4× regression ship unflagged
+        in round 5 (warm exceeded cold in the same file); median-of-3
+        tames outliers in BOTH directions, and min is the
+        contention-free signal (a median far above min flags a noisy
+        box instead of silently reading as a regression, r8 lesson).
+        """
+        nonlocal canary_floor
+        # isolate queries: no query should pay for (or benefit from)
+        # another query's cached intermediates — keeps the warm
+        # number attributable to the query itself
+        spark.catalog.clearCache()
+        canaries[name] = round(_cpu_canary(), 3)
+        canary_floor = min(canary_floor, canaries[name])
+        n, cold = run_once(name, sf_dir)
+        warms = sorted(run_once(name, sf_dir)[1] for _ in range(3))
+        # contention guard (r12 judge): a warm median ABOVE its own
+        # cold run is self-evidently contaminated (warm can only
+        # remove work), and a per-query canary >1.5x the run's
+        # quietest slot means the box was hot during this query —
+        # either way, re-probe ONCE and record both medians; the
+        # quieter warm set (lower median) is the one reported
+        if warms[1] > cold or canaries[name] > 1.5 * canary_floor:
+            spark.catalog.clearCache()
+            re_canary = round(_cpu_canary(), 3)
+            canary_floor = min(canary_floor, re_canary)
+            re_warms = sorted(run_once(name, sf_dir)[1] for _ in range(3))
+            reprobed[label] = [warms[1], re_warms[1]]
+            print(
+                f"# {label}: REPROBE {warms[1]}s -> {re_warms[1]}s "
+                f"(cold {cold}s, canaries "
+                f"{canaries[name]}s/{re_canary}s)",
+                file=sys.stderr,
+            )
+            if re_warms[1] < warms[1]:
+                warms = re_warms
+        return n, cold, warms
+
     total = 0.0
     for name in BENCH_QUERIES:
         try:
-            # isolate queries: no query should pay for (or benefit
-            # from) another query's cached intermediates — keeps the
-            # warm number attributable to the query itself
-            spark.catalog.clearCache()
-            headline_canaries[name] = round(_cpu_canary(), 3)
-            canary_floor = min(canary_floor, headline_canaries[name])
-            _, cold = run_once(name)
-            cold_timings[name] = cold
-            warms = []
-            for _ in range(3):
-                n, w = run_once(name)
-                warms.append(w)
-            elapsed = sorted(warms)[1]
-            # contention guard (r12 judge): a warm median ABOVE its
-            # own cold run is self-evidently contaminated (warm can
-            # only remove work), and a per-query canary >1.5x the
-            # run's quietest slot means the box was hot during this
-            # query — either way, re-probe ONCE and record both
-            # readings; the headline carries the quieter one
-            contaminated = elapsed > cold or (
-                headline_canaries[name] > 1.5 * canary_floor
+            n, cold, warms = measure(
+                name, SF_DIR, headline_canaries, name
             )
-            if contaminated:
-                spark.catalog.clearCache()
-                re_canary = round(_cpu_canary(), 3)
-                canary_floor = min(canary_floor, re_canary)
-                re_warms = []
-                for _ in range(3):
-                    _, w = run_once(name)
-                    re_warms.append(w)
-                re_elapsed = sorted(re_warms)[1]
-                reprobed[name] = [elapsed, re_elapsed]
-                print(
-                    f"# {name}: REPROBE {elapsed}s -> {re_elapsed}s "
-                    f"(cold {cold}s, canaries "
-                    f"{headline_canaries[name]}s/{re_canary}s)",
-                    file=sys.stderr,
-                )
-                elapsed = min(elapsed, re_elapsed)
-            timings[name] = elapsed
-            total += elapsed
+            cold_timings[name] = cold
+            timings[name] = warms[1]
+            total += warms[1]
             print(
-                f"# {name}: {n} rows in {elapsed}s (cold {cold}s, "
+                f"# {name}: {n} rows in {warms[1]}s (cold {cold}s, "
                 f"canary {headline_canaries[name]}s)",
                 file=sys.stderr,
             )
@@ -325,9 +331,6 @@ def main():
         # must track matched keys + inserted rows, never the corpus
         "q_lake_sql_merge",
     ]
-    sf1_timings = {}
-    sf1_canaries = {}
-
     try:
         sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools"))
         from make_scale_replica import ensure_replica
@@ -349,51 +352,10 @@ def main():
                 pass
         for name in sf1_queries:
             try:
-                # same protocol as the headline set: discard one cold
-                # run, then report BOTH min and median of three warm
-                # runs — min is the contention-free signal, a
-                # median far above min flags a noisy box instead of
-                # silently reading as a regression (r8 lesson)
-                spark.catalog.clearCache()
-                sf1_canaries[name] = round(_cpu_canary(), 3)
-                canary_floor = min(canary_floor, sf1_canaries[name])
-                t0 = time.time()
-                queries[name](spark, sf1_dir).count()
-                sf1_cold = time.time() - t0
-                warms = []
-                for _ in range(3):
-                    t0 = time.time()
-                    queries[name](spark, sf1_dir).count()
-                    warms.append(time.time() - t0)
-                warms.sort()
-                # same contention guard as the headline: warm median
-                # above its own cold, or a hot canary slot -> one
-                # automatic re-probe, quieter reading ships
-                if warms[1] > sf1_cold or (
-                    sf1_canaries[name] > 1.5 * canary_floor
-                ):
-                    spark.catalog.clearCache()
-                    re_canary = round(_cpu_canary(), 3)
-                    canary_floor = min(canary_floor, re_canary)
-                    re_warms = []
-                    for _ in range(3):
-                        t0 = time.time()
-                        queries[name](spark, sf1_dir).count()
-                        re_warms.append(time.time() - t0)
-                    re_warms.sort()
-                    reprobed["sf1:" + name] = [
-                        round(warms[1], 3),
-                        round(re_warms[1], 3),
-                    ]
-                    print(
-                        f"# sf1 {name}: REPROBE {warms[1]:.3f}s -> "
-                        f"{re_warms[1]:.3f}s (canaries "
-                        f"{sf1_canaries[name]:.3f}s/{re_canary:.3f}s)",
-                        file=sys.stderr,
-                    )
-                    if re_warms[1] < warms[1]:
-                        warms = re_warms
-                sf1_timings[name] = [round(warms[0], 3), round(warms[1], 3)]
+                _, _, warms = measure(
+                    name, sf1_dir, sf1_canaries, "sf1:" + name
+                )
+                sf1_timings[name] = warms[:2]
                 print(
                     f"# sf1 {name}: min={warms[0]:.3f}s med={warms[1]:.3f}s"
                     f" canary={sf1_canaries[name]:.3f}s",

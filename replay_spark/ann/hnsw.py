@@ -81,11 +81,18 @@ class HNSWANN:
         # pickled — rebuilt lazily wherever the index lands
         self._rows: Optional[list] = None
         self._rows_base: Optional[np.ndarray] = None
+        # visited marks for _search_layer, reused across calls: a
+        # node is visited in the current call iff its mark equals
+        # _visit_gen; derived, never pickled
+        self._marks: Optional[list] = None
+        self._visit_gen: int = 0
 
     def __getstate__(self):
         state = dict(self.__dict__)
         state["_rows"] = None
         state["_rows_base"] = None
+        state["_marks"] = None
+        state["_visit_gen"] = 0
         return state
 
     # -- graph construction (driver, numpy) -------------------------------
@@ -149,10 +156,18 @@ class HNSWANN:
         links = self._links
         dist = self._d_to(q)
         d0 = dist(entry)
-        # node ids are dense 0..n-1: a bytearray membership flag beats
-        # a hash set in this loop (no hashing, no resize)
-        visited = bytearray(len(links))
-        visited[entry] = 1
+        # node ids are dense 0..n-1: a per-index mark list beats a
+        # hash set in this loop (no hashing, no resize), and bumping
+        # the generation clears it in O(1) — the call costs
+        # O(visited), not an O(index) allocation
+        marks = self._marks
+        if marks is None:
+            marks = self._marks = [0] * len(links)
+        elif len(marks) < len(links):
+            marks.extend([0] * (len(links) - len(marks)))
+        self._visit_gen += 1
+        gen = self._visit_gen
+        marks[entry] = gen
         cand = [(d0, entry)]  # min-heap by dist
         best = [(-d0, entry)]  # max-heap (neg) of current top-ef
         while cand:
@@ -160,9 +175,9 @@ class HNSWANN:
             if len(best) >= ef and d > -best[0][0]:
                 break
             for nb in links[node][level]:
-                if visited[nb]:
+                if marks[nb] == gen:
                     continue
-                visited[nb] = 1
+                marks[nb] = gen
                 dn = dist(nb)
                 if len(best) < ef or dn < -best[0][0]:
                     heappush(cand, (dn, nb))

@@ -1,19 +1,25 @@
 """Similarity search over embedding columns (array<float>).
 
-Three strategies:
+Five index classes:
 
-* ``BruteForceANN`` — exact top-k by cosine: broadcast the query set
-  against the corpus, JVM-side dot products via zip_with/aggregate.
-  The right baseline, and the correctness oracle for the others.
+* ``BruteForceANN`` — exact top-k: broadcast the query set against
+  the corpus, JVM-side scores via zip_with/aggregate. The right
+  baseline, and the correctness oracle for the others.
 * ``IVFANN`` — inverted-file index: MLlib KMeans coarse quantizer;
   corpus partitioned by nearest centroid; queries probe the
   ``nprobe`` nearest centroids only. At 100 TB the corpus-side scan
   becomes a partition-pruned join instead of a full cross join.
-* ``LSHANN`` — random-hyperplane sign buckets (Hamming-radius
-  probing) — cheapest, lowest recall.
+* ``LSHANN`` — random-hyperplane sign buckets (multi-table probing)
+  — cheapest, lowest recall.
+* ``IVFPQANN`` — IVF-PQ: coarse cells prune the scan, residual
+  product codes shrink it to m bytes per vector; integer ADC
+  shortlist, exact re-rank.
+* ``PQANN`` — plain product quantization, which is IVF-PQ with the
+  identity coarse quantizer (one cell at the origin): a subclass of
+  ``IVFPQANN`` that differs only in how it trains.
 
-All math is double-precision higher-order expressions; no Python in
-the scoring loop.
+Scoring runs as double-precision higher-order expressions; Python
+runs only in the per-batch PQ encode and LUT passes.
 """
 
 from __future__ import annotations
@@ -92,13 +98,22 @@ def _check_metric(metric: str) -> str:
     return metric
 
 
+def _normalize(x):
+    import numpy as np
+
+    n = np.linalg.norm(x, axis=1, keepdims=True)
+    n[n == 0] = 1.0
+    return x / n
+
+
 def _prep_fn(metric):
     """Executor-safe vector prep: a plain closure (never a bound
     method — capturing one pickles the index object and its cached
-    DataFrames into the UDF, SPARK-5063)."""
-    normalize = PQANN._normalize
+    DataFrames into the UDF, SPARK-5063). cosine works on
+    L2-normalized vectors (so squared-L2 ADC order == cosine order);
+    dot / l2 quantize the RAW vectors."""
     if metric == "cosine":
-        return normalize
+        return _normalize
     return lambda x: x
 
 
@@ -752,436 +767,40 @@ class LSHANN:
         )
 
 
-class PQANN:
-    """Product-quantization ANN (Jégou et al. 2011) — the
-    memory-bound scale path: a 100 TB embedding corpus at 768 float32
-    dims is ~3 KB/vector; PQ codes at m=16, 256 centroids are 16
-    BYTES/vector, so the scanned relation shrinks ~200× and the scan
-    becomes integer lookups instead of float dot products.
-
-    * ``fit``: sample ≤ ``train_sample`` vectors to the driver
-      (seeded, documented bound — codebooks are model parameters,
-      like every KMeans), L2-normalize (so squared-L2 ADC order ==
-      cosine order), split dims into ``m`` subspaces, run seeded
-      Lloyd k-means per subspace (numpy).
-    * ``encode``: corpus → ``codes`` array<int> via one vectorized
-      ``mapInPandas`` pass (argmin over ksub centroids per subspace,
-      batched numpy — no per-row Python).
-    * ``search``: asymmetric distance computation stays JVM-side —
-      each query carries its m×ksub lookup table (built in one Arrow
-      batch pass), queries broadcast against the code relation, and
-      the distance is ``aggregate(zip_with(codes, lut, element_at))``
-      — pure higher-order expressions over the 16-byte codes. Top
-      ``k·refine`` ADC candidates are then exactly re-ranked by
-      cosine against the true vectors (a keyed join, k·refine rows
-      per query — the standard PQ refine step).
-
-    Training is iterative ⇒ rows-only gate; recall is pinned by a
-    planted-neighbor test vs BruteForceANN.
-    """
-
-    def __init__(
-        self,
-        dim: int,
-        m: int = 8,
-        ksub: int = 16,
-        iters: int = 10,
-        train_sample: int = 100_000,
-        refine: int = 4,
-        seed: int = 42,
-        id_column: str = "vec_id",
-        vector_column: str = "embedding",
-        metric: str = "cosine",
-    ):
-        if dim % m != 0:
-            raise ValueError(f"m={m} must divide dim={dim}")
-        if ksub < 2 or ksub > 256:
-            raise ValueError("ksub must be in 2..256")
-        self.dim = dim
-        self.m = m
-        self.ksub = ksub
-        self.iters = iters
-        self.train_sample = train_sample
-        self.refine = refine
-        self.seed = seed
-        self.id_column = id_column
-        self.vector_column = vector_column
-        self.metric = _check_metric(metric)
-        self.codebooks = None  # (m, ksub, dsub) after fit
-        self._codes: Optional[DataFrame] = None
-        self._corpus: Optional[DataFrame] = None
-
-    @staticmethod
-    def _normalize(x):
-        import numpy as np
-
-        n = np.linalg.norm(x, axis=1, keepdims=True)
-        n[n == 0] = 1.0
-        return x / n
-
-    def _prep(self, x):
-        """cosine works on L2-normalized vectors (so squared-L2 ADC
-        order == cosine order); dot / l2 quantize the RAW vectors."""
-        return _prep_fn(self.metric)(x)
-
-    def fit(self, corpus: DataFrame, codebooks=None) -> "PQANN":
-        """Train (seeded k-means on a bounded driver sample) or, with
-        ``codebooks`` (array-like ``(m, ksub, dsub)``), skip training
-        and use the given sub-centroids directly — a fully
-        deterministic quantizer, SQL-reproducible end to end; the
-        hash-gated contract query (``q_pq_ann_fixed``) uses it the
-        way ``q_ivf_ann_fixed`` uses fixed coarse centroids."""
-        import numpy as np
-
-        dsub = self.dim // self.m
-        if codebooks is not None:
-            books = np.asarray(codebooks, dtype=np.float64)
-            if books.ndim != 3 or books.shape[0] != self.m or books.shape[2] != dsub:
-                raise ValueError(
-                    f"codebooks shape {books.shape} != ({self.m}, ksub, {dsub})"
-                )
-            self.codebooks = books
-            self._corpus = corpus
-            self._codes = self._encode(corpus).persist()
-            return self
-
-        n = corpus.count()
-        frac = min(1.0, self.train_sample / max(n, 1))
-        sample = (
-            corpus.sample(fraction=frac, seed=self.seed)
-            .select(self.vector_column)
-            .collect()
-        )
-        x = self._prep(
-            np.array([r[0] for r in sample], dtype=np.float64)
-        )
-        rng = np.random.default_rng(self.seed)
-        ksub = min(self.ksub, len(x))
-        books = []
-        for j in range(self.m):
-            sub = x[:, j * dsub : (j + 1) * dsub]
-            cents = sub[rng.choice(len(sub), size=ksub, replace=False)].copy()
-            books.append(_lloyd_update(sub, cents, self.iters))
-        self.codebooks = np.stack(books)  # (m, ksub, dsub)
-        self._corpus = corpus
-        self._codes = self._encode(corpus, n=n).persist()
-        return self
-
-    def _encode(self, df: DataFrame, n: Optional[int] = None) -> DataFrame:
-        import numpy as np
-        import pandas as pd
-
-        books = self.codebooks
-        m, dsub = self.m, self.dim // self.m
-        idc, vc = self.id_column, self.vector_column
-        prep = _prep_fn(self.metric)
-
-        def enc(batches):
-            for pdf in batches:
-                x = prep(
-                    np.array(list(pdf[vc]), dtype=np.float64).reshape(
-                        len(pdf), -1
-                    )
-                )
-                codes = np.empty((len(pdf), m), dtype=np.int64)
-                for j in range(m):
-                    sub = x[:, j * dsub : (j + 1) * dsub]
-                    d2 = ((sub[:, None, :] - books[j][None, :, :]) ** 2).sum(-1)
-                    # micro-unit quantized argmin (half-up, +1e-9
-                    # guard): the assignment is reproducible in any
-                    # engine; integer ties break to the lowest
-                    # centroid index on both sides
-                    d2i = np.floor((d2 + 1e-9) * 1e6 + 0.5).astype(np.int64)
-                    codes[:, j] = d2i.argmin(1)
-                yield pd.DataFrame(
-                    {"vec_id": pdf[idc].values, "codes": list(codes)}
-                )
-
-        from replay_spark.utils.spark_utils import ensure_min_parallelism
-
-        # rows_per_task sized to the MEASURED encode kernel (~10-20
-        # µs/row: argmin over m×ksub integerized distances), not the
-        # JPEG-decode default of 256 (ms/row): a 2 000-row gate input
-        # is a 20 ms single task, so repartitioning it was pure
-        # overhead (the one real r15 PERF regression, q_pq_ann_fixed
-        # 0.72 -> 1.05 s); a 20 000-row 10× input still fans out to
-        # ~10 meaty tasks, keeping the sf1 win.
-        return ensure_min_parallelism(
-            df.select(idc, vc), rows_per_task=2048, n=n
-        ).mapInPandas(enc, schema="vec_id long, codes array<bigint>")
-
-    def append(self, new_corpus: DataFrame) -> "PQANN":
-        """Incremental maintenance: encode NEW vectors under the
-        FROZEN codebooks and extend the code relation + refine
-        corpus — the standard PQ posture (faiss adds to a trained
-        index the same way; codebooks move only on re-train). Under
-        frozen codebooks the appended index's search is exactly the
-        full-rebuild-with-these-codebooks search."""
-        if self.codebooks is None or self._codes is None:
-            raise ValueError("PQANN must be fit before append")
-        idc, vc = self.id_column, self.vector_column
-        combined = (
-            self._codes.unionByName(self._encode(new_corpus))
-            .localCheckpoint(eager=True)
-        )
-        old = self._codes
-        self._codes = combined
-        old.unpersist()
-        self._corpus = self._corpus.select(idc, vc).unionByName(
-            new_corpus.select(idc, vc)
-        )
-        return self
-
-    def save(self, path: str) -> None:
-        """Persist codebooks + the 16-byte code relation + the
-        refine vectors as parquet (reference index-store parity; the
-        refine corpus is stored because the exact re-rank needs true
-        vectors — the faiss IndexRefineFlat construction)."""
-        from replay_spark.ann.store import write_meta
-
-        if self.codebooks is None or self._codes is None:
-            raise ValueError("PQANN must be fit before save")
-        write_meta(
-            path,
-            type(self).__name__,
-            {
-                "dim": self.dim,
-                "m": self.m,
-                "ksub": self.ksub,
-                "iters": self.iters,
-                "train_sample": self.train_sample,
-                "refine": self.refine,
-                "seed": self.seed,
-                "id_column": self.id_column,
-                "vector_column": self.vector_column,
-                "metric": self.metric,
-            },
-        )
-        spark = self._codes.sparkSession
-        books = [
-            (j, c, [float(x) for x in self.codebooks[j][c]])
-            for j in range(len(self.codebooks))
-            for c in range(len(self.codebooks[j]))
-        ]
-        # driver-local control frame: the pandas route lands in O(rows)
-        # partitions instead of a defaultParallelism-slice Python job
-        # (the coalesce(1) over that was the measured worst case)
-        local_df(
-            spark, books, "subspace int, code int, centroid array<double>"
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(path, "codebooks")
-        )
-        self._codes.write.mode("overwrite").parquet(
-            os.path.join(path, "codes")
-        )
-        self._corpus.select(self.id_column, self.vector_column).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(path, "corpus"))
-
-    @classmethod
-    def load(cls, path: str, spark=None) -> "PQANN":
-        import numpy as np
-
-        from replay_spark.ann.store import read_meta, resolve_spark
-
-        spark = resolve_spark(spark)
-        self = cls(**read_meta(path)["params"])
-        rows = (
-            spark.read.parquet(os.path.join(path, "codebooks"))
-            .orderBy("subspace", "code")
-            .collect()
-        )
-        m = max(r["subspace"] for r in rows) + 1
-        self.codebooks = np.stack(
-            [
-                np.array(
-                    [r["centroid"] for r in rows if r["subspace"] == j],
-                    dtype=np.float64,
-                )
-                for j in range(m)
-            ]
-        )
-        self._codes = spark.read.parquet(
-            os.path.join(path, "codes")
-        ).persist()
-        self._corpus = spark.read.parquet(os.path.join(path, "corpus"))
-        return self
-
-    def search(
-        self,
-        queries: DataFrame,
-        k: int = 10,
-        filter_ids: Optional[DataFrame] = None,
-    ) -> DataFrame:
-        """Exactly the BruteForceANN output shape: (query_id,
-        neighbor_id, <score col>, rank) — ADC shortlist, exact
-        re-rank under the index metric (cosine / dot / l2).
-        ``filter_ids`` (one-column admissible-id frame) semi-joins
-        the code relation BEFORE the ADC scan — pre-filtered search,
-        so the shortlist is drawn entirely from admissible ids."""
-        import numpy as np
-        import pandas as pd
-
-        if self.codebooks is None:
-            raise ValueError("PQANN must be fit before search")
-        books = self.codebooks
-        m, dsub = self.m, self.dim // self.m
-        idc, vc = self.id_column, self.vector_column
-        prep = _prep_fn(self.metric)
-        is_dot = self.metric == "dot"
-
-        def luts(batches):
-            for pdf in batches:
-                x = prep(
-                    np.array(list(pdf[vc]), dtype=np.float64).reshape(
-                        len(pdf), -1
-                    )
-                )
-                # LUT entries in exact micro-units (bigint): the
-                # ADC sum downstream is INTEGER addition — no
-                # float summation-order divergence anywhere in
-                # the shortlist ranking, in any engine. cosine/l2
-                # entries are per-subspace squared distances
-                # (minimize); dot entries are per-subspace inner
-                # products against the reconstruction (maximize —
-                # the faiss METRIC_INNER_PRODUCT ADC).
-                if not is_dot:
-                    # one vectorized pass over ALL queries: the
-                    # subtract-square-sum reduces the same contiguous
-                    # dsub axis per (query, codeword) as the per-row
-                    # form, so every double is identical — only the
-                    # dot branch must stay per-row (BLAS gemv/gemm
-                    # call shapes round differently on this libm)
-                    per_j = [
-                        np.floor(
-                            (
-                                (
-                                    (
-                                        x[:, None, j * dsub : (j + 1) * dsub]
-                                        - books[j][None, :, :]
-                                    )
-                                    ** 2
-                                ).sum(-1)
-                                + 1e-9
-                            )
-                            * 1e6
-                            + 0.5
-                        ).astype(np.int64)
-                        for j in range(m)
-                    ]
-                    tables = np.stack(per_j, axis=1).tolist()
-                else:
-                    tables = []
-                    for row in x:
-                        lut = [
-                            np.floor(
-                                (
-                                    books[j] @ row[j * dsub : (j + 1) * dsub]
-                                    + 1e-9
-                                )
-                                * 1e6
-                                + 0.5
-                            ).astype(np.int64).tolist()
-                            for j in range(m)
-                        ]
-                        tables.append(lut)
-                yield pd.DataFrame(
-                    {"query_id": pdf[idc].values, "lut": tables}
-                )
-
-        q = queries.select(idc, vc).mapInPandas(
-            luts, schema="query_id long, lut array<array<bigint>>"
-        )
-        codes = self._codes
-        if filter_ids is not None:
-            ids = filter_ids.select(
-                F.col(filter_ids.columns[0]).alias(idc)
-            ).distinct()
-            codes = codes.join(ids, idc, "left_semi")
-        adc = (
-            F.broadcast(q)
-            .crossJoin(codes)
-            .filter(F.col("vec_id") != F.col("query_id"))
-            .select(
-                "query_id",
-                F.col("vec_id").alias("neighbor_id"),
-                F.aggregate(
-                    F.zip_with(
-                        "codes",
-                        "lut",
-                        lambda c, row: F.element_at(row, (c + 1).cast("int")),
-                    ),
-                    F.lit(0).cast("long"),
-                    lambda acc, x: acc + x,
-                ).alias("adc_dist"),
-            )
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("adc_dist").desc() if is_dot else F.col("adc_dist").asc(),
-            F.col("neighbor_id").asc(),
-        )
-        shortlist = (
-            adc.withColumn("_r", F.row_number().over(w))
-            .filter(F.col("_r") <= k * self.refine)
-            .select("query_id", "neighbor_id")
-        )
-        # exact re-rank: join true vectors for shortlist rows only
-        qv = queries.select(
-            F.col(idc).alias("query_id"),
-            _as_double(F.col(vc)).alias("qv"),
-        )
-        cv = self._corpus.select(
-            F.col(idc).alias("neighbor_id"),
-            _as_double(F.col(vc)).alias("cv"),
-        )
-        # rank on the stable-rounded exact score so the final cut is
-        # reproducible across engines
-        expr, out_col, desc = _score_parts(
-            self.metric, F.col("qv"), F.col("cv")
-        )
-        rer = (
-            shortlist.join(F.broadcast(qv), on="query_id")
-            .join(cv, on="neighbor_id")
-            .select(
-                "query_id",
-                "neighbor_id",
-                stable_round(expr, 6).alias(out_col),
-            )
-        )
-        w2 = Window.partitionBy("query_id").orderBy(
-            F.col(out_col).desc() if desc else F.col(out_col).asc(),
-            F.col("neighbor_id").asc(),
-        )
-        return (
-            rer.withColumn("rank", F.row_number().over(w2))
-            .filter(F.col("rank") <= k)
-        )
-
-
 class IVFPQANN:
     """IVF-PQ (Jégou et al. 2011, the faiss ``IVFx,PQy`` shape):
     coarse k-means cells prune WHERE to scan, residual product codes
     shrink WHAT is scanned — together the standard billion-vector
-    index. Everything scale-relevant is a DataFrame shape:
+    index. A 768-dim float32 vector is ~3 KB; its PQ code at m=16,
+    256 centroids is 16 BYTES, so the scanned relation shrinks ~200×
+    and the scan becomes integer lookups instead of float dot
+    products. Everything scale-relevant is a DataFrame shape:
 
-    * ``fit``: seeded numpy k-means on a bounded driver sample for
-      the coarse centroids; PQ sub-codebooks trained on RESIDUALS
-      (vector − its cell centroid — the faiss construction, much
-      tighter quantization than raw-vector PQ); ONE vectorized
-      mapInPandas pass assigns every corpus vector its cell and its
-      m-byte residual code. The persisted code relation is keyed by
-      ``cell``.
+    * ``fit``: sample ≤ ``train_sample`` vectors to the driver
+      (seeded, documented bound — codebooks are model parameters,
+      like every KMeans); cosine L2-normalizes them (so squared-L2
+      ADC order == cosine order), dot / l2 keep the RAW vectors.
+      Seeded numpy k-means gives the coarse centroids; PQ
+      sub-codebooks are trained on RESIDUALS (vector − its cell
+      centroid — the faiss construction, much tighter quantization
+      than raw-vector PQ); ONE vectorized mapInPandas pass assigns
+      every corpus vector its cell and its m-byte residual code. The
+      persisted code relation is keyed by ``cell``.
     * ``search``: queries compute their ``nprobe`` nearest cells and
       one m×ksub LUT per probed cell (residual against that cell's
       centroid) in one Arrow pass, then JOIN the code relation ON
       ``cell`` — the inverted-file pruning is literally a keyed join,
       so Spark scans only probed cells' codes. ADC distance stays
       JVM-side (``aggregate(zip_with(codes, lut, element_at))``);
-      top ``k·refine`` candidates re-rank exactly by cosine.
+      top ``k·refine`` candidates are then exactly re-ranked against
+      the true vectors (a keyed join, k·refine rows per query — the
+      standard PQ refine step).
 
     Training is iterative ⇒ rows-only gate; recall pinned by the
     planted-neighbor test.
     """
+
+    _normalize = staticmethod(_normalize)
 
     def __init__(
         self,
@@ -1200,6 +819,8 @@ class IVFPQANN:
     ):
         if dim % m != 0:
             raise ValueError(f"m={m} must divide dim={dim}")
+        if ksub < 2 or ksub > 256:
+            raise ValueError("ksub must be in 2..256")
         if nprobe > num_cells:
             raise ValueError("nprobe must be <= num_cells")
         self.dim = dim
@@ -1224,16 +845,8 @@ class IVFPQANN:
         cents = x[rng.choice(len(x), size=k, replace=False)].copy()
         return _lloyd_update(x, cents, self.iters)
 
-    def _prep(self, x):
-        return _prep_fn(self.metric)(x)
-
-    def _cell_order(self, x, cents):
-        """Per-row cell ranking under the index metric — see
-        ``_cell_order_fn``. Encode-assign and search-probe use the
-        SAME rule — a mismatch craters recall."""
-        return _cell_order_fn(self.metric)(x, cents)
-
-    def fit(self, corpus: DataFrame) -> "IVFPQANN":
+    def _train_sample(self, corpus: DataFrame):
+        """(corpus size, prepared driver sample) for training."""
         import numpy as np
 
         n = corpus.count()
@@ -1243,24 +856,38 @@ class IVFPQANN:
             .select(self.vector_column)
             .collect()
         )
-        x = self._prep(np.array([r[0] for r in sample], dtype=np.float64))
-        rng = np.random.default_rng(self.seed)
-        self.centroids = self._kmeans(x, self.num_cells, rng)
-        # residual codebooks: train on sample residuals vs own cell
-        # (matmul expansion — the broadcast form is an (n, cells, d)
-        # temporary, ~650 MB at the sf1 sample size); cell assignment
-        # follows the index metric's rule
-        cell = self._cell_order(x, self.centroids)[:, 0]
-        resid = x - self.centroids[cell]
+        x = np.array([r[0] for r in sample], dtype=np.float64)
+        return n, _prep_fn(self.metric)(x)
+
+    def _train_codebooks(self, resid, rng):
+        import numpy as np
+
         dsub = self.dim // self.m
-        self.codebooks = np.stack(
+        return np.stack(
             [
                 self._kmeans(resid[:, j * dsub : (j + 1) * dsub], self.ksub, rng)
                 for j in range(self.m)
             ]
         )
+
+    def _index(self, corpus: DataFrame, n: Optional[int] = None) -> None:
         self._corpus = corpus
         self._codes = self._encode(corpus, n=n).persist()
+
+    def fit(self, corpus: DataFrame) -> "IVFPQANN":
+        import numpy as np
+
+        n, x = self._train_sample(corpus)
+        rng = np.random.default_rng(self.seed)
+        self.centroids = self._kmeans(x, self.num_cells, rng)
+        # residual codebooks: train on sample residuals vs own cell
+        # (matmul expansion — the broadcast form is an (n, cells, d)
+        # temporary, ~650 MB at the sf1 sample size); cell assignment
+        # follows the index metric's rule — encode-assign and
+        # search-probe use the SAME rule, a mismatch craters recall
+        cell = _cell_order_fn(self.metric)(x, self.centroids)[:, 0]
+        self.codebooks = self._train_codebooks(x - self.centroids[cell], rng)
+        self._index(corpus, n)
         return self
 
     def _encode(self, df: DataFrame, n: Optional[int] = None) -> DataFrame:
@@ -1286,7 +913,10 @@ class IVFPQANN:
                 for j in range(m):
                     sub = resid[:, j * dsub : (j + 1) * dsub]
                     d2j = ((sub[:, None, :] - books[j][None, :, :]) ** 2).sum(-1)
-                    # micro-unit quantized argmin — engine-reproducible
+                    # micro-unit quantized argmin (half-up, +1e-9
+                    # guard): the assignment is reproducible in any
+                    # engine; integer ties break to the lowest
+                    # centroid index on both sides
                     d2i = np.floor((d2j + 1e-9) * 1e6 + 0.5).astype(np.int64)
                     codes[:, j] = d2i.argmin(1)
                 yield pd.DataFrame(
@@ -1299,9 +929,13 @@ class IVFPQANN:
 
         from replay_spark.utils.spark_utils import ensure_min_parallelism
 
-        # same kernel-matched task sizing as PQANN._encode (see the
-        # comment there): gate-scale inputs stay one task, 10× inputs
-        # fan out to meaty tasks
+        # rows_per_task sized to the MEASURED encode kernel (~10-20
+        # µs/row: argmin over m×ksub integerized distances), not the
+        # JPEG-decode default of 256 (ms/row): a 2 000-row gate input
+        # is a 20 ms single task, so repartitioning it was pure
+        # overhead (the one real r15 PERF regression, q_pq_ann_fixed
+        # 0.72 -> 1.05 s); a 20 000-row 10× input still fans out to
+        # ~10 meaty tasks, keeping the sf1 win.
         return ensure_min_parallelism(
             df.select(idc, vc), rows_per_task=2048, n=n
         ).mapInPandas(enc, schema="vec_id long, cell int, codes array<bigint>")
@@ -1309,10 +943,13 @@ class IVFPQANN:
     def append(self, new_corpus: DataFrame) -> "IVFPQANN":
         """Incremental maintenance under frozen coarse centroids AND
         frozen residual codebooks: one encode pass over the new
-        vectors extends the cell-keyed code relation; existing codes
-        are untouched. Re-``fit`` when drift makes the cells stale."""
+        vectors extends the cell-keyed code relation and the refine
+        corpus; existing codes are untouched (faiss adds to a trained
+        index the same way). The appended index's search is exactly
+        the full-rebuild-with-this-quantizer search. Re-``fit`` when
+        drift makes the cells or codebooks stale."""
         if self.codebooks is None or self._codes is None:
-            raise ValueError("IVFPQANN must be fit before append")
+            raise ValueError(f"{type(self).__name__} must be fit before append")
         idc, vc = self.id_column, self.vector_column
         combined = (
             self._codes.unionByName(self._encode(new_corpus))
@@ -1328,27 +965,23 @@ class IVFPQANN:
 
     def save(self, path: str) -> None:
         """Coarse centroids + residual codebooks + cell-keyed codes +
-        refine vectors, all parquet under ``path``."""
+        refine vectors, all parquet under ``path`` (the refine corpus
+        is stored because the exact re-rank needs true vectors — the
+        faiss IndexRefineFlat construction)."""
+        import inspect
+
         from replay_spark.ann.store import write_meta
 
         if self.codebooks is None or self._codes is None:
-            raise ValueError("IVFPQANN must be fit before save")
+            raise ValueError(f"{type(self).__name__} must be fit before save")
+        # the params sidecar holds exactly the constructor's arguments
         write_meta(
             path,
             type(self).__name__,
             {
-                "dim": self.dim,
-                "num_cells": self.num_cells,
-                "nprobe": self.nprobe,
-                "m": self.m,
-                "ksub": self.ksub,
-                "iters": self.iters,
-                "train_sample": self.train_sample,
-                "refine": self.refine,
-                "seed": self.seed,
-                "id_column": self.id_column,
-                "vector_column": self.vector_column,
-                "metric": self.metric,
+                p: getattr(self, p)
+                for p in inspect.signature(type(self).__init__).parameters
+                if p != "self"
             },
         )
         spark = self._codes.sparkSession
@@ -1428,14 +1061,18 @@ class IVFPQANN:
         k: int = 10,
         filter_ids: Optional[DataFrame] = None,
     ) -> DataFrame:
-        """``filter_ids`` (one-column admissible-id frame)
-        semi-joins the code relation BEFORE the per-cell ADC scan —
-        pre-filtered search over the same probe set."""
+        """Exactly the BruteForceANN output shape: (query_id,
+        neighbor_id, <score col>, rank) — ADC shortlist over the
+        probed cells, exact re-rank under the index metric (cosine /
+        dot / l2). ``filter_ids`` (one-column admissible-id frame)
+        semi-joins the code relation BEFORE the ADC scan —
+        pre-filtered search over the same probe set, so the shortlist
+        is drawn entirely from admissible ids."""
         import numpy as np
         import pandas as pd
 
         if self.codebooks is None:
-            raise ValueError("IVFPQANN must be fit before search")
+            raise ValueError(f"{type(self).__name__} must be fit before search")
         cents, books = self.centroids, self.codebooks
         m, dsub, nprobe = self.m, self.dim // self.m, self.nprobe
         idc, vc = self.id_column, self.vector_column
@@ -1451,13 +1088,20 @@ class IVFPQANN:
                     )
                 )
                 probes = cell_order(x, cents)[:, :nprobe]
+                # LUT entries in exact micro-units (bigint): the ADC
+                # sum downstream is INTEGER addition — no float
+                # summation-order divergence anywhere in the
+                # shortlist ranking, in any engine. cosine/l2 entries
+                # are per-subspace squared residual distances
+                # (minimize); dot entries are per-subspace inner
+                # products against the codewords plus a q·c_cell bias
+                # (maximize — the faiss METRIC_INNER_PRODUCT ADC).
                 if not is_dot:
-                    # vectorized over every (query, probed cell) pair —
-                    # same elementwise residual subtraction and the
-                    # same contiguous dsub reduction as the per-row
-                    # form, so every double (and thus every integer
-                    # LUT entry) is identical; the dot branch stays
-                    # per-row (BLAS call-shape rounding)
+                    # vectorized over every (query, probed cell) pair:
+                    # the subtract-square-sum reduces the same
+                    # contiguous dsub axis per (pair, codeword) as a
+                    # per-row form, so every double (and thus every
+                    # integer LUT entry) is identical
                     p = probes.shape[1]
                     cellv = probes.reshape(-1)
                     rflat = np.repeat(x, p, axis=0) - cents[cellv]
@@ -1478,63 +1122,34 @@ class IVFPQANN:
                         ).astype(np.int64)
                         for j in range(m)
                     ]
-                    tables = np.stack(per_j, axis=1).tolist()
                     yield pd.DataFrame(
                         {
                             "query_id": np.repeat(pdf[idc].values, p),
                             "cell": cellv.astype("int32"),
-                            "lut": tables,
+                            "lut": np.stack(per_j, axis=1).tolist(),
                             "bias": np.zeros(len(cellv), dtype=np.int64),
                         }
                     )
                     continue
+                # dot stays per-row: BLAS gemv/gemm call shapes round
+                # differently on this libm
                 qids, cells, tables, biases = [], [], [], []
                 for qi, row in enumerate(x):
+                    lut = [
+                        np.floor(
+                            (books[j] @ row[j * dsub : (j + 1) * dsub] + 1e-9)
+                            * 1e6
+                            + 0.5
+                        ).astype(np.int64).tolist()
+                        for j in range(m)
+                    ]
                     for cell in probes[qi]:
-                        r = row - cents[cell]
-                        if is_dot:
-                            # ADC dot = q·c_cell (bias) + q·codeword
-                            # per subspace — additive like the L2 form
-                            tables.append(
-                                [
-                                    np.floor(
-                                        (
-                                            books[j]
-                                            @ row[j * dsub : (j + 1) * dsub]
-                                            + 1e-9
-                                        )
-                                        * 1e6
-                                        + 0.5
-                                    ).astype(np.int64).tolist()
-                                    for j in range(m)
-                                ]
-                            )
-                            biases.append(
-                                int(
-                                    np.floor(
-                                        (row @ cents[cell] + 1e-9) * 1e6
-                                        + 0.5
-                                    )
-                                )
-                            )
-                        else:
-                            tables.append(
-                                [
-                                    np.floor(
-                                        (
-                                            ((books[j] - r[j * dsub : (j + 1) * dsub]) ** 2)
-                                            .sum(1)
-                                            + 1e-9
-                                        )
-                                        * 1e6
-                                        + 0.5
-                                    ).astype(np.int64).tolist()
-                                    for j in range(m)
-                                ]
-                            )
-                            biases.append(0)
                         qids.append(pdf[idc].values[qi])
                         cells.append(int(cell))
+                        tables.append(lut)
+                        biases.append(
+                            int(np.floor((row @ cents[cell] + 1e-9) * 1e6 + 0.5))
+                        )
                 yield pd.DataFrame(
                     {
                         "query_id": qids,
@@ -1585,6 +1200,7 @@ class IVFPQANN:
             .filter(F.col("_r") <= k * self.refine)
             .select("query_id", "neighbor_id")
         )
+        # exact re-rank: join true vectors for shortlist rows only
         qv = queries.select(
             F.col(idc).alias("query_id"), _as_double(F.col(vc)).alias("qv")
         )
@@ -1613,3 +1229,70 @@ class IVFPQANN:
             rer.withColumn("rank", F.row_number().over(w2))
             .filter(F.col("rank") <= k)
         )
+
+
+class PQANN(IVFPQANN):
+    """Product-quantization ANN (Jégou et al. 2011): IVF-PQ with the
+    identity coarse quantizer — one cell whose centroid is the
+    origin, so every residual is the vector itself, every probe
+    scans the whole code relation and the dot bias ``q·0`` is 0.
+    Encode, append, save/load and search are ``IVFPQANN``'s;
+    only training differs: no coarse draw, and ``codebooks`` may be
+    given instead of trained.
+    """
+
+    def __init__(
+        self,
+        dim: int,
+        m: int = 8,
+        ksub: int = 16,
+        iters: int = 10,
+        train_sample: int = 100_000,
+        refine: int = 4,
+        seed: int = 42,
+        id_column: str = "vec_id",
+        vector_column: str = "embedding",
+        metric: str = "cosine",
+    ):
+        super().__init__(
+            dim,
+            num_cells=1,
+            nprobe=1,
+            m=m,
+            ksub=ksub,
+            iters=iters,
+            train_sample=train_sample,
+            refine=refine,
+            seed=seed,
+            id_column=id_column,
+            vector_column=vector_column,
+            metric=metric,
+        )
+
+    def fit(self, corpus: DataFrame, codebooks=None) -> "PQANN":
+        """Train (seeded k-means per subspace on a bounded driver
+        sample) or, with ``codebooks`` (array-like ``(m, ksub,
+        dsub)``), skip training and use the given sub-centroids
+        directly — a fully deterministic quantizer, SQL-reproducible
+        end to end; the hash-gated contract query
+        (``q_pq_ann_fixed``) uses it the way ``q_ivf_ann_fixed`` uses
+        fixed coarse centroids."""
+        import numpy as np
+
+        n = None
+        if codebooks is not None:
+            books = np.asarray(codebooks, dtype=np.float64)
+            dsub = self.dim // self.m
+            if books.ndim != 3 or books.shape[0] != self.m or books.shape[2] != dsub:
+                raise ValueError(
+                    f"codebooks shape {books.shape} != ({self.m}, ksub, {dsub})"
+                )
+            self.codebooks = books
+        else:
+            n, x = self._train_sample(corpus)
+            self.codebooks = self._train_codebooks(
+                x, np.random.default_rng(self.seed)
+            )
+        self.centroids = np.zeros((1, self.dim))
+        self._index(corpus, n)
+        return self

@@ -17,10 +17,10 @@ turns every later session's cost into one metadata read plus lazy
 parquet scans. Layout under ``path``::
 
     meta.json        {"class": ..., "format_version": 1, "params": {...}}
-    centroids/       parquet (cluster, centroid)        IVF / IVF-PQ
+    centroids/       parquet (cluster|cell, centroid)   IVF / PQ / IVF-PQ
     codebooks/       parquet (subspace, code, centroid) PQ / IVF-PQ
     indexed/         parquet (neighbor_id, cv, cluster) IVF
-    codes/           parquet (vec_id[, cell], codes)    PQ / IVF-PQ
+    codes/           parquet (vec_id, cell, codes)      PQ / IVF-PQ
     corpus/          parquet (id, vector)               PQ / IVF-PQ refine
     vectors/         parquet (node, ext_id, vec)        HNSW
     graph/           parquet (node, level, neighbors)   HNSW

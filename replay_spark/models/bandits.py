@@ -270,7 +270,9 @@ class ThompsonSampling(NonPersonalizedRecommender):
     """Per-item Beta(pos+1, neg+1) sample as the score.
 
     Parity: reference ``models/thompson_sampling.py:12-90``; the
-    Beta draw happens in a seeded pandas UDF.
+    Beta draw happens in a pandas UDF, each item's from a generator
+    seeded by ``(seed, item_id)``, so the scores do not depend on
+    partitioning or Arrow batching.
     """
 
     def __init__(
@@ -308,14 +310,27 @@ class ThompsonSampling(NonPersonalizedRecommender):
         seed = self.seed
 
         @pandas_udf(DoubleType())
-        def beta_sample(pos: pd.Series, neg: pd.Series) -> pd.Series:
-            rng = np.random.default_rng(seed)
-            return pd.Series(rng.beta(pos.to_numpy() + 1.0, neg.to_numpy() + 1.0))
+        def beta_sample(
+            item: pd.Series, pos: pd.Series, neg: pd.Series
+        ) -> pd.Series:
+            # one generator per (seed, item): an item's draw does not
+            # depend on which Arrow batch it lands in, or where
+            return pd.Series(
+                [
+                    np.random.default_rng(
+                        None if seed is None else [seed, int(i) & (2**64 - 1)]
+                    ).beta(a + 1.0, b + 1.0)
+                    for i, a, b in zip(item, pos, neg)
+                ],
+                dtype="float64",
+            )
 
         self.item_popularity = counts.select(
             self.item_column,
             beta_sample(
-                F.col("pos").cast("double"), F.col("neg").cast("double")
+                F.col(self.item_column),
+                F.col("pos").cast("double"),
+                F.col("neg").cast("double"),
             ).alias(self.rating_column),
         )
         self.item_popularity.cache().count()

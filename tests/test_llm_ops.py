@@ -1679,6 +1679,8 @@ def test_ivfpq_ann_recall(spark):
     # pruning really happened: no query shipped more LUT rows than nprobe
     with pytest.raises(ValueError):
         IVFPQANN(dim=16, num_cells=4, nprobe=5)
+    with pytest.raises(ValueError):
+        IVFPQANN(dim=16, ksub=1)
     with pytest.raises(ValueError, match="must be fit"):
         IVFPQANN(dim=16).search(df, k=2)
 

@@ -121,10 +121,30 @@ def test_ucb_and_refit(binary_dataset):
     assert recs.count() == 3
 
 
-def test_thompson(binary_dataset):
+def test_thompson(spark, binary_dataset, schema):
+    import datetime
+
     model = ThompsonSampling(seed=42)
     recs = model.fit_predict(binary_dataset, k=1)
     assert recs.count() == 3
+    # an item's draw depends on the seed and the item only, not on
+    # how the input is partitioned (30 items, so the scored items
+    # span several Arrow batches once the input is split)
+    ts = datetime.datetime(2019, 8, 22)
+    interactions = spark.createDataFrame(
+        [
+            (q, i, ts, float((7 * q + i) % 3 == 0))
+            for q in range(20)
+            for i in range(30)
+        ],
+        "query_id int, item_id int, timestamp timestamp, rating double",
+    )
+
+    def popularity(df):
+        fitted = ThompsonSampling(seed=42).fit(Dataset(schema, df))
+        return sorted(map(tuple, fitted.item_popularity.collect()))
+
+    assert popularity(interactions.repartition(7)) == popularity(interactions)
 
 
 def test_klucb(binary_dataset):
