@@ -216,21 +216,36 @@ class HNSWANN:
             self._max_level = level
             self._entry = i
 
+    def _collect_sorted(self, df: DataFrame, budget: int) -> list:
+        """(id, vector) rows of ``df`` in id order, at most
+        ``budget + 1`` of them. ``orderBy`` under a ``limit`` plans as
+        a per-partition top-k whose partial results are merged and
+        sorted on the driver: one job over a plain scan, no range
+        shuffle, and the collect stays bounded whatever the corpus
+        size."""
+        return (
+            df.select(self.id_column, self.vector_column)
+            .orderBy(self.id_column)
+            .limit(budget + 1)
+            .collect()
+        )
+
     def fit(self, corpus: DataFrame) -> "HNSWANN":
-        n = corpus.count()
-        if n > self.max_elements:
+        """Build the graph on the driver from one bounded collect.
+
+        At most ``max_elements + 1`` rows reach the driver; one row
+        over the bound raises instead of counting the corpus first.
+        Vectors are inserted in id order, so the graph depends on the
+        corpus and the seed only, not on how it is partitioned."""
+        rows = self._collect_sorted(corpus, self.max_elements)
+        if len(rows) > self.max_elements:
             raise ValueError(
-                f"corpus has {n} vectors > max_elements="
-                f"{self.max_elements}: HNSW is a driver-built index "
+                f"corpus has more than max_elements={self.max_elements} "
+                "vectors: HNSW is a driver-built index "
                 "(reference parity — hnswlib builds on the driver "
                 "too); raise the bound deliberately or use the "
                 "IVF/PQ tiers for corpora beyond driver memory"
             )
-        rows = (
-            corpus.select(self.id_column, self.vector_column)
-            .orderBy(self.id_column)
-            .collect()
-        )
         self._ids = np.array([r[0] for r in rows], dtype=np.int64)
         self._vecs = self._prep(
             np.array([r[1] for r in rows], dtype=np.float64)
@@ -261,15 +276,11 @@ class HNSWANN:
         if self._vecs is None:
             raise ValueError("HNSWANN must be fit before append")
         n0 = len(self._ids)
-        rows = (
-            new_corpus.select(self.id_column, self.vector_column)
-            .orderBy(self.id_column)
-            .collect()
-        )
+        rows = self._collect_sorted(new_corpus, max(0, self.max_elements - n0))
         if n0 + len(rows) > self.max_elements:
             raise ValueError(
-                f"append would grow the index to {n0 + len(rows)} "
-                f"vectors > max_elements={self.max_elements}"
+                f"append would grow the index past "
+                f"max_elements={self.max_elements} vectors"
             )
         if not rows:
             return self

@@ -1039,23 +1039,36 @@ class LakeTable:
         skipping the footer schema-inference job ``read.parquet``
         otherwise runs at plan time, paid once per scan, i.e. per
         DML/read/feed call. Renames/drops (mapped tables), type
-        changes and non-append reorders fall back to inference."""
+        changes and non-append reorders fall back to inference.
+
+        Nullability is compared one way: an era whose field is
+        nullable where the latest schema's is not (an append without
+        ``merge_schema`` only checks names and types) may hold nulls
+        the latest schema rules out, so it falls back to inference. An
+        era that is stricter than the latest (rewrite commits record
+        every column nullable) is safe to read with the latest."""
         if mapping is not None or not schema_json:
             return None
         if len(schemas) == 1:
             return schema_json
-        try:
-            latest = [
-                (f["name"], f.get("type"))
-                for f in json.loads(schema_json)["fields"]
+
+        def fields(s):
+            return [
+                (f["name"], f.get("type"), f.get("nullable", True))
+                for f in json.loads(s)["fields"]
             ]
+
+        try:
+            latest = fields(schema_json)
             for s in schemas:
-                fields = [
-                    (f["name"], f.get("type"))
-                    for f in json.loads(s)["fields"]
-                ]
-                if fields != latest[: len(fields)]:
+                era = fields(s)
+                if len(era) > len(latest):
                     return None
+                for (name, typ, null), (l_name, l_typ, l_null) in zip(
+                    era, latest
+                ):
+                    if (name, typ) != (l_name, l_typ) or (null and not l_null):
+                        return None
         except Exception:
             return None
         return schema_json

@@ -168,10 +168,9 @@ class NGramJaccardDeduplicator:
         if self.max_shingle_df is not None:
             # fold the hot-shingle cap into ONE shingle-keyed window
             # pass (count over partition) instead of a groupBy-count +
-            # left_anti join — and that window's exchange leaves the
-            # data partitioned by shingle, exactly what the pair
-            # self-join below wants, so Catalyst reuses the exchange
-            # (measured ~1.7× on the whole pairs() at sf0.1)
+            # left_anti join; its exchange leaves the data partitioned
+            # by shingle, which is what the pair self-join wants
+            # (measured ~1.7x on the whole pairs() at sf0.1)
             shingles = (
                 shingles.withColumn(
                     "_df",
@@ -180,7 +179,11 @@ class NGramJaccardDeduplicator:
                 .filter(F.col("_df") <= self.max_shingle_df)
                 .drop("_df")
             )
-        shingles = shingles.cache()
+        # no cache: both join sides and ``sizes`` read the same
+        # deterministic subtree, so exchange reuse runs the shingle
+        # shuffle once. A cache would add its own materialization jobs
+        # and split the scan into separately cached query stages,
+        # which stops that reuse; nothing would release it either.
         sizes = shingles.groupBy(self.id_column).agg(
             F.count(F.lit(1)).alias("_size")
         )
@@ -339,7 +342,7 @@ class MinHashLSHDeduplicator:
     def candidate_pairs(self, df: DataFrame) -> DataFrame:
         """(id_a, id_b, est_jaccard) for banded collisions ≥ threshold."""
         band_hasher = F.xxhash64 if self.hash_family == "xxhash64" else F.md5
-        sigs = self.signatures(df).cache()
+        sigs = self.signatures(df)
         bands = sigs.select(
             self.id_column,
             "signature",
@@ -363,7 +366,9 @@ class MinHashLSHDeduplicator:
                     ]
                 )
             ).alias("band", "band_hash"),
-        )
+        ).repartition("band", "band_hash")
+        # the join exchange sits below the id_a/id_b aliases, so both
+        # sides read one reused shuffle and the band hashing runs once
         left = bands.select(
             F.col(self.id_column).alias("id_a"),
             F.col("signature").alias("sig_a"),
@@ -466,7 +471,7 @@ class SimHashDeduplicator:
         return agg.select(self.id_column, fingerprint.alias("simhash"))
 
     def candidate_pairs(self, df: DataFrame) -> DataFrame:
-        fps = self.fingerprints(df).cache()
+        fps = self.fingerprints(df)
         mask = (1 << self.chunk_bits) - 1
         chunks = fps.select(
             self.id_column,
@@ -480,7 +485,9 @@ class SimHashDeduplicator:
                     ]
                 )
             ).alias("chunk", "chunk_val"),
-        )
+        ).repartition("chunk", "chunk_val")
+        # one reused shuffle under both aliased join sides: the
+        # fingerprint aggregate and the chunking run once
         left = chunks.select(
             F.col(self.id_column).alias("id_a"),
             F.col("simhash").alias("fp_a"),
@@ -628,7 +635,9 @@ class EmbeddingDeduplicator:
 
     def pairs(self, df: DataFrame) -> DataFrame:
         num_planes = self._resolve_planes(df)
-        prepared = self._prepared(df, num_planes).cache()
+        # one reused shuffle under both aliased join sides: the bucket
+        # projections run once
+        prepared = self._prepared(df, num_planes).repartition("_table", "_bucket")
         left = prepared.select(
             F.col("_id").alias("id_a"),
             F.col("_v").alias("va"),

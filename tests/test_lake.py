@@ -1,6 +1,7 @@
 """Lakehouse tier: commit log, time travel, file-granular delete,
 compaction, MERGE algebra, SCD2."""
 
+import json
 import os
 import tempfile
 
@@ -2117,3 +2118,32 @@ def test_uniform_schema_guard(spark, tmp_path):
     )
     # any column mapping -> no shortcut
     assert t._uniform_schema(schemas, {"a": "c0"}, schema_json) is None
+
+
+def test_uniform_schema_guard_nullability(spark, tmp_path):
+    """An era whose field is nullable where the latest schema's is not
+    falls back to footer inference: an append without merge_schema
+    checks names and types only, so the older files may hold nulls the
+    latest schema rules out. The opposite direction keeps the shortcut:
+    a stricter era is always readable with the looser latest schema."""
+    t = LakeTable(spark, str(tmp_path / "n"))
+    t.append(spark.createDataFrame([(1, "x"), (2, None)], "a long, b string"))
+    t.append(spark.range(3, 5).select(F.col("id").alias("a"), F.lit("y").alias("b")))
+    _, schema_json, schemas, _, _, _, mapping, _ = t._fold_state(t.latest_version())
+    latest = {f["name"]: f["nullable"] for f in json.loads(schema_json)["fields"]}
+    assert latest == {"a": False, "b": False}
+    assert t._uniform_schema(schemas, mapping, schema_json) is None
+    got = t.read()
+    assert all(f.nullable for f in got.schema.fields)
+    assert sorted(got.collect(), key=lambda r: r["a"]) == [
+        (1, "x"), (2, None), (3, "y"), (4, "y"),
+    ]
+
+    strict = LakeTable(spark, str(tmp_path / "s"))
+    strict.append(spark.range(2).select(F.col("id").alias("a")))
+    strict.append(spark.createDataFrame([(5,)], "a long"))
+    _, schema_json, schemas, _, _, _, mapping, _ = strict._fold_state(
+        strict.latest_version()
+    )
+    assert len(schemas) == 2
+    assert strict._uniform_schema(schemas, mapping, schema_json) == schema_json

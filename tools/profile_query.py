@@ -1,17 +1,22 @@
 #!/usr/bin/env python
-"""Per-query profiler for the optimization rounds (guide §1).
+"""Per-query cost profiler on the Spark event log.
 
-Builds the SAME session as bench.py (plus the UI so the REST API
-can report job/stage metrics), then for each named query:
+Builds the same session as bench.py, with an uncompressed event log,
+then for each named query runs it once cold and ``--runs`` times warm
+(query function plus a ``count()`` action, like the bench), each run
+under its own job group. After the session stops it reads the log
+with ``perfbench/ledger.py`` and reports, per run:
 
-* runs it once cold + N warm (count() action, like the bench),
-* reports per-run wall seconds and the Spark job/stage breakdown of
-  the LAST warm run (job description, duration, task time, shuffle
-  read/write bytes) via the UI REST API,
-* optionally writes .explain("formatted") to --plans-dir/<q>_<tag>.txt.
+* wall seconds, of which ``build`` is the query function itself
+  (plan construction plus any eager fit/predict actions inside it);
+* Spark jobs, tasks, executor CPU and Python-worker seconds;
+* driver seconds: wall time no job of the run covers.
+
+``--plans-dir`` writes each query's ``explain("formatted")`` to
+``<dir>/<query>_<tag>.txt``; ``--json`` writes the per-run rows.
 
 Usage:
-    python tools/profile_query.py q_e2e_eval q_ivf_ann --runs 2 \
+    python tools/profile_query.py q_e2e_eval q_ivf_ann --runs 2 \\
         --plans-dir plans/r15 --plan-tag before
 """
 
@@ -20,122 +25,111 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
-import urllib.request
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.join(ROOT, "perfbench"))
+
+from ledger import GroupCost, driver_seconds, read_ledger  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
 
 
-def rest(url):
-    with urllib.request.urlopen(url, timeout=10) as r:
-        return json.loads(r.read())
-
-
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("queries", nargs="+")
-    ap.add_argument("--runs", type=int, default=2)
+    ap.add_argument("--runs", type=int, default=2, help="warm runs per query")
     ap.add_argument("--plans-dir", default=None)
     ap.add_argument("--plan-tag", default="before")
-    ap.add_argument("--jobs", action="store_true",
-                    help="print per-job REST breakdown of the last warm run")
+    ap.add_argument("--json", default=None, help="write the per-run rows here")
     args = ap.parse_args()
 
     import __spark_entry__ as entrymod
     from replay_spark.session import get_spark_session
 
-    # the bench's session, plus the UI for the REST scraping below
+    events = tempfile.mkdtemp(prefix="profile_query_events_")
     spark = get_spark_session(
         app_name="replay_spark_profile",
         shuffle_partitions=int(CPUS),
         extra_conf={
-            "spark.driver.memory": os.environ.get(
-                "REPLAY_SPARK_DRIVER_MEM", "16g"
-            ),
-            "spark.ui.enabled": "true",
-            "spark.ui.port": "4045",
+            "spark.driver.memory": os.environ.get("REPLAY_SPARK_DRIVER_MEM", "16g"),
+            "spark.eventLog.enabled": "true",
+            "spark.eventLog.dir": events,
+            "spark.eventLog.compress": "false",
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
+    sc = spark.sparkContext
     queries = entrymod.queries()
-    base = "http://localhost:4045/api/v1/applications"
-    app_id = spark.sparkContext.applicationId
 
-    for name in args.queries:
-        fn = queries[name]
-        spark.catalog.clearCache()
-        spark.sparkContext.setJobDescription(f"{name}: cold")
-        t0 = time.time()
-        df = fn(spark, SF_DIR)
-        build_cold = time.time() - t0
-        n = df.count()
-        cold = time.time() - t0
-        warms = []
-        first_job = None
-        for i in range(args.runs):
-            spark.catalog.clearCache()
-            spark.sparkContext.setJobDescription(f"{name}: warm{i}")
-            try:
-                jobs_before = rest(f"{base}/{app_id}/jobs?status=succeeded")
-                first_job = max((j["jobId"] for j in jobs_before), default=-1)
-            except Exception:
-                first_job = None
-            t0 = time.time()
-            build_t = time.time()
-            df = fn(spark, SF_DIR)
-            build_s = time.time() - build_t
-            df.count()
-            warms.append(time.time() - t0)
-            last_build = build_s
-        spark.sparkContext.setJobDescription(None)
-        print(f"\n== {name}: cold {cold:.2f}s (build {build_cold:.2f}s) "
-              f"warm {['%.2f' % w for w in warms]} "
-              f"(last build {last_build:.2f}s) rows={n}")
-        if args.jobs and first_job is not None:
-            try:
-                jobs = rest(f"{base}/{app_id}/jobs")
-                sel = sorted(
-                    (j for j in jobs if j["jobId"] > first_job),
-                    key=lambda j: j["jobId"],
-                )
-                total = 0.0
-                for j in sel:
-                    dur = 0.0
-                    if j.get("completionTime") and j.get("submissionTime"):
-                        from datetime import datetime
-
-                        fmt = "%Y-%m-%dT%H:%M:%S.%f%Z"
-                        dur = (
-                            datetime.strptime(j["completionTime"], fmt)
-                            - datetime.strptime(j["submissionTime"], fmt)
-                        ).total_seconds()
-                    total += dur
-                    print(
-                        f"  job {j['jobId']:>4} {dur:6.3f}s "
-                        f"stages={len(j.get('stageIds', []))} "
-                        f"tasks={j.get('numTasks', 0):>4} "
-                        f"{j.get('name', '')[:80]}"
+    runs = []  # (query, tag, group, start, end, build_s, rows)
+    try:
+        for name in args.queries:
+            fn = queries[name]
+            for i in range(args.runs + 1):
+                tag = "cold" if i == 0 else f"warm{i}"
+                group = f"{name}:{tag}"
+                spark.catalog.clearCache()
+                sc.setJobGroup(group, group)
+                try:
+                    start = time.time()
+                    df = fn(spark, SF_DIR)
+                    build_s = time.time() - start
+                    rows = df.count()
+                    end = time.time()
+                finally:
+                    for key in ("spark.jobGroup.id", "spark.job.description"):
+                        sc.setLocalProperty(key, None)
+                runs.append((name, tag, group, start, end, build_s, rows))
+            if args.plans_dir:
+                os.makedirs(args.plans_dir, exist_ok=True)
+                out = os.path.join(args.plans_dir, f"{name}_{args.plan_tag}.txt")
+                with open(out, "w") as fh:
+                    fh.write(
+                        df._jdf.queryExecution().explainString(
+                            spark._jvm.org.apache.spark.sql.execution.ExplainMode
+                            .fromString("formatted")
+                        )
                     )
-                print(f"  -- {len(sel)} jobs, sum job wall {total:.2f}s")
-            except Exception as exc:
-                print(f"  (REST breakdown unavailable: {exc})")
-        if args.plans_dir:
-            os.makedirs(args.plans_dir, exist_ok=True)
-            out = os.path.join(
-                args.plans_dir, f"{name}_{args.plan_tag}.txt"
-            )
-            with open(out, "w") as fh:
-                fh.write(df._jdf.queryExecution().explainString(
-                    spark._jvm.org.apache.spark.sql.execution.ExplainMode
-                    .fromString("formatted")
-                ))
-            print(f"  plan -> {out}")
+                print(f"  plan -> {out}")
+    finally:
+        spark.stop()
 
-    spark.stop()
+    groups = read_ledger(events)
+    shutil.rmtree(events, ignore_errors=True)
+    report = []
+    print(
+        f"\n{'query':<28} {'run':<6} {'wall_s':>7} {'build_s':>7} {'jobs':>5} "
+        f"{'tasks':>6} {'exec_cpu_s':>10} {'py_s':>6} {'driver_s':>8} {'rows':>9}"
+    )
+    for name, tag, group, start, end, build_s, rows in runs:
+        cost = groups.get(group, GroupCost())
+        row = {
+            "query": name,
+            "run": tag,
+            "wall_s": end - start,
+            "build_s": build_s,
+            "jobs": cost.jobs,
+            "tasks": cost.tasks,
+            "executor_cpu_s": cost.executor_cpu_s,
+            "python_worker_s": cost.python_worker_s,
+            "driver_s": driver_seconds(cost, start, end),
+            "rows": rows,
+        }
+        report.append(row)
+        print(
+            f"{name:<28} {tag:<6} {row['wall_s']:>7.2f} {build_s:>7.2f} "
+            f"{cost.jobs:>5} {cost.tasks:>6} {cost.executor_cpu_s:>10.2f} "
+            f"{cost.python_worker_s:>6.2f} {row['driver_s']:>8.2f} {rows:>9}"
+        )
+    if args.json:
+        with open(args.json, "w") as fh:
+            json.dump(report, fh, indent=1)
 
 
 if __name__ == "__main__":
