@@ -50,7 +50,7 @@ import re
 import shutil
 import time
 import uuid
-from typing import Dict, List, Optional, Sequence
+from typing import Callable, Dict, List, NamedTuple, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -78,6 +78,33 @@ _MAPPING_UNSET = object()
 
 class ConcurrentWriteError(RuntimeError):
     """Another writer committed this version first; re-read and retry."""
+
+
+class _Snapshot(NamedTuple):
+    """One version's folded log state (see :meth:`LakeTable._fold_state`)."""
+
+    live: List[str]
+    schema_json: Optional[str]
+    schemas: set
+    txns: dict
+    parts: dict
+    stats: dict
+    mapping: Optional[dict]
+    dvs: dict
+
+    def part_key(self, rel: str) -> tuple:
+        """The file's recorded partition values as a sortable key."""
+        return tuple(sorted((self.parts.get(rel) or {}).items()))
+
+    @property
+    def partition_columns(self) -> Optional[List[str]]:
+        """The partition columns when EVERY live file carries the
+        same recorded partition-key set, else None — the guard that
+        lets rewrites stay partition-preserving."""
+        keysets = {tuple(k for k, _ in self.part_key(rel)) for rel in self.live}
+        if len(keysets) != 1 or () in keysets:
+            return None
+        return list(keysets.pop())
 
 
 def _local_path(uri: str) -> str:
@@ -311,8 +338,9 @@ class LakeTable:
         return q
 
     def _fold_state(self, version: Optional[int] = None):
-        """(live_relpaths, schema_json, distinct_schemas, txn_map,
-        parts_map, stats_map, mapping) as of ``version``, starting
+        """The :class:`_Snapshot` (live_relpaths, schema_json,
+        distinct_schemas, txn_map, parts_map, stats_map, mapping,
+        dv_map) as of ``version``, starting
         from the newest usable checkpoint. ``parts_map`` holds
         {relpath: {col: str_value}} for partitioned files and
         ``stats_map`` holds {relpath: {col: {t, min, max}}} for
@@ -381,7 +409,9 @@ class LakeTable:
         live_set = set(live)
         parts = {k: v for k, v in parts.items() if k in live_set}
         stats = {k: v for k, v in stats.items() if k in live_set}
-        return live, schema_json, schemas, txns, parts, stats, mapping, dvs
+        return _Snapshot(
+            live, schema_json, schemas, txns, parts, stats, mapping, dvs
+        )
 
     # -- CHECK constraints (stored in the log, enforced on every write) ------
     #
@@ -397,34 +427,38 @@ class LakeTable:
     # format; this follows the public Delta constraints protocol
     # (delta.constraints.* table properties) for this log.
 
-    def _table_constraints(self, version: Optional[int] = None) -> dict:
-        """{name: sql_expr} in force as of ``version`` — its own
+    def _rules(self, kind: str, version: Optional[int] = None) -> dict:
+        """{name: sql_expr} of the ``kind`` rules ("constraints" or
+        "generated") in force as of ``version`` — their own
         lightweight fold (checkpoint base + commit tail), separate
         from _fold_state so the 8-tuple contract stays stable.
         Memoized per resolved version (commits are immutable)."""
         resolved = version if version is not None else self.latest_version()
-        key = ("constraints", resolved)
+        key = (kind, resolved)
         hit = self._rules_memo.get(key)
         if hit is not None:
             return dict(hit)
-        cons: dict = {}
+        rules: dict = {}
         start = -1
         ckpt = self._latest_checkpoint(resolved)
         if ckpt is not None:
-            cons = dict(ckpt.get("constraints") or {})
+            rules = dict(ckpt.get(kind) or {})
             start = ckpt["version"]
         for c in self._commits(after=start):
             if c["version"] > resolved:
                 break
-            for name, expr in (c.get("constraints") or {}).items():
+            for name, expr in (c.get(kind) or {}).items():
                 if expr is None:
-                    cons.pop(name, None)
+                    rules.pop(name, None)
                 else:
-                    cons[name] = expr
+                    rules[name] = expr
         if len(self._rules_memo) > 256:
             self._rules_memo.clear()
-        self._rules_memo[key] = dict(cons)
-        return cons
+        self._rules_memo[key] = dict(rules)
+        return rules
+
+    def _table_constraints(self, version: Optional[int] = None) -> dict:
+        return self._rules("constraints", version)
 
     def table_constraints(self) -> dict:
         """The CHECK constraints currently in force."""
@@ -466,31 +500,7 @@ class LakeTable:
     # -- generated columns (computed on write, validated if given) -----------
 
     def _generated_columns(self, version: Optional[int] = None) -> dict:
-        """{column: sql_expr} generation rules in force — same fold
-        shape as :meth:`_table_constraints`, same per-version memo."""
-        resolved = version if version is not None else self.latest_version()
-        key = ("generated", resolved)
-        hit = self._rules_memo.get(key)
-        if hit is not None:
-            return dict(hit)
-        gens: dict = {}
-        start = -1
-        ckpt = self._latest_checkpoint(resolved)
-        if ckpt is not None:
-            gens = dict(ckpt.get("generated") or {})
-            start = ckpt["version"]
-        for c in self._commits(after=start):
-            if c["version"] > resolved:
-                break
-            for name, expr in (c.get("generated") or {}).items():
-                if expr is None:
-                    gens.pop(name, None)
-                else:
-                    gens[name] = expr
-        if len(self._rules_memo) > 256:
-            self._rules_memo.clear()
-        self._rules_memo[key] = dict(gens)
-        return gens
+        return self._rules("generated", version)
 
     def generated_columns(self) -> dict:
         """The generation rules currently in force."""
@@ -540,8 +550,7 @@ class LakeTable:
         base = self.latest_version()
         if name not in self._generated_columns(base):
             raise KeyError(f"no generated column {name!r} at {self.path}")
-        self.snapshot_files(version=base)
-        schema = StructType.fromJson(json.loads(self._last_schema_json))
+        schema = StructType.fromJson(json.loads(self._fold_state(base).schema_json))
         return self._commit(
             "drop_generated_column", [], [], schema, base + 1,
             generated_update={name: None},
@@ -611,8 +620,8 @@ class LakeTable:
         existing = self._table_constraints(base)
         if name in existing:
             raise ValueError(f"constraint {name!r} already exists")
-        current = self.read(version=base)
-        n_bad = current.filter(
+        fold = self._fold_state(base)
+        n_bad = self._scan(fold, fold.live).filter(
             ~F.coalesce(F.expr(expr).cast("boolean"), F.lit(True))
         ).limit(1).count()
         if n_bad:
@@ -620,7 +629,7 @@ class LakeTable:
                 f"cannot add constraint {name!r}: existing rows "
                 f"violate {expr!r}"
             )
-        schema = StructType.fromJson(json.loads(self._last_schema_json))
+        schema = StructType.fromJson(json.loads(fold.schema_json))
         return self._commit(
             "add_constraint", [], [], schema, base + 1,
             constraint_update={name: expr},
@@ -631,8 +640,7 @@ class LakeTable:
         base = self.latest_version()
         if name not in self._table_constraints(base):
             raise KeyError(f"no constraint {name!r} at {self.path}")
-        self.snapshot_files(version=base)  # refresh _last_schema_json
-        schema = StructType.fromJson(json.loads(self._last_schema_json))
+        schema = StructType.fromJson(json.loads(self._fold_state(base).schema_json))
         return self._commit(
             "drop_constraint", [], [], schema, base + 1,
             constraint_update={name: None},
@@ -814,8 +822,7 @@ class LakeTable:
         """Live data files (absolute paths) as of ``version`` —
         checkpoint + log-tail fold."""
         self._check_time_travel(version)
-        live, schema_json, _, _, _, _, _, _ = self._fold_state(version)
-        self._last_schema_json = schema_json
+        live = self._fold_state(version).live
         return [os.path.join(self.path, p) for p in live]
 
     def read(
@@ -842,20 +849,40 @@ class LakeTable:
         if as_of is not None:
             version = self.version_as_of(as_of)
         self._check_time_travel(version)
-        live, schema_json, distinct_schemas, _, _, _, mapping, dvs = self._fold_state(version)
-        self._last_schema_json = schema_json
-        if not live:
-            if schema_json:
-                schema = StructType.fromJson(json.loads(schema_json))
-                return self.spark.createDataFrame([], schema)
+        fold = self._fold_state(version)
+        if not fold.live and not fold.schema_json:
             raise FileNotFoundError(f"no snapshot at {self.path}@{version}")
+        return self._scan(fold, fold.live)
+
+    def _scan(
+        self, fold: _Snapshot, files: Sequence[str], keep_meta: bool = False
+    ) -> DataFrame:
+        """The logical frame of ``files`` under ``fold`` — the one
+        reader behind read() and every rewrite: deletion vectors
+        applied, parquet schemas merged when the files span schema
+        eras (else the scan adopts ONE file's footer and silently
+        drops the columns only other eras carry), footer inference
+        skipped where :meth:`_uniform_schema` proves it safe, physical
+        names aliased to logical ones. ``keep_meta`` carries the
+        ``_fp``/``_ri`` (file path, row index) columns through. No
+        files: an empty frame with the table schema (and typed, null
+        meta columns)."""
+        if not files:
+            schema = StructType.fromJson(json.loads(fold.schema_json))
+            if keep_meta:
+                schema = schema.add("_fp", "string").add("_ri", "long")
+            return self.spark.createDataFrame([], schema)
         scan = self._scan_with_dv(
-            live, dvs, merge_schema=len(distinct_schemas) > 1,
+            files, fold.dvs, merge_schema=len(fold.schemas) > 1,
+            keep_meta=keep_meta,
             schema_json=self._uniform_schema(
-                distinct_schemas, mapping, schema_json
+                fold.schemas, fold.mapping, fold.schema_json
             ),
         )
-        return self._apply_mapping(scan, mapping, schema_json)
+        return self._apply_mapping(
+            scan, fold.mapping, fold.schema_json,
+            keep=("_fp", "_ri") if keep_meta else (),
+        )
 
     # -- column mapping (rename/drop WITHOUT rewrite) ------------------------
     #
@@ -917,23 +944,17 @@ class LakeTable:
     # — a 0.1% delete on a 100 TB table writes kilobytes, not
     # terabytes. Reads anti-join the scan against the pairs on
     # (parquet ``_metadata.file_path``, ``_metadata.row_index``);
-    # rewriting operations (compact/optimize/merge/delete-rewrite)
-    # materialize survivors and the commit's ``remove`` pops the
-    # pointers. The join key is the path suffix after the LAST
-    # ``/data/`` segment (data-file dirs are uuid4, globally unique),
+    # every file rewrite goes through :meth:`_rewrite`, whose scan
+    # materializes survivors and whose commit's ``remove`` pops the
+    # pointers (its DV mode writes the merged sidecar and repoints
+    # instead). The join key is the path suffix after the LAST
+    # ``/data/`` segment (data-file dirs are uuid4, globally unique;
+    # the scan side decodes Spark's URI form, :meth:`_scan_file_key`),
     # so shallow clones — whose commit keys are ``../src/data/...`` —
     # resolve the same sidecar rows without knowing the source root.
     # Cites reference behavior gap: the reference has no table format;
     # this follows the public Delta Lake deletion-vector protocol
     # shape (merge-on-read, vector-per-file, replaced-on-update).
-
-    @staticmethod
-    def _dv_scan_key():
-        """Join key for the SCAN side: file-path suffix after the
-        last '/data/'."""
-        return F.substring_index(
-            F.col("_metadata.file_path"), "/data/", -1
-        )
 
     @staticmethod
     def _dv_file_key(col):
@@ -947,6 +968,20 @@ class LakeTable:
     def _dv_suffix(rel: str) -> str:
         """Driver-side twin of :meth:`_dv_file_key`."""
         return ("/" + rel.replace(os.sep, "/")).rsplit("/data/", 1)[-1]
+
+    @staticmethod
+    def _scan_file_key(col):
+        """The same key for a scanned ``_fp``: Spark reports the
+        file as a URI, which percent-encodes what a hive dir name may
+        hold (a space, ``%``), so the suffix is decoded back to the
+        stored path's form — the decoding :meth:`_touched` applies on
+        the driver. ``+`` is literal in a URI path and is kept from
+        the form decoder; suffixes without an escape skip it."""
+        suffix = F.substring_index(col, "/data/", -1)
+        return F.when(
+            F.instr(suffix, "%") > 0,
+            F.url_decode(F.regexp_replace(suffix, r"\+", "%2B")),
+        ).otherwise(suffix)
 
     def _dv_rows(
         self, dvs: dict, files_rel: Optional[List[str]] = None
@@ -1008,10 +1043,9 @@ class LakeTable:
             F.col("row_index").cast("long").alias("_dv_ri"),
         )
         right = F.broadcast(pairs) if small else pairs
-        cond = (
-            F.substring_index(F.col("_fp"), "/data/", -1)
-            == F.col("_dv_key")
-        ) & (F.col("_ri") == F.col("_dv_ri"))
+        cond = (self._scan_file_key(F.col("_fp")) == F.col("_dv_key")) & (
+            F.col("_ri") == F.col("_dv_ri")
+        )
         return scan.join(right, cond, "left_anti")
 
     @staticmethod
@@ -1082,7 +1116,7 @@ class LakeTable:
         schema_json: Optional[str] = None,
     ) -> DataFrame:
         """Physical-schema scan of ``files_rel`` with deletion
-        vectors applied — the shared reader under read()/rewrites.
+        vectors applied — the reader under :meth:`_scan` and changes().
         Clean files take the plain zero-overhead path; only dv'd
         files pay the anti-join. ``keep_meta`` carries ``_fp``/
         ``_ri`` (file path, row index) into the result.
@@ -1137,11 +1171,21 @@ class LakeTable:
         ).coalesce(1).write.parquet(os.path.join(self.path, rel))
         return rel
 
-    def _identity_mapping(self, schema_json: str) -> dict:
-        return {
+    def _ddl_state(self):
+        """(latest version, schema JSON, column mapping) for a
+        metadata-only column commit; an unmapped table's mapping is
+        the identity."""
+        base = self.latest_version()
+        if base < 0:
+            raise FileNotFoundError(f"no commits at {self.path}")
+        fold = self._fold_state(base)
+        if not fold.schema_json:
+            raise ValueError("table has no recorded schema")
+        mapping = fold.mapping or {
             f["name"]: f["name"]
-            for f in json.loads(schema_json).get("fields", [])
+            for f in json.loads(fold.schema_json).get("fields", [])
         }
+        return base, fold.schema_json, mapping
 
     def _guard_indexed_column(self, name: str, op: str) -> None:
         scfg = self._stats_config()
@@ -1170,14 +1214,7 @@ class LakeTable:
         (``"int"``, ``"array<string>"``, ...)."""
         from pyspark.sql.types import DataType
 
-        base = self.latest_version()
-        if base < 0:
-            raise FileNotFoundError(f"no commits at {self.path}")
-        _, schema_json, _, _, _, _, mapping, _ = self._fold_state(base)
-        if not schema_json:
-            raise ValueError("table has no recorded schema")
-        if mapping is None:
-            mapping = self._identity_mapping(schema_json)
+        base, schema_json, mapping = self._ddl_state()
         if name in mapping:
             raise ValueError(f"column {name!r} already exists")
         dt = DataType.fromDDL(dtype)
@@ -1200,14 +1237,7 @@ class LakeTable:
         after the rename write the new logical column into the old
         physical slot, so every file era stays one physical
         schema."""
-        base = self.latest_version()
-        if base < 0:
-            raise FileNotFoundError(f"no commits at {self.path}")
-        _, schema_json, _, _, _, _, mapping, _ = self._fold_state(base)
-        if not schema_json:
-            raise ValueError("table has no recorded schema")
-        if mapping is None:
-            mapping = self._identity_mapping(schema_json)
+        base, schema_json, mapping = self._ddl_state()
         if old not in mapping:
             raise ValueError(f"no such column: {old!r}")
         if new in mapping:
@@ -1234,14 +1264,7 @@ class LakeTable:
         rewrite of a file (delete/compact/merge) physically sheds
         it. Partition columns can't be dropped (the layout and the
         log-pruning metadata are keyed on them)."""
-        base = self.latest_version()
-        if base < 0:
-            raise FileNotFoundError(f"no commits at {self.path}")
-        _, schema_json, _, _, _, _, mapping, _ = self._fold_state(base)
-        if not schema_json:
-            raise ValueError("table has no recorded schema")
-        if mapping is None:
-            mapping = self._identity_mapping(schema_json)
+        base, schema_json, mapping = self._ddl_state()
         if name not in mapping:
             raise ValueError(f"no such column: {name!r}")
         if len(mapping) == 1:
@@ -1332,18 +1355,6 @@ class LakeTable:
         )
         parts: List[DataFrame] = []
 
-        def _read_files(rel: List[str]) -> Optional[DataFrame]:
-            if not rel:
-                return None
-            reader = self.spark.read
-            if uniform:
-                reader = reader.schema(
-                    StructType.fromJson(json.loads(uniform))
-                )
-            return reader.parquet(
-                *[os.path.join(self.path, p) for p in rel]
-            )
-
         # running DV state from the feed start: a commit's "dv" key
         # repoints files without touching add/remove, so its row
         # delta is (pairs_after \ pairs_before) deletes plus
@@ -1366,8 +1377,8 @@ class LakeTable:
                 # one plan per file — a wide dv commit would
                 # otherwise explode the feed's plan), diffed under
                 # the pre- and post-commit vectors
-                file_scan = self._with_meta(
-                    _read_files(repointed)
+                file_scan = self._scan_with_dv(
+                    repointed, {}, keep_meta=True, schema_json=uniform
                 )
                 before_map = {
                     f: dv_state[f] for f in repointed if f in dv_state
@@ -1412,7 +1423,7 @@ class LakeTable:
                 def _rows_for(pos):
                     right = F.broadcast(pos) if small else pos
                     cond = (
-                        F.substring_index(F.col("_fp"), "/data/", -1)
+                        self._scan_file_key(F.col("_fp"))
                         == F.col("_dv_key")
                     ) & (F.col("_ri") == F.col("_dv_ri"))
                     return file_scan.join(right, cond, "left_semi").drop(
@@ -1448,27 +1459,16 @@ class LakeTable:
             # added files read through the POST-commit deletion
             # vectors — a commit that re-adds a file together with a
             # dv pointer (restore across a compact back to a dv'd
-            # era) must not report dv-deleted rows as inserts
-            added_rel = c.get("add", [])
-            if any(f in dv_state for f in added_rel):
-                added = self._scan_with_dv(
-                    added_rel, dv_state, schema_json=uniform
-                )
-            else:
-                added = _read_files(added_rel)
-            # pre-image files read through their PRE-commit deletion
-            # vectors — otherwise a rewrite touching a dv'd file
-            # re-reports its already-deleted rows as deletes
-            removed_rel = c.get("remove", [])
-            removed_dvs = {
-                f: dv_state[f] for f in removed_rel if f in dv_state
-            }
-            if removed_rel and removed_dvs:
-                removed = self._scan_with_dv(
-                    removed_rel, dv_state, schema_json=uniform
-                )
-            else:
-                removed = _read_files(removed_rel)
+            # era) must not report dv-deleted rows as inserts; the
+            # pre-image files through their PRE-commit vectors —
+            # otherwise a rewrite touching a dv'd file re-reports its
+            # already-deleted rows as deletes
+            added, removed = (
+                self._scan_with_dv(rel, dv_state, schema_json=uniform)
+                if rel
+                else None
+                for rel in (c.get("add", []), c.get("remove", []))
+            )
             if op == "append":
                 ins, dels = added, None
             else:  # delete / overwrite / merge: diff rewritten files
@@ -1528,8 +1528,8 @@ class LakeTable:
         """Hive-style partitioned write that keeps files
         SELF-CONTAINED: the layout partitions on duplicated
         ``_p_<col>`` path columns, so the real columns stay physical
-        in every parquet file — rewrites (delete/compact/optimize/
-        merge) and plain ``read.parquet(files)`` compose with zero
+        in every parquet file — :meth:`_rewrite` and plain
+        ``read.parquet(files)`` compose with zero
         read-path special cases, while the ``col=value`` path
         segments give the commit log per-file partition values for
         METADATA-ONLY pruning (no footer or data I/O). Returns
@@ -2089,8 +2089,7 @@ class LakeTable:
             # caller-supplied suite above gates only this call)
             self._enforce_table_constraints(df, current)
         if current >= 0 and not merge_schema:
-            self.snapshot_files(version=current)
-            stored = getattr(self, "_last_schema_json", None)
+            stored = self._fold_state(current).schema_json
 
             def _shape(schema_json: dict) -> list:
                 # names + types only: nullability differences are
@@ -2179,10 +2178,9 @@ class LakeTable:
                 # bin-pack ONLY the small-file tail (Delta autoCompact
                 # semantics) — the write-time hook must never balloon
                 # into a full-table rewrite on a 100 TB table
-                version = self.compact_small_files(
-                    target_file_bytes=max(
-                        self.small_file_bytes * 8, 128 * 1024 * 1024
-                    )
+                version = self._compact_small_files(
+                    max(self.small_file_bytes * 8, 128 * 1024 * 1024),
+                    self.small_file_bytes,
                 )
         return version
 
@@ -2202,33 +2200,26 @@ class LakeTable:
         current_version = self.latest_version()
         if version == current_version:
             return current_version
-        current = set(
-            os.path.relpath(p, self.path)
-            for p in self.snapshot_files(version=current_version)
-        )
-        schema = (
-            StructType.fromJson(json.loads(target_schema))
-            if target_schema
-            else StructType.fromJson(
-                json.loads(self._last_schema_json)
-            )
+        cur = self._fold_state(current_version)
+        current = set(cur.live)
+        schema = StructType.fromJson(
+            json.loads(target_schema or cur.schema_json)
         )
         add = sorted(target - current)
         add_set = set(add)
         parts = {k: v for k, v in tgt_parts.items() if k in add_set}
         # restore the target era's column mapping too (explicit None
         # resets a mapped table back to its unmapped era)
-        cur_mapping = self._mapping(current_version)
+        cur_mapping = cur.mapping
         # deletion vectors restore with the era: re-point every
         # target-live file whose effective post-restore pointer
         # (popped if re-added, else the current one) differs from the
         # target's — None entries CLEAR (un-delete; the change feed
         # reports the reappearing rows as inserts)
-        cur_dvs = self._fold_state(current_version)[7]
         dv_diff = {}
         for f in target:
             want = tgt_dvs.get(f)
-            have = None if f in add_set else cur_dvs.get(f)
+            have = None if f in add_set else cur.dvs.get(f)
             if want != have:
                 dv_diff[f] = want
         return self._commit(
@@ -2882,130 +2873,24 @@ class LakeTable:
                 f"mode must be 'rewrite' or 'dv', got {mode!r}"
             )
         cond = F.expr(condition) if isinstance(condition, str) else condition
+        cond_t = F.coalesce(cond, F.lit(False))
         base_version = self.latest_version()
-        (
-            live, schema_json, distinct_schemas,
-            _, _, _, mapping, dvs,
-        ) = self._fold_state(base_version)
-        self._last_schema_json = schema_json
-        if not live:
+        fold = self._fold_state(base_version)
+        if not fold.live:
             return base_version
-        # ONE scan finds matching rows' files (and, for dv mode,
-        # their row indexes); on a mapped table the condition runs
-        # over logical aliases with the meta columns carried through
-        scan = self._scan_with_dv(
-            live, dvs,
-            merge_schema=len(distinct_schemas) > 1,
-            keep_meta=True,
-            schema_json=self._uniform_schema(
-                distinct_schemas, mapping, schema_json
-            ),
-        )
-        logical = self._apply_mapping(
-            scan, mapping, schema_json, keep=("_fp", "_ri")
-        )
-        pairs = logical.filter(F.coalesce(cond, F.lit(False))).select(
-            "_fp", "_ri"
-        )
-        schema = StructType.fromJson(json.loads(schema_json))
-        if mode == "dv":
-            return self._delete_dv(
-                pairs, live, dvs, schema, base_version
-            )
-        affected = {
-            os.path.normpath(_local_path(r["_fp"]))
-            for r in pairs.select("_fp").distinct().collect()
-        }
-        if not affected:
-            return base_version
-        live_abs = self.snapshot_files(version=base_version)
-        # normalize: shallow-clone entries join to un-normalized
-        # ``clone/../source/data/...`` paths
-        touched = [
-            p
-            for p in live_abs
-            if os.path.normpath(os.path.abspath(p)) in affected
-        ]
-        touched_rel = [os.path.relpath(p, self.path) for p in touched]
-        # delete rows where cond is TRUE; NULL-cond rows survive.
-        # On a mapped table the touched files carry PHYSICAL names:
-        # alias to logical for the condition, back to physical for
-        # the rewrite (which also sheds logically-dropped columns).
-        # The DV-aware scan keeps previously-dv-deleted rows out of
-        # the survivor set; the remove pops their pointers.
-        raw = self._scan_with_dv(
-            touched_rel, dvs,
-            schema_json=self._uniform_schema(
-                distinct_schemas, mapping, schema_json
-            ),
-        )
-        survivors = self._apply_mapping(
-            raw, mapping, schema_json
-        ).filter(~F.coalesce(cond, F.lit(False)))
-        files, new_parts = self._write_rewrite(
-            survivors, mapping, base_version
-        )
-        return self._commit_reconciled(
-            "delete", files, touched_rel, schema, base_version,
-            parts=new_parts,
-        )
-
-    def _delete_dv(
-        self,
-        pairs: DataFrame,
-        live: List[str],
-        dvs: dict,
-        schema: StructType,
-        base_version: int,
-        add_files: Sequence[str] = (),
-        add_parts: Optional[dict] = None,
-        operation: str = "delete",
-    ) -> int:
-        """Commit a deletion-vector update from matched (_fp, _ri)
-        pairs: resolve file paths to live relpaths via a broadcast
-        O(files) lookup, merge with the touched files' EXISTING
-        vectors (pointer-replacement semantics: one sidecar holds a
-        file's complete vector), write one new sidecar, commit the
-        repoints. The pair relation itself never touches the driver
-        — only the distinct touched-file list does."""
-        from replay_spark.utils.spark_utils import local_df
-
-        lookup = local_df(
-            self.spark,
-            [(self._dv_suffix(rel), rel) for rel in live],
-            "suffix string, file string",
-        )
-        new_pairs = (
-            pairs.withColumn(
-                "suffix", F.substring_index(F.col("_fp"), "/data/", -1)
-            )
-            .join(F.broadcast(lookup), "suffix")
-            .select(
-                F.col("file"),
-                F.col("_ri").cast("long").alias("row_index"),
-            )
-        )
-        touched = sorted(
-            r["file"]
-            for r in new_pairs.select("file").distinct().collect()
-        )
+        # ONE scan finds the matching rows' files (and, for dv mode,
+        # their row indexes); the condition runs over logical names
+        matched = self._scan(fold, fold.live, keep_meta=True).filter(cond_t)
+        touched = self._touched(fold, matched)
         if not touched:
             return base_version
-        merged = new_pairs
-        existing = self._dv_rows(dvs, touched)
-        if existing is not None:
-            merged = merged.unionByName(
-                existing.select("file", "row_index")
+        if mode == "dv":
+            return self._rewrite(
+                "delete", base_version, fold, touched, dv_rows=matched
             )
-        sidecar = self._write_dv_sidecar(merged.distinct())
-        return self._commit_reconciled(
-            operation,
-            list(add_files),
-            [],
-            schema,
-            base_version,
-            parts=add_parts,
-            dv={f: sidecar for f in touched},
+        return self._rewrite(
+            "delete", base_version, fold, touched,
+            lambda rows: rows.filter(~cond_t),
         )
 
     def update(self, condition, set: dict, mode: str = "rewrite") -> int:
@@ -3027,15 +2912,12 @@ class LakeTable:
                 f"mode must be 'rewrite' or 'dv', got {mode!r}"
             )
         cond = F.expr(condition) if isinstance(condition, str) else condition
+        cond_t = F.coalesce(cond, F.lit(False))
         base_version = self.latest_version()
-        (
-            live, schema_json, distinct_schemas,
-            _, _, _, mapping, dvs,
-        ) = self._fold_state(base_version)
-        self._last_schema_json = schema_json
-        if not live:
+        fold = self._fold_state(base_version)
+        if not fold.live:
             return base_version
-        schema = StructType.fromJson(json.loads(schema_json))
+        schema = StructType.fromJson(json.loads(fold.schema_json))
         names = {f.name for f in schema.fields}
         unknown = {c for c in set} - names
         if unknown:
@@ -3045,127 +2927,232 @@ class LakeTable:
             c: (F.expr(e) if isinstance(e, str) else e).cast(types[c])
             for c, e in set.items()
         }
-        cond_t = F.coalesce(cond, F.lit(False))
-        scan = self._scan_with_dv(
-            live, dvs,
-            merge_schema=len(distinct_schemas) > 1,
-            keep_meta=True,
-            schema_json=self._uniform_schema(
-                distinct_schemas, mapping, schema_json
-            ),
-        )
-        logical = self._apply_mapping(
-            scan, mapping, schema_json, keep=("_fp", "_ri")
-        )
-        matched = logical.filter(cond_t)
-        if matched.limit(1).count() == 0:
+        matched = self._scan(fold, fold.live, keep_meta=True).filter(cond_t)
+        touched = self._touched(fold, matched)
+        if not touched:
             return base_version
-        if mode == "dv":
-            updated = matched.select(
+
+        def assign(rows: DataFrame) -> DataFrame:
+            # matching rows take the SET values, the rest carry over
+            return rows.select(
                 *[
-                    assigns.get(f.name, F.col(f.name)).alias(f.name)
+                    F.when(cond_t, assigns[f.name])
+                    .otherwise(F.col(f.name))
+                    .alias(f.name)
+                    if f.name in assigns
+                    else F.col(f.name)
                     for f in schema.fields
                 ]
             )
-            self._apply_generated(updated, base_version)
-            self._enforce_table_constraints(updated, base_version)
-            # route the new-row-version file through the
-            # partition-preserving writer: on a partitioned table the
-            # added file must carry partition values or
-            # _partition_columns() goes None for the whole table,
-            # silently disabling log pruning + partition compaction
-            files, new_parts = self._write_rewrite(
-                updated, mapping, base_version
-            )
-            return self._delete_dv(
-                matched.select("_fp", "_ri"),
-                live,
-                dvs,
-                schema,
-                base_version,
-                add_files=files,
-                add_parts=new_parts,
-                operation="update",
-            )
-        affected = {
-            os.path.normpath(_local_path(r["_fp"]))
-            for r in matched.select("_fp").distinct().collect()
-        }
-        live_abs = self.snapshot_files(version=base_version)
-        touched = [
-            p
-            for p in live_abs
-            if os.path.normpath(os.path.abspath(p)) in affected
-        ]
-        touched_rel = [os.path.relpath(p, self.path) for p in touched]
-        raw = self._apply_mapping(
-            self._scan_with_dv(
-                touched_rel, dvs,
-                schema_json=self._uniform_schema(
-                    distinct_schemas, mapping, schema_json
-                ),
-            ),
-            mapping,
-            schema_json,
-        )
-        rewritten = raw.select(
-            *[
-                F.when(cond_t, assigns[f.name])
-                .otherwise(F.col(f.name))
-                .alias(f.name)
-                if f.name in assigns
-                else F.col(f.name)
-                for f in schema.fields
-            ]
-        )
-        self._apply_generated(rewritten, base_version)
-        self._enforce_table_constraints(rewritten, base_version)
-        files, new_parts = self._write_rewrite(
-            rewritten, mapping, base_version
-        )
-        return self._commit_reconciled(
-            "update", files, touched_rel, schema, base_version,
-            parts=new_parts,
+
+        return self._rewrite(
+            "update", base_version, fold, touched, assign,
+            dv_rows=matched if mode == "dv" else None, check=True,
         )
 
-    def _write_rewrite(
-        self, rows: DataFrame, mapping, base_version: int
-    ):
-        """Write a rewrite's surviving rows, PRESERVING partition
-        metadata when the table has uniform partition columns (the
-        r11 compact() lesson applied to delete/update rewrites:
-        without this, every rewritten file silently drops out of the
-        zero-I/O log-pruning tier). Returns (files, parts|None)."""
-        phys = self._to_physical(rows, mapping)
-        pb = self._partition_columns(base_version)
-        if pb and all(c in phys.columns for c in pb):
-            return self._write_data_partitioned(
-                phys.repartition(*pb), pb
+    def _touched(self, fold: _Snapshot, matched: DataFrame) -> Dict[str, str]:
+        """{live relpath: scanned ``_fp``} for the files holding a row
+        of ``matched`` (a :meth:`_scan` with ``keep_meta``), in live
+        order — one distinct-path job. A scanned URI resolves by its
+        decoded suffix after the last ``/data/`` (:meth:`_dv_suffix`),
+        the key that also matches shallow-clone entries
+        (``../src/data/...``)."""
+        scanned = {
+            self._dv_suffix(_local_path(r["_fp"])): r["_fp"]
+            for r in matched.select("_fp").distinct().collect()
+        }
+        return {
+            rel: scanned[self._dv_suffix(rel)]
+            for rel in fold.live
+            if self._dv_suffix(rel) in scanned
+        }
+
+    def _file_bytes(self, rel: str) -> int:
+        try:
+            return os.path.getsize(os.path.join(self.path, rel))
+        except OSError:
+            return 0
+
+    def _rewrite(
+        self,
+        operation: str,
+        base_version: int,
+        fold: _Snapshot,
+        files: Sequence[str],
+        transform: Optional[Callable[[DataFrame], DataFrame]] = None,
+        *,
+        dv_rows: Optional[DataFrame] = None,
+        remove: bool = True,
+        target_file_bytes: Optional[int] = None,
+        zorder_by: Optional[Sequence[str]] = None,
+        check: bool = False,
+        read_schema: bool = False,
+        txn: Optional[dict] = None,
+    ) -> int:
+        """The one file-rewrite primitive under every DML, compaction
+        and deletion-vector commit — the Delta shape: a file-level
+        rewrite plus ONE atomic add/remove commit. Callers supply a
+        file selection, a row transform and a layout.
+
+        ``files`` (live relpaths) are read through :meth:`_scan`;
+        ``transform`` maps that logical frame to the rows replacing
+        them (None: the same rows), and the commit removes ``files``
+        (``remove=False``: the written rows only add). With
+        ``dv_rows`` — the matched rows carrying ``_fp``/``_ri``, and
+        ``files`` the :meth:`_touched` map — the files stay live: one
+        new sidecar holds their merged deletion vectors, and
+        ``transform`` maps the matched rows to their new versions
+        (None: write nothing).
+
+        Layout: without ``target_file_bytes`` (DML), rows on a
+        partitioned table land in hive dirs by their actual partition
+        values, so new and changed rows keep the log-pruning tier;
+        ``check`` first fills/validates generated columns and
+        enforces the CHECK constraints. ``target_file_bytes`` marks a
+        compaction (same rows): a selection spanning several
+        partitions of a partitioned table shuffles to its hive dirs,
+        fat partitions salt-split to ~target-sized files; otherwise
+        each partition's files pack into ~target-sized plain files
+        that re-record its values. ``zorder_by`` sorts every file on
+        the Morton key; packed files are also range-partitioned on it.
+
+        The commit records the fold's schema — with ``read_schema``,
+        the schema read() reports for the table, which compact,
+        optimize and merge have always recorded — and reconciles with
+        concurrent commits (:meth:`_commit_reconciled`)."""
+        # the whole table as read() sees it, when its schema is recorded
+        full = self._scan(fold, fold.live) if read_schema else None
+
+        def scan(rels: Sequence[str]) -> DataFrame:
+            if full is not None and list(rels) == fold.live:
+                return full
+            return self._scan(fold, rels)
+
+        def physical(rows: DataFrame):
+            """(physical frame, z-key column or None)."""
+            if not zorder_by:
+                return self._to_physical(rows, fold.mapping), None
+            from replay_spark.utils.layout import ZOrderLayout
+
+            z = ZOrderLayout(list(zorder_by))
+            return (
+                self._to_physical(
+                    z.transform(rows), fold.mapping, keep=(z.output_column,)
+                ),
+                z.output_column,
             )
-        return self._write_data(phys), None
+
+        groups: Dict[tuple, List[str]] = {}
+        for rel in files:
+            groups.setdefault(fold.part_key(rel), []).append(rel)
+        pb = fold.partition_columns
+        add: List[str] = []
+        parts: dict = {}
+        if target_file_bytes and not (pb and len(groups) > 1):
+
+            def pack(rels: List[str]) -> List[str]:
+                total = sum(self._file_bytes(r) for r in rels)
+                n = int(max(1, -(-total // target_file_bytes)))
+                phys, zcol = physical(scan(rels))
+                if zcol is None:
+                    return self._write_data(phys, num_files=n)
+                # range layout kept: coalescing would merge the
+                # sorted ranges back
+                return self._write_data(
+                    phys.repartitionByRange(n, zcol)
+                    .sortWithinPartitions(zcol)
+                    .drop(zcol)
+                )
+
+            todo = sorted(groups.items())
+            # a 100 TB table accreting small files across thousands
+            # of partition values must not serialize thousands of
+            # tiny Spark jobs on the driver: group writes submit
+            # through a bounded thread pool (job submission is
+            # thread-safe, uuid write dirs never collide; map keeps
+            # the sorted order, so the commit is deterministic)
+            if len(todo) > 1:
+                from concurrent.futures import ThreadPoolExecutor
+
+                with ThreadPoolExecutor(max_workers=min(8, len(todo))) as pool:
+                    written = list(pool.map(lambda kr: pack(kr[1]), todo))
+            else:
+                written = [pack(rels) for _, rels in todo]
+            for (key, _), out in zip(todo, written):
+                add.extend(out)
+                if key:
+                    parts.update({f: dict(key) for f in out})
+        else:
+            if dv_rows is not None:
+                rows = transform and transform(dv_rows.drop("_fp", "_ri"))
+            else:
+                rows = transform(scan(files)) if transform else scan(files)
+            if rows is not None:
+                if check:
+                    rows = self._apply_generated(rows, base_version)
+                    self._enforce_table_constraints(rows, base_version)
+                phys, zcol = physical(rows)
+                if pb and all(c in phys.columns for c in pb):
+                    arranged = (
+                        self._partition_arranged(
+                            phys, pb, fold, files, target_file_bytes
+                        )
+                        if target_file_bytes
+                        else phys.repartition(*pb)
+                    )
+                    if zcol is not None:
+                        arranged = arranged.sortWithinPartitions(zcol).drop(zcol)
+                    add, parts = self._write_data_partitioned(arranged, pb)
+                else:
+                    add = self._write_data(phys)
+        dv = None
+        if dv_rows is not None:
+            from replay_spark.utils.spark_utils import local_df
+
+            # pointer-replacement semantics: one sidecar holds each
+            # touched file's COMPLETE vector; the pair relation itself
+            # never touches the driver
+            lookup = local_df(
+                self.spark,
+                [(fp, rel) for rel, fp in files.items()],
+                "_fp string, file string",
+            )
+            pairs = dv_rows.join(F.broadcast(lookup), "_fp").select(
+                "file", F.col("_ri").cast("long").alias("row_index")
+            )
+            existing = self._dv_rows(fold.dvs, list(files))
+            if existing is not None:
+                pairs = pairs.unionByName(existing.select("file", "row_index"))
+            sidecar = self._write_dv_sidecar(pairs.distinct())
+            dv = {rel: sidecar for rel in sorted(files)}
+        schema = (
+            full.schema
+            if full is not None
+            else StructType.fromJson(json.loads(fold.schema_json))
+        )
+        return self._commit_reconciled(
+            operation,
+            add,
+            list(files) if remove and dv is None else [],
+            schema,
+            base_version,
+            txn=txn,
+            parts=parts or None,
+            dv=dv,
+        )
 
     def _partition_columns(self, version: Optional[int] = None):
         """The table's partition columns when EVERY live file carries
         the same recorded partition-key set, else None — the guard
         that lets compaction stay partition-preserving."""
-        live, _, _, _, parts, _, _, _ = self._fold_state(version)
-        if not live:
-            return None
-        keysets = set()
-        for rel in live:
-            p = parts.get(rel)
-            if not p:
-                return None
-            keysets.add(tuple(sorted(p)))
-        if len(keysets) != 1:
-            return None
-        return list(keysets.pop())
+        return self._fold_state(version).partition_columns
 
     def _partition_arranged(
         self,
         df: DataFrame,
         pb: Sequence[str],
-        base_version: int,
+        fold: _Snapshot,
+        files: Sequence[str],
         target_file_bytes: int,
     ) -> DataFrame:
         """Shuffle rows to their hive partition, SPLITTING fat
@@ -3173,18 +3160,13 @@ class LakeTable:
         per-partition salt. ``repartition(*pb)`` alone lands one file
         per partition per task — at 100 TB a fat partition would
         become one giant file; here each partition gets
-        ``ceil(bytes / target)`` salt buckets sized from the live
-        files' recorded partition values (driver-side metadata only,
-        no data I/O)."""
-        live, _, _, _, parts, _, _, _ = self._fold_state(base_version)
+        ``ceil(bytes / target)`` salt buckets sized from ``files``'
+        recorded partition values (driver-side metadata only, no data
+        I/O)."""
         sizes: dict = {}
-        for rel in live:
-            key = tuple(sorted((parts.get(rel) or {}).items()))
-            try:
-                b = os.path.getsize(os.path.join(self.path, rel))
-            except OSError:
-                b = 0
-            sizes[key] = sizes.get(key, 0) + b
+        for rel in files:
+            key = fold.part_key(rel)
+            sizes[key] = sizes.get(key, 0) + self._file_bytes(rel)
         n_files = {
             k: int(max(1, -(-b // target_file_bytes)))
             for k, b in sizes.items()
@@ -3236,10 +3218,9 @@ class LakeTable:
         without a recorded value are excluded (a rewrite must only
         move rows it can prove belong to the target partition)."""
         fold = self._fold_state(base_version)
-        live, parts = fold[0], fold[4]
         selected = []
-        for rel in live:
-            p = parts.get(rel) or {}
+        for rel in fold.live:
+            p = fold.parts.get(rel) or {}
             if all(
                 c in p and p[c] == (None if v is None else str(v))
                 for c, v in partition_filter.items()
@@ -3275,111 +3256,35 @@ class LakeTable:
         the hot-partition clustering move: range-partitioned on the
         z-key into ~target-sized files sorted within, so footer
         min/max stats skip files on later box queries. Without
-        ``partition_filter``, a ``zorder_by`` delegates to
-        :meth:`optimize` (the unscoped clustering path) rather than
-        silently doing a plain rewrite."""
-        if zorder_by and not partition_filter:
-            return self.optimize(
-                zorder_by=zorder_by, target_file_bytes=target_file_bytes
-            )
-        base_version = self.latest_version()
-        if partition_filter:
-            fold = self._fold_state(base_version)
-            dvs = fold[7]
-            mapping = fold[6]
-            schema_json = fold[1]
-            selected = self._partition_selected(
-                base_version, partition_filter
-            )
-            if not selected:
-                return base_version
-            # schema-evolved tables: the selected files may span
-            # schema eras — merge parquet schemas exactly like read()
-            # does, else the multi-file scan adopts ONE file's schema
-            # and silently drops columns present only in other eras
-            rows = self._scan_with_dv(
-                selected, dvs, merge_schema=len(fold[2]) > 1,
-                schema_json=self._uniform_schema(
-                    fold[2], mapping, schema_json
-                ),
-            )
-            total = sum(
-                os.path.getsize(os.path.join(self.path, p))
-                for p in selected
-            )
-            n = int(max(1, -(-total // target_file_bytes)))
-            # align to the commit-schema physical columns (mapped
-            # tables): fills physical slots absent from every
-            # selected file with typed nulls. zorder_by names are
-            # LOGICAL, so the z-key computes on the logical frame
-            logical = self._apply_mapping(rows, mapping, schema_json)
-            if zorder_by:
-                from replay_spark.utils.layout import ZOrderLayout
+        ``partition_filter``, a ``zorder_by`` is the unscoped
+        clustering path of :meth:`optimize` rather than silently
+        doing a plain rewrite."""
+        return self._compact(target_file_bytes, partition_filter, zorder_by)
 
-                z = ZOrderLayout(list(zorder_by))
-                rows = (
-                    self._to_physical(
-                        z.transform(logical),
-                        mapping,
-                        keep=(z.output_column,),
-                    )
-                    .repartitionByRange(int(n), z.output_column)
-                    .sortWithinPartitions(z.output_column)
-                    .drop(z.output_column)
-                )
-            else:
-                rows = self._to_physical(logical, mapping)
-            # record the MAXIMAL provable partition metadata for the
-            # rewritten files: every item all selected inputs agree
-            # on (always includes the filter columns); values the
-            # inputs disagree on are honestly dropped — read_where
-            # keeps files without a recorded column conservatively
-            parts_map = fold[4]
-            common = None
-            for rel in selected:
-                items = set((parts_map.get(rel) or {}).items())
-                common = items if common is None else (common & items)
-            pvals = dict(sorted(common or []))
-            # a z-ordered scoped rewrite keeps its range layout
-            # (coalescing would merge the sorted ranges back)
-            files = self._write_data(
-                rows, num_files=None if zorder_by else n
-            )
-            schema = StructType.fromJson(json.loads(schema_json))
-            return self._commit_reconciled(
-                "compact",
-                files,
-                selected,
-                schema,
-                base_version,
-                parts={f: pvals for f in files},
-            )
-        live = self.snapshot_files(version=base_version)
-        if not live:
+    def _compact(
+        self,
+        target_file_bytes: int,
+        partition_filter: Optional[dict],
+        zorder_by: Optional[Sequence[str]],
+    ) -> int:
+        """compact() and optimize(): every live file, or one
+        partition's, rewritten into ~target-sized files; the commit
+        is an ``optimize`` for an unscoped z-order, else a
+        ``compact``."""
+        base_version = self.latest_version()
+        fold = self._fold_state(base_version)
+        files = (
+            self._partition_selected(base_version, partition_filter)
+            if partition_filter
+            else fold.live
+        )
+        if not files:
             return base_version
-        current = self.read(version=base_version)
-        remove = [os.path.relpath(p, self.path) for p in live]
-        mapping = self._mapping(base_version)
-        phys = self._to_physical(current, mapping)
-        pb = self._partition_columns(base_version)
-        if pb:
-            arranged = self._partition_arranged(
-                phys, pb, base_version, target_file_bytes
-            )
-            files, new_parts = self._write_data_partitioned(arranged, pb)
-            return self._commit_reconciled(
-                "compact",
-                files,
-                remove,
-                current.schema,
-                base_version,
-                parts=new_parts,
-            )
-        total = sum(os.path.getsize(p) for p in live)
-        n = max(1, -(-total // target_file_bytes))
-        files = self._write_data(phys, num_files=int(n))
-        return self._commit_reconciled(
-            "compact", files, remove, current.schema, base_version
+        return self._rewrite(
+            "optimize" if zorder_by and not partition_filter else "compact",
+            base_version, fold, files,
+            target_file_bytes=target_file_bytes, zorder_by=zorder_by,
+            read_schema=not partition_filter,
         )
 
     def compact_small_files(
@@ -3405,83 +3310,37 @@ class LakeTable:
         alone — rewriting one small file gains nothing. Returns the
         new version (or the current one when there is nothing to
         pack)."""
-        threshold = (
+        return self._compact_small_files(
+            target_file_bytes,
             small_file_bytes
             if small_file_bytes is not None
-            else self.small_file_bytes
+            else self.small_file_bytes,
         )
+
+    def _compact_small_files(
+        self, target_file_bytes: int, small_file_bytes: int
+    ) -> int:
         base_version = self.latest_version()
-        if base_version < 0:
-            return base_version
         fold = self._fold_state(base_version)
-        live, schema_json, schemas, _, parts_map, _, mapping, dvs = fold
-        self._last_schema_json = schema_json
-        sizes = {}
-        for rel in live:
+        groups: dict = {}
+        for rel in fold.live:
             try:
-                sizes[rel] = os.path.getsize(os.path.join(self.path, rel))
+                size = os.path.getsize(os.path.join(self.path, rel))
             except OSError:
                 continue
-        groups: dict = {}
-        for rel, size in sizes.items():
-            if size < threshold:
-                key = tuple(sorted((parts_map.get(rel) or {}).items()))
-                groups.setdefault(key, []).append(rel)
-        adds: List[str] = []
-        removes: List[str] = []
-        new_parts: dict = {}
-
-        def _pack(key: tuple, rels: List[str]):
-            rows = self._scan_with_dv(
-                rels, dvs, merge_schema=len(schemas) > 1,
-                schema_json=self._uniform_schema(
-                    schemas, mapping, schema_json
-                ),
-            )
-            logical = self._apply_mapping(rows, mapping, schema_json)
-            rows = self._to_physical(logical, mapping)
-            total = sum(sizes[r] for r in rels)
-            n = int(max(1, -(-total // target_file_bytes)))
-            return key, rels, self._write_data(rows, num_files=n)
-
-        todo = [
-            (key, rels)
-            for key, rels in sorted(groups.items())
+            if size < small_file_bytes:
+                groups.setdefault(fold.part_key(rel), []).append(rel)
+        files = [
+            rel
+            for _, rels in sorted(groups.items())
             if len(rels) >= 2
+            for rel in rels
         ]
-        # a 100 TB table accreting small files across thousands of
-        # partition values must not serialize thousands of tiny
-        # Spark jobs on the driver: group writes submit through a
-        # bounded thread pool (Spark job submission is thread-safe;
-        # uuid write dirs never collide), and the single reconciled
-        # commit below swaps every group atomically either way
-        if len(todo) > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            # pool.map preserves input order, and todo is sorted by
-            # partition key — the commit below is deterministic
-            with ThreadPoolExecutor(
-                max_workers=min(8, len(todo))
-            ) as pool:
-                packed = list(pool.map(lambda kr: _pack(*kr), todo))
-        else:
-            packed = [_pack(key, rels) for key, rels in todo]
-        for key, rels, files in packed:
-            adds.extend(files)
-            removes.extend(rels)
-            if key:
-                for f in files:
-                    new_parts[f] = dict(key)
-        if not removes:
+        if not files:
             return base_version
-        schema = StructType.fromJson(json.loads(schema_json))
-        return self._commit_reconciled(
-            "compact",
-            adds,
-            removes,
-            schema,
-            base_version,
-            parts=new_parts or None,
+        return self._rewrite(
+            "compact", base_version, fold, files,
+            target_file_bytes=target_file_bytes,
         )
 
     def optimize(
@@ -3497,65 +3356,7 @@ class LakeTable:
         skip most files via footer statistics. ``partition_filter``
         scopes the rewrite to one partition (``OPTIMIZE ... WHERE
         ... ZORDER BY`` — see :meth:`compact`)."""
-        if partition_filter:
-            return self.compact(
-                target_file_bytes,
-                partition_filter=partition_filter,
-                zorder_by=zorder_by,
-            )
-        if not zorder_by:
-            return self.compact(target_file_bytes)
-        from replay_spark.utils.layout import ZOrderLayout
-
-        base_version = self.latest_version()
-        live = self.snapshot_files(version=base_version)
-        if not live:
-            return base_version
-        current = self.read(version=base_version)
-        remove = [os.path.relpath(p, self.path) for p in live]
-        mapping = self._mapping(base_version)
-        z = ZOrderLayout(list(zorder_by))
-        pb = self._partition_columns(base_version)
-        if pb:
-            # partition-preserving Z-ORDER: rows shuffle on the
-            # partition columns (fat partitions salt-split to
-            # ~target-sized buckets), cluster by the Morton key
-            # WITHIN each task, and land in fresh hive dirs whose
-            # values are re-recorded — Delta's per-partition
-            # OPTIMIZE shape
-            arranged = (
-                self._partition_arranged(
-                    self._to_physical(
-                        z.transform(current),
-                        mapping,
-                        keep=(z.output_column,),
-                    ),
-                    pb,
-                    base_version,
-                    target_file_bytes,
-                )
-                .sortWithinPartitions(z.output_column)
-                .drop(z.output_column)
-            )
-            files, new_parts = self._write_data_partitioned(arranged, pb)
-            return self._commit_reconciled(
-                "optimize",
-                files,
-                remove,
-                current.schema,
-                base_version,
-                parts=new_parts,
-            )
-        total = sum(os.path.getsize(p) for p in live)
-        n = int(max(1, -(-total // target_file_bytes)))
-        laid = self._to_physical(
-            z.layout(current, num_partitions=n).drop(z.output_column),
-            mapping,
-        )
-        files = self._write_data(laid)  # keeps the range partitioning
-        return self._commit_reconciled(
-            "optimize", files, remove, current.schema, base_version
-        )
+        return self._compact(target_file_bytes, partition_filter, zorder_by)
 
     def read_where(
         self, bounds: dict, version: Optional[int] = None
@@ -3578,7 +3379,6 @@ class LakeTable:
         live, schema_json, distinct_schemas, _, parts, stats, mapping, dvs = self._fold_state(
             version
         )
-        self._last_schema_json = schema_json
         if not live:
             raise FileNotFoundError(f"no snapshot at {self.path}@{version}")
         expected = None
@@ -3768,24 +3568,22 @@ class LakeTable:
         source); a large backfill source falls back to a shuffled
         semi-join instead of OOMing executors on the broadcast."""
         base_version = self.latest_version()
-        (
-            live_rel, schema_json, distinct_schemas,
-            _, _, _, mapping, dvs,
-        ) = self._fold_state(base_version)
-        self._last_schema_json = schema_json
-        current = self.read(version=base_version)
-        live = self.snapshot_files(version=base_version)
-        if when_not_matched_by_source != "ignore":
-            # by-source clauses act on rows whose keys are NOT in
-            # the source — they can live in ANY file, so every live
-            # file is in scope (Delta pays the same full-table cost)
-            touched = list(live)
-        elif when_matched == "ignore" and matched_clauses is None:
-            # insert-only merge: no existing row changes, so no file
-            # rewrites — the commit is a pure append of the
-            # anti-joined inserts (the touched-file key scan is
-            # skipped entirely)
-            touched = []
+        fold = self._fold_state(base_version)
+        if not fold.schema_json:
+            raise FileNotFoundError(f"no snapshot at {self.path}@{base_version}")
+        pure_insert = (
+            when_matched == "ignore"
+            and matched_clauses is None
+            and when_not_matched_by_source == "ignore"
+        )
+        if pure_insert or when_not_matched_by_source != "ignore":
+            # by-source clauses act on rows whose keys are NOT in the
+            # source — they can live in ANY file, so every live file
+            # is in scope (Delta pays the same full-table cost). An
+            # insert-only merge changes no existing row: it reads the
+            # whole table to suppress existing keys, rewrites no
+            # file, and commits a pure append of the inserts
+            files = fold.live
         else:
             keys = source.select(*on).distinct()
             # Cheap exact gate: LIMIT n+1 + count touches at most
@@ -3799,102 +3597,52 @@ class LakeTable:
             key_side = F.broadcast(keys) if small else keys
             # materialized _fp (not input_file_name(), which cannot
             # resolve over the DV-aware union scan)
-            meta_scan = self._apply_mapping(
-                self._scan_with_dv(
-                    live_rel, dvs,
-                    merge_schema=len(distinct_schemas) > 1,
-                    keep_meta=True,
-                    schema_json=self._uniform_schema(
-                        distinct_schemas, mapping, schema_json
-                    ),
-                ),
-                mapping,
-                schema_json,
-                keep=("_fp", "_ri"),
+            matched = self._scan(fold, fold.live, keep_meta=True).join(
+                key_side, list(on), "left_semi"
             )
-            affected = {
-                os.path.normpath(_local_path(r["_fp"]))
-                for r in meta_scan.join(key_side, list(on), "left_semi")
-                .select("_fp")
-                .distinct()
-                .collect()
-            }
-            touched = [
-                p
-                for p in live
-                if os.path.normpath(os.path.abspath(p)) in affected
-            ]
-        touched_rel_scan = [
-            os.path.relpath(p, self.path) for p in touched
-        ]
-        base = (
-            self._apply_mapping(
-                self._scan_with_dv(
-                    touched_rel_scan, dvs,
-                    schema_json=self._uniform_schema(
-                        distinct_schemas, mapping, schema_json
+            files = list(self._touched(fold, matched))
+
+        def merged(base: DataFrame) -> DataFrame:
+            if not pure_insert:
+                return merge_into(
+                    base, source, on, when_matched, when_not_matched,
+                    matched_condition=matched_condition,
+                    update_set=update_set,
+                    not_matched_condition=not_matched_condition,
+                    when_not_matched_by_source=when_not_matched_by_source,
+                    not_matched_by_source_condition=(
+                        not_matched_by_source_condition
                     ),
-                ),
-                mapping,
-                getattr(self, "_last_schema_json", None),
-            )
-            if touched
-            else current.limit(0)
-        )
-        if (
-            when_matched == "ignore"
-            and matched_clauses is None
-            and when_not_matched_by_source == "ignore"
-        ):
-            # insert-only: anti-join against the FULL current table
-            # (not the empty touched base — existing keys anywhere
-            # must suppress their inserts); nothing rewrites
-            if when_not_matched == "insert":
-                merged = source.join(current, list(on), "left_anti")
-                # filter on RAW source rows (before projection), so
-                # conditions may reference source-only columns and
-                # see pre-cast values — same contract as the rich
-                # path, which filters the anti-join directly
-                if not_matched_condition is not None:
-                    merged = merged.filter(
-                        F.coalesce(
-                            F.expr(not_matched_condition), F.lit(False)
-                        )
-                    )
-                # cast to the table schema: the union path coerces
-                # types implicitly (INT literal into BIGINT col);
-                # this direct append must do the same or mixed-type
-                # files break later merged-schema reads
-                merged = merged.select(
-                    *[
-                        F.col(c)
-                        .cast(current.schema[c].dataType)
-                        .alias(c)
-                        for c in current.columns
-                    ]
+                    update_set_by_source=update_set_by_source,
+                    matched_clauses=matched_clauses,
                 )
-            else:  # ignore + ignore: a no-op merge
-                merged = current.limit(0)
-        else:
-            merged = merge_into(
-                base, source, on, when_matched, when_not_matched,
-                matched_condition=matched_condition,
-                update_set=update_set,
-                not_matched_condition=not_matched_condition,
-                when_not_matched_by_source=when_not_matched_by_source,
-                not_matched_by_source_condition=(
-                    not_matched_by_source_condition
-                ),
-                update_set_by_source=update_set_by_source,
-                matched_clauses=matched_clauses,
+            if when_not_matched != "insert":  # ignore + ignore: a no-op
+                return base.limit(0)
+            # anti-join against the FULL current table: existing keys
+            # anywhere must suppress their inserts
+            inserts = source.join(base, list(on), "left_anti")
+            # filter on RAW source rows (before projection), so
+            # conditions may reference source-only columns and see
+            # pre-cast values — same contract as the rich path, which
+            # filters the anti-join directly
+            if not_matched_condition is not None:
+                inserts = inserts.filter(
+                    F.coalesce(F.expr(not_matched_condition), F.lit(False))
+                )
+            # cast to the table schema: the union path coerces types
+            # implicitly (INT literal into BIGINT col); this direct
+            # append must do the same or mixed-type files break later
+            # merged-schema reads
+            return inserts.select(
+                *[
+                    F.col(c).cast(base.schema[c].dataType).alias(c)
+                    for c in base.columns
+                ]
             )
-        merged = self._apply_generated(merged, base_version)
-        self._enforce_table_constraints(merged, base_version)
-        files = self._write_data(self._to_physical(merged, mapping))
-        remove = [os.path.relpath(p, self.path) for p in touched]
-        return self._commit_reconciled(
-            "merge", files, remove, current.schema, base_version,
-            txn=txn,
+
+        return self._rewrite(
+            "merge", base_version, fold, files, merged,
+            remove=not pure_insert, check=True, read_schema=True, txn=txn,
         )
 
     def drop(self) -> None:

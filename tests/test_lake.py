@@ -113,6 +113,28 @@ def test_lake_merge_file_granularity(table, spark):
     assert hist[v] == 1  # only the file containing k=2 was rewritten
 
 
+def test_lake_merge_into_table_without_live_files(spark, tmp_path):
+    """A partitioned table whose every row was deleted keeps its
+    schema but no data file; a merge with matched clauses finds no
+    match and inserts the source, as the insert-only merge does."""
+    t = LakeTable(spark, str(tmp_path / "m0"), auto_checkpoint_every=None)
+    t.append(
+        spark.createDataFrame([(1, "p", 10)], "id long, b string, v long"),
+        partition_by=["b"],
+    )
+    t.delete("id = 1")
+    assert t.snapshot_files() == []
+    t.merge(
+        spark.createDataFrame(
+            [(1, "p", 11), (2, "q", 12)], "id long, b string, v long"
+        ),
+        on=["id"],
+    )
+    assert sorted(tuple(r) for r in t.read().collect()) == [
+        (1, "p", 11), (2, "q", 12),
+    ]
+
+
 def test_lake_merge_large_source_shuffled_semi_join(table, spark):
     """A backfill-sized source (keys > broadcast_key_limit) must take
     the shuffled semi-join path and still merge correctly."""
@@ -1621,6 +1643,12 @@ def test_rewrite_dml_preserves_partition_pruning(spark, tmp_path):
     )
     t.delete("id = 5")                       # rewrite-mode
     t.update("id = 6", {"v": "999"})         # rewrite-mode
+    t.merge(                                 # one update, one insert
+        spark.createDataFrame(
+            [(10, "2", 555), (301, "1", 7)], "id long, b string, v long"
+        ),
+        on=["id"],
+    )
     # every live file still carries partition values -> pruning works
     fold = t._fold_state(None)
     live, parts = fold[0], fold[4]
@@ -1628,7 +1656,7 @@ def test_rewrite_dml_preserves_partition_pruning(spark, tmp_path):
     out, kept, total = t.read_where({"b": ("2", "2")})
     assert kept < total
     rows = {r["id"]: r["v"] for r in out.collect()}
-    assert 5 not in rows and rows[6] == 999
+    assert 5 not in rows and rows[6] == 999 and rows[10] == 555
     assert set(rows) == {i for i in range(200) if i % 4 == 2 and i != 5}
 
 
@@ -1661,6 +1689,179 @@ def test_partition_scoped_compact_schema_evolved(spark, tmp_path):
     rows = {r["id"]: r["extra"] for r in got.collect()}
     assert all(rows[i] == i * 10 for i in range(10, 20))
     assert all(rows[i] is None for i in range(10))
+
+
+@pytest.mark.parametrize("op", ["delete", "update", "merge"])
+def test_rewrite_dml_merges_mapped_schema_eras(spark, tmp_path, monkeypatch, op):
+    """A row-level rewrite of a column-mapped table whose files span
+    schema eras must merge their parquet schemas, like read() does:
+    a scan that adopts ONE file's footer aliases the column added
+    after the rename to null on every rewritten row (silent loss of
+    ``c = 40`` below)."""
+    import itertools
+    import types
+
+    import replay_spark.lake as lake_mod
+
+    # data dirs named in creation order, so the old-era file lists
+    # first — the footer a single-file schema inference adopts
+    names = itertools.count()
+    monkeypatch.setattr(
+        lake_mod, "uuid", types.SimpleNamespace(
+            uuid4=lambda: types.SimpleNamespace(hex=f"{next(names):032x}")
+        ),
+    )
+    t = LakeTable(spark, str(tmp_path / "eras"), auto_checkpoint_every=None)
+    t.append(
+        spark.createDataFrame([(1, "x"), (2, "y")], "a long, b string")
+        .coalesce(1)
+    )
+    t.rename_column("b", "bb")
+    t.add_column("c", "int")
+    t.append(
+        spark.createDataFrame(
+            [(3, "z", 30), (4, "w", 40)], "a long, bb string, c int"
+        ).coalesce(1)
+    )
+    if op == "delete":
+        t.delete("a in (1, 3)")
+        want = {2: ("y", None), 4: ("w", 40)}
+    elif op == "update":
+        t.update("a in (1, 3)", {"bb": "'u'"})
+        want = {1: ("u", None), 2: ("y", None), 3: ("u", 30), 4: ("w", 40)}
+    else:
+        t.merge(
+            spark.createDataFrame(
+                [(1, "m", None), (3, "n", 33)], "a long, bb string, c int"
+            ),
+            on=["a"],
+        )
+        want = {1: ("m", None), 2: ("y", None), 3: ("n", 33), 4: ("w", 40)}
+    assert {r["a"]: (r["bb"], r["c"]) for r in t.read().collect()} == want
+
+
+def test_rewrite_family_matches_model_on_evolved_partitioned_table(
+    spark, tmp_path
+):
+    """Every rewrite operation over ONE partitioned, renamed and
+    schema-evolved table: at every version ``read(version=v)`` equals
+    an exact Python model, and every commit records the expected
+    operation, add/remove/vector counts and partition values."""
+    t = LakeTable(spark, str(tmp_path / "fam"), auto_checkpoint_every=None)
+    model = {}  # id -> (b, value, c)
+    snaps = []  # per version: (columns, {id: row tuple})
+
+    def snap():
+        snaps.append((cols, dict(model)))
+
+    def frame(ids, with_c):
+        rows = [
+            (i, str(i % 4), i * 10) + ((i % 7,) if with_c else ())
+            for i in ids
+        ]
+        schema = f"id long, b string, {cols[2]} long" + (
+            ", c int" if with_c else ""
+        )
+        return spark.createDataFrame(rows, schema).coalesce(1)
+
+    cols = ["id", "b", "v"]
+    for lo in (0, 40):                                         # v0, v1
+        t.append(frame(range(lo, lo + 40), False), partition_by=["b"])
+        model.update({i: (str(i % 4), i * 10, None) for i in range(lo, lo + 40)})
+        snap()
+    t.rename_column("v", "vv")                                 # v2
+    cols = ["id", "b", "vv"]
+    snap()
+    t.add_column("c", "int")                                   # v3
+    cols = ["id", "b", "vv", "c"]
+    snap()
+    t.append(frame(range(80, 100), True), partition_by=["b"])  # v4
+    model.update({i: (str(i % 4), i * 10, i % 7) for i in range(80, 100)})
+    snap()
+
+    def apply(pred, fn):
+        for i in [i for i in model if pred(i)]:
+            out = fn(model[i])
+            if out is None:
+                del model[i]
+            else:
+                model[i] = out
+
+    t.delete("id % 10 = 1")                                    # v5
+    apply(lambda i: i % 10 == 1, lambda r: None)
+    snap()
+    t.delete("id % 10 = 2", mode="dv")                         # v6
+    apply(lambda i: i % 10 == 2, lambda r: None)
+    snap()
+    t.update("id % 10 = 5", {"vv": "vv + 1"})                  # v7
+    apply(lambda i: i % 10 == 5, lambda r: (r[0], r[1] + 1, r[2]))
+    snap()
+    t.update("id % 10 = 6", {"c": "-1"}, mode="dv")            # v8
+    apply(lambda i: i % 10 == 6, lambda r: (r[0], r[1], -1))
+    snap()
+    src = spark.createDataFrame(
+        [(3, "3", -3, 5), (8, "0", -8, None), (120, "0", 1, 2), (121, "1", 2, 3)],
+        "id long, b string, vv long, c int",
+    )
+    t.merge(src, on=["id"])                                    # v9
+    model.update({r[0]: tuple(r[1:]) for r in src.collect()})
+    snap()
+    t.compact(partition_filter={"b": "1"})                     # v10
+    snap()
+    t.compact_small_files()                                    # v11
+    snap()
+    t.optimize(zorder_by=["id", "vv"])                         # v12
+    snap()
+    t.delete("id = 0", mode="dv")                              # v13
+    del model[0]
+    snap()
+    t.compact()                                                # v14
+    snap()
+
+    assert t.latest_version() == len(snaps) - 1
+    for v, (want_cols, want) in enumerate(snaps):
+        df = t.read(version=v)
+        assert df.columns == want_cols, v
+        got = {
+            r["id"]: (
+                r["b"], r[want_cols[2]], r["c"] if "c" in want_cols else None
+            )
+            for r in df.collect()
+        }
+        assert got == want, v
+
+    expected = [
+        # (operation, n_add, n_remove, n_dv, partition values of the adds)
+        ("append", 4, 0, 0, ["0", "1", "2", "3"]),
+        ("append", 4, 0, 0, ["0", "1", "2", "3"]),
+        ("rename_column", 0, 0, 0, []),
+        ("add_column", 0, 0, 0, []),
+        ("append", 4, 0, 0, ["0", "1", "2", "3"]),
+        # odd ids live in b=1/b=3: their six files rewritten into two
+        ("delete", 2, 6, 0, ["1", "3"]),
+        # even ids: the six b=0/b=2 files get vectors, none rewritten
+        ("delete", 0, 0, 6, []),
+        ("update", 2, 2, 0, ["1", "3"]),
+        # new row versions land partitioned; old ones dv-deleted
+        ("update", 2, 0, 6, ["0", "2"]),
+        # rewrites the files holding ids 3 and 8, inserts b=0/b=1 rows
+        ("merge", 3, 2, 0, ["0", "1", "3"]),
+        ("compact", 1, 2, 0, ["1"]),
+        # small files of b=0 and b=2 (four each); b=1/b=3 are singletons
+        ("compact", 2, 8, 0, ["0", "2"]),
+        ("optimize", 4, 4, 0, ["0", "1", "2", "3"]),
+        ("delete", 0, 0, 1, []),
+        ("compact", 4, 4, 0, ["0", "1", "2", "3"]),
+    ]
+    got = []
+    for c in t._commits():
+        parts = c.get("parts") or {}
+        got.append((
+            c["operation"], len(c["add"]), len(c["remove"]),
+            len(c.get("dv") or {}),
+            sorted((parts.get(f) or {}).get("b") for f in c["add"]),
+        ))
+    assert got == expected
 
 
 def test_checkpoint_semantic_idempotence(spark, tmp_path):

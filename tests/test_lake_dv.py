@@ -382,3 +382,33 @@ def test_update_dv_preserves_partition_metadata(spark, tmp_path):
     rows = {r["id"]: r["v"] for r in out.collect()}
     assert rows[6] == 999
     assert set(rows) == {i for i in range(80) if i % 4 == 2}
+
+
+@pytest.mark.parametrize("value", ["a b", "a%b"])
+def test_dv_in_partition_with_escaped_value(spark, tmp_path, value):
+    """Spark reports a scanned file as a URI, which percent-encodes a
+    space or ``%`` in a hive dir name; the vector must still key to
+    the stored path, else a DV delete deletes nothing and a DV update
+    leaves the old row visible beside its new version."""
+    t = LakeTable(spark, str(tmp_path / "esc"), auto_checkpoint_every=None)
+    t.append(
+        spark.createDataFrame(
+            [(1, value, 10), (2, value, 20), (3, "x", 30)],
+            "id long, b string, v long",
+        ),
+        partition_by=["b"],
+    )
+
+    def rows():
+        return sorted(tuple(r) for r in t.read().collect())
+
+    t.delete("id = 1", mode="dv")
+    assert rows() == [(2, value, 20), (3, "x", 30)]
+    t.update("id = 2", {"v": "99"}, mode="dv")
+    assert rows() == [(2, value, 99), (3, "x", 30)]
+    feed = t.changes(t.latest_version() - 1).collect()
+    assert sorted((r["id"], r["v"], r["_change_type"]) for r in feed) == [
+        (2, 20, "delete"), (2, 99, "insert"),
+    ]
+    t.compact()
+    assert rows() == [(2, value, 99), (3, "x", 30)]

@@ -5,11 +5,16 @@ Runs each __spark_entry__ query on Spark AND its oracle SQL on DuckDB
 at sf0.01 (or $SPARK_GRAFT_SF_DIR), compares row count, column names,
 and an order-insensitive value hash. Usage:
 
-    python tools/check_oracle.py [query_name ...]
+    python tools/check_oracle.py [query_name_or_pattern ...]
+
+Arguments are exact query names or ``fnmatch`` patterns, e.g.
+``python tools/check_oracle.py 'q_lake*' q_materialized_agg``; no
+argument runs every query.
 """
 
 from __future__ import annotations
 
+import fnmatch
 import hashlib
 import math
 import os
@@ -58,7 +63,7 @@ def main():
     import __spark_entry__ as entrymod
     from replay_spark.session import get_spark_session
 
-    only = set(sys.argv[1:])
+    patterns = sys.argv[1:]
     spark = get_spark_session(app_name="check_oracle")
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
@@ -69,9 +74,16 @@ def main():
 
     queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
+    unmatched = [
+        p for p in patterns if not fnmatch.filter(queries, p)
+    ]
+    if unmatched:
+        sys.exit(f"no query matches {unmatched}")
     failures = []
     for name, fn in queries.items():
-        if only and name not in only:
+        if patterns and not any(
+            fnmatch.fnmatchcase(name, p) for p in patterns
+        ):
             continue
         try:
             sdf = fn(spark, SF_DIR)
@@ -127,7 +139,7 @@ def main():
             print(f"FAIL  {name}: {'; '.join(problems)}")
             failures.append(name)
         else:
-            print(f"OK    {name}: rows={len(srows)} hash match")
+            print(f"OK    {name}: rows={len(srows)} hash {sh[:16]} match")
     print()
     if failures:
         print(f"{len(failures)} FAILURES: {failures}")
