@@ -27,8 +27,9 @@ Scale shape: the log is O(commits) tiny JSON files and snapshot
 resolution is a driver-side file-list fold — the same metadata scale
 every table format's planner already holds (Delta's checkpoint logic
 would bolt on here if commit counts grew unbounded). Reads are plain
-``spark.read.parquet`` over the live file list, so column pruning,
-predicate pushdown, and partition coalescing all apply untouched.
+``spark.read.parquet`` over the live file list with the snapshot's
+recorded schema, so column pruning, predicate pushdown, and
+partition coalescing all apply untouched.
 Log I/O goes through the three ``_fs_*`` seams below (local
 ``os``/``open``); pointing them at a Hadoop FileSystem/S3 client is
 the production hook and changes nothing else.
@@ -75,6 +76,18 @@ _PB_INHERIT = object()
 # mapping to None" (restore to an unmapped era)
 _MAPPING_UNSET = object()
 
+# a char/varchar type in schema JSON (top level or nested); readers
+# take these columns as string
+_CHAR_VARCHAR = re.compile(
+    r'("(?:type|elementType|keyType|valueType)":\s*)"(?:var)?char\(\d+\)"'
+)
+
+
+def _type_shape(dt) -> str:
+    """A column type as a reader sees it: nested nullability ignored,
+    char/varchar as string."""
+    return re.sub(r"\b(?:var)?char\(\d+\)", "string", dt.simpleString())
+
 
 class ConcurrentWriteError(RuntimeError):
     """Another writer committed this version first; re-read and retry."""
@@ -85,7 +98,6 @@ class _Snapshot(NamedTuple):
 
     live: List[str]
     schema_json: Optional[str]
-    schemas: set
     txns: dict
     parts: dict
     stats: dict
@@ -273,7 +285,7 @@ class LakeTable:
 
     def checkpoint(self) -> int:
         """Materialize the current log state (live file list, table
-        schema, distinct-schema set, txn high-water marks) into ONE
+        schema, txn high-water marks) into ONE
         ``_checkpoint_<version>.json`` — the Delta-checkpoint device
         that keeps metadata reads O(tail) instead of O(commits):
         every snapshot/read/txn lookup afterwards folds the newest
@@ -283,18 +295,17 @@ class LakeTable:
         version = self.latest_version()
         if version < 0:
             raise FileNotFoundError(f"no commits at {self.path}")
-        live, schema_json, schemas, txns, parts, stats, mapping, dvs = self._fold_state(version)
+        fold = self._fold_state(version)
         payload = json.dumps(
             {
                 "version": version,
-                "live": live,
-                "schema": schema_json,
-                "schemas": sorted(schemas),
-                "txns": txns,
-                "parts": parts,
-                "stats": stats,
-                "mapping": mapping,
-                "dvs": dvs,
+                "live": fold.live,
+                "schema": fold.schema_json,
+                "txns": fold.txns,
+                "parts": fold.parts,
+                "stats": fold.stats,
+                "mapping": fold.mapping,
+                "dvs": fold.dvs,
                 "constraints": self._table_constraints(version),
                 "generated": self._generated_columns(version),
             }
@@ -326,12 +337,13 @@ class LakeTable:
 
     @staticmethod
     def _ckpt_canonical(p: dict) -> dict:
-        """Checkpoint payload with its order-free collections
-        (live file list, distinct-schema set) sorted — dict equality
-        is already key-order-insensitive, lists are not."""
+        """Checkpoint payload with its order-free live file list
+        sorted — dict equality is already key-order-insensitive, lists
+        are not. Older checkpoints also carry a distinct-schema set,
+        which nothing reads: the key is ignored."""
         q = dict(p)
         q["live"] = sorted(q.get("live") or [])
-        q["schemas"] = sorted(q.get("schemas") or [])
+        q.pop("schemas", None)
         # pre-constraints checkpoints lack the keys; absent == empty
         q["constraints"] = q.get("constraints") or {}
         q["generated"] = q.get("generated") or {}
@@ -339,8 +351,8 @@ class LakeTable:
 
     def _fold_state(self, version: Optional[int] = None):
         """The :class:`_Snapshot` (live_relpaths, schema_json,
-        distinct_schemas, txn_map, parts_map, stats_map, mapping,
-        dv_map) as of ``version``, starting
+        txn_map, parts_map, stats_map, mapping, dv_map) as of
+        ``version``, starting
         from the newest usable checkpoint. ``parts_map`` holds
         {relpath: {col: str_value}} for partitioned files and
         ``stats_map`` holds {relpath: {col: {t, min, max}}} for
@@ -351,7 +363,6 @@ class LakeTable:
         rename/drop/restore commits that do."""
         live: List[str] = []
         schema_json = None
-        schemas: set = set()
         txns: dict = {}
         parts: dict = {}
         stats: dict = {}
@@ -362,7 +373,6 @@ class LakeTable:
         if ckpt is not None:
             live = list(ckpt["live"])
             schema_json = ckpt.get("schema")
-            schemas = set(ckpt.get("schemas") or [])
             txns = dict(ckpt.get("txns") or {})
             parts = dict(ckpt.get("parts") or {})
             stats = dict(ckpt.get("stats") or {})
@@ -395,8 +405,6 @@ class LakeTable:
                 else:
                     dvs[f] = dv
             schema_json = c.get("schema", schema_json)
-            if c.get("schema"):
-                schemas.add(c["schema"])
             if "column_mapping" in c:
                 mapping = c["column_mapping"]
             t = c.get("txn")
@@ -409,9 +417,7 @@ class LakeTable:
         live_set = set(live)
         parts = {k: v for k, v in parts.items() if k in live_set}
         stats = {k: v for k, v in stats.items() if k in live_set}
-        return _Snapshot(
-            live, schema_json, schemas, txns, parts, stats, mapping, dvs
-        )
+        return _Snapshot(live, schema_json, txns, parts, stats, mapping, dvs)
 
     # -- CHECK constraints (stored in the log, enforced on every write) ------
     #
@@ -431,7 +437,7 @@ class LakeTable:
         """{name: sql_expr} of the ``kind`` rules ("constraints" or
         "generated") in force as of ``version`` — their own
         lightweight fold (checkpoint base + commit tail), separate
-        from _fold_state so the 8-tuple contract stays stable.
+        from _fold_state so the snapshot stays a log-file fold.
         Memoized per resolved version (commits are immutable)."""
         resolved = version if version is not None else self.latest_version()
         key = (kind, resolved)
@@ -520,8 +526,7 @@ class LakeTable:
         base = self.latest_version()
         if base < 0:
             raise FileNotFoundError(f"no commits at {self.path}")
-        _, schema_json, _, _, _, _, _, _ = self._fold_state(base)
-        schema = StructType.fromJson(json.loads(schema_json))
+        schema = StructType.fromJson(json.loads(self._fold_state(base).schema_json))
         names = {f.name for f in schema.fields}
         if name not in names:
             raise ValueError(
@@ -565,7 +570,7 @@ class LakeTable:
         gens = self._generated_columns(version)
         if not gens:
             return df
-        _, schema_json, _, _, _, _, _, _ = self._fold_state(version)
+        schema_json = self._fold_state(version).schema_json
         types = {}
         if schema_json:
             for f in StructType.fromJson(json.loads(schema_json)):
@@ -703,34 +708,32 @@ class LakeTable:
         if version < 0:
             raise FileNotFoundError(f"no commits at {self.path}")
         fold = self._fold_state(version)
-        live, schema_json, _, txns, parts, stats, mapping, dvs = fold
         total = 0
-        for rel in live:
+        for rel in fold.live:
             try:
                 total += os.path.getsize(os.path.join(self.path, rel))
             except OSError:
                 pass
-        pcols = self._partition_columns(version)
         features = []
-        if mapping is not None:
+        if fold.mapping is not None:
             features.append("column_mapping")
-        if dvs:
+        if fold.dvs:
             features.append("deletion_vectors")
         cons = self._table_constraints(version)
         ckpt = self._latest_checkpoint(version)
         return {
             "path": self.path,
             "version": version,
-            "num_files": len(live),
+            "num_files": len(fold.live),
             "size_bytes": total,
-            "partition_columns": pcols or [],
+            "partition_columns": fold.partition_columns or [],
             "features": features,
-            "num_dv_files": len(dvs),
-            "dv_bytes": self._dv_bytes(dvs) if dvs else 0,
-            "stats_indexed": bool(stats),
+            "num_dv_files": len(fold.dvs),
+            "dv_bytes": self._dv_bytes(fold.dvs) if fold.dvs else 0,
+            "stats_indexed": bool(fold.stats),
             "checkpoint_version": ckpt["version"] if ckpt else None,
             "vacuum_horizon": self._vacuum_horizon(),
-            "txn_app_ids": sorted(txns),
+            "txn_app_ids": sorted(fold.txns),
             "constraints": dict(sorted(cons.items())),
             "generated_columns": dict(
                 sorted(self._generated_columns(version).items())
@@ -832,10 +835,11 @@ class LakeTable:
         """The table as of ``version`` (default: latest), as of a
         wall-clock time via ``as_of`` (seconds / micros / datetime —
         resolved through :meth:`version_as_of`), or at a named
-        snapshot via ``tag`` (see :meth:`tag`). When commits carry
-        different schemas (appends with ``merge_schema=True``), the
-        scan merges parquet schemas and columns absent from older
-        files read as null — Iceberg-style additive evolution."""
+        snapshot via ``tag`` (see :meth:`tag`). Every file is read
+        with the snapshot's recorded schema (:meth:`_scan`): columns
+        absent from older files (``merge_schema`` appends,
+        ``add_column``) read as null — Iceberg-style additive
+        evolution."""
         if sum(x is not None for x in (version, as_of, tag)) > 1:
             raise ValueError("give ONE of version / as_of / tag")
         if tag is not None:
@@ -858,30 +862,72 @@ class LakeTable:
         self, fold: _Snapshot, files: Sequence[str], keep_meta: bool = False
     ) -> DataFrame:
         """The logical frame of ``files`` under ``fold`` — the one
-        reader behind read() and every rewrite: deletion vectors
-        applied, parquet schemas merged when the files span schema
-        eras (else the scan adopts ONE file's footer and silently
-        drops the columns only other eras carry), footer inference
-        skipped where :meth:`_uniform_schema` proves it safe, physical
-        names aliased to logical ones. ``keep_meta`` carries the
+        data-file reader behind read(), read_where(), changes() and
+        every rewrite. Every file is read with the fold's recorded
+        schema, as a Delta reader uses its snapshot's schema: physical
+        names from the column mapping, char/varchar as string (Spark
+        refuses them in a reader schema), every column nullable, and
+        no footer-inference job. A column a file lacks (an older
+        schema era, ``add_column``) reads as null; a physical column
+        the schema no longer names (``drop_column``) is not read.
+        Deletion vectors apply per file: clean files take the plain
+        scan, only dv'd files pay the anti-join. Physical names are
+        aliased to logical ones; ``keep_meta`` carries the
         ``_fp``/``_ri`` (file path, row index) columns through. No
         files: an empty frame with the table schema (and typed, null
         meta columns)."""
+        meta = ["_fp", "_ri"] if keep_meta else []
         if not files:
             schema = StructType.fromJson(json.loads(fold.schema_json))
             if keep_meta:
                 schema = schema.add("_fp", "string").add("_ri", "long")
             return self.spark.createDataFrame([], schema)
-        scan = self._scan_with_dv(
-            files, fold.dvs, merge_schema=len(fold.schemas) > 1,
-            keep_meta=keep_meta,
-            schema_json=self._uniform_schema(
-                fold.schemas, fold.mapping, fold.schema_json
-            ),
+        fields = json.loads(
+            _CHAR_VARCHAR.sub(r'\1"string"', fold.schema_json)
+        )["fields"]
+        mapping = fold.mapping or {}
+        physical = [mapping.get(f["name"], f["name"]) for f in fields]
+        reader = self.spark.read.schema(
+            StructType.fromJson(
+                {
+                    "type": "struct",
+                    "fields": [dict(f, name=p) for f, p in zip(fields, physical)],
+                }
+            )
         )
-        return self._apply_mapping(
-            scan, fold.mapping, fold.schema_json,
-            keep=("_fp", "_ri") if keep_meta else (),
+
+        def with_meta(scan: DataFrame) -> DataFrame:
+            # hidden _metadata refs do not survive joins, so the DV
+            # join keys become ordinary columns up front
+            return scan.select(
+                "*",
+                F.col("_metadata.file_path").alias("_fp"),
+                F.col("_metadata.row_index").cast("long").alias("_ri"),
+            )
+
+        out = None
+        clean = [f for f in files if f not in fold.dvs]
+        dvd = [f for f in files if f in fold.dvs]
+        if clean:
+            scan = reader.parquet(*[os.path.join(self.path, p) for p in clean])
+            out = with_meta(scan) if keep_meta else scan
+        if dvd:
+            scan = with_meta(
+                reader.parquet(*[os.path.join(self.path, p) for p in dvd])
+            )
+            sub = {f: fold.dvs[f] for f in dvd}
+            kept = self._apply_dv(
+                scan,
+                self._dv_rows(fold.dvs, dvd),
+                small=self._dv_bytes(sub) <= self._DV_BROADCAST_BYTES,
+            )
+            if not keep_meta:
+                kept = kept.drop("_fp", "_ri")
+            out = kept if out is None else out.unionByName(kept)
+        if fold.mapping is None:
+            return out
+        return out.select(
+            *[F.col(p).alias(f["name"]) for f, p in zip(fields, physical)], *meta
         )
 
     # -- column mapping (rename/drop WITHOUT rewrite) ------------------------
@@ -897,34 +943,12 @@ class LakeTable:
     # column-mapping protocol (name mode) re-expressed for this log.
 
     def _mapping(self, version: Optional[int] = None):
-        return self._fold_state(version)[6]
-
-    def _apply_mapping(self, df, mapping, schema_json, keep=()):
-        """Physical scan -> logical frame: alias mapped columns,
-        fill physical columns missing from every live file (possible
-        after restore across eras) with typed nulls. ``keep`` passes
-        helper columns (materialized DV meta) through untouched."""
-        if mapping is None:
-            return df
-        types = {}
-        if schema_json:
-            for f in StructType.fromJson(json.loads(schema_json)):
-                types[f.name] = f.dataType
-        cols = []
-        for logical, physical in mapping.items():
-            if physical in df.columns:
-                cols.append(F.col(physical).alias(logical))
-            else:
-                t = types.get(logical)
-                lit = F.lit(None).cast(t) if t is not None else F.lit(None)
-                cols.append(lit.alias(logical))
-        cols += [F.col(c) for c in keep if c in df.columns]
-        return df.select(*cols)
+        return self._fold_state(version).mapping
 
     @staticmethod
     def _to_physical(df, mapping, keep=()):
         """Logical frame -> physical columns for a file write (the
-        inverse of :meth:`_apply_mapping`); ``keep`` passes helper
+        inverse of :meth:`_scan`'s aliasing); ``keep`` passes helper
         columns (z-order keys) through untouched."""
         if mapping is None:
             return df
@@ -1048,119 +1072,6 @@ class LakeTable:
         )
         return scan.join(right, cond, "left_anti")
 
-    @staticmethod
-    def _with_meta(scan: DataFrame) -> DataFrame:
-        """Materialize the parquet metadata columns the DV machinery
-        joins on — hidden ``_metadata`` refs do not survive joins, so
-        they become ordinary columns up front."""
-        return scan.select(
-            "*",
-            F.col("_metadata.file_path").alias("_fp"),
-            F.col("_metadata.row_index").cast("long").alias("_ri"),
-        )
-
-    @staticmethod
-    def _uniform_schema(schemas, mapping, schema_json):
-        """Explicit read schema for the live-file scan, or None.
-
-        Safe when the table carries no column mapping AND either it
-        has never evolved (one schema era — ``schemas`` accumulates
-        every schema commit the fold saw), or every era is a typed
-        PREFIX of the latest schema (pure additive evolution, the
-        append-mostly common case): then reading every file with the
-        latest schema null-fills the appended columns by name —
-        exactly the mergeSchema result, field order included — while
-        skipping the footer schema-inference job ``read.parquet``
-        otherwise runs at plan time, paid once per scan, i.e. per
-        DML/read/feed call. Renames/drops (mapped tables), type
-        changes and non-append reorders fall back to inference.
-
-        Nullability is compared one way: an era whose field is
-        nullable where the latest schema's is not (an append without
-        ``merge_schema`` only checks names and types) may hold nulls
-        the latest schema rules out, so it falls back to inference. An
-        era that is stricter than the latest (rewrite commits record
-        every column nullable) is safe to read with the latest."""
-        if mapping is not None or not schema_json:
-            return None
-        if len(schemas) == 1:
-            return schema_json
-
-        def fields(s):
-            return [
-                (f["name"], f.get("type"), f.get("nullable", True))
-                for f in json.loads(s)["fields"]
-            ]
-
-        try:
-            latest = fields(schema_json)
-            for s in schemas:
-                era = fields(s)
-                if len(era) > len(latest):
-                    return None
-                for (name, typ, null), (l_name, l_typ, l_null) in zip(
-                    era, latest
-                ):
-                    if (name, typ) != (l_name, l_typ) or (null and not l_null):
-                        return None
-        except Exception:
-            return None
-        return schema_json
-
-    def _scan_with_dv(
-        self,
-        files_rel: List[str],
-        dvs: dict,
-        merge_schema: bool = False,
-        keep_meta: bool = False,
-        schema_json: Optional[str] = None,
-    ) -> DataFrame:
-        """Physical-schema scan of ``files_rel`` with deletion
-        vectors applied — the reader under :meth:`_scan` and changes().
-        Clean files take the plain zero-overhead path; only dv'd
-        files pay the anti-join. ``keep_meta`` carries ``_fp``/
-        ``_ri`` (file path, row index) into the result.
-        ``schema_json`` (from :meth:`_uniform_schema`'s guard) skips
-        footer schema inference when the caller proved every file
-        shares that exact physical schema."""
-        reader = self.spark.read
-        if schema_json:
-            # caller proved every file's fields are a typed prefix of
-            # this schema — explicit read == mergeSchema result, no
-            # inference job, so it wins even when merge was requested
-            reader = reader.schema(
-                StructType.fromJson(json.loads(schema_json))
-            )
-        elif merge_schema:
-            reader = reader.option("mergeSchema", "true")
-        dvd = [f for f in files_rel if f in dvs]
-        clean = [f for f in files_rel if f not in dvs]
-        parts = []
-        if clean:
-            scan = reader.parquet(
-                *[os.path.join(self.path, p) for p in clean]
-            )
-            parts.append(self._with_meta(scan) if keep_meta else scan)
-        if dvd:
-            scan = self._with_meta(
-                reader.parquet(
-                    *[os.path.join(self.path, p) for p in dvd]
-                )
-            )
-            sub = {f: dvs[f] for f in dvd}
-            kept = self._apply_dv(
-                scan,
-                self._dv_rows(dvs, dvd),
-                small=self._dv_bytes(sub) <= self._DV_BROADCAST_BYTES,
-            )
-            parts.append(kept if keep_meta else kept.drop("_fp", "_ri"))
-        if not parts:
-            raise FileNotFoundError(f"no files to scan at {self.path}")
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p, allowMissingColumns=True)
-        return out
-
     def _write_dv_sidecar(self, pairs: DataFrame) -> str:
         """Write (file, row_index) pairs as a new sidecar; returns
         its table-relative path."""
@@ -1208,8 +1119,8 @@ class LakeTable:
         metadata-only commit extends the logical schema with a
         nullable column and assigns it a fresh physical slot.
         Existing files lack the physical column, so reads null-fill
-        it (``_apply_mapping``'s missing-physical path — the same
-        device restore-across-eras uses); later appends write real
+        it (:meth:`_scan` reads every file with the table schema);
+        later appends write real
         values into the slot. ``dtype`` is a DDL type string
         (``"int"``, ``"array<string>"``, ...)."""
         from pyspark.sql.types import DataType
@@ -1338,28 +1249,20 @@ class LakeTable:
             for c in self._commits(after=start_version)
             if c["version"] <= end_version
         ]
-        # column-mapped tables: files carry PHYSICAL names across
-        # every era; present the whole feed under the END version's
-        # logical names (a column renamed mid-feed appears under its
-        # new name throughout — physical identity is stable)
-        (
-            _, end_schema_json, end_schemas, _, _, _, end_mapping, _,
-        ) = self._fold_state(end_version)
         # every file the feed reads (added, pre-image or repointed)
-        # was written under a schema commit the end_version fold saw
-        # (checkpoints carry the full distinct-schema set), so the
-        # one-era guard that skips footer inference on snapshot scans
-        # applies to the whole feed as well
-        uniform = self._uniform_schema(
-            end_schemas, end_mapping, end_schema_json
-        )
+        # is read with the END version's schema: a column renamed
+        # mid-feed appears under its new name throughout (physical
+        # identity is stable), one added mid-feed reads null before
+        end = self._fold_state(end_version)
+        if not end.schema_json:
+            raise FileNotFoundError(f"no commits at {self.path}")
         parts: List[DataFrame] = []
 
         # running DV state from the feed start: a commit's "dv" key
         # repoints files without touching add/remove, so its row
         # delta is (pairs_after \ pairs_before) deletes plus
         # (pairs_before \ pairs_after) inserts (restore un-deletes)
-        dv_state = dict(self._fold_state(start_version)[7]) if (
+        dv_state = dict(self._fold_state(start_version).dvs) if (
             start_version >= 0
         ) else {}
 
@@ -1377,8 +1280,8 @@ class LakeTable:
                 # one plan per file — a wide dv commit would
                 # otherwise explode the feed's plan), diffed under
                 # the pre- and post-commit vectors
-                file_scan = self._scan_with_dv(
-                    repointed, {}, keep_meta=True, schema_json=uniform
+                file_scan = self._scan(
+                    end._replace(dvs={}), repointed, keep_meta=True
                 )
                 before_map = {
                     f: dv_state[f] for f in repointed if f in dv_state
@@ -1436,11 +1339,8 @@ class LakeTable:
                 ):
                     if pos is None:
                         continue
-                    df = self._apply_mapping(
-                        _rows_for(pos), end_mapping, end_schema_json
-                    )
                     parts.append(
-                        df.withColumn(
+                        _rows_for(pos).withColumn(
                             "_change_type", F.lit(kind)
                         ).withColumn(
                             "_commit_version",
@@ -1464,7 +1364,7 @@ class LakeTable:
             # otherwise a rewrite touching a dv'd file re-reports its
             # already-deleted rows as deletes
             added, removed = (
-                self._scan_with_dv(rel, dv_state, schema_json=uniform)
+                self._scan(end._replace(dvs=dict(dv_state)), rel)
                 if rel
                 else None
                 for rel in (c.get("add", []), c.get("remove", []))
@@ -1485,7 +1385,6 @@ class LakeTable:
             for df, kind in ((ins, "insert"), (dels, "delete")):
                 if df is None:
                     continue
-                df = self._apply_mapping(df, end_mapping, end_schema_json)
                 parts.append(
                     df.withColumn("_change_type", F.lit(kind)).withColumn(
                         "_commit_version", F.lit(c["version"]).cast("int")
@@ -1494,19 +1393,12 @@ class LakeTable:
             for f in c.get("remove", []):
                 dv_state.pop(f, None)
         if not parts:
-            all_commits = commits or self._commits()
-            if not all_commits:
-                raise FileNotFoundError(f"no commits at {self.path}")
-            schema = StructType.fromJson(
-                json.loads(all_commits[-1]["schema"])
-            )
-            empty = self.spark.createDataFrame([], schema)
-            return empty.withColumn(
+            return self._scan(end, []).withColumn(
                 "_change_type", F.lit("insert")
             ).withColumn("_commit_version", F.lit(0).cast("int")).limit(0)
         out = parts[0]
         for p in parts[1:]:
-            out = out.unionByName(p, allowMissingColumns=True)
+            out = out.unionByName(p)
         return out
 
     # -- writes ------------------------------------------------------------
@@ -1607,9 +1499,9 @@ class LakeTable:
             ]
             stats = self._stats_for_files(rels, cfg)
             if stats:
-                live, schema_json, *_ = self._fold_state(
+                schema_json = self._fold_state(
                     self.latest_version()
-                )
+                ).schema_json
                 payload = {
                     "version": self.latest_version() + 1,
                     "operation": "collect_stats",
@@ -2052,7 +1944,10 @@ class LakeTable:
         differs from the table's requires ``merge_schema=True``
         (additive evolution — older files read the new columns as
         null); without it the append is rejected, the
-        writer-side-enforcement half of schema-on-write.
+        writer-side-enforcement half of schema-on-write. A merged
+        append keeps every table column (those the batch lacks read
+        null in its rows) and adds the batch's new ones after them;
+        changing an existing column's type raises ``ValueError``.
 
         ``partition_by`` writes hive-partitioned files and records
         each file's partition values IN THE COMMIT — ``read_where``
@@ -2088,6 +1983,34 @@ class LakeTable:
             # stored CHECK constraints gate EVERY writer (the
             # caller-supplied suite above gates only this call)
             self._enforce_table_constraints(df, current)
+
+        def recorded(version: int) -> StructType:
+            """The schema the commit records on top of ``version``."""
+            if not merge_schema or version < 0:
+                return df.schema
+            table = StructType.fromJson(
+                json.loads(self._fold_state(version).schema_json)
+            )
+            batch = {f.name: f for f in df.schema}
+            for f in table:
+                if f.name in batch and _type_shape(f.dataType) != _type_shape(
+                    batch[f.name].dataType
+                ):
+                    raise ValueError(
+                        f"merge_schema cannot change the type of column "
+                        f"{f.name!r}: {f.dataType.simpleString()} -> "
+                        f"{batch[f.name].dataType.simpleString()}"
+                    )
+            return StructType(
+                [
+                    batch.get(f.name)
+                    or StructField(f.name, f.dataType, True, f.metadata)
+                    for f in table
+                ]
+                + [f for f in df.schema if f.name not in table.names]
+            )
+
+        schema = recorded(current)
         if current >= 0 and not merge_schema:
             stored = self._fold_state(current).schema_json
 
@@ -2132,7 +2055,7 @@ class LakeTable:
         for _ in range(max_retries):
             try:
                 version = self._commit(
-                    "append", files, [], df.schema,
+                    "append", files, [], schema,
                     self.latest_version() + 1, parts=parts,
                     mapping=new_mapping,
                     user_metadata=user_metadata,
@@ -2159,13 +2082,14 @@ class LakeTable:
                     else {}
                 ):
                     self._enforce_table_constraints(df, tip)
+                schema = recorded(tip)
                 continue
         if version is None:
             raise ConcurrentWriteError("append retries exhausted")
         limit = self.auto_compact_small_files
         if limit:
             small = 0
-            for rel in self._fold_state(version)[0]:
+            for rel in self._fold_state(version).live:
                 try:
                     if (
                         os.path.getsize(os.path.join(self.path, rel))
@@ -2193,21 +2117,19 @@ class LakeTable:
         files' partition values are re-recorded in the restore
         commit, so log-level pruning survives the rollback."""
         self._check_time_travel(version)
-        tgt_live, target_schema, _, _, tgt_parts, _, tgt_mapping, tgt_dvs = self._fold_state(
-            version
-        )
-        target = set(tgt_live)
+        tgt = self._fold_state(version)
+        target = set(tgt.live)
         current_version = self.latest_version()
         if version == current_version:
             return current_version
         cur = self._fold_state(current_version)
         current = set(cur.live)
         schema = StructType.fromJson(
-            json.loads(target_schema or cur.schema_json)
+            json.loads(tgt.schema_json or cur.schema_json)
         )
         add = sorted(target - current)
         add_set = set(add)
-        parts = {k: v for k, v in tgt_parts.items() if k in add_set}
+        parts = {k: v for k, v in tgt.parts.items() if k in add_set}
         # restore the target era's column mapping too (explicit None
         # resets a mapped table back to its unmapped era)
         cur_mapping = cur.mapping
@@ -2218,7 +2140,7 @@ class LakeTable:
         # reports the reappearing rows as inserts)
         dv_diff = {}
         for f in target:
-            want = tgt_dvs.get(f)
+            want = tgt.dvs.get(f)
             have = None if f in add_set else cur.dvs.get(f)
             if want != have:
                 dv_diff[f] = want
@@ -2230,8 +2152,8 @@ class LakeTable:
             current_version + 1,
             parts=parts or None,
             mapping=(
-                tgt_mapping
-                if tgt_mapping != cur_mapping
+                tgt.mapping
+                if tgt.mapping != cur_mapping
                 else _MAPPING_UNSET
             ),
             dv=dv_diff or None,
@@ -2268,19 +2190,18 @@ class LakeTable:
             self.latest_version() if version is None else version
         )
         self._check_time_travel(src_version)
-        live, schema_json, schemas, _txns, parts, _stats, mapping, src_dvs = self._fold_state(
-            src_version
+        fold = self._fold_state(src_version)
+        live, parts, mapping, src_dvs = (
+            fold.live, fold.parts, fold.mapping, fold.dvs
         )
         if not live:
             raise FileNotFoundError(
                 f"no snapshot at {self.path}@{src_version}"
             )
         shapes = {
-            tuple(
-                (f["name"], json.dumps(f["type"]))
-                for f in json.loads(s).get("fields", [])
-            )
-            for s in schemas
+            tuple(self._schema_shape(c["schema"]))
+            for c in self._commits()
+            if c["version"] <= src_version and c.get("schema")
         }
         if len(shapes) > 1:  # name+type only: nullability drift from
             # delete-rewrites is read-compatible and must not block.
@@ -2294,9 +2215,9 @@ class LakeTable:
 
                     phys = {
                         tuple(
-                            _pq.read_schema(
+                            _pq.ParquetFile(
                                 os.path.join(self.path, rel)
-                            ).names
+                            ).schema_arrow.names
                         )
                         for rel in live
                     }
@@ -2311,7 +2232,7 @@ class LakeTable:
         out = LakeTable(self.spark, dest_path)
         if out.latest_version() >= 0:
             raise ValueError(f"clone target {dest_path!r} exists")
-        schema = StructType.fromJson(json.loads(schema_json))
+        schema = StructType.fromJson(json.loads(fold.schema_json))
         if deep:
             if src_dvs:
                 # deep clone flattens file layout, which breaks the
@@ -2652,8 +2573,8 @@ class LakeTable:
                     "horizon"
                 )
             fold_h = self._fold_state(h)
-            reachable = set(fold_h[0])
-            dv_referenced = set(fold_h[7].values())
+            reachable = set(fold_h.live)
+            dv_referenced = set(fold_h.dvs.values())
             for c in self._commits(after=h):
                 reachable.update(c.get("add", []))
                 dv_referenced.update(
@@ -2691,8 +2612,7 @@ class LakeTable:
         (the Delta txn-action idempotence device), or None.
         Checkpoint-accelerated: folds the newest checkpoint's txn
         high-water marks plus only the log tail."""
-        _, _, _, txns, _, _, _, _ = self._fold_state(None)
-        return txns.get(app_id)
+        return self._fold_state(None).txns.get(app_id)
 
     def append_batch(
         self, df: DataFrame, app_id: str, batch_id: int
@@ -2986,7 +2906,6 @@ class LakeTable:
         target_file_bytes: Optional[int] = None,
         zorder_by: Optional[Sequence[str]] = None,
         check: bool = False,
-        read_schema: bool = False,
         txn: Optional[dict] = None,
     ) -> int:
         """The one file-rewrite primitive under every DML, compaction
@@ -3016,17 +2935,8 @@ class LakeTable:
         that re-record its values. ``zorder_by`` sorts every file on
         the Morton key; packed files are also range-partitioned on it.
 
-        The commit records the fold's schema — with ``read_schema``,
-        the schema read() reports for the table, which compact,
-        optimize and merge have always recorded — and reconciles with
+        The commit records the fold's schema and reconciles with
         concurrent commits (:meth:`_commit_reconciled`)."""
-        # the whole table as read() sees it, when its schema is recorded
-        full = self._scan(fold, fold.live) if read_schema else None
-
-        def scan(rels: Sequence[str]) -> DataFrame:
-            if full is not None and list(rels) == fold.live:
-                return full
-            return self._scan(fold, rels)
 
         def physical(rows: DataFrame):
             """(physical frame, z-key column or None)."""
@@ -3053,7 +2963,7 @@ class LakeTable:
             def pack(rels: List[str]) -> List[str]:
                 total = sum(self._file_bytes(r) for r in rels)
                 n = int(max(1, -(-total // target_file_bytes)))
-                phys, zcol = physical(scan(rels))
+                phys, zcol = physical(self._scan(fold, rels))
                 if zcol is None:
                     return self._write_data(phys, num_files=n)
                 # range layout kept: coalescing would merge the
@@ -3086,7 +2996,9 @@ class LakeTable:
             if dv_rows is not None:
                 rows = transform and transform(dv_rows.drop("_fp", "_ri"))
             else:
-                rows = transform(scan(files)) if transform else scan(files)
+                rows = self._scan(fold, files)
+                if transform:
+                    rows = transform(rows)
             if rows is not None:
                 if check:
                     rows = self._apply_generated(rows, base_version)
@@ -3125,16 +3037,11 @@ class LakeTable:
                 pairs = pairs.unionByName(existing.select("file", "row_index"))
             sidecar = self._write_dv_sidecar(pairs.distinct())
             dv = {rel: sidecar for rel in sorted(files)}
-        schema = (
-            full.schema
-            if full is not None
-            else StructType.fromJson(json.loads(fold.schema_json))
-        )
         return self._commit_reconciled(
             operation,
             add,
             list(files) if remove and dv is None else [],
-            schema,
+            StructType.fromJson(json.loads(fold.schema_json)),
             base_version,
             txn=txn,
             parts=parts or None,
@@ -3284,7 +3191,6 @@ class LakeTable:
             "optimize" if zorder_by and not partition_filter else "compact",
             base_version, fold, files,
             target_file_bytes=target_file_bytes, zorder_by=zorder_by,
-            read_schema=not partition_filter,
         )
 
     def compact_small_files(
@@ -3363,8 +3269,8 @@ class LakeTable:
     ):
         """Pruned scan in two metadata tiers, then a residual filter
         (conservative at every step — the result EQUALS the
-        full-scan answer). Returns ``(df, n_files_kept,
-        n_files_total)``.
+        full-scan answer, with read()'s columns). Returns ``(df,
+        n_files_kept, n_files_total)``.
 
         Tier 1, LOG-ONLY: files written with ``partition_by`` carry
         their partition values in the commit record, so a bound on a
@@ -3372,56 +3278,38 @@ class LakeTable:
         with ZERO file I/O (the Delta partition-pruning shape). Files
         without a recorded value for the column are kept.
         Tier 2, FOOTERS: survivors go through parquet-stats interval
-        pruning (one metadata task per file)."""
-        from replay_spark.utils.layout import read_pruned
+        pruning (one metadata task per file). The kept files are read
+        through :meth:`_scan`, like read()."""
+        from replay_spark.utils.layout import bounds_filter, pruned_files
 
         self._check_time_travel(version)
-        live, schema_json, distinct_schemas, _, parts, stats, mapping, dvs = self._fold_state(
-            version
-        )
-        if not live:
+        fold = self._fold_state(version)
+        if not fold.live:
             raise FileNotFoundError(f"no snapshot at {self.path}@{version}")
-        expected = None
-        if schema_json:
-            expected = StructType.fromJson(json.loads(schema_json))
-        # column-mapped tables: files, parts and stats are keyed by
-        # PHYSICAL names — translate the bound keys and the expected
-        # schema, prune physically, alias back to logical at the end
-        phys_bounds = bounds
-        phys_expected = expected
-        if mapping is not None:
-            phys_bounds = {
-                mapping.get(c, c): v for c, v in bounds.items()
-            }
-            if expected is not None:
-                phys_expected = StructType(
-                    [
-                        StructField(
-                            mapping.get(f.name, f.name),
-                            f.dataType,
-                            f.nullable,
-                        )
-                        for f in expected.fields
-                    ]
-                )
-        total = len(live)
+        # files, parts and stats are keyed by PHYSICAL names on a
+        # column-mapped table: prune physically, filter logically
+        mapping = fold.mapping or {}
+        phys_bounds = {mapping.get(c, c): v for c, v in bounds.items()}
+        types = {
+            mapping.get(f.name, f.name): f.dataType.simpleString()
+            for f in StructType.fromJson(json.loads(fold.schema_json))
+        }
+        total = len(fold.live)
         kept_rel = [
             rel
-            for rel in live
-            if self._partition_overlaps(
-                parts.get(rel), phys_bounds, phys_expected
-            )
+            for rel in fold.live
+            if self._partition_overlaps(fold.parts.get(rel), phys_bounds, types)
         ]
         # Tier 1a, LOG-EMBEDDED COLUMN STATS: commits carry per-file
         # min/max for stats-indexed columns, so range bounds prune
         # during the fold — zero file I/O, same conservative contract
-        if stats and kept_rel:
+        if fold.stats and kept_rel:
             kept_rel = [
                 rel
                 for rel in kept_rel
                 if all(
                     self._stat_overlaps(
-                        (stats.get(rel) or {}).get(c), lo, hi
+                        (fold.stats.get(rel) or {}).get(c), lo, hi
                     )
                     for c, (lo, hi) in phys_bounds.items()
                 )
@@ -3449,52 +3337,24 @@ class LakeTable:
         # stats fold AND bloom sidecars) — recorded only after the
         # last zero-file-I/O prune so it never overstates kept files
         self.last_log_pruned = (len(kept_rel), total)
-        if not kept_rel:
-            # every file excluded by log metadata alone: empty frame
-            # with the table schema, zero scans
-            empty = self.spark.createDataFrame([], expected)
-            return empty, 0, total
-        files = [os.path.join(self.path, p) for p in kept_rel]
-        # deletion vectors: kept dv'd files anti-join their pairs on
-        # the RAW scan (before schema alignment / residual filter) —
-        # conservative pruning composes, vectors only remove rows
-        dv_hook = None
-        kept_dvs = {f: dv for f, dv in dvs.items() if f in set(kept_rel)}
-        if kept_dvs:
-            dv_pairs = self._dv_rows(dvs, list(kept_dvs))
-            dv_small = (
-                self._dv_bytes(kept_dvs) <= self._DV_BROADCAST_BYTES
-            )
-
-            def dv_hook(scan):  # noqa: F811
-                return self._apply_dv(
-                    self._with_meta(scan), dv_pairs, small=dv_small
-                ).drop("_fp", "_ri")
-
-        df, n_kept, _ = read_pruned(
-            self.spark,
-            files,
-            phys_bounds,
-            merge_schema=len(distinct_schemas) > 1,
-            expected_schema=phys_expected,
-            raw_transform=dv_hook,
-        )
-        return self._apply_mapping(df, mapping, schema_json), n_kept, total
+        if kept_rel:
+            paths = {os.path.join(self.path, rel): rel for rel in kept_rel}
+            kept_paths, _ = pruned_files(self.spark, list(paths), phys_bounds)
+            kept = set(kept_paths)
+            kept_rel = [rel for p, rel in paths.items() if p in kept]
+        df = self._scan(fold, kept_rel).filter(bounds_filter(bounds))
+        return df, len(kept_rel), total
 
     @staticmethod
     def _partition_overlaps(
-        pvals: Optional[dict], bounds: dict, schema: Optional[StructType]
+        pvals: Optional[dict], bounds: dict, types: dict
     ) -> bool:
         """Conservative log-level test: False only when a recorded
         partition value provably violates a bound. Values are stored
-        as hive strings; compare through the table schema's type."""
+        as hive strings; compare through the column's table type
+        (``types``: physical name -> simple type string)."""
         if not pvals:
             return True
-        types = (
-            {f.name: f.dataType.simpleString() for f in schema.fields}
-            if schema is not None
-            else {}
-        )
         for col, (lo, hi) in bounds.items():
             if col not in pvals:
                 continue
@@ -3642,7 +3502,7 @@ class LakeTable:
 
         return self._rewrite(
             "merge", base_version, fold, files, merged,
-            remove=not pure_insert, check=True, read_schema=True, txn=txn,
+            remove=not pure_insert, check=True, txn=txn,
         )
 
     def drop(self) -> None:

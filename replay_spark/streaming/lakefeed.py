@@ -335,9 +335,7 @@ class LakeFeedDataSource(DataSource):
         version = t.latest_version()
         if version < 0:
             raise FileNotFoundError(f"no commits at {self._path()}")
-        _, schema_json, _, _, _, _, mapping, _ = t._fold_state(version)
-        schema = StructType.fromJson(json.loads(schema_json))
-        return schema
+        return StructType.fromJson(json.loads(t._fold_state(version).schema_json))
 
     def streamReader(self, schema: StructType) -> _LakeFeedReader:
         return _LakeFeedReader(self._path(), schema, dict(self.options))

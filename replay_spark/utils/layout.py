@@ -395,25 +395,12 @@ def prune_files(manifest: "DataFrame", bounds: dict) -> "DataFrame":
     return survivors.distinct()
 
 
-def read_pruned(
-    spark,
-    path: str,
-    bounds: dict,
-    manifest=None,
-    merge_schema: bool = False,
-    expected_schema=None,
-    raw_transform=None,
-):
-    """Scan only the files :func:`prune_files` keeps, then re-apply
-    the predicate as a residual filter (pruning is conservative, so
-    the result is EXACTLY the full-scan answer). Returns
-    ``(df, n_files_kept, n_files_total)``. The kept-file list is
-    collected on the driver — O(files), the same scale every query
-    planner's file index already handles. ``merge_schema`` mirrors
-    the full-scan reader's schema-evolution handling: when the file
-    set spans additive schema changes, the kept subset may otherwise
-    adopt the first file's (older) schema and the residual filter on
-    an evolved column would fail."""
+def pruned_files(spark, path, bounds: dict, manifest=None):
+    """``(kept_files, n_files_total)``: the files :func:`prune_files`
+    keeps under ``bounds``, from ``manifest`` (default: a footer pass
+    over ``path``, a directory or an explicit file list). The
+    kept-file list is collected on the driver — O(files), the same
+    scale every query planner's file index already handles."""
     if manifest is None:
         manifest = collect_file_stats(spark, path, list(bounds))
     manifest = manifest.persist()
@@ -422,39 +409,33 @@ def read_pruned(
         kept = [r.file for r in prune_files(manifest, bounds).collect()]
     finally:
         manifest.unpersist()
-    reader = spark.read
-    if merge_schema:
-        reader = reader.option("mergeSchema", "true")
-    if not kept:
-        first = path[0] if isinstance(path, (list, tuple)) else path
-        df = reader.parquet(first).limit(0)
-        n_kept = 0
-    else:
-        df = reader.parquet(*kept)
-        n_kept = len(kept)
-        if raw_transform is not None:
-            # caller hook over the RAW scan (deletion-vector
-            # anti-join needs parquet _metadata, which later
-            # projections drop; an empty kept-set has no rows to
-            # filter)
-            df = raw_transform(df)
-    if expected_schema is not None:
-        # schema evolution: when every kept file predates an added
-        # column, even mergeSchema can't surface it — align to the
-        # table schema so the residual filter (and the caller's
-        # projection) always resolves; absent columns read as null,
-        # matching the full-scan semantics
-        have = {f.name for f in df.schema.fields}
-        for fld in expected_schema.fields:
-            if fld.name not in have:
-                df = df.withColumn(
-                    fld.name, F.lit(None).cast(fld.dataType)
-                )
-        df = df.select(*[f.name for f in expected_schema.fields])
+    return kept, total
+
+
+def bounds_filter(bounds: dict):
+    """The predicate of ``col: (lo, hi)`` closed intervals (``None``
+    end = unbounded) as one Column — the residual filter a pruned
+    scan re-applies."""
     pred = F.lit(True)
     for col, (lo, hi) in bounds.items():
         if lo is not None:
             pred = pred & (F.col(col) >= F.lit(lo))
         if hi is not None:
             pred = pred & (F.col(col) <= F.lit(hi))
-    return df.filter(pred), n_kept, total
+    return pred
+
+
+def read_pruned(spark, path: str, bounds: dict, manifest=None):
+    """Scan only the files :func:`pruned_files` keeps, then re-apply
+    the predicate as a residual filter (pruning is conservative, so
+    the result is EXACTLY the full-scan answer). Returns
+    ``(df, n_files_kept, n_files_total)``. A lake table's pruned read
+    is :meth:`replay_spark.lake.LakeTable.read_where`, which takes its
+    rows through the table's own reader."""
+    kept, total = pruned_files(spark, path, bounds, manifest)
+    if kept:
+        df = spark.read.parquet(*kept)
+    else:
+        first = path[0] if isinstance(path, (list, tuple)) else path
+        df = spark.read.parquet(first).limit(0)
+    return df.filter(bounds_filter(bounds)), len(kept), total

@@ -621,7 +621,7 @@ def test_partitioned_append_and_log_pruning(table, spark):
     )
     table.append(df, partition_by=["bucket"])
     # files are per-partition and carry pvals in the log
-    _, _, _, _, parts, _, _, _ = table._fold_state(None)
+    parts = table._fold_state(None).parts
     assert parts and all("bucket" in p for p in parts.values())
     assert {p["bucket"] for p in parts.values()} == {"0", "1", "2", "3"}
     # read(): self-contained files, partition column physical
@@ -664,7 +664,7 @@ def test_partitioned_table_delete_and_checkpoint(table, spark):
         spark.range(100, 110).selectExpr("id AS k", "id % 2 AS bucket"),
         partition_by=["bucket"],
     )
-    _, _, _, _, parts, _, _, _ = table._fold_state(None)
+    parts = table._fold_state(None).parts
     assert parts  # survived the checkpoint + tail merge
     pruned2, _, _ = table.read_where({"bucket": (0, 0)})
     assert pruned2.count() == 45 + 5
@@ -1552,7 +1552,7 @@ def test_partition_scoped_compact(spark, tmp_path):
     assert t.read().count() == 399
     assert t.read().filter("b = '1'").count() == 99
     # the compacted partition's vector materialized away
-    assert t._fold_state(None)[7] == {}
+    assert t._fold_state(None).dvs == {}
     # pruning still works on the rewritten files
     out, kept, total = t.read_where({"b": ("1", "1")})
     assert out.count() == 99 and kept < total
@@ -1651,7 +1651,7 @@ def test_rewrite_dml_preserves_partition_pruning(spark, tmp_path):
     )
     # every live file still carries partition values -> pruning works
     fold = t._fold_state(None)
-    live, parts = fold[0], fold[4]
+    live, parts = fold.live, fold.parts
     assert all(parts.get(f, {}).get("b") is not None for f in live)
     out, kept, total = t.read_where({"b": ("2", "2")})
     assert kept < total
@@ -1829,6 +1829,10 @@ def test_rewrite_family_matches_model_on_evolved_partitioned_table(
             for r in df.collect()
         }
         assert got == want, v
+        # the pruned reader, with open bounds, is the same read
+        pruned, _, _ = t.read_where({"id": (None, None)}, version=v)
+        assert pruned.schema == df.schema, v
+        assert sorted(pruned.collect()) == sorted(df.collect()), v
 
     expected = [
         # (operation, n_add, n_remove, n_dv, partition values of the adds)
@@ -1864,6 +1868,104 @@ def test_rewrite_family_matches_model_on_evolved_partitioned_table(
     assert got == expected
 
 
+def _ab_table(spark, path):
+    """``append(a long, b string)``: rows (1, 'x') and (2, 'y')."""
+    t = LakeTable(spark, path, auto_checkpoint_every=None)
+    t.append(spark.createDataFrame([(1, "x"), (2, "y")], "a long, b string"))
+    return t
+
+
+def test_merge_schema_append_keeps_table_columns(spark, tmp_path):
+    """A merge-schema append whose batch lacks a table column keeps
+    the column: an update then rewrites its rows with ``b`` intact,
+    and read() and read_where() report the same columns."""
+    t = _ab_table(spark, str(tmp_path / "keep"))
+    t.append(spark.createDataFrame([(3,)], "a long"), merge_schema=True)
+    fields = json.loads(t._fold_state(None).schema_json)["fields"]
+    assert [(f["name"], f["nullable"]) for f in fields] == [
+        ("a", True), ("b", True),
+    ]
+    t.update("a = 1", {"a": "10"})
+    assert sorted(tuple(r) for r in t.read().collect()) == [
+        (2, "y"), (3, None), (10, "x"),
+    ]
+    assert t.read().columns == ["a", "b"]
+    pruned, _, _ = t.read_where({"a": (0, 9)})
+    assert pruned.columns == ["a", "b"]
+    assert sorted(tuple(r) for r in pruned.collect()) == [(2, "y"), (3, None)]
+
+
+def test_merge_schema_reordered_era_rewrites_and_feeds(spark, tmp_path):
+    """``append(b, a, c, merge_schema=True)`` over ``(a, b)``: the
+    table records ``(a, b, c)``; an update touching only old-era
+    files keeps ``c`` (null), and the change feed puts ``c`` before
+    its own two columns."""
+    t = _ab_table(spark, str(tmp_path / "reorder"))
+    t.append(
+        spark.createDataFrame([("z", 3, 7)], "b string, a long, c long"),
+        merge_schema=True,
+    )
+    assert t.read().columns == ["a", "b", "c"]
+    t.update("a = 1", {"b": "'q'"})
+    assert sorted(tuple(r) for r in t.read().collect()) == [
+        (1, "q", None), (2, "y", None), (3, "z", 7),
+    ]
+    feed = t.changes(-1)
+    assert feed.columns == ["a", "b", "c", "_change_type", "_commit_version"]
+    assert sorted(tuple(r) for r in feed.filter("_commit_version = 1").collect()) == [
+        (3, "z", 7, "insert", 1),
+    ]
+
+
+def test_merge_schema_append_refuses_type_change(spark, tmp_path):
+    """Changing an existing column's type is not additive evolution:
+    the append raises and commits nothing."""
+    t = LakeTable(spark, str(tmp_path / "retype"), auto_checkpoint_every=None)
+    t.append(spark.createDataFrame([(1,)], "a int"))
+    with pytest.raises(ValueError, match="'a'"):
+        t.append(spark.createDataFrame([(2,)], "a bigint"), merge_schema=True)
+    assert t.latest_version() == 0
+    assert [tuple(r) for r in t.read().collect()] == [(1,)]
+
+
+# measured on the test session: the plan reads no footer and a
+# rewrite delete runs 3 jobs (1 and 5 with footer inference)
+READ_PLAN_JOB_BOUND = 0
+DELETE_JOB_BOUND = 3
+
+
+def test_lake_read_and_delete_job_counts(spark, tmp_path):
+    """On a renamed + added-column table, read() builds its plan with
+    no Spark job (every file is read with the recorded schema) and a
+    rewrite delete stays within its job budget."""
+    sc = spark.sparkContext
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            result = fn()
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description"):
+                sc.setLocalProperty(key, None)
+        return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    t = LakeTable(spark, str(tmp_path / "jobs"), auto_checkpoint_every=None)
+    t.append(spark.range(20).selectExpr("id", "id * 10 AS v"))
+    t.rename_column("v", "vv")
+    t.add_column("c", "int")
+    t.append(
+        spark.range(20, 30).selectExpr(
+            "id", "id * 10 AS vv", "CAST(id % 3 AS INT) AS c"
+        )
+    )
+    df, n = jobs("lake_read_plan", t.read)
+    assert n <= READ_PLAN_JOB_BOUND, n
+    assert df.count() == 30
+    _, n = jobs("lake_delete", lambda: t.delete("id = 3"))
+    assert n <= DELETE_JOB_BOUND, n
+    assert t.read().filter("id = 3").count() == 0
+
+
 def test_checkpoint_semantic_idempotence(spark, tmp_path):
     """ADVICE r12: two writers folding the same version from
     different checkpoint bases can produce byte-different but
@@ -1893,6 +1995,25 @@ def test_checkpoint_semantic_idempotence(spark, tmp_path):
         fh.write(_json.dumps(corrupted))
     with pytest.raises(ConcurrentWriteError):
         t.checkpoint()
+
+
+def test_checkpoint_with_schema_set_still_loads(spark, tmp_path):
+    """Older checkpoints also carry a distinct-schema set; new ones
+    omit it. An old one still folds, and still compares equal to the
+    payload this version writes."""
+    t = LakeTable(spark, str(tmp_path / "old"), auto_checkpoint_every=None)
+    t.append(spark.range(0, 5).selectExpr("id"))
+    v = t.checkpoint()
+    name = os.path.join(t._log_dir, f"_checkpoint_{v:010d}.json")
+    with open(name) as fh:
+        payload = json.load(fh)
+    assert "schemas" not in payload
+    payload["schemas"] = [payload["schema"]]
+    with open(name, "w") as fh:
+        fh.write(json.dumps(payload))
+    assert t.checkpoint() == v
+    t.append(spark.range(5, 8).selectExpr("id"))
+    assert sorted(r["id"] for r in t.read().collect()) == list(range(8))
 
 
 def test_check_constraints_stored_and_enforced(spark, tmp_path):
@@ -1982,14 +2103,14 @@ def test_partition_scoped_zorder_optimize(spark, tmp_path):
         ),
         partition_by=["b"],
     )
-    before = set(t._fold_state(None)[0])
+    before = set(t._fold_state(None).live)
     other_before = {f for f in before if "/b=0/" in f or "b=0" in f}
     t.optimize(
         zorder_by=["x", "y"],
         target_file_bytes=24 * 1024,
         partition_filter={"b": "1"},
     )
-    after = set(t._fold_state(None)[0])
+    after = set(t._fold_state(None).live)
     # untouched partition's files carried by reference
     assert other_before <= after
     # rows preserved exactly
@@ -2263,77 +2384,34 @@ def test_compact_small_files_many_partition_groups_concurrent(
     assert t.compact_small_files(small_file_bytes=10 * 1024 * 1024) == v
 
 
-def test_uniform_schema_guard(spark, tmp_path):
-    """The explicit-read-schema shortcut applies to single-era tables
-    and (r16) to ADDITIVE multi-era tables, where every era is a typed
-    prefix of the latest schema — reading old files with the latest
-    schema null-fills appended columns by name, exactly the
-    mergeSchema result. Column mapping, type changes and non-prefix
-    evolution must keep the inference/mergeSchema path (results over
-    evolved tables are covered by the evolution tests — this pins the
-    guard itself)."""
-    import json as _json
-
+def test_additive_evolved_read(spark, tmp_path):
+    """Two additive schema eras read with the table's recorded
+    schema: the older files null-fill the appended column by name."""
     t = LakeTable(spark, str(tmp_path / "u"))
     t.append(spark.range(3).select(F.col("id").alias("a")))
-    (
-        live, schema_json, schemas, _, _, _, mapping, _,
-    ) = t._fold_state(t.latest_version())
-    assert t._uniform_schema(schemas, mapping, schema_json) == schema_json
-    # two ADDITIVE schema eras -> latest schema is handed to the reader
     t.append(
         spark.range(2).select(
             F.col("id").alias("a"), F.lit("x").alias("b")
         ),
         merge_schema=True,
     )
-    (
-        live, schema_json2, schemas2, _, _, _, mapping2, _,
-    ) = t._fold_state(t.latest_version())
-    assert len(schemas2) > 1
-    assert t._uniform_schema(schemas2, mapping2, schema_json2) == schema_json2
-    # ... and the evolved snapshot reads correctly through it
     got = {
         (r["a"], r["b"]) for r in t.read().collect()
     }
     assert got == {(0, None), (1, None), (2, None), (0, "x"), (1, "x")}
-    # a TYPE change across eras -> no shortcut
-    retyped = _json.loads(schema_json2)
-    for f in retyped["fields"]:
-        if f["name"] == "a":
-            f["type"] = "string"
-    assert (
-        t._uniform_schema(
-            schemas2, mapping2, _json.dumps(retyped)
-        )
-        is None
-    )
-    # a non-prefix era (column dropped from latest) -> no shortcut
-    dropped = _json.loads(schema_json2)
-    dropped["fields"] = [
-        f for f in dropped["fields"] if f["name"] != "a"
-    ]
-    assert (
-        t._uniform_schema(schemas2, mapping2, _json.dumps(dropped))
-        is None
-    )
-    # any column mapping -> no shortcut
-    assert t._uniform_schema(schemas, {"a": "c0"}, schema_json) is None
 
 
-def test_uniform_schema_guard_nullability(spark, tmp_path):
-    """An era whose field is nullable where the latest schema's is not
-    falls back to footer inference: an append without merge_schema
-    checks names and types only, so the older files may hold nulls the
-    latest schema rules out. The opposite direction keeps the shortcut:
-    a stricter era is always readable with the looser latest schema."""
+def test_nullable_era_keeps_nulls(spark, tmp_path):
+    """An append without merge_schema checks names and types only, so
+    an older era may hold nulls the latest (non-nullable) schema rules
+    out: the read keeps them and reports every column nullable. A
+    stricter era reads the same way under a looser latest schema."""
     t = LakeTable(spark, str(tmp_path / "n"))
     t.append(spark.createDataFrame([(1, "x"), (2, None)], "a long, b string"))
     t.append(spark.range(3, 5).select(F.col("id").alias("a"), F.lit("y").alias("b")))
-    _, schema_json, schemas, _, _, _, mapping, _ = t._fold_state(t.latest_version())
+    schema_json = t._fold_state(t.latest_version()).schema_json
     latest = {f["name"]: f["nullable"] for f in json.loads(schema_json)["fields"]}
     assert latest == {"a": False, "b": False}
-    assert t._uniform_schema(schemas, mapping, schema_json) is None
     got = t.read()
     assert all(f.nullable for f in got.schema.fields)
     assert sorted(got.collect(), key=lambda r: r["a"]) == [
@@ -2343,8 +2421,6 @@ def test_uniform_schema_guard_nullability(spark, tmp_path):
     strict = LakeTable(spark, str(tmp_path / "s"))
     strict.append(spark.range(2).select(F.col("id").alias("a")))
     strict.append(spark.createDataFrame([(5,)], "a long"))
-    _, schema_json, schemas, _, _, _, mapping, _ = strict._fold_state(
-        strict.latest_version()
-    )
-    assert len(schemas) == 2
-    assert strict._uniform_schema(schemas, mapping, schema_json) == schema_json
+    got = strict.read()
+    assert all(f.nullable for f in got.schema.fields)
+    assert sorted(r["a"] for r in got.collect()) == [0, 1, 5]

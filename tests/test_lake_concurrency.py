@@ -211,7 +211,7 @@ def t1_schema(t):
 
     from pyspark.sql.types import StructType
 
-    return StructType.fromJson(json.loads(t._fold_state(None)[1]))
+    return StructType.fromJson(json.loads(t._fold_state(None).schema_json))
 
 
 # -- property: racing writers never corrupt state ---------------------------

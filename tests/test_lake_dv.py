@@ -36,7 +36,7 @@ def test_dv_second_delete_merges_pointers(table):
     table.delete("id % 10 = 3", mode="dv")
     table.delete("id < 5", mode="dv")
     assert table.read().count() == 86
-    dvs = table._fold_state(None)[7]
+    dvs = table._fold_state(None).dvs
     # every touched file points at ONE sidecar holding its whole
     # vector
     for f in dvs:
@@ -56,14 +56,14 @@ def test_dv_rewrite_delete_respects_vectors(table):
     table.delete("id = 93", mode="dv")
     table.delete("id >= 90", mode="rewrite")
     assert table.read().count() == 90
-    dvs = table._fold_state(None)[7]
+    dvs = table._fold_state(None).dvs
     assert dvs == {}  # touched file rewritten, pointer popped
 
 
 def test_dv_compact_materializes(table):
     table.delete("id % 2 = 0", mode="dv")
     table.compact()
-    assert table._fold_state(None)[7] == {}
+    assert table._fold_state(None).dvs == {}
     assert table.read().count() == 50
     assert table.read().filter("id % 2 = 0").count() == 0
 
@@ -113,7 +113,7 @@ def test_dv_restore_undeletes_and_cdf_inserts(table):
     v1 = table.delete("id % 10 = 3", mode="dv")
     v2 = table.restore(0)
     assert table.read().count() == 100
-    assert table._fold_state(None)[7] == {}
+    assert table._fold_state(None).dvs == {}
     feed = table.changes(v1)
     ins = feed.filter("_change_type = 'insert'").collect()
     assert sorted(r["id"] for r in ins) == [i for i in range(100) if i % 10 == 3]
@@ -374,7 +374,7 @@ def test_update_dv_preserves_partition_metadata(spark, tmp_path):
     # partition metadata survives: every live file carries values
     assert t._partition_columns() == ["b"]
     fold = t._fold_state(None)
-    live, parts = fold[0], fold[4]
+    live, parts = fold.live, fold.parts
     assert all(parts.get(f, {}).get("b") is not None for f in live)
     # log-level pruning still prunes, and the update is visible
     out, kept, total = t.read_where({"b": ("2", "2")})
