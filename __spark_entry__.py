@@ -17,6 +17,11 @@ Cross-engine conventions (so value hashes match):
 
 from __future__ import annotations
 
+import atexit
+import functools
+import os
+import shutil
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -69,6 +74,21 @@ interactions AS (
 
 def _interactions(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rsd.load_interactions(spark, sf_dir)
+
+
+@functools.cache
+def _scratch_root() -> str:
+    root = tempfile.mkdtemp(prefix="rs_registry_")
+    atexit.register(shutil.rmtree, root, True)
+    return root
+
+
+def _scratch_path(*parts: str) -> str:
+    """Path under this process's scratch directory for the tables,
+    indexes and stream staging dirs a query writes. One directory per
+    process (removed at exit), so two runs on one machine never write
+    each other's tables."""
+    return os.path.join(_scratch_root(), *parts)
 
 
 _DATASET_CACHE: dict = {}
@@ -545,12 +565,10 @@ def q_streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     # files, so stage a symlink dir under /tmp (content still read
     # from the original path)
     import os
-    import tempfile
 
     src = os.path.abspath(f"{sf_dir}/events.parquet")
-    link_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"rs_stream_events_{os.path.basename(os.path.normpath(sf_dir))}",
+    link_dir = _scratch_path(
+        f"rs_stream_events_{os.path.basename(os.path.normpath(sf_dir))}"
     )
     os.makedirs(link_dir, exist_ok=True)
     link = os.path.join(link_dir, "events.parquet")
@@ -598,7 +616,6 @@ def q_streaming_ucb(spark: SparkSession, sf_dir: str) -> DataFrame:
     one availableNow pass; N comes from the sink itself (sum of
     totals), not a second source scan."""
     import os
-    import tempfile
 
     from replay_spark.streaming import StreamingUCB
 
@@ -606,9 +623,8 @@ def q_streaming_ucb(spark: SparkSession, sf_dir: str) -> DataFrame:
         if q.name == "q_streaming_ucb_sink":
             q.stop()
     src = os.path.abspath(f"{sf_dir}/events.parquet")
-    link_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"rs_stream_events_{os.path.basename(os.path.normpath(sf_dir))}",
+    link_dir = _scratch_path(
+        f"rs_stream_events_{os.path.basename(os.path.normpath(sf_dir))}"
     )
     os.makedirs(link_dir, exist_ok=True)
     link = os.path.join(link_dir, "events.parquet")
@@ -646,7 +662,6 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5(text)`` (which survivor row wins is arrival-order dependent,
     the surviving content-hash set is not)."""
     import os
-    import tempfile
 
     from replay_spark.streaming import streaming_exact_dedup
 
@@ -654,9 +669,8 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         if q.name == "q_streaming_dedup_sink":
             q.stop()
     src = os.path.abspath(f"{sf_dir}/documents.parquet")
-    link_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"rs_stream_docs_{os.path.basename(os.path.normpath(sf_dir))}",
+    link_dir = _scratch_path(
+        f"rs_stream_docs_{os.path.basename(os.path.normpath(sf_dir))}"
     )
     os.makedirs(link_dir, exist_ok=True)
     link = os.path.join(link_dir, "documents.parquet")
@@ -2801,7 +2815,6 @@ def q_feature_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     filters — no leakage, ttl nulls, and values must all agree."""
     import os
     import shutil
-    import tempfile
 
     from replay_spark.feature_store import FeatureStore, FeatureView
     from replay_spark.lake import LakeTable
@@ -2810,10 +2823,7 @@ def q_feature_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     spine = events.filter(F.col("event_id") % 5 == 1).select(
         "event_id", "user_id", "ts"
     )
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"rs_featstore_{os.path.basename(os.path.normpath(sf_dir))}",
-    )
+    path = _scratch_path(f"rs_featstore_{os.path.basename(os.path.normpath(sf_dir))}")
     shutil.rmtree(path, ignore_errors=True)
     lake = LakeTable(spark, path)
     lake.append(
@@ -2879,12 +2889,8 @@ def _stream_link_dir(src: str, prefix: str) -> str:
     file source (which requires a directory) — same device as the
     other streaming gates."""
     import os
-    import tempfile
 
-    link_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"{prefix}_{os.path.basename(os.path.dirname(src))}",
-    )
+    link_dir = _scratch_path(f"{prefix}_{os.path.basename(os.path.dirname(src))}")
     os.makedirs(link_dir, exist_ok=True)
     link = os.path.join(link_dir, os.path.basename(src))
     if os.path.lexists(link) and os.path.realpath(link) != src:
@@ -3123,7 +3129,6 @@ def q_webdataset(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus, which DuckDB checks from lengths + md5 of the
     original column."""
     import os
-    import tempfile
 
     from replay_spark.data.webdataset import (
         read_webdataset,
@@ -3138,10 +3143,7 @@ def q_webdataset(spark: SparkSession, sf_dir: str) -> DataFrame:
         "text",
         "source",
     )
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"rs_wds_{os.path.basename(os.path.normpath(sf_dir))}",
-    )
+    out_dir = _scratch_path(f"rs_wds_{os.path.basename(os.path.normpath(sf_dir))}")
     write_webdataset(export, out_dir, key_column="key", num_shards=8)
     back = read_webdataset(spark, out_dir)
     return back.select(
@@ -3419,14 +3421,10 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure set algebra DuckDB replays. The store resets per run so the
     gate is idempotent."""
     import os
-    import tempfile
 
     from replay_spark.preprocessing.dedup import IncrementalDeduplicator
 
-    store = os.path.join(
-        tempfile.gettempdir(),
-        f"rs_incdedup_{os.path.basename(os.path.normpath(sf_dir))}",
-    )
+    store = _scratch_path(f"rs_incdedup_{os.path.basename(os.path.normpath(sf_dir))}")
     docs = rsd.read_table(spark, sf_dir, "documents")
     dd = IncrementalDeduplicator(store)
     dd.reset()
@@ -3631,7 +3629,6 @@ def q_streaming_source_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate pins — admits exactly the cap smallest ids per source, which
     is plain SQL. HASH-matched."""
     import os
-    import tempfile
 
     from replay_spark.streaming import StreamingSourceCapFilter
 
@@ -3639,9 +3636,8 @@ def q_streaming_source_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
         if q.name == "q_streaming_source_cap_sink":
             q.stop()
     src = os.path.abspath(f"{sf_dir}/documents.parquet")
-    link_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"rs_stream_docs_{os.path.basename(os.path.normpath(sf_dir))}",
+    link_dir = _scratch_path(
+        f"rs_stream_docs_{os.path.basename(os.path.normpath(sf_dir))}"
     )
     os.makedirs(link_dir, exist_ok=True)
     link = os.path.join(link_dir, "documents.parquet")
@@ -3814,13 +3810,12 @@ def q_metric_repository(spark: SparkSession, sf_dir: str) -> DataFrame:
     VLDB'18 re-expressed; the reference has no data-quality tier)."""
     import os
     import shutil
-    import tempfile
 
     from replay_spark.quality import ConstraintSuite, MetricRepository
 
     docs = rsd.read_table(spark, sf_dir, "documents")
     tag = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(tempfile.gettempdir(), f"rs_metricrepo_{tag}")
+    path = _scratch_path(f"rs_metricrepo_{tag}")
     shutil.rmtree(path, ignore_errors=True)
     repo = MetricRepository(spark, path)
     suite = ConstraintSuite().is_complete("v")
@@ -4160,7 +4155,6 @@ def q_ann_save_load(spark: SparkSession, sf_dir: str) -> DataFrame:
     as a fresh build, proving the round trip is lossless."""
     import os
     import shutil
-    import tempfile
 
     from replay_spark.ann import IVFANN
     from replay_spark.utils import model_handler
@@ -4171,7 +4165,7 @@ def q_ann_save_load(spark: SparkSession, sf_dir: str) -> DataFrame:
         for r in emb.filter("vec_id < 16").orderBy("vec_id").collect()
     ]
     tag = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(tempfile.gettempdir(), f"rs_annidx_{tag}")
+    path = _scratch_path(f"rs_annidx_{tag}")
     shutil.rmtree(path, ignore_errors=True)
     IVFANN(num_clusters=16, nprobe=2).fit(emb, centroids=cents).save(path)
     loaded = model_handler.load(path, spark)
@@ -4218,7 +4212,6 @@ def q_lake_vector_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     proving refresh == rebuild without the rebuild."""
     import os
     import shutil
-    import tempfile
 
     from replay_spark.ann import LakeVectorIndex
     from replay_spark.lake import LakeTable
@@ -4231,8 +4224,8 @@ def q_lake_vector_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         for r in emb.filter("vec_id < 16").orderBy("vec_id").collect()
     ]
     tag = os.path.basename(os.path.normpath(sf_dir))
-    tbl_path = os.path.join(tempfile.gettempdir(), f"rs_lvitbl_{tag}")
-    idx_path = os.path.join(tempfile.gettempdir(), f"rs_lviidx_{tag}")
+    tbl_path = _scratch_path(f"rs_lvitbl_{tag}")
+    idx_path = _scratch_path(f"rs_lviidx_{tag}")
     shutil.rmtree(tbl_path, ignore_errors=True)
     shutil.rmtree(idx_path, ignore_errors=True)
     t = LakeTable(spark, tbl_path)
@@ -4696,7 +4689,6 @@ def q_tfrecord_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the original table — int64 (negative values take the 10-byte
     varint path), utf-8 bytes, and packed Int64List features."""
     import os
-    import tempfile
 
     from replay_spark.data.tfrecord import read_tfrecord, write_tfrecord
 
@@ -4709,10 +4701,7 @@ def q_tfrecord_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.length("text").cast("long"), F.col("doc_id") % 7
         ).alias("lens"),
     )
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"rs_tfr_{os.path.basename(os.path.normpath(sf_dir))}",
-    )
+    out_dir = _scratch_path(f"rs_tfr_{os.path.basename(os.path.normpath(sf_dir))}")
     write_tfrecord(export, out_dir, key_column="doc_id", num_shards=8)
     back = read_tfrecord(
         spark,
@@ -4741,17 +4730,13 @@ def q_tfrecord_floats(spark: SparkSession, sf_dir: str) -> DataFrame:
     recovered vector matches DuckDB's fold over the original
     column."""
     import os
-    import tempfile
 
     from replay_spark.data.tfrecord import read_tfrecord, write_tfrecord
 
     emb = rsd.read_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"rs_tfrf_{os.path.basename(os.path.normpath(sf_dir))}",
-    )
+    out_dir = _scratch_path(f"rs_tfrf_{os.path.basename(os.path.normpath(sf_dir))}")
     write_tfrecord(emb, out_dir, key_column="vec_id", num_shards=8)
     back = read_tfrecord(
         spark, out_dir, {"vec_id": "int64", "embedding": "float_list"}
@@ -4847,7 +4832,6 @@ def q_zorder_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     asserted separately in tests (it is layout-dependent, not
     SQL-reproducible)."""
     import os
-    import tempfile
 
     from replay_spark.utils.layout import (
         ZOrderLayout,
@@ -4855,10 +4839,7 @@ def q_zorder_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     li = rsd.read_table(spark, sf_dir, "lineitem")
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"rs_zli_{os.path.basename(os.path.normpath(sf_dir))}",
-    )
+    out_dir = _scratch_path(f"rs_zli_{os.path.basename(os.path.normpath(sf_dir))}")
     z = ZOrderLayout(["l_quantity", "l_discount"])
     laid = z.layout(li, num_partitions=16).drop(z.output_column)
     laid.write.mode("overwrite").parquet(out_dir)
@@ -5004,17 +4985,13 @@ def q_lake_timetravel(spark: SparkSession, sf_dir: str) -> DataFrame:
     ids, v3 (compaction) changes layout but not content."""
     import os
     import shutil
-    import tempfile
 
     from replay_spark.lake import LakeTable
 
     docs = rsd.read_table(spark, sf_dir, "documents").select(
         "doc_id", F.length("text").alias("n_chars")
     )
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"rs_lake_{os.path.basename(os.path.normpath(sf_dir))}",
-    )
+    path = _scratch_path(f"rs_lake_{os.path.basename(os.path.normpath(sf_dir))}")
     shutil.rmtree(path, ignore_errors=True)
     t = LakeTable(spark, path)
     t.append(docs.filter(F.col("doc_id") % 3 == 0))
@@ -5139,7 +5116,6 @@ def q_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     longs, utf-8 strings, ``["null", long]`` unions, long arrays —
     must match what DuckDB recomputes from the original table."""
     import os
-    import tempfile
 
     from replay_spark.data.avro import read_avro, write_avro
 
@@ -5153,10 +5129,7 @@ def q_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.length("text").cast("long"), F.col("doc_id") % 7
         ).alias("lens"),
     )
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"rs_avro_{os.path.basename(os.path.normpath(sf_dir))}",
-    )
+    out_dir = _scratch_path(f"rs_avro_{os.path.basename(os.path.normpath(sf_dir))}")
     write_avro(export, out_dir, key_column="doc_id", num_shards=8)
     back = read_avro(spark, out_dir)
     return back.select(
@@ -5240,7 +5213,6 @@ def q_streaming_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer-floored values so sums are order-independent) must equal
     DuckDB's epoch-bucket GROUP BY."""
     import os
-    import tempfile
 
     from replay_spark.streaming import StreamingWindowedAggregator
 
@@ -5248,9 +5220,8 @@ def q_streaming_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         if q.name == "q_streaming_window_sink":
             q.stop()
     src = os.path.abspath(f"{sf_dir}/events.parquet")
-    link_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"rs_stream_events_{os.path.basename(os.path.normpath(sf_dir))}",
+    link_dir = _scratch_path(
+        f"rs_stream_events_{os.path.basename(os.path.normpath(sf_dir))}"
     )
     os.makedirs(link_dir, exist_ok=True)
     link = os.path.join(link_dir, "events.parquet")
@@ -5305,17 +5276,13 @@ def q_lake_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays both change sets from the predicates."""
     import os
     import shutil
-    import tempfile
 
     from replay_spark.lake import LakeTable
 
     docs = rsd.read_table(spark, sf_dir, "documents").select(
         "doc_id", F.length("text").alias("n_chars")
     )
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"rs_lakecdf_{os.path.basename(os.path.normpath(sf_dir))}",
-    )
+    path = _scratch_path(f"rs_lakecdf_{os.path.basename(os.path.normpath(sf_dir))}")
     shutil.rmtree(path, ignore_errors=True)
     t = LakeTable(spark, path)
     t.append(docs.filter(F.col("doc_id") % 3 == 0))
@@ -5338,7 +5305,6 @@ def q_lake_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
     encoding sizes)."""
     import os
     import shutil
-    import tempfile
 
     from replay_spark.lake import LakeTable
 
@@ -5348,10 +5314,7 @@ def q_lake_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("(doc_id DIV 64) % 64").alias("y"),
         F.length("text").alias("n_chars"),
     )
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"rs_lakeopt_{os.path.basename(os.path.normpath(sf_dir))}",
-    )
+    path = _scratch_path(f"rs_lakeopt_{os.path.basename(os.path.normpath(sf_dir))}")
     shutil.rmtree(path, ignore_errors=True)
     t = LakeTable(spark, path)
     t.append(docs.repartition(8))
@@ -5479,17 +5442,13 @@ def q_ivm_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     full recompute."""
     import os
     import shutil
-    import tempfile
 
     from replay_spark.lake import LakeTable, refresh_aggregate
 
     docs = rsd.read_table(spark, sf_dir, "documents").select(
         "doc_id", F.length("text").alias("n_chars")
     )
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"rs_lakeivm_{os.path.basename(os.path.normpath(sf_dir))}",
-    )
+    path = _scratch_path(f"rs_lakeivm_{os.path.basename(os.path.normpath(sf_dir))}")
     shutil.rmtree(path, ignore_errors=True)
     t = LakeTable(spark, path)
     t.append(docs.filter(F.col("doc_id") % 3 == 0))
@@ -5525,7 +5484,6 @@ def q_lake_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost, never results."""
     import os
     import shutil
-    import tempfile
 
     import replay_spark.lake as lakemod
 
@@ -5533,7 +5491,7 @@ def q_lake_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id"
     )
     tag = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(tempfile.gettempdir(), f"rs_lakeck_{tag}")
+    path = _scratch_path(f"rs_lakeck_{tag}")
     shutil.rmtree(path, ignore_errors=True)
     t = lakemod.LakeTable(spark, path)
     for r in range(5):
@@ -5577,7 +5535,6 @@ def q_lake_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     must equal DuckDB's recompute from the same predicates."""
     import os
     import shutil
-    import tempfile
 
     from replay_spark.lake import LakeTable
 
@@ -5585,7 +5542,7 @@ def q_lake_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "value"
     )
     tag = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(tempfile.gettempdir(), f"rs_lakepart_{tag}")
+    path = _scratch_path(f"rs_lakepart_{tag}")
     shutil.rmtree(path, ignore_errors=True)
     t = LakeTable(spark, path)
     t.append(
@@ -5611,7 +5568,6 @@ def q_bloom_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
     residual filter keeps the answer exact)."""
     import os
     import shutil
-    import tempfile
     from functools import reduce
 
     from replay_spark.lake import LakeTable
@@ -5620,7 +5576,7 @@ def q_bloom_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "text"
     )
     tag = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(tempfile.gettempdir(), f"rs_bloomskip_{tag}")
+    path = _scratch_path(f"rs_bloomskip_{tag}")
     shutil.rmtree(path, ignore_errors=True)
     t = LakeTable(spark, path)
     t.enable_bloom_index(["doc_id"])
@@ -5650,7 +5606,6 @@ def q_lake_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     final state from the residue predicates."""
     import os
     import shutil
-    import tempfile
 
     from replay_spark.lake import LakeTable
 
@@ -5658,8 +5613,8 @@ def q_lake_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id"
     )
     tag = os.path.basename(os.path.normpath(sf_dir))
-    src_path = os.path.join(tempfile.gettempdir(), f"rs_clonesrc_{tag}")
-    dst_path = os.path.join(tempfile.gettempdir(), f"rs_clonedst_{tag}")
+    src_path = _scratch_path(f"rs_clonesrc_{tag}")
+    dst_path = _scratch_path(f"rs_clonedst_{tag}")
     shutil.rmtree(src_path, ignore_errors=True)
     shutil.rmtree(dst_path, ignore_errors=True)
     t = LakeTable(spark, src_path)
@@ -5697,7 +5652,6 @@ def q_lake_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB's recompute from the residue predicates."""
     import os
     import shutil
-    import tempfile
 
     from replay_spark.lake import LakeTable
 
@@ -5705,7 +5659,7 @@ def q_lake_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id"
     )
     tag = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(tempfile.gettempdir(), f"rs_lakevac_{tag}")
+    path = _scratch_path(f"rs_lakevac_{tag}")
     shutil.rmtree(path, ignore_errors=True)
     t = LakeTable(spark, path)
     t.append(ev.filter(F.col("event_id") % 10 <= 4))        # v0
@@ -5759,7 +5713,6 @@ def q_materialized_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     hop landed exactly on the full recompute."""
     import os
     import shutil
-    import tempfile
 
     from replay_spark.lake import LakeTable, MaterializedAggregate
 
@@ -5767,8 +5720,8 @@ def q_materialized_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id"
     )
     tag = os.path.basename(os.path.normpath(sf_dir))
-    base_path = os.path.join(tempfile.gettempdir(), f"rs_mav_b_{tag}")
-    view_path = os.path.join(tempfile.gettempdir(), f"rs_mav_v_{tag}")
+    base_path = _scratch_path(f"rs_mav_b_{tag}")
+    view_path = _scratch_path(f"rs_mav_v_{tag}")
     shutil.rmtree(base_path, ignore_errors=True)
     shutil.rmtree(view_path, ignore_errors=True)
     t = LakeTable(spark, base_path)
@@ -5872,7 +5825,6 @@ def q_streaming_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark + delay) — the emitted pairs must equal DuckDB's batch
     range join."""
     import os
-    import tempfile
 
     from replay_spark.streaming import StreamingIntervalJoiner
 
@@ -5880,9 +5832,8 @@ def q_streaming_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         if q.name == "q_streaming_join_sink":
             q.stop()
     src = os.path.abspath(f"{sf_dir}/events.parquet")
-    link_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"rs_stream_events_{os.path.basename(os.path.normpath(sf_dir))}",
+    link_dir = _scratch_path(
+        f"rs_stream_events_{os.path.basename(os.path.normpath(sf_dir))}"
     )
     os.makedirs(link_dir, exist_ok=True)
     link = os.path.join(link_dir, "events.parquet")
@@ -6014,23 +5965,18 @@ def q_streaming_lake_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicates would break the hash."""
     import os
     import shutil
-    import tempfile
 
     from replay_spark.lake import LakeTable
 
     for q in spark.streams.active:
         if q.name == "q_lake_sink_stream":
             q.stop()
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"rs_lakesink_{os.path.basename(os.path.normpath(sf_dir))}",
-    )
+    path = _scratch_path(f"rs_lakesink_{os.path.basename(os.path.normpath(sf_dir))}")
     shutil.rmtree(path, ignore_errors=True)
     t = LakeTable(spark, path)
     src = os.path.abspath(f"{sf_dir}/events.parquet")
-    link_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"rs_stream_events_{os.path.basename(os.path.normpath(sf_dir))}",
+    link_dir = _scratch_path(
+        f"rs_stream_events_{os.path.basename(os.path.normpath(sf_dir))}"
     )
     os.makedirs(link_dir, exist_ok=True)
     link = os.path.join(link_dir, "events.parquet")
@@ -6083,7 +6029,6 @@ def q_streaming_feature_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     plus as-of semantics, or the hash breaks."""
     import os
     import shutil
-    import tempfile
 
     from replay_spark.feature_store import FeatureStore, FeatureView
     from replay_spark.lake import LakeTable
@@ -6092,7 +6037,7 @@ def q_streaming_feature_store(spark: SparkSession, sf_dir: str) -> DataFrame:
         if q.name == "q_fs_stream":
             q.stop()
     tag = os.path.basename(os.path.normpath(sf_dir))
-    tmp = tempfile.gettempdir()
+    tmp = _scratch_path()
     src_dir = os.path.join(tmp, f"rs_fs_src_{tag}")
     lake_dir = os.path.join(tmp, f"rs_fs_lake_{tag}")
     shutil.rmtree(src_dir, ignore_errors=True)
@@ -6243,7 +6188,6 @@ def q_lake_as_of(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicates."""
     import os
     import shutil
-    import tempfile
     import time as _time
 
     from replay_spark.lake import LakeTable
@@ -6252,7 +6196,7 @@ def q_lake_as_of(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id"
     )
     tag = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(tempfile.gettempdir(), f"rs_lakeasof_{tag}")
+    path = _scratch_path(f"rs_lakeasof_{tag}")
     shutil.rmtree(path, ignore_errors=True)
     t = LakeTable(spark, path)
     t.append(ev.filter(F.col("event_id") % 10 <= 5).coalesce(2))  # v0
@@ -6294,7 +6238,6 @@ def q_lake_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-expressed for this log (replay_spark/lake.py:rename_column)."""
     import os
     import shutil
-    import tempfile
 
     from replay_spark.lake import LakeTable
 
@@ -6302,7 +6245,7 @@ def q_lake_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "lang", "n_chars"
     )
     tag = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(tempfile.gettempdir(), f"rs_lakerename_{tag}")
+    path = _scratch_path(f"rs_lakerename_{tag}")
     shutil.rmtree(path, ignore_errors=True)
     t = LakeTable(spark, path)
     t.append(docs.filter(F.col("doc_id") % 3 != 0).coalesce(2))  # v0
@@ -6368,7 +6311,6 @@ def q_lake_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     (replay_spark/lake.py:delete, mode="dv")."""
     import os
     import shutil
-    import tempfile
 
     from replay_spark.lake import LakeTable
 
@@ -6376,7 +6318,7 @@ def q_lake_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "n_chars"
     )
     tag = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(tempfile.gettempdir(), f"rs_lakedv_{tag}")
+    path = _scratch_path(f"rs_lakedv_{tag}")
     shutil.rmtree(path, ignore_errors=True)
     t = LakeTable(spark, path)
     t.append(docs.repartition(4))
@@ -6424,7 +6366,6 @@ def q_lake_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     log's per-file partition-value metadata."""
     import os
     import shutil
-    import tempfile
 
     from replay_spark.lake import LakeTable
 
@@ -6435,7 +6376,7 @@ def q_lake_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_chars",
     )
     tag = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(tempfile.gettempdir(), f"rs_lakepe_{tag}")
+    path = _scratch_path(f"rs_lakepe_{tag}")
     shutil.rmtree(path, ignore_errors=True)
     t = LakeTable(spark, path)
     t.append(docs.filter("doc_id % 2 = 0"), partition_by=["lang"])
@@ -6478,7 +6419,6 @@ def q_lake_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     UPDATE shape on this log (replay_spark/lake.py:update)."""
     import os
     import shutil
-    import tempfile
 
     from replay_spark.lake import LakeTable
 
@@ -6486,7 +6426,7 @@ def q_lake_update(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "n_chars"
     )
     tag = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(tempfile.gettempdir(), f"rs_lakeupd_{tag}")
+    path = _scratch_path(f"rs_lakeupd_{tag}")
     shutil.rmtree(path, ignore_errors=True)
     t = LakeTable(spark, path)
     t.append(docs.repartition(4))
@@ -6545,7 +6485,6 @@ def q_lake_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     (replay_spark/streaming/cdf.py)."""
     import os
     import shutil
-    import tempfile
 
     from replay_spark.lake import LakeTable
     from replay_spark.streaming import LakeChangeStream
@@ -6554,7 +6493,7 @@ def q_lake_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "n_chars"
     )
     tag = os.path.basename(os.path.normpath(sf_dir))
-    base = os.path.join(tempfile.gettempdir(), f"rs_lakestream_{tag}")
+    base = _scratch_path(f"rs_lakestream_{tag}")
     shutil.rmtree(base, ignore_errors=True)
     src = LakeTable(spark, os.path.join(base, "src"))
     src.append(docs.filter("doc_id % 2 = 0").repartition(4))   # v0
@@ -6608,7 +6547,6 @@ def q_lakefeed_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     (replay_spark/streaming/lakefeed.py)."""
     import os
     import shutil
-    import tempfile
 
     from replay_spark.lake import LakeTable
     from replay_spark.streaming import register_lakefeed
@@ -6617,7 +6555,7 @@ def q_lakefeed_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "lang", "n_chars"
     )
     tag = os.path.basename(os.path.normpath(sf_dir))
-    base = os.path.join(tempfile.gettempdir(), f"rs_lakefeed_{tag}")
+    base = _scratch_path(f"rs_lakefeed_{tag}")
     shutil.rmtree(base, ignore_errors=True)
     src = LakeTable(spark, os.path.join(base, "src"))
     src.append(docs.filter("doc_id % 3 = 0").repartition(2))
@@ -6669,7 +6607,6 @@ def q_lake_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
     format (replay_spark/lake.py add_constraint/drop_constraint)."""
     import os
     import shutil
-    import tempfile
 
     from replay_spark.lake import LakeTable
 
@@ -6677,7 +6614,7 @@ def q_lake_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "lang", "n_chars"
     )
     tag = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(tempfile.gettempdir(), f"rs_lakecons_{tag}")
+    path = _scratch_path(f"rs_lakecons_{tag}")
     shutil.rmtree(path, ignore_errors=True)
     t = LakeTable(spark, path)
     t.append(docs.filter("doc_id % 3 = 0"))
@@ -6732,7 +6669,6 @@ def q_lake_generated(spark: SparkSession, sf_dir: str) -> DataFrame:
     set_generated_column)."""
     import os
     import shutil
-    import tempfile
 
     from replay_spark.lake import LakeTable
 
@@ -6740,7 +6676,7 @@ def q_lake_generated(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "lang", "n_chars"
     )
     tag = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(tempfile.gettempdir(), f"rs_lakegen_{tag}")
+    path = _scratch_path(f"rs_lakegen_{tag}")
     shutil.rmtree(path, ignore_errors=True)
     t = LakeTable(spark, path)
     t.append(
@@ -6797,7 +6733,6 @@ def q_lake_sql_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
     (replay_spark/lake_sql.py)."""
     import os
     import shutil
-    import tempfile
 
     from replay_spark.lake import LakeTable
     from replay_spark.lake_sql import lake_sql
@@ -6806,7 +6741,7 @@ def q_lake_sql_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "n_chars"
     )
     tag = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(tempfile.gettempdir(), f"rs_lakesqldml_{tag}")
+    path = _scratch_path(f"rs_lakesqldml_{tag}")
     shutil.rmtree(path, ignore_errors=True)
     t = LakeTable(spark, path)
     t.append(docs.repartition(4))
@@ -6862,7 +6797,6 @@ def q_lake_sql_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     single inner-join conditional path (replay_spark/lake.py)."""
     import os
     import shutil
-    import tempfile
 
     from replay_spark.lake import LakeTable
     from replay_spark.lake_sql import lake_sql
@@ -6871,7 +6805,7 @@ def q_lake_sql_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "n_chars", "lang"
     )
     tag = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(tempfile.gettempdir(), f"rs_lakesqlmrg_{tag}")
+    path = _scratch_path(f"rs_lakesqlmrg_{tag}")
     shutil.rmtree(path, ignore_errors=True)
     t = LakeTable(spark, path)
     t.append(docs.repartition(4))
@@ -6946,7 +6880,6 @@ def q_lake_sql_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     matched_clauses / when_not_matched_by_source.)"""
     import os
     import shutil
-    import tempfile
 
     from replay_spark.lake import LakeTable
     from replay_spark.lake_sql import lake_sql
@@ -6955,7 +6888,7 @@ def q_lake_sql_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "n_chars", "lang"
     )
     tag = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(tempfile.gettempdir(), f"rs_lakesqlsync_{tag}")
+    path = _scratch_path(f"rs_lakesqlsync_{tag}")
     shutil.rmtree(path, ignore_errors=True)
     t = LakeTable(spark, path)
     t.append(docs.repartition(4))
@@ -7017,7 +6950,6 @@ def q_lake_sql_alter(spark: SparkSession, sf_dir: str) -> DataFrame:
     lake.py add_column/rename_column/add_constraint)."""
     import os
     import shutil
-    import tempfile
 
     from replay_spark.lake import LakeTable
     from replay_spark.lake_sql import lake_sql
@@ -7026,7 +6958,7 @@ def q_lake_sql_alter(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "n_chars"
     )
     tag = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(tempfile.gettempdir(), f"rs_lakesqlalt_{tag}")
+    path = _scratch_path(f"rs_lakesqlalt_{tag}")
     shutil.rmtree(path, ignore_errors=True)
     t = LakeTable(spark, path)
     t.append(docs.repartition(4))
@@ -7099,7 +7031,6 @@ def q_lake_autocompact(spark: SparkSession, sf_dir: str) -> DataFrame:
     compact_small_files)."""
     import os
     import shutil
-    import tempfile
 
     from replay_spark.lake import LakeTable
 
@@ -7108,7 +7039,7 @@ def q_lake_autocompact(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") % 3).cast("string").alias("b"),
     )
     tag = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(tempfile.gettempdir(), f"rs_lakeac_{tag}")
+    path = _scratch_path(f"rs_lakeac_{tag}")
     shutil.rmtree(path, ignore_errors=True)
     t = LakeTable(spark, path)
     # one healthy file (most of the corpus), then a tail of small
@@ -7230,7 +7161,6 @@ def q_lake_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank-window recompute."""
     import os
     import shutil
-    import tempfile
 
     from replay_spark.lake import LakeTable
 
@@ -7259,7 +7189,7 @@ def q_lake_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     chunked = docs.join(chunk_map, "doc_id").cache()
     tag = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(tempfile.gettempdir(), f"rs_lakestats_{tag}")
+    path = _scratch_path(f"rs_lakestats_{tag}")
     shutil.rmtree(path, ignore_errors=True)
     t = LakeTable(spark, path)
     t.enable_column_stats(["doc_id"])
@@ -7298,7 +7228,6 @@ def q_lake_replicate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the residue predicates — byte-fidelity DR, not re-derivation."""
     import os
     import shutil
-    import tempfile
 
     from replay_spark.lake import LakeTable
 
@@ -7306,8 +7235,8 @@ def q_lake_replicate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id"
     )
     tag = os.path.basename(os.path.normpath(sf_dir))
-    src_path = os.path.join(tempfile.gettempdir(), f"rs_repsrc_{tag}")
-    dst_path = os.path.join(tempfile.gettempdir(), f"rs_repdst_{tag}")
+    src_path = _scratch_path(f"rs_repsrc_{tag}")
+    dst_path = _scratch_path(f"rs_repdst_{tag}")
     shutil.rmtree(src_path, ignore_errors=True)
     shutil.rmtree(dst_path, ignore_errors=True)
     t = LakeTable(spark, src_path)
@@ -7599,7 +7528,6 @@ def q_arrow_ipc(spark: SparkSession, sf_dir: str) -> DataFrame:
     longs, utf-8 strings, nullable unions, long arrays — must match
     what DuckDB recomputes from the original table."""
     import os
-    import tempfile
 
     from replay_spark.data.arrow_ipc import read_arrow_ipc, write_arrow_ipc
 
@@ -7613,10 +7541,7 @@ def q_arrow_ipc(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.length("text").cast("long"), F.col("doc_id") % 7
         ).alias("lens"),
     )
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"rs_ipc_{os.path.basename(os.path.normpath(sf_dir))}",
-    )
+    out_dir = _scratch_path(f"rs_ipc_{os.path.basename(os.path.normpath(sf_dir))}")
     import shutil
 
     shutil.rmtree(out_dir, ignore_errors=True)

@@ -2183,9 +2183,10 @@ class LakeTable:
         source will be vacuumed; streaming txn high-water marks are
         NOT copied (the clone is a new table for ingestion
         purposes); bloom sidecars are not copied (reads stay correct,
-        point-skip just starts cold). A multi-schema source (appends
-        under ``merge_schema=True``) cannot be represented in one
-        commit — ``compact()`` the source first to unify files."""
+        point-skip just starts cold). A source with several schema
+        eras (appends under ``merge_schema=True``) clones as one
+        commit of its recorded schema; every read applies that schema,
+        so older files read null for the columns they lack."""
         src_version = (
             self.latest_version() if version is None else version
         )
@@ -2198,37 +2199,6 @@ class LakeTable:
             raise FileNotFoundError(
                 f"no snapshot at {self.path}@{src_version}"
             )
-        shapes = {
-            tuple(self._schema_shape(c["schema"]))
-            for c in self._commits()
-            if c["version"] <= src_version and c.get("schema")
-        }
-        if len(shapes) > 1:  # name+type only: nullability drift from
-            # delete-rewrites is read-compatible and must not block.
-            # On a column-mapped table LOGICAL schemas drift at every
-            # rename while the files stay one PHYSICAL schema — check
-            # the footers (O(files) metadata reads) before refusing.
-            phys_ok = False
-            if mapping is not None:
-                try:
-                    import pyarrow.parquet as _pq
-
-                    phys = {
-                        tuple(
-                            _pq.ParquetFile(
-                                os.path.join(self.path, rel)
-                            ).schema_arrow.names
-                        )
-                        for rel in live
-                    }
-                    phys_ok = len(phys) == 1
-                except Exception:
-                    phys_ok = False
-            if not phys_ok:
-                raise ValueError(
-                    "cannot shallow-clone a multi-schema table in one "
-                    "commit; compact() the source first"
-                )
         out = LakeTable(self.spark, dest_path)
         if out.latest_version() >= 0:
             raise ValueError(f"clone target {dest_path!r} exists")

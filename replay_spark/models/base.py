@@ -7,10 +7,13 @@ the popularity-based (non-personalized) base with optional
 per-query weighted sampling.
 
 Scale design: the fit_queries/fit_items universes are broadcast
-(they are distinct-id tables, small relative to interactions);
-seen-filtering is an anti join on (query, item); all ranking is a
-single window per query partition. No driver-side data paths except
-tiny scalar pulls (max_seen, fill value).
+(they are distinct-id tables, small relative to interactions).
+Personalized models filter seen items with an anti join on
+(query, item) and rank with one window per query. Non-personalized
+models predict in one seen-aware stage: the catalog, ranked once,
+rides a broadcast 1-row array, and each query drops its seen items
+(one ``collect_set`` per query) with array functions — no window,
+join chain or scalar pull.
 """
 
 from __future__ import annotations
@@ -24,13 +27,14 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType
 
 from replay_spark.data.dataset import Dataset
 from replay_spark.utils.spark_utils import (
     bucketed_apply_in_pandas,
-    filter_cold,
     get_top_k_recs,
     get_unique_entities,
+    ordered_row_numbers,
 )
 
 __all__ = ["BaseRecommender", "NonPersonalizedRecommender"]
@@ -155,41 +159,15 @@ class BaseRecommender(ABC):
         recs_file_path: Optional[str] = None,
     ) -> Optional[DataFrame]:
         """Top-k recommendations per query: ``[query_id, item_id, rating]``."""
-        # default predict (queries=None, dataset given): queries IS the
-        # distinct user set of the (identically cold-filtered)
-        # interactions, so restricting interactions to `queries` in the
-        # seen-stats scan is a provable no-op — skip that join (at
-        # scale it's a full extra pass over the fact table)
+        # default predict (queries=None, dataset given): the queries ARE
+        # the log's users, so restricting the log to them is a no-op
         queries_cover_log = queries is None and dataset is not None
         dataset, queries, items = self._prepare_predict_inputs(dataset, queries, items)
-        # `queries` is usually a DISTINCT over the interaction log and
-        # is consumed by seen-stats, the prediction join AND the final
-        # rank — cache the (small) id frame so the log-wide distinct
-        # shuffle runs once per predict, not once per consumer. Skip
-        # when it's the fit-level universe (already cached in fit).
-        own_queries_cache = queries is not self.fit_queries
-        if own_queries_cache:
-            queries = queries.cache()
-        seen_stats = None
-        if filter_seen_items and dataset is not None:
-            seen_stats = self._compute_seen_stats(
-                dataset.interactions, queries, join_queries=not queries_cover_log
-            )
-        self._shared_seen_stats = seen_stats
+        recs, cached = self._top_k(
+            dataset, k, queries, items, filter_seen_items, queries_cover_log
+        )
         try:
-            recs = self._predict(dataset, k, queries, items, filter_seen_items)
-            if filter_seen_items and dataset is not None:
-                recs = self._filter_seen(
-                    recs,
-                    dataset.interactions,
-                    k,
-                    queries,
-                    seen_stats,
-                    join_queries=not queries_cover_log,
-                )
-            recs = get_top_k_recs(
-                recs, k, self.query_column, self.item_column, self.rating_column
-            ).select(self.query_column, self.item_column, self.rating_column)
+            recs = recs.select(self.query_column, self.item_column, self.rating_column)
             if recs_file_path is not None:
                 recs.write.mode("overwrite").parquet(recs_file_path)
                 return None
@@ -197,11 +175,52 @@ class BaseRecommender(ABC):
             recs.count()
             return recs
         finally:
-            self._shared_seen_stats = None
-            if seen_stats is not None:
-                seen_stats[0].unpersist()
-            if own_queries_cache:
-                queries.unpersist()
+            for df in cached:
+                df.unpersist()
+
+    def _top_k(
+        self,
+        dataset: Optional[Dataset],
+        k: int,
+        queries: DataFrame,
+        items: DataFrame,
+        filter_seen_items: bool,
+        queries_cover_log: bool,
+    ) -> tuple[DataFrame, list]:
+        """The top-k frame and the frames to unpersist once it has run.
+
+        Generic chain: ``_predict``'s candidates, seen pairs removed by
+        an anti join, then one per-query window keeps the k best.
+        """
+        cached = []
+        # `queries` is usually a DISTINCT over the interaction log and
+        # is consumed by seen-stats, the prediction join AND the final
+        # rank — cache the (small) id frame so the log-wide distinct
+        # shuffle runs once per predict, not once per consumer. Skip
+        # when it's the fit-level universe (already cached in fit).
+        if queries is not self.fit_queries:
+            queries = queries.cache()
+            cached.append(queries)
+        recs = self._predict(dataset, k, queries, items, filter_seen_items)
+        if filter_seen_items and dataset is not None:
+            seen_stats = self._compute_seen_stats(
+                dataset.interactions, queries, join_queries=not queries_cover_log
+            )
+            cached.append(seen_stats[0])
+            recs = self._filter_seen(
+                recs,
+                dataset.interactions,
+                k,
+                queries,
+                seen_stats,
+                join_queries=not queries_cover_log,
+            )
+        return (
+            get_top_k_recs(
+                recs, k, self.query_column, self.item_column, self.rating_column
+            ),
+            cached,
+        )
 
     def fit_predict(
         self,
@@ -278,18 +297,18 @@ class BaseRecommender(ABC):
         else:
             items = items.select(self.item_column).distinct()
         interactions = dataset.interactions if dataset is not None else None
+
+        def warm(df, universe, column):
+            return df.join(F.broadcast(universe), on=column, how="left_semi")
+
         if not self.can_predict_cold_queries:
-            _, queries = filter_cold(queries, self.fit_queries, self.query_column)
+            queries = warm(queries, self.fit_queries, self.query_column)
             if interactions is not None:
-                _, interactions = filter_cold(
-                    interactions, self.fit_queries, self.query_column
-                )
+                interactions = warm(interactions, self.fit_queries, self.query_column)
         if not self.can_predict_cold_items:
-            _, items = filter_cold(items, self.fit_items, self.item_column)
+            items = warm(items, self.fit_items, self.item_column)
             if interactions is not None:
-                _, interactions = filter_cold(
-                    interactions, self.fit_items, self.item_column
-                )
+                interactions = warm(interactions, self.fit_items, self.item_column)
         if dataset is not None and interactions is not None:
             dataset = Dataset(
                 feature_schema=dataset.feature_schema,
@@ -303,16 +322,13 @@ class BaseRecommender(ABC):
     def _compute_seen_stats(
         self, interactions: DataFrame, queries: DataFrame, join_queries: bool = True
     ):
-        """Per-query seen-interaction stats shared across one predict
-        call: (cached stats frame [query, seen_count, num_items],
-        broadcast 1-row frame [_max_seen, _max_items]).
+        """Per-query seen counts shared across one predict call:
+        (cached stats frame [query, seen_count], broadcast 1-row frame
+        [_max_seen]).
 
-        The max scalars ride the plan as a broadcast 1-row aggregate
-        instead of a driver ``first()``: the rank-cap filters consume
-        them as columns, so the whole predict needs no extra action —
-        previously every predict paid a scalar-pull job chain (and at
-        scale that job is a full scan of the per-query stats) before
-        any recommendation work could even be planned.
+        The max rides the plan as a broadcast 1-row aggregate instead
+        of a driver ``first()``: the rank-cap filter consumes it as a
+        column, so the cap costs no extra action.
         """
         scoped = (
             interactions.join(queries, on=self.query_column)
@@ -321,17 +337,11 @@ class BaseRecommender(ABC):
         )
         stats = (
             scoped.groupBy(self.query_column)
-            .agg(
-                F.count(self.item_column).alias("seen_count"),
-                F.countDistinct(self.item_column).alias("num_items"),
-            )
+            .agg(F.count(self.item_column).alias("seen_count"))
             .cache()
         )
         maxes = F.broadcast(
-            stats.agg(
-                F.coalesce(F.max("seen_count"), F.lit(0)).alias("_max_seen"),
-                F.coalesce(F.max("num_items"), F.lit(0)).alias("_max_items"),
-            )
+            stats.agg(F.coalesce(F.max("seen_count"), F.lit(0)).alias("_max_seen"))
         )
         return stats, maxes
 
@@ -341,7 +351,7 @@ class BaseRecommender(ABC):
         interactions: DataFrame,
         k: int,
         queries: DataFrame,
-        seen_stats=None,
+        seen_stats,
         join_queries: bool = True,
     ) -> DataFrame:
         """Remove items already seen by each query; keep enough depth.
@@ -350,34 +360,20 @@ class BaseRecommender(ABC):
         ``k + max_seen``, per-query cap at ``k + seen_count``, then
         anti join on the seen pairs.
         """
-        if seen_stats is not None:
-            stats, maxes = seen_stats
-            num_seen = stats.select(self.query_column, "seen_count")
-            # broadcast 1-row cap: same integer comparison as the old
-            # driver-pulled literal, zero extra actions
-            max_seen_cap = F.col("_max_seen") + F.lit(k)
-            recs = recs.crossJoin(maxes.select("_max_seen"))
-        else:
-            num_seen = (
-                interactions.join(queries, on=self.query_column)
-                .groupBy(self.query_column)
-                .agg(F.count(self.item_column).alias("seen_count"))
-            )
-            max_seen_row = num_seen.agg(F.max("seen_count")).first()
-            max_seen = max_seen_row[0] if max_seen_row and max_seen_row[0] else 0
-            max_seen_cap = F.lit(max_seen + k)
-        recs = recs.withColumn(
-            "temp_rank",
-            F.row_number().over(
-                Window.partitionBy(self.query_column).orderBy(
-                    F.col(self.rating_column).desc(), F.col(self.item_column).asc()
-                )
-            ),
-        ).filter(F.col("temp_rank") <= max_seen_cap)
-        if seen_stats is not None:
-            recs = recs.drop("_max_seen")
+        stats, maxes = seen_stats
         recs = (
-            recs.join(num_seen, on=self.query_column, how="left")
+            recs.crossJoin(maxes)
+            .withColumn(
+                "temp_rank",
+                F.row_number().over(
+                    Window.partitionBy(self.query_column).orderBy(
+                        F.col(self.rating_column).desc(), F.col(self.item_column).asc()
+                    )
+                ),
+            )
+            .filter(F.col("temp_rank") <= F.col("_max_seen") + F.lit(k))
+            .drop("_max_seen")
+            .join(stats, on=self.query_column, how="left")
             .fillna(0, subset=["seen_count"])
             .filter(F.col("temp_rank") <= F.col("seen_count") + F.lit(k))
             .drop("temp_rank", "seen_count")
@@ -516,6 +512,15 @@ class NonPersonalizedRecommender(BaseRecommender, ABC):
     ``_fit`` must set ``self.item_popularity``
     (``[item_id, rating]``) and ``self.fill`` (rating assigned to
     cold items = min(pop) * cold_weight).
+
+    Every score is the item's, whoever the query is, so predict skips
+    the generic candidates → anti join → window chain. It builds the
+    seen sets (``groupBy(query).agg(collect_set(item))``, which in the
+    default predict is also the query set) and a broadcast 1-row
+    array of the catalog ranked by rating desc, item desc. Each query
+    slices ``k + |seen|`` entries, drops its seen items and keeps the
+    k best by rating desc, item asc — the rows the generic chain
+    returns. Sampling predict draws from the same seen sets.
     """
 
     can_predict_cold_queries = True
@@ -558,6 +563,58 @@ class NonPersonalizedRecommender(BaseRecommender, ABC):
             how="right" if self.add_cold_items else "inner",
         ).fillna(value=self.fill, subset=[self.rating_column])
 
+    def _top_k(
+        self,
+        dataset: Optional[Dataset],
+        k: int,
+        queries: DataFrame,
+        items: DataFrame,
+        filter_seen_items: bool,
+        queries_cover_log: bool,
+    ) -> tuple[DataFrame, list]:
+        # the seen-aware stage already returns the top k and caches nothing
+        return (
+            self._predict(
+                dataset, k, queries, items, filter_seen_items, queries_cover_log
+            ),
+            [],
+        )
+
+    def _seen_sets(
+        self,
+        dataset: Optional[Dataset],
+        queries: DataFrame,
+        items: DataFrame,
+        filter_seen_items: bool,
+        queries_cover_log: bool,
+    ) -> DataFrame:
+        """``[query, _seen]``: every query to recommend for, with the
+        set of items its log rows name. ``_seen`` is empty for a query
+        with no history, and for every query when nothing is filtered.
+
+        In the default predict the grouped log is itself the query set.
+        """
+        no_seen = F.array().cast(
+            ArrayType(items.schema[self.item_column].dataType)
+        )
+        if not filter_seen_items or dataset is None:
+            return queries.withColumn("_seen", no_seen)
+        log = dataset.interactions
+        if not queries_cover_log:
+            log = log.join(queries, on=self.query_column, how="left_semi")
+        seen = log.groupBy(self.query_column).agg(
+            # a null query equals no query, so like the anti join of
+            # the generic chain it removes nothing: empty set
+            F.collect_set(
+                F.when(F.col(self.query_column).isNotNull(), F.col(self.item_column))
+            ).alias("_seen")
+        )
+        if queries_cover_log:
+            return seen
+        return queries.join(seen, on=self.query_column, how="left").withColumn(
+            "_seen", F.coalesce("_seen", no_seen)
+        )
+
     def _predict(
         self,
         dataset: Optional[Dataset],
@@ -565,74 +622,79 @@ class NonPersonalizedRecommender(BaseRecommender, ABC):
         queries: DataFrame,
         items: DataFrame,
         filter_seen_items: bool = True,
+        queries_cover_log: bool = False,
     ) -> DataFrame:
+        """The seen-filtered top k of every query, in one stage.
+
+        The catalog is ranked once (rating desc, item desc) into a
+        broadcast 1-row array. Each query slices its first
+        ``k + |seen|`` entries — at most ``|seen|`` of them are seen —
+        drops its seen items, and keeps the k best by rating desc,
+        item asc (the order ``get_top_k_recs`` uses).
+        """
+        seen = self._seen_sets(
+            dataset, queries, items, filter_seen_items, queries_cover_log
+        )
         if self.sample:
-            return self._predict_with_sampling(dataset, k, queries, items)
+            return self._predict_with_sampling(seen, k, items)
+        q, i, r = self.query_column, self.item_column, self.rating_column
         selected = self._get_selected_item_popularity(items)
-        rank_order = [
-            F.col(self.rating_column).desc(),
-            F.col(self.item_column).desc(),
-        ]
         n_items = getattr(self, "_num_items", None)
-        if n_items is None and getattr(
-            self, "_fit_queries_base", None
-        ) is not None:
+        if n_items is None and getattr(self, "_fit_queries_base", None) is not None:
             # fit model, count not yet pulled: the branch choice needs
-            # the true size (a >1M catalog must NOT take the one-task
-            # window), so this is a genuine consumer of the lazy count
+            # the true size, so this is a genuine consumer of the lazy count
             n_items = self.items_count
         if (n_items or 0) > 1_000_000:
-            # item universe too large for a one-task window: two-phase
-            # range-partition numbering (same ranks, no global sort)
-            from replay_spark.utils.spark_utils import ordered_row_numbers
-
-            selected = ordered_row_numbers(selected, rank_order, "rank")
-        else:
-            selected = selected.withColumn(
-                "rank", F.row_number().over(Window.orderBy(*rank_order))
+            # too many items to rank in one task or hold in one row:
+            # number them with a range exchange and keep only the
+            # k + max |seen| best, the deepest any query slices
+            depth = F.broadcast(
+                seen.agg(F.coalesce(F.max(F.size("_seen")), F.lit(0)).alias("_depth"))
             )
-        if filter_seen_items and dataset is not None:
-            shared = getattr(self, "_shared_seen_stats", None)
-            if shared is not None:
-                # predict() already computed + cached per-query stats;
-                # reuse instead of re-scanning interactions — and take
-                # the global rank cap as a broadcast 1-row column, so
-                # no scalar-pull action runs here either
-                stats, maxes = shared
-                query_to_num_items = stats.select(
-                    self.query_column, "num_items"
+            selected = (
+                ordered_row_numbers(
+                    selected, [F.col(r).desc(), F.col(i).desc()], "_rank"
                 )
-                selected = (
-                    selected.crossJoin(maxes.select("_max_items"))
-                    .filter(F.col("rank") <= k + F.col("_max_items"))
-                    .drop("_max_items")
+                .crossJoin(depth)
+                .filter(F.col("_rank") <= F.lit(k) + F.col("_depth"))
+                .drop("_rank", "_depth")
+            )
+        # struct order is field order, so a descending sort of
+        # (rating, item) is the rank order, nulls last
+        catalog = F.broadcast(
+            selected.agg(
+                F.sort_array(F.collect_list(F.struct(r, i)), asc=False).alias("_ranked")
+            )
+        )
+        # a null item equals no seen item, as in the generic chain's
+        # anti join; array_contains gives null for it, so count it unseen
+        candidates = F.filter(
+            F.slice("_ranked", 1, F.lit(k) + F.size("_seen")),
+            lambda x: ~F.coalesce(F.array_contains("_seen", x[i]), F.lit(False)),
+        )
+        # fillna leaves no null or NaN rating, so ascending -rating is
+        # rating desc; item breaks ties ascending, nulls first
+        top = F.slice(
+            F.sort_array(
+                F.transform(
+                    candidates,
+                    lambda x: F.struct(
+                        (-x[r]).alias("_key"), x[i].alias(i), x[r].alias(r)
+                    ),
                 )
-            else:
-                query_to_num_items = (
-                    dataset.interactions.join(queries, on=self.query_column)
-                    .groupBy(self.query_column)
-                    .agg(F.countDistinct(self.item_column).alias("num_items"))
-                )
-            queries_with_num = queries.join(
-                query_to_num_items, on=self.query_column, how="left"
-            ).fillna(0, subset=["num_items"])
-            if shared is None:
-                max_seen = (
-                    queries_with_num.agg(
-                        F.coalesce(F.max("num_items"), F.lit(0))
-                    ).first()[0]
-                )
-                selected = selected.filter(F.col("rank") <= k + max_seen)
-            return queries_with_num.join(
-                selected, on=(F.col("rank") <= k + F.col("num_items")), how="left"
-            ).drop("rank", "num_items")
-        return queries.crossJoin(selected.filter(F.col("rank") <= k)).drop("rank")
+            ),
+            1,
+            k,
+        )
+        return seen.crossJoin(catalog).select(q, F.inline(top)).select(q, i, r)
 
     def _predict_with_sampling(
-        self, dataset: Optional[Dataset], k: int, queries: DataFrame, items: DataFrame
+        self, seen: DataFrame, k: int, items: DataFrame
     ) -> DataFrame:
         """Per-query weighted sampling without replacement
-        (reference ``base_rec.py:1283-1364``) via ``applyInPandas``."""
+        (reference ``base_rec.py:1283-1364``) via ``applyInPandas``:
+        each query draws ``k + |seen|`` items, drops its seen ones and
+        keeps the k best by rating desc, item asc."""
         selected = self._get_selected_item_popularity(items).withColumn(
             self.rating_column,
             F.when(F.col(self.rating_column) == F.lit(0.0), 0.1**6).otherwise(
@@ -652,8 +714,10 @@ class NonPersonalizedRecommender(BaseRecommender, ABC):
             self.item_column, ignore_index=True
         )
         if len(items_pd) == 0:
-            return queries.withColumn(self.item_column, F.lit(None)).withColumn(
-                self.rating_column, F.lit(None)
+            return seen.select(
+                self.query_column,
+                F.lit(None).alias(self.item_column),
+                F.lit(None).alias(self.rating_column),
             )
         total = items_pd[self.rating_column].sum()
         items_pd["probability"] = items_pd[self.rating_column] / total
@@ -666,36 +730,22 @@ class NonPersonalizedRecommender(BaseRecommender, ABC):
         ratings = items_pd[rating_col].values
         k_local = min(k, len(items_pd))
 
-        if dataset is not None:
-            shared = getattr(self, "_shared_seen_stats", None)
-            if shared is not None:
-                num_df = shared[0].select(query_col, "num_items")
-            else:
-                num_df = (
-                    dataset.interactions.join(queries, on=query_col)
-                    .groupBy(query_col)
-                    .agg(F.countDistinct(item_col).alias("num_items"))
-                )
-            queries = queries.join(num_df, on=query_col, how="left").fillna(
-                0, subset=["num_items"]
-            )
-        else:
-            queries = queries.withColumn("num_items", F.lit(0))
-
         import numpy as np
 
-        def sample_for_query(query_id, num_items) -> tuple:
-            n = int(min(k_local + num_items, len(item_ids)))
+        def sample_for_query(query_id, seen_items) -> tuple:
+            n = int(min(k_local + len(seen_items), len(item_ids)))
             local_rng = np.random.default_rng(
                 None if seed is None else seed + int(query_id)
             )
             chosen = local_rng.choice(len(item_ids), size=n, p=probs, replace=False)
-            return [query_id] * n, item_ids[chosen], ratings[chosen]
+            chosen = chosen[~np.isin(item_ids[chosen], seen_items)]
+            best = chosen[np.lexsort((item_ids[chosen], -ratings[chosen]))][:k]
+            return [query_id] * len(best), item_ids[best], ratings[best]
 
         def sample_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
             qs, its, rs = [], [], []
-            for qid, ni in zip(pdf[query_col], pdf["num_items"]):
-                a, b, c = sample_for_query(qid, ni)
+            for qid, seen_items in zip(pdf[query_col], pdf["_seen"]):
+                a, b, c = sample_for_query(qid, seen_items)
                 qs.extend(a)
                 its.append(b)
                 rs.append(c)
@@ -709,7 +759,7 @@ class NonPersonalizedRecommender(BaseRecommender, ABC):
 
         schema_item_type = dict(selected.dtypes)[item_col]
         return bucketed_apply_in_pandas(
-            queries,
+            seen,
             query_col,
             sample_bucket,
             f"{query_col} long, {item_col} {schema_item_type}, "

@@ -51,22 +51,23 @@ class PopRec(NonPersonalizedRecommender):
         n_q = F.broadcast(
             self._fit_queries_base.agg(F.count(F.lit(1)).alias("_nq"))
         )
-        self.item_popularity = (
+        # the cached frame keeps `_nq`, so the one action below reads
+        # it back instead of broadcasting the count a second time
+        self._popularity = (
             dataset.interactions.groupBy(self.item_column)
             .agg(agg)
             .crossJoin(n_q)
             .withColumn(
                 self.rating_column, F.col(self.rating_column) / F.col("_nq")
             )
-            .drop("_nq")
             .cache()
         )
+        self.item_popularity = self._popularity.drop("_nq")
         # ONE action materializes the popularity cache and pulls every
         # scalar the lifecycle needs: the fill value, the exact item
         # universe size (the per-item grouping already IS the distinct
-        # item set of the log) and the query universe size (re-read
-        # from the materialized cached universe — same job)
-        row = self.item_popularity.crossJoin(n_q).agg(
+        # item set of the log) and the query universe size
+        row = self._popularity.agg(
             F.min(self.rating_column).alias("_fill"),
             F.count(F.lit(1)).alias("_ni"),
             F.max("_nq").alias("_nq"),
@@ -76,6 +77,14 @@ class PopRec(NonPersonalizedRecommender):
             self._num_queries = row["_nq"]
         if dataset.item_features is None:
             self._num_items = row["_ni"]
+
+    def _clear_cache(self) -> None:
+        # `item_popularity` is a projection of the cached frame, and
+        # unpersisting a projection does not release the cache
+        super()._clear_cache()
+        cached = getattr(self, "_popularity", None)
+        if cached is not None:
+            cached.unpersist()
 
 
 class QueryPopRec(BaseRecommender):

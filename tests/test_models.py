@@ -426,3 +426,223 @@ def test_universe_counts_lazy_and_saved(spark, dataset):
     scalars = fresh._save_scalars()
     assert scalars["_num_queries"] == row["q"]
     assert scalars["_num_items"] == row["i"]
+
+
+def _jobs(spark, group, action):
+    """Spark jobs ``action()`` runs, counted through its job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+POP_REC_JOB_BOUND = 7
+
+
+def test_pop_rec_job_count(spark, dataset):
+    """Tripwire: PopRec fit pulls its scalars in one action, and
+    predict ranks the catalog once and filters each query's seen
+    items in the same stage. A second broadcast of the query count, a
+    scalar pull or a per-query window and join chain in predict pushes
+    it over the bound."""
+    model = PopRec()
+    fit_jobs = _jobs(spark, "test_pop_rec_fit_jobs", lambda: model.fit(dataset))
+    assert fit_jobs <= POP_REC_JOB_BOUND, fit_jobs
+    recs = []
+    predict_jobs = _jobs(
+        spark,
+        "test_pop_rec_predict_jobs",
+        lambda: recs.append(model.predict(dataset, k=2)),
+    )
+    assert predict_jobs <= POP_REC_JOB_BOUND, predict_jobs
+    assert recs[0].count() == 5
+    recs[0].unpersist()
+
+
+# six users, eight items; popularity ties at 2/6 (items 2, 3) and at
+# 1/6 (items 4-7), so the k-th score is often a tie
+_NP_LOG = [
+    (0, 0), (0, 1), (0, 2),
+    (1, 0), (1, 1), (1, 3),
+    (2, 1), (2, 4),
+    (3, 2), (3, 3), (3, 5),
+    (4, 0), (4, 6),
+    (5, 1), (5, 7),
+]
+
+
+def _np_reference(k, queries=None, items=None, add_cold_items=True,
+                  filter_seen=True, with_dataset=True):
+    """pandas replica of the non-personalized predict: rank the catalog
+    by (rating desc, item desc), take the first k + |seen| entries,
+    drop the seen ones, keep the k best by (rating desc, item asc)."""
+    import pandas as pd
+
+    log = pd.DataFrame(_NP_LOG, columns=["query_id", "item_id"])
+    pop = log.groupby("item_id")["query_id"].nunique() / log["query_id"].nunique()
+    fill = pop.min() * 0.5
+    if items is None:
+        items = sorted(log["item_id"].unique())
+    catalog = [
+        (int(i), float(pop[i]) if i in pop.index else fill)
+        for i in items
+        if add_cold_items or i in pop.index
+    ]
+    ranked = sorted(catalog, key=lambda kv: (-kv[1], -kv[0]))
+    if queries is None:
+        queries = sorted(log["query_id"].unique())
+    seen = (
+        log.groupby("query_id")["item_id"].apply(set).to_dict()
+        if filter_seen and with_dataset
+        else {}
+    )
+    rows = []
+    for q in queries:
+        s = seen.get(q, set())
+        cand = [kv for kv in ranked[: k + len(s)] if kv[0] not in s]
+        best = sorted(cand, key=lambda kv: (-kv[1], kv[0]))[:k]
+        rows.extend((int(q), i, r) for i, r in best)
+    return sorted(rows)
+
+
+@pytest.mark.parametrize("conf", ["shipped", "aqe_off_37"])
+def test_non_personalized_predict_matches_pandas(spark, schema, conf):
+    """The seen-aware stage returns exactly the pandas reference's rows
+    over ties at the k-th score, an explicit cold query, an explicit
+    item list with a cold item, add_cold_items=False, k above the
+    catalog size, filter_seen_items=False, dataset=None and the
+    above-1M-items branch — under the shipped conf and with AQE off
+    on 37 shuffle partitions."""
+    import datetime
+
+    overrides = (
+        {}
+        if conf == "shipped"
+        else {
+            "spark.sql.adaptive.enabled": "false",
+            "spark.sql.shuffle.partitions": "37",
+        }
+    )
+    saved = {key: spark.conf.get(key) for key in overrides}
+    for key, value in overrides.items():
+        spark.conf.set(key, value)
+    try:
+        ts = datetime.datetime(2019, 8, 22)
+        df = spark.createDataFrame(
+            [(q, i, ts, 1.0) for q, i in _NP_LOG],
+            "query_id int, item_id int, timestamp timestamp, rating double",
+        )
+        ds = Dataset(schema, df)
+        warm = PopRec().fit(ds)
+        known_only = PopRec(add_cold_items=False).fit(ds)
+        # a catalog above 1M items takes the distributed-rank branch
+        ranked = PopRec().fit(ds)
+        ranked._num_items = 1_000_001
+        cases = [
+            (warm, dict(k=2), {}),
+            (warm, dict(k=4), {}),
+            (warm, dict(k=3, queries=[0, 2, 99]), dict(queries=[0, 2, 99])),
+            (warm, dict(k=3, items=[0, 2, 3, 5, 50]), dict(items=[0, 2, 3, 5, 50])),
+            (
+                known_only,
+                dict(k=3, items=[0, 2, 3, 5, 50]),
+                dict(items=[0, 2, 3, 5, 50], add_cold_items=False),
+            ),
+            (warm, dict(k=20), {}),
+            (warm, dict(k=3, filter_seen_items=False), dict(filter_seen=False)),
+            (ranked, dict(k=4), {}),
+            (ranked, dict(k=3, queries=[0, 2, 99]), dict(queries=[0, 2, 99])),
+        ]
+        for model, args, ref in cases:
+            recs = model.predict(ds, **args)
+            got = sorted((r.query_id, r.item_id, r.rating) for r in recs.collect())
+            assert got == _np_reference(args["k"], **ref), (args, got)
+            recs.unpersist()
+        recs = warm.predict(None, k=2, queries=[0, 99])
+        got = sorted((r.query_id, r.item_id, r.rating) for r in recs.collect())
+        assert got == _np_reference(2, queries=[0, 99], with_dataset=False)
+    finally:
+        for key, value in saved.items():
+            spark.conf.set(key, value)
+
+
+# 7 users x 12 items, binary ratings; many ties in every bandit score
+_BANDIT_LOG = [
+    (q, i, float((q + 2 * i) % 3 != 0))
+    for q in range(7)
+    for i in range(12)
+    if (q * 5 + i * 3) % 7 < 3
+]
+# predict rows (rounded to 9 places) of the generic join-chain predict
+# this stage replaced, for predict(k=3) and for
+# predict(k=2, queries=[0, 4, 9], items=[0, 1, 2, 5, 11])
+_BANDIT_ROWS = {
+    "Wilson": (
+        [(0, 2, 0.207659601), (0, 4, 0.438502968), (0, 6, 0.438502968),
+         (1, 4, 0.438502968), (1, 5, 0.438502968), (1, 7, 0.438502968),
+         (2, 3, 0.207659601), (2, 5, 0.438502968), (2, 7, 0.438502968),
+         (3, 3, 0.207659601), (3, 4, 0.438502968), (3, 6, 0.438502968),
+         (4, 4, 0.438502968), (4, 6, 0.438502968), (4, 7, 0.438502968),
+         (5, 2, 0.207659601), (5, 5, 0.438502968), (5, 7, 0.438502968),
+         (6, 3, 0.207659601), (6, 5, 0.438502968), (6, 6, 0.438502968)],
+        [(0, 1, 0.061491945), (0, 2, 0.207659601), (4, 2, 0.207659601),
+         (4, 11, 0.061491945), (9, 2, 0.207659601), (9, 5, 0.438502968)],
+    ),
+    "UCB": (
+        [(0, 2, 2.212309777), (0, 4, 2.545643111), (0, 6, 2.545643111),
+         (1, 4, 2.545643111), (1, 5, 2.545643111), (1, 7, 2.545643111),
+         (2, 3, 2.212309777), (2, 5, 2.545643111), (2, 7, 2.545643111),
+         (3, 3, 2.212309777), (3, 4, 2.545643111), (3, 6, 2.545643111),
+         (4, 4, 2.545643111), (4, 6, 2.545643111), (4, 7, 2.545643111),
+         (5, 2, 2.212309777), (5, 5, 2.545643111), (5, 7, 2.545643111),
+         (6, 3, 2.212309777), (6, 5, 2.545643111), (6, 6, 2.545643111)],
+        [(0, 1, 1.878976444), (0, 2, 2.212309777), (4, 2, 2.212309777),
+         (4, 11, 1.878976444), (9, 2, 2.212309777), (9, 5, 2.545643111)],
+    ),
+    "ThompsonSampling": (
+        [(0, 2, 0.80803616), (0, 4, 0.953823105), (0, 9, 0.850413948),
+         (1, 4, 0.953823105), (1, 5, 0.937658901), (1, 7, 0.917967355),
+         (2, 5, 0.937658901), (2, 7, 0.917967355), (2, 8, 0.768870198),
+         (3, 4, 0.953823105), (3, 6, 0.801980234), (3, 8, 0.768870198),
+         (4, 4, 0.953823105), (4, 7, 0.917967355), (4, 9, 0.850413948),
+         (5, 5, 0.937658901), (5, 7, 0.917967355), (5, 9, 0.850413948),
+         (6, 5, 0.937658901), (6, 6, 0.801980234), (6, 8, 0.768870198)],
+        [(0, 1, 0.724235255), (0, 2, 0.80803616), (4, 2, 0.80803616),
+         (4, 11, 0.458383687), (9, 2, 0.80803616), (9, 5, 0.937658901)],
+    ),
+}
+
+
+@pytest.mark.parametrize(
+    "model",
+    [Wilson(), UCB(coef=2.0), ThompsonSampling(seed=3)],
+    ids=lambda m: type(m).__name__,
+)
+def test_bandit_predict_rows_unchanged(spark, schema, model):
+    """Wilson, UCB and Thompson predicts return the rows the generic
+    join-chain predict returned: ties at the k-th score, an explicit
+    cold query and an explicit item list with a cold item."""
+    import datetime
+
+    ts = datetime.datetime(2019, 8, 22)
+    df = spark.createDataFrame(
+        [(q, i, ts, r) for q, i, r in _BANDIT_LOG],
+        "query_id int, item_id int, timestamp timestamp, rating double",
+    )
+    ds = Dataset(schema, df)
+
+    def rows(recs):
+        return sorted(
+            (r.query_id, r.item_id, round(r.rating, 9)) for r in recs.collect()
+        )
+
+    default, explicit = _BANDIT_ROWS[type(model).__name__]
+    assert rows(model.fit_predict(ds, k=3)) == default
+    assert (
+        rows(model.predict(ds, k=2, queries=[0, 4, 9], items=[0, 1, 2, 5, 11]))
+        == explicit
+    )
