@@ -31,10 +31,11 @@ from pyspark.sql.types import ArrayType
 
 from replay_spark.data.dataset import Dataset
 from replay_spark.utils.spark_utils import (
+    _add_partition_offsets,
+    _ordered_partition_scan,
     bucketed_apply_in_pandas,
     get_top_k_recs,
     get_unique_entities,
-    ordered_row_numbers,
 )
 
 __all__ = ["BaseRecommender", "NonPersonalizedRecommender"]
@@ -557,11 +558,14 @@ class NonPersonalizedRecommender(BaseRecommender, ABC):
             raise ValueError("Rating values in interactions must be 0 or 1")
 
     def _get_selected_item_popularity(self, items: DataFrame) -> DataFrame:
-        return self.item_popularity.join(
-            items,
-            on=self.item_column,
-            how="right" if self.add_cold_items else "inner",
-        ).fillna(value=self.fill, subset=[self.rating_column])
+        if self.add_cold_items:
+            # a left join can build its right side, so this hint holds
+            selected = items.join(
+                F.broadcast(self.item_popularity), on=self.item_column, how="left"
+            )
+        else:
+            selected = self.item_popularity.join(items, on=self.item_column)
+        return selected.fillna(value=self.fill, subset=[self.rating_column])
 
     def _top_k(
         self,
@@ -572,13 +576,13 @@ class NonPersonalizedRecommender(BaseRecommender, ABC):
         filter_seen_items: bool,
         queries_cover_log: bool,
     ) -> tuple[DataFrame, list]:
-        # the seen-aware stage already returns the top k and caches nothing
-        return (
-            self._predict(
-                dataset, k, queries, items, filter_seen_items, queries_cover_log
-            ),
-            [],
+        # the seen-aware stage already returns the top k; it caches
+        # only above 1M items
+        cached = []
+        recs = self._predict(
+            dataset, k, queries, items, filter_seen_items, queries_cover_log, cached
         )
+        return recs, cached
 
     def _seen_sets(
         self,
@@ -623,6 +627,7 @@ class NonPersonalizedRecommender(BaseRecommender, ABC):
         items: DataFrame,
         filter_seen_items: bool = True,
         queries_cover_log: bool = False,
+        cached: Optional[list] = None,
     ) -> DataFrame:
         """The seen-filtered top k of every query, in one stage.
 
@@ -630,7 +635,9 @@ class NonPersonalizedRecommender(BaseRecommender, ABC):
         broadcast 1-row array. Each query slices its first
         ``k + |seen|`` entries — at most ``|seen|`` of them are seen —
         drops its seen items, and keeps the k best by rating desc,
-        item asc (the order ``get_top_k_recs`` uses).
+        item asc (the order ``get_top_k_recs`` uses). Frames persisted
+        on the way are appended to ``cached``, for the caller to
+        unpersist once the result has run.
         """
         seen = self._seen_sets(
             dataset, queries, items, filter_seen_items, queries_cover_log
@@ -651,10 +658,13 @@ class NonPersonalizedRecommender(BaseRecommender, ABC):
             depth = F.broadcast(
                 seen.agg(F.coalesce(F.max(F.size("_seen")), F.lit(0)).alias("_depth"))
             )
+            numbered = _ordered_partition_scan(
+                selected, [F.col(r).desc(), F.col(i).desc()], None
+            ).persist()
+            if cached is not None:
+                cached.append(numbered)
             selected = (
-                ordered_row_numbers(
-                    selected, [F.col(r).desc(), F.col(i).desc()], "_rank"
-                )
+                _add_partition_offsets(numbered, selected, "_rank")
                 .crossJoin(depth)
                 .filter(F.col("_rank") <= F.lit(k) + F.col("_depth"))
                 .drop("_rank", "_depth")

@@ -390,14 +390,96 @@ class LanguageIdentifier:
         )
 
 
+def _run_scan(arr: Column, finish) -> Column:
+    """``finish`` of one run-length pass over ``arr`` sorted ascending;
+    0.0 for a null ``arr``. The pass counts ``n`` and ``distinct``
+    values, ``dupc`` chars in values occurring more than once, all
+    ``chars``, and the longest run ``top`` with the first value to
+    reach it, ``top_key`` (the strict ``>`` keeps the smallest)."""
+    zero = F.struct(
+        F.lit(None).cast("string").alias("prev"),
+        F.lit(0).alias("run"),
+        F.lit(0).alias("n"),
+        F.lit(0).alias("distinct"),
+        F.lit(0).cast("long").alias("dupc"),
+        F.lit(0).cast("long").alias("chars"),
+        F.lit(0).alias("top"),
+        F.lit(None).cast("string").alias("top_key"),
+    )
+
+    def step(acc: Column, x: Column) -> Column:
+        same = x.eqNullSafe(acc["prev"])
+        run = F.when(same, acc["run"] + 1).otherwise(1)
+        # the second element of a run also counts the first's chars
+        dup = F.when(
+            same, F.length(x) * F.when(acc["run"] == 1, 2).otherwise(1)
+        ).otherwise(0)
+        return F.struct(
+            x.alias("prev"),
+            run.alias("run"),
+            (acc["n"] + 1).alias("n"),
+            (acc["distinct"] + F.when(same, 0).otherwise(1)).alias("distinct"),
+            (acc["dupc"] + dup).alias("dupc"),
+            (acc["chars"] + F.length(x)).alias("chars"),
+            F.greatest(acc["top"], run).alias("top"),
+            F.when(run > acc["top"], x).otherwise(acc["top_key"]).alias("top_key"),
+        )
+
+    return F.coalesce(
+        F.aggregate(F.array_sort(arr), zero, step, finish), F.lit(0.0)
+    )
+
+
+def _repetition_signals(text: Column) -> dict:
+    """RepetitionStats' four signals, each its own expression over
+    ``text``: no signal reads another's arrays through an alias."""
+    tokens = tokenize_expr(F.lower(text))
+    lines = F.split(text, "\n")
+    # a one-element transform binds the tokens for their three reads
+    bigrams = F.transform(
+        F.array(tokens),
+        lambda tok: F.when(F.size(tok) < 2, F.array().cast("array<string>"))
+        .otherwise(
+            F.transform(
+                F.sequence(F.lit(0), F.size(tok) - 2),
+                lambda i: F.concat_ws(" ", F.slice(tok, i + 1, 2)),
+            )
+        ),
+    )[0]
+    return {
+        "dup_word_frac": F.when(
+            F.size(tokens) > 0,
+            1 - F.size(F.array_distinct(tokens)) / F.size(tokens).cast("double"),
+        ).otherwise(0.0),
+        "dup_line_frac": _run_scan(
+            lines, lambda s: 1 - s["distinct"] / s["n"].cast("double")
+        ),
+        "dup_line_char_frac": _run_scan(
+            lines,
+            lambda s: F.when(
+                s["chars"] > 0, s["dupc"] / s["chars"].cast("double")
+            ).otherwise(0.0),
+        ),
+        # a top bigram means two tokens, so the text is not empty
+        "top_bigram_char_frac": _run_scan(
+            bigrams,
+            lambda s: F.when(
+                s["top"] > 0,
+                s["top"].cast("long")
+                * F.length(s["top_key"])
+                / F.length(text).cast("double"),
+            ).otherwise(0.0),
+        ),
+    }
+
+
 class RepetitionStats:
     """Gopher-style repetition quality signals (Rae et al. 2021,
     "Scaling Language Models", §A1.1 quality heuristics).
 
     Per document:
 
-    * ``dup_word_frac`` — 1 − distinct/total whitespace tokens
-      (pure array expression, no shuffle);
+    * ``dup_word_frac`` — 1 − distinct/total whitespace tokens;
     * ``dup_line_frac`` — 1 − distinct/total '\\n'-lines;
     * ``dup_line_char_frac`` — fraction of line characters that sit
       in a line occurring more than once;
@@ -405,16 +487,16 @@ class RepetitionStats:
       word 2-gram over the document's character count (tie-break:
       count desc, bigram asc — deterministic).
 
-    Plan shape: ONE explode (lines and bigrams tagged into the same
-    (doc, kind, key) stream) → one (doc, kind, key) count → one
-    per-doc conditional aggregate, i.e. two doc-keyed shuffles total
-    for all three exploded signals; the most-frequent bigram comes
-    from ``min(struct(-count, bigram))`` inside the same aggregate
-    (count desc / bigram asc tie-break without a ranking window).
-    The previous formulation — separate line/bigram subtrees, each
-    with its own counts plus a row_number window and its own join —
-    ran the document scan three times and 5 shuffle stages; the fused
-    plan measured ~45× faster at sf0.1 with byte-identical output.
+    Plan shape: one projection of per-row expressions, no shuffle and
+    no join. The line and bigram signals are each one sorted
+    run-length scan (:func:`_run_scan`) whose ``finish`` is the ratio.
+    No signal reads an array or a scan through a projected alias: a
+    filter on a signal is pushed below the projection with every
+    alias it reads inlined, which would evaluate the array per read.
+
+    Each row is scored on its own: rows sharing an ``id_column``
+    value, or with a null one, are not merged. That equals the
+    per-id result whenever the id is unique and non-null.
     """
 
     def __init__(self, id_column: str = "doc_id", text_column: str = "text"):
@@ -422,99 +504,9 @@ class RepetitionStats:
         self.text_column = text_column
 
     def transform(self, df: DataFrame) -> DataFrame:
-        idc = self.id_column
-        text = F.col(self.text_column)
-        tokens = tokenize_expr(F.lower(text))
-        base = df.select(
-            idc,
-            F.length(text).alias("_n_chars"),
-            F.when(
-                F.size(tokens) > 0,
-                1 - F.size(F.array_distinct(tokens)) / F.size(tokens).cast("double"),
-            )
-            .otherwise(0.0)
-            .alias("dup_word_frac"),
-        )
-
-        lines_arr = F.split(text, "\n")
-        bigrams_arr = F.when(
-            F.size(tokens) < 2, F.array().cast("array<string>")
-        ).otherwise(
-            F.transform(
-                F.sequence(F.lit(0), F.size(tokens) - 2),
-                lambda i: F.concat_ws(" ", F.slice(tokens, i + 1, 2)),
-            )
-        )
-        keyed = df.select(
-            idc,
-            F.explode(
-                F.concat(
-                    F.transform(
-                        lines_arr,
-                        lambda x: F.struct(
-                            F.lit("l").alias("_kind"), x.alias("_key")
-                        ),
-                    ),
-                    F.transform(
-                        bigrams_arr,
-                        lambda x: F.struct(
-                            F.lit("b").alias("_kind"), x.alias("_key")
-                        ),
-                    ),
-                )
-            ).alias("_e"),
-        ).select(idc, "_e._kind", "_e._key")
-
-        counts = keyed.groupBy(idc, "_kind", "_key").agg(
-            F.count(F.lit(1)).alias("_c")
-        )
-        is_l = F.col("_kind") == "l"
-        is_b = F.col("_kind") == "b"
-        line_chars = F.sum(
-            F.when(is_l, F.col("_c") * F.length("_key")).otherwise(0)
-        )
-        stats = counts.groupBy(idc).agg(
-            (
-                1
-                - F.sum(F.when(is_l, 1).otherwise(0))
-                / F.sum(F.when(is_l, F.col("_c")).otherwise(0)).cast("double")
-            ).alias("dup_line_frac"),
-            F.when(
-                line_chars > 0,
-                F.sum(
-                    F.when(
-                        is_l & (F.col("_c") > 1), F.col("_c") * F.length("_key")
-                    ).otherwise(0)
-                )
-                / line_chars.cast("double"),
-            )
-            .otherwise(0.0)
-            .alias("dup_line_char_frac"),
-            F.min(
-                F.when(
-                    is_b,
-                    F.struct(
-                        (-F.col("_c")).alias("nc"), F.col("_key").alias("k")
-                    ),
-                )
-            ).alias("_top"),
-        )
-
-        return base.join(stats, on=idc, how="left").select(
-            idc,
-            "dup_word_frac",
-            F.coalesce("dup_line_frac", F.lit(0.0)).alias("dup_line_frac"),
-            F.coalesce("dup_line_char_frac", F.lit(0.0)).alias(
-                "dup_line_char_frac"
-            ),
-            F.when(
-                (F.col("_n_chars") > 0) & F.col("_top").isNotNull(),
-                (-F.col("_top.nc"))
-                * F.length("_top.k")
-                / F.col("_n_chars").cast("double"),
-            )
-            .otherwise(0.0)
-            .alias("top_bigram_char_frac"),
+        signals = _repetition_signals(F.col(self.text_column))
+        return df.select(
+            self.id_column, *[expr.alias(name) for name, expr in signals.items()]
         )
 
 
@@ -3332,14 +3324,16 @@ class QualityFilterPipeline:
     signals (length, alpha/digit ratios, stopword density, Gopher
     repetition fractions) into a keep/drop verdict with named reasons.
 
-    One scan end-to-end: TextStats/QualityScorer are per-row
-    expressions; RepetitionStats contributes its two doc-keyed
-    aggregations; the verdict is a conjunction evaluated JVM-side and
-    the reasons column materializes WHICH rule fired (the part
-    pipeline operators usually lose). ``transform`` annotates,
-    ``filter`` drops.
+    One scan end-to-end, no shuffle and no join: QualityScorer's
+    ratios and RepetitionStats' ``dup_word_frac`` and
+    ``top_bigram_char_frac`` are per-row expressions over the same
+    rows; the verdict is a conjunction evaluated JVM-side and the
+    reasons column materializes WHICH rule fired (the part pipeline
+    operators usually lose). ``transform`` annotates, ``filter``
+    drops. Each row gets its own verdict, whatever its ``id_column``
+    (a null or repeated id neither drops nor merges rows).
 
-    Thresholate defaults follow the published heuristics (C4: short
+    Threshold defaults follow the published heuristics (C4: short
     docs, symbol ratios; Gopher §A1.1: repetition fractions) scaled
     to whitespace tokenization.
     """
@@ -3369,12 +3363,13 @@ class QualityFilterPipeline:
     def transform(self, df: DataFrame) -> DataFrame:
         """Annotate with ``keep`` boolean + ``drop_reasons`` array."""
         scored = QualityScorer(self.text_column, lang=self.lang).transform(df)
-        rep = RepetitionStats(self.id_column, self.text_column).transform(df)
-        joined = scored.join(
-            rep.select(
-                self.id_column, "dup_word_frac", "top_bigram_char_frac"
-            ),
-            on=self.id_column,
+        rep = _repetition_signals(F.col(self.text_column))
+        idc = self.id_column
+        signals = scored.select(
+            idc,
+            *[c for c in scored.columns if c != idc],
+            rep["dup_word_frac"].alias("dup_word_frac"),
+            rep["top_bigram_char_frac"].alias("top_bigram_char_frac"),
         )
         n_tokens = token_count_expr(F.col(self.text_column))
         checks = [
@@ -3400,7 +3395,7 @@ class QualityFilterPipeline:
             ),
             lambda x: x.isNotNull(),
         )
-        return joined.withColumn("drop_reasons", reasons).withColumn(
+        return signals.withColumn("drop_reasons", reasons).withColumn(
             "keep", F.size("drop_reasons") == 0
         )
 

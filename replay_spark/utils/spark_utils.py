@@ -214,7 +214,9 @@ def ordered_row_numbers(
     (:func:`_ordered_partition_scan`), then driver-computed
     per-partition offsets via a broadcast join. Eager (two actions:
     persist + per-partition totals); the intermediate stays persisted
-    for the caller's downstream action and is evicted LRU. Use for
+    for the caller's downstream action and is evicted LRU. A caller
+    that can release it persists :func:`_ordered_partition_scan`
+    itself and numbers it with :func:`_add_partition_offsets`. Use for
     frames too large for a one-task window — callers below a size
     threshold should keep the plain window (zero extra jobs).
     """

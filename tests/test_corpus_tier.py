@@ -1,5 +1,9 @@
-"""Job counts, cache ownership and partition invariance of the corpus
-tier: the n-gram dedup pairs and the driver-built HNSW index."""
+"""Job counts, cache ownership, partition invariance and exactness of
+the corpus tier: the quality filter and its repetition signals, the
+n-gram dedup pairs and the driver-built HNSW index."""
+
+import re
+from collections import Counter
 
 import numpy as np
 import pytest
@@ -11,11 +15,15 @@ from replay_spark.preprocessing.dedup import (
     NGramJaccardDeduplicator,
     SimHashDeduplicator,
 )
+from replay_spark.preprocessing.text import QualityFilterPipeline, RepetitionStats
 
 # measured on the test session: 7 jobs for the pairs and 1 for the
 # fit (13 and 5 with the self-join caches and the count before collect)
 PAIRS_JOB_BOUND = 7
 HNSW_FIT_JOB_BOUND = 1
+# the verdict is per-row expressions: one job (7 with the repetition
+# signals' explode, two doc-keyed shuffles and the joins)
+QUALITY_FILTER_JOB_BOUND = 1
 
 WORDS = (
     "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu "
@@ -68,6 +76,97 @@ def test_ngram_pairs_job_count(spark, docs):
     )
     assert n_pairs >= 30
     assert jobs <= PAIRS_JOB_BOUND, jobs
+
+
+def test_quality_filter_job_count(spark, docs):
+    """Tripwire: the repetition signals are per-row expressions in the
+    scorer's projection, with no shuffle and no join back."""
+    rows, jobs = _jobs(
+        spark,
+        "test_quality_filter_job_count",
+        lambda: QualityFilterPipeline().transform(docs).select("doc_id", "keep").collect(),
+    )
+    assert len(rows) == 60
+    assert jobs <= QUALITY_FILTER_JOB_BOUND, jobs
+
+
+def test_quality_filter_sorts_bigrams_once(spark, docs):
+    """A filter on the verdict is pushed below the scoring projection
+    with every alias it reads inlined; the signals read no alias, so
+    the pushed-down condition still sorts each row's bigrams once."""
+    plan = QualityFilterPipeline().filter(docs)._jdf.queryExecution().optimizedPlan()
+    assert plan.toString().count("array_sort(") == 1
+
+
+REPETITION_TEXTS = [
+    None,
+    "",
+    "   ",
+    " \t ",
+    "word",
+    # "zzz yy" and "a b" both occur twice: the smaller bigram wins,
+    # though it comes later and is shorter
+    "zzz yy zzz yy a b a b",
+    # repeated lines of different lengths, empty lines from \n\n
+    "abc\nabc\nx\nx\nx\n\nlong line here\n\nlong line here",
+    "one line\n",
+    "\nleading newline",
+    "héllo wörld\nhéllo wörld\nñ ñ ñ",
+    "Same same SAME\nsame",
+]
+
+
+def _repetition_reference(text):
+    """Python replica of RepetitionStats on one row: Spark's trim
+    strips spaces only, ``\\s`` is ASCII whitespace, ``length`` counts
+    code points, and the top bigram is count desc, bigram asc."""
+    if text is None:
+        return 0.0, 0.0, 0.0, 0.0
+    trimmed = text.lower().strip(" ")
+    tokens = re.split(r"\s+", trimmed, flags=re.ASCII) if trimmed else []
+    word = 1 - len(set(tokens)) / len(tokens) if tokens else 0.0
+    lines = Counter(text.split("\n"))
+    line = 1 - len(lines) / sum(lines.values())
+    chars = sum(c * len(x) for x, c in lines.items())
+    dup = sum(c * len(x) for x, c in lines.items() if c > 1)
+    line_chars = dup / chars if chars > 0 else 0.0
+    bigrams = Counter(" ".join(tokens[j : j + 2]) for j in range(len(tokens) - 1))
+    top = 0.0
+    if bigrams and text:
+        count, key = min((-c, b) for b, c in bigrams.items())
+        top = -count * len(key) / len(text)
+    return word, line, line_chars, top
+
+
+@pytest.mark.parametrize("conf", ["shipped", "aqe_off_37"])
+def test_repetition_stats_match_reference(spark, conf):
+    """Every signal equals the reference exactly, row by row: a null or
+    repeated doc_id is scored per row, not merged or dropped."""
+    overrides = (
+        {}
+        if conf == "shipped"
+        else {
+            "spark.sql.adaptive.enabled": "false",
+            "spark.sql.shuffle.partitions": "37",
+        }
+    )
+    saved = {key: spark.conf.get(key) for key in overrides}
+    for key, value in overrides.items():
+        spark.conf.set(key, value)
+    try:
+        rows = list(enumerate(REPETITION_TEXTS))
+        rows += [(None, "x x\nx x"), (5, "b b b b")]
+        df = spark.createDataFrame(rows, "doc_id long, text string").repartition(3)
+        got = sorted(
+            (tuple(r) for r in RepetitionStats().transform(df).collect()), key=repr
+        )
+        expected = sorted(
+            ((i, *_repetition_reference(t)) for i, t in rows), key=repr
+        )
+        assert got == expected
+    finally:
+        for key, value in saved.items():
+            spark.conf.set(key, value)
 
 
 def test_hnsw_fit_job_count(spark, vectors):

@@ -570,6 +570,30 @@ def test_non_personalized_predict_matches_pandas(spark, schema, conf):
             spark.conf.set(key, value)
 
 
+def test_non_personalized_predict_releases_its_caches(spark, schema):
+    """Above 1M items the catalog is numbered through a persisted
+    intermediate; predict hands it to its own unpersist, so a predict
+    and the unpersist of its recs leave no cache behind."""
+    import datetime
+
+    ts = datetime.datetime(2019, 8, 22)
+    df = spark.createDataFrame(
+        [(q, i, ts, 1.0) for q, i in _NP_LOG],
+        "query_id int, item_id int, timestamp timestamp, rating double",
+    )
+    ds = Dataset(schema, df)
+    model = PopRec().fit(ds)
+    # a predict below 1M items materializes the fit's own caches
+    model.predict(ds, k=3).unpersist()
+    model._num_items = 1_000_001
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    recs = model.predict(ds, k=3)
+    assert recs.count() > 0
+    recs.unpersist()
+    assert jsc.getPersistentRDDs().size() <= before
+
+
 # 7 users x 12 items, binary ratings; many ties in every bandit score
 _BANDIT_LOG = [
     (q, i, float((q + 2 * i) % 3 != 0))
