@@ -44,9 +44,8 @@ import json
 import os
 import struct
 import zlib
-from typing import Iterator, List, Optional, Tuple
+from typing import List, Optional, Tuple
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -415,23 +414,23 @@ def read_avro(spark: SparkSession, path: str) -> DataFrame:
             end = _header_end(head)
     avro_schema, _ = parse_ocf(head[:end])
     out_schema = avro_to_spark_schema(avro_schema)
-    from replay_spark.utils.spark_utils import local_df
+    from replay_spark.utils.spark_utils import local_df, map_rows
 
     shard_df = local_df(spark, [(s,) for s in shards], "shard_path string")
     names = [f.name for f in out_schema.fields]
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for shard_path in pdf["shard_path"]:
-                with open(shard_path, "rb") as fh:
-                    _, records = parse_ocf(fh.read())
-                yield pd.DataFrame(
-                    {n: [r[n] for r in records] for n in names}
-                    if records
-                    else {n: [] for n in names}
-                )
+    def extract(shard_path):
+        with open(shard_path, "rb") as fh:
+            _, records = parse_ocf(fh.read())
+        for r in records:
+            yield tuple(r[n] for n in names)
 
-    return shard_df.mapInPandas(extract, schema=out_schema)
+    return map_rows(
+        shard_df,
+        ["shard_path"],
+        extract,
+        [(f.name, f.dataType) for f in out_schema.fields],
+    )
 
 
 def _header_end(payload: bytes) -> int:

@@ -36,12 +36,20 @@ from __future__ import annotations
 
 import os
 import struct
-from typing import Iterator, Optional
+from typing import Optional
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    BinaryType,
+    FloatType,
+    LongType,
+    StringType,
+)
+
+from replay_spark.utils.spark_utils import local_df, map_rows
 
 __all__ = [
     "crc32c",
@@ -411,14 +419,14 @@ def write_tfrecord(
 
 
 _SPEC_TYPES = {
-    "int64": "long",
-    "int64_list": "array<long>",
-    "float": "float",
-    "float_list": "array<float>",
-    "bytes": "binary",
-    "bytes_list": "array<binary>",
-    "string": "string",
-    "string_list": "array<string>",
+    "int64": LongType(),
+    "int64_list": ArrayType(LongType()),
+    "float": FloatType(),
+    "float_list": ArrayType(FloatType()),
+    "bytes": BinaryType(),
+    "bytes_list": ArrayType(BinaryType()),
+    "string": StringType(),
+    "string_list": ArrayType(StringType()),
 }
 
 
@@ -442,41 +450,32 @@ def read_tfrecord(
         for f in os.listdir(path)
         if f.endswith(".tfrecord")
     )
-    from replay_spark.utils.spark_utils import local_df
-
     shard_df = local_df(spark, [(s,) for s in shards], "shard_path string")
     spec = dict(feature_spec)
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols: dict = {"shard": []}
-            for name in spec:
-                cols[name] = []
-            for shard_path in pdf["shard_path"]:
-                with open(shard_path, "rb") as fh:
-                    stream = fh.read()
-                for rec in split_tfrecords(stream):
-                    feats = decode_example(rec)
-                    cols["shard"].append(os.path.basename(shard_path))
-                    for name, kind in spec.items():
-                        got = feats.get(name)
-                        if got is None:
-                            cols[name].append(None)
-                            continue
-                        _, values = got
-                        if kind.startswith("string"):
-                            values = [
-                                v.decode("utf-8") for v in values
-                            ]
-                        if kind.endswith("_list"):
-                            cols[name].append(values)
-                        else:
-                            cols[name].append(
-                                values[0] if values else None
-                            )
-            yield pd.DataFrame(cols)
+    def value(feats, name, kind):
+        got = feats.get(name)
+        if got is None:
+            return None
+        _, values = got
+        if kind.startswith("string"):
+            values = [v.decode("utf-8") for v in values]
+        if kind.endswith("_list"):
+            return values
+        return values[0] if values else None
 
-    schema = "shard string, " + ", ".join(
-        f"`{name}` {_SPEC_TYPES[kind]}" for name, kind in spec.items()
+    def extract(shard_path):
+        with open(shard_path, "rb") as fh:
+            stream = fh.read()
+        shard = os.path.basename(shard_path)
+        for rec in split_tfrecords(stream):
+            feats = decode_example(rec)
+            yield (shard, *(value(feats, n, k) for n, k in spec.items()))
+
+    return map_rows(
+        shard_df,
+        ["shard_path"],
+        extract,
+        [("shard", StringType())]
+        + [(name, _SPEC_TYPES[kind]) for name, kind in spec.items()],
     )
-    return shard_df.mapInPandas(extract, schema=schema)

@@ -27,11 +27,11 @@ from __future__ import annotations
 import io
 import os
 import tarfile
-from typing import Iterator, Optional
+from typing import Optional
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import BinaryType, MapType, StringType
 
 __all__ = ["write_webdataset", "read_webdataset"]
 
@@ -113,31 +113,29 @@ def read_webdataset(
         for f in os.listdir(path)
         if f.startswith("shard-") and f.endswith(".tar")
     )
-    from replay_spark.utils.spark_utils import local_df
+    from replay_spark.utils.spark_utils import local_df, map_rows
 
     shard_df = local_df(spark, [(s,) for s in shards], "shard_path string")
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            shard_names, keys, files = [], [], []
-            for shard_path in pdf["shard_path"]:
-                samples: dict = {}
-                with tarfile.open(shard_path, "r") as tar:
-                    for member in tar.getmembers():
-                        base, _, ext = member.name.rpartition(".")
-                        samples.setdefault(base, {})[ext] = tar.extractfile(
-                            member
-                        ).read()
-                for key in sorted(samples):
-                    shard_names.append(os.path.basename(shard_path))
-                    keys.append(key)
-                    files.append(samples[key])
-            yield pd.DataFrame(
-                {"shard": shard_names, key_column: keys, "files": files}
-            )
+    def extract(shard_path):
+        samples: dict = {}
+        with tarfile.open(shard_path, "r") as tar:
+            for member in tar.getmembers():
+                base, _, ext = member.name.rpartition(".")
+                samples.setdefault(base, {})[ext] = tar.extractfile(
+                    member
+                ).read()
+        shard = os.path.basename(shard_path)
+        for key in sorted(samples):
+            yield shard, key, samples[key]
 
-    return shard_df.mapInPandas(
+    return map_rows(
+        shard_df,
+        ["shard_path"],
         extract,
-        schema=f"shard string, {key_column} string, "
-        "files map<string, binary>",
+        [
+            ("shard", StringType()),
+            (key_column, StringType()),
+            ("files", MapType(StringType(), BinaryType())),
+        ],
     )

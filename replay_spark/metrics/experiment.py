@@ -178,6 +178,13 @@ class Experiment:
         for metric_name, value in values.items():
             self.results.loc[name, metric_name] = value
 
+    def release(self) -> None:
+        """Unpersist the ground-truth grouping cached by the first
+        :meth:`add_result`; a later ``add_result`` rebuilds it."""
+        if self._gt_grouped is not None:
+            self._gt_grouped.unpersist()
+            self._gt_grouped = None
+
     def add_sampled_result(
         self, name: str, scored_candidates: DataFrame
     ) -> None:

@@ -31,16 +31,16 @@ them.
 from __future__ import annotations
 
 import hashlib
-from typing import Callable, Iterator, Optional, Sequence
+from typing import Callable, Optional, Sequence
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
+    BooleanType,
     DoubleType,
     IntegerType,
     LongType,
@@ -48,6 +48,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from replay_spark.utils.spark_utils import map_rows
 
 __all__ = [
     "MEDIA_SCHEMA",
@@ -587,6 +589,15 @@ def stub_image_decoder(payload: bytes) -> dict:
     return {"width": width, "height": height, "features": features}
 
 
+# one re-encoded image per input row: resize and ImageAugmenter
+_IMAGE_ROW = [
+    ("media_id", LongType()),
+    ("payload", BinaryType()),
+    ("width", IntegerType()),
+    ("height", IntegerType()),
+]
+
+
 class MediaProcessor:
     """Decode / feature-extract media payloads via mapInPandas.
 
@@ -600,16 +611,6 @@ class MediaProcessor:
     pipeline runs unchanged (the adapter contract is pinned by
     ``tests/test_llm_ops.py``'s fake-container test).
     """
-
-    OUTPUT_SCHEMA = (
-        "media_id long, num_bytes long, width int, height int, "
-        "features array<double>"
-    )
-    RESIZE_SCHEMA = "media_id long, payload binary, width int, height int"
-    FRAMES_SCHEMA = (
-        "media_id long, frame_index int, t_ms long, payload binary, "
-        "width int, height int"
-    )
 
     def __init__(
         self,
@@ -633,8 +634,6 @@ class MediaProcessor:
         :meth:`sample_frames`) — they ride the same Arrow batches, so
         no join or id-packing round trip is needed downstream.
         """
-        id_col = self.id_column
-        payload_col = self.payload_column
         decoder = self.decoder
         passthrough = tuple(passthrough)
         reserved = {"media_id", "num_bytes", "width", "height", "features"}
@@ -642,35 +641,23 @@ class MediaProcessor:
         if clash:
             raise ValueError(f"passthrough clashes with output: {clash}")
 
-        def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                decoded = [decoder(p) for p in pdf[payload_col]]
-                out = {
-                    "media_id": pdf[id_col].values,
-                    "num_bytes": [
-                        len(p) if p is not None else 0
-                        for p in pdf[payload_col]
-                    ],
-                    "width": [d["width"] for d in decoded],
-                    "height": [d["height"] for d in decoded],
-                    "features": [d["features"] for d in decoded],
-                }
-                for c in passthrough:
-                    out[c] = pdf[c].values
-                yield pd.DataFrame(out)
+        def process(mid, p):
+            d = decoder(p)
+            n = len(p) if p is not None else 0
+            yield mid, n, d["width"], d["height"], d["features"]
 
-        schema = StructType(
+        return map_rows(
+            df,
+            [self.id_column, self.payload_column],
+            process,
             [
-                StructField("media_id", LongType()),
-                StructField("num_bytes", LongType()),
-                StructField("width", IntegerType()),
-                StructField("height", IntegerType()),
-                StructField("features", ArrayType(DoubleType())),
-            ]
-            + [df.schema[c] for c in passthrough]
-        )
-        return df.select(id_col, payload_col, *passthrough).mapInPandas(
-            process, schema=schema
+                ("media_id", LongType()),
+                ("num_bytes", LongType()),
+                ("width", IntegerType()),
+                ("height", IntegerType()),
+                ("features", ArrayType(DoubleType())),
+                *passthrough,
+            ],
         )
 
     def resize(
@@ -696,8 +683,6 @@ class MediaProcessor:
           choice (``np.rint`` rounds half-even and PIL rounds
           half-up; pick one and pin it with tests).
         """
-        id_col = self.id_column
-        payload_col = self.payload_column
         tw, th = int(target[0]), int(target[1])
         if tw < 1 or th < 1:
             raise ValueError("target dimensions must be >= 1")
@@ -746,25 +731,12 @@ class MediaProcessor:
             out = np.floor(res + 0.5).astype(img.dtype)
             return out[:, :, 0] if img.ndim == 2 else out
 
-        def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                out_payload, widths, heights = [], [], []
-                for p in pdf[payload_col]:
-                    img, _ = decode_ppm(p)
-                    out_payload.append(encode_ppm(_one(img)))
-                    widths.append(tw)
-                    heights.append(th)
-                yield pd.DataFrame(
-                    {
-                        "media_id": pdf[id_col].values,
-                        "payload": out_payload,
-                        "width": widths,
-                        "height": heights,
-                    }
-                )
+        def process(mid, p):
+            img, _ = decode_ppm(p)
+            yield mid, encode_ppm(_one(img)), tw, th
 
-        return df.select(id_col, payload_col).mapInPandas(
-            process, schema=self.RESIZE_SCHEMA
+        return map_rows(
+            df, [self.id_column, self.payload_column], process, _IMAGE_ROW
         )
 
     def sample_frames(
@@ -793,54 +765,39 @@ class MediaProcessor:
             raise ValueError("every_ms must be >= 1")
         if fps <= 0:
             raise ValueError("fps must be > 0")
-        id_col = self.id_column
-        payload_col = self.payload_column
         splitter = self.splitter
 
-        def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                ids, idxs, t_ms, payloads, widths, heights = (
-                    [], [], [], [], [], []
-                )
-                for mid, p in zip(pdf[id_col], pdf[payload_col]):
-                    if p is None:
-                        raise ValueError(
-                            f"null video payload for media_id={mid}"
-                        )
-                    frames = splitter(bytes(p))
-                    n = len(frames)
-                    seen: set[int] = set()
-                    # integer tick walk: tick k is at k*every_ms ms;
-                    # a float accumulator (t += every_ms) can truncate
-                    # int(t*fps/1000) to the wrong frame at tick
-                    # boundaries for non-integer fps
-                    for k in range(0, 10**9):
-                        tick_ms = k * every_ms
-                        idx = int(tick_ms * fps / 1000.0 + 1e-9)
-                        if idx >= n:
-                            break
-                        if idx not in seen:
-                            seen.add(idx)
-                            w, h = probe_media_dimensions(frames[idx])
-                            ids.append(mid)
-                            idxs.append(idx)
-                            t_ms.append(tick_ms)
-                            payloads.append(frames[idx])
-                            widths.append(w)
-                            heights.append(h)
-                yield pd.DataFrame(
-                    {
-                        "media_id": ids,
-                        "frame_index": idxs,
-                        "t_ms": t_ms,
-                        "payload": payloads,
-                        "width": widths,
-                        "height": heights,
-                    }
-                )
+        def process(mid, p):
+            if p is None:
+                raise ValueError(f"null video payload for media_id={mid}")
+            frames = splitter(bytes(p))
+            n = len(frames)
+            seen: set[int] = set()
+            # integer tick walk: tick k is at k*every_ms ms; a float
+            # accumulator (t += every_ms) can truncate int(t*fps/1000)
+            # to the wrong frame at tick boundaries for non-integer fps
+            for k in range(0, 10**9):
+                tick_ms = k * every_ms
+                idx = int(tick_ms * fps / 1000.0 + 1e-9)
+                if idx >= n:
+                    break
+                if idx not in seen:
+                    seen.add(idx)
+                    w, h = probe_media_dimensions(frames[idx])
+                    yield mid, idx, tick_ms, frames[idx], w, h
 
-        return df.select(id_col, payload_col).mapInPandas(
-            process, schema=self.FRAMES_SCHEMA
+        return map_rows(
+            df,
+            [self.id_column, self.payload_column],
+            process,
+            [
+                ("media_id", LongType()),
+                ("frame_index", IntegerType()),
+                ("t_ms", LongType()),
+                ("payload", BinaryType()),
+                ("width", IntegerType()),
+                ("height", IntegerType()),
+            ],
         )
 
 
@@ -867,11 +824,6 @@ class AudioFrameFeaturizer:
     with a ~frame_size/hop row-count amplification and no shuffle.
     No reference counterpart (LLM-pipeline extension).
     """
-
-    OUTPUT_SCHEMA = (
-        "media_id long, frame_index long, n_samples long, "
-        "zcr long, peak long, rms double"
-    )
 
     def __init__(
         self,
@@ -911,47 +863,38 @@ class AudioFrameFeaturizer:
         return samples
 
     def transform(self, df: DataFrame) -> DataFrame:
-        idc, payload_col = self.id_column, self.payload_column
         frame_size, hop = self.frame_size, self.hop
         samples_of = self._samples
 
-        def featurize(
-            batches: Iterator[pd.DataFrame],
-        ) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                ids, fidx, nsamp, zcrs, peaks, rmss = [], [], [], [], [], []
-                for mid, payload in zip(pdf[idc], pdf[payload_col]):
-                    s = samples_of(bytes(payload))
-                    for j, start in enumerate(range(0, len(s), hop)):
-                        fr = s[start : start + frame_size]
-                        if fr.size == 0:
-                            break
-                        peak = int(np.abs(fr).max())
-                        if peak < 1 << 27:
-                            sq_sum = int(np.dot(fr, fr))
-                        else:
-                            # int64 dot could overflow for 32-bit
-                            # audio: exact arbitrary-precision path
-                            sq_sum = sum(int(x) * int(x) for x in fr)
-                        ids.append(mid)
-                        fidx.append(j)
-                        nsamp.append(int(fr.size))
-                        zcrs.append(int((fr[:-1] * fr[1:] < 0).sum()))
-                        peaks.append(peak)
-                        rmss.append(float(np.sqrt(sq_sum / fr.size)))
-                yield pd.DataFrame(
-                    {
-                        "media_id": ids,
-                        "frame_index": fidx,
-                        "n_samples": nsamp,
-                        "zcr": zcrs,
-                        "peak": peaks,
-                        "rms": rmss,
-                    }
-                )
+        def featurize(mid, payload):
+            s = samples_of(bytes(payload))
+            for j, start in enumerate(range(0, len(s), hop)):
+                fr = s[start : start + frame_size]
+                if fr.size == 0:
+                    break
+                peak = int(np.abs(fr).max())
+                if peak < 1 << 27:
+                    sq_sum = int(np.dot(fr, fr))
+                else:
+                    # int64 dot could overflow for 32-bit audio: exact
+                    # arbitrary-precision path
+                    sq_sum = sum(int(x) * int(x) for x in fr)
+                zcr = int((fr[:-1] * fr[1:] < 0).sum())
+                rms = float(np.sqrt(sq_sum / fr.size))
+                yield mid, j, int(fr.size), zcr, peak, rms
 
-        return df.select(idc, payload_col).mapInPandas(
-            featurize, schema=self.OUTPUT_SCHEMA
+        return map_rows(
+            df,
+            [self.id_column, self.payload_column],
+            featurize,
+            [
+                ("media_id", LongType()),
+                ("frame_index", LongType()),
+                ("n_samples", LongType()),
+                ("zcr", LongType()),
+                ("peak", LongType()),
+                ("rms", DoubleType()),
+            ],
         )
 
 
@@ -1032,7 +975,9 @@ class SpectrogramFeaturizer:
         return fb
 
     def transform(self, df: DataFrame) -> DataFrame:
-        idc, payload_col = self.id_column, self.payload_column
+        import io
+        import wave
+
         frame_size, hop = self.frame_size, self.hop
         n_mels, eps = self.n_mels, self.eps
         fb_cache: dict[int, np.ndarray] = {}
@@ -1040,48 +985,36 @@ class SpectrogramFeaturizer:
         build_fb = self._mel_filterbank
         window = np.hanning(frame_size)
 
-        def featurize(
-            batches: Iterator[pd.DataFrame],
-        ) -> Iterator[pd.DataFrame]:
-            import io
-            import wave
+        def featurize(mid, payload):
+            raw = bytes(payload)
+            with wave.open(io.BytesIO(raw), "rb") as w:
+                rate = w.getframerate()
+            s = samples_of(raw).astype(np.float64)
+            fb = None
+            if n_mels is not None:
+                fb = fb_cache.get(rate)
+                if fb is None:
+                    fb = build_fb(rate)
+                    fb_cache[rate] = fb
+            for j, start in enumerate(
+                range(0, max(len(s) - frame_size + 1, 1), hop)
+            ):
+                fr = s[start : start + frame_size]
+                if fr.size < frame_size:
+                    fr = np.pad(fr, (0, frame_size - fr.size))
+                spec = np.abs(np.fft.rfft(fr * window)) ** 2
+                out = spec if fb is None else fb @ spec
+                yield mid, j, np.log(out + eps).tolist()
 
-            for pdf in batches:
-                ids, fidx, feats = [], [], []
-                for mid, payload in zip(pdf[idc], pdf[payload_col]):
-                    raw = bytes(payload)
-                    with wave.open(io.BytesIO(raw), "rb") as w:
-                        rate = w.getframerate()
-                    s = samples_of(raw).astype(np.float64)
-                    fb = None
-                    if n_mels is not None:
-                        fb = fb_cache.get(rate)
-                        if fb is None:
-                            fb = build_fb(rate)
-                            fb_cache[rate] = fb
-                    for j, start in enumerate(
-                        range(0, max(len(s) - frame_size + 1, 1), hop)
-                    ):
-                        fr = s[start : start + frame_size]
-                        if fr.size < frame_size:
-                            fr = np.pad(fr, (0, frame_size - fr.size))
-                        spec = np.abs(np.fft.rfft(fr * window)) ** 2
-                        out = spec if fb is None else fb @ spec
-                        ids.append(mid)
-                        fidx.append(j)
-                        feats.append(np.log(out + eps).tolist())
-                yield pd.DataFrame(
-                    {
-                        "media_id": ids,
-                        "frame_index": fidx,
-                        "features": feats,
-                    }
-                )
-
-        return df.select(idc, payload_col).mapInPandas(
+        return map_rows(
+            df,
+            [self.id_column, self.payload_column],
             featurize,
-            schema="media_id long, frame_index long, "
-            "features array<double>",
+            [
+                ("media_id", LongType()),
+                ("frame_index", LongType()),
+                ("features", ArrayType(DoubleType())),
+            ],
         )
 
 
@@ -1127,33 +1060,18 @@ class ImageAugmenter:
         return img[y : y + h, x : x + w]
 
     def transform(self, df: DataFrame) -> DataFrame:
-        idc, payload_col, ops = self.id_column, self.payload_column, self.ops
+        ops = self.ops
         apply_one = self._apply
 
-        def augment(
-            batches: Iterator[pd.DataFrame],
-        ) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                payloads, widths, heights = [], [], []
-                for p in pdf[payload_col]:
-                    img, _ = decode_ppm(bytes(p))
-                    for spec in ops:
-                        img = apply_one(img, spec)
-                    img = np.ascontiguousarray(img)
-                    payloads.append(encode_ppm(img))
-                    heights.append(img.shape[0])
-                    widths.append(img.shape[1])
-                yield pd.DataFrame(
-                    {
-                        "media_id": pdf[idc].values,
-                        "payload": payloads,
-                        "width": widths,
-                        "height": heights,
-                    }
-                )
+        def augment(mid, p):
+            img, _ = decode_ppm(bytes(p))
+            for spec in ops:
+                img = apply_one(img, spec)
+            img = np.ascontiguousarray(img)
+            yield mid, encode_ppm(img), img.shape[1], img.shape[0]
 
-        return df.select(idc, payload_col).mapInPandas(
-            augment, schema=MediaProcessor.RESIZE_SCHEMA
+        return map_rows(
+            df, [self.id_column, self.payload_column], augment, _IMAGE_ROW
         )
 
 
@@ -1199,35 +1117,26 @@ def validate_media(
                 return name
         return "unknown"
 
-    def triage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            fmts, oks, widths, heights = [], [], [], []
-            for p in pdf[payload_column]:
-                raw = bytes(p) if p is not None else b""
-                fmts.append(sniff(raw))
-                try:
-                    d = use_decoder(raw)
-                    oks.append(True)
-                    widths.append(int(d.get("width", 0)))
-                    heights.append(int(d.get("height", 0)))
-                except Exception:
-                    oks.append(False)
-                    widths.append(None)
-                    heights.append(None)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf[id_column].values,
-                    "format": fmts,
-                    "ok": oks,
-                    "width": widths,
-                    "height": heights,
-                }
-            )
+    def triage(mid, p):
+        raw = bytes(p) if p is not None else b""
+        try:
+            d = use_decoder(raw)
+            got = True, int(d.get("width", 0)), int(d.get("height", 0))
+        except Exception:
+            got = False, None, None
+        yield (mid, sniff(raw), *got)
 
-    return df.select(id_column, payload_column).mapInPandas(
+    return map_rows(
+        df,
+        [id_column, payload_column],
         triage,
-        schema="media_id long, format string, ok boolean, "
-        "width int, height int",
+        [
+            ("media_id", LongType()),
+            ("format", StringType()),
+            ("ok", BooleanType()),
+            ("width", IntegerType()),
+            ("height", IntegerType()),
+        ],
     )
 
 
@@ -1298,21 +1207,14 @@ class ImagePerceptualDeduplicator:
         self.payload_column = payload_column
 
     def hashes(self, df: DataFrame) -> DataFrame:
-        idc, pc = self.id_column, self.payload_column
+        def compute(mid, p):
+            yield mid, perceptual_hash(bytes(p))
 
-        def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                yield pd.DataFrame(
-                    {
-                        "media_id": pdf[idc].values,
-                        "phash": [
-                            perceptual_hash(bytes(p)) for p in pdf[pc]
-                        ],
-                    }
-                )
-
-        return df.select(idc, pc).mapInPandas(
-            compute, schema="media_id long, phash long"
+        return map_rows(
+            df,
+            [self.id_column, self.payload_column],
+            compute,
+            [("media_id", LongType()), ("phash", LongType())],
         )
 
     def candidate_pairs(self, df: DataFrame) -> DataFrame:
@@ -1710,30 +1612,37 @@ def parse_mp4_metadata(payload: bytes) -> dict:
     return out
 
 
+def _track_metadata(
+    df: DataFrame, payload_column: str, parse: Callable, kind: str
+) -> DataFrame:
+    """(media_id, ``kind``, duration_ms, num_tracks, codecs) per
+    payload, from a ``parse`` that returns ``kind``, ``duration_ms``
+    and ``tracks``."""
+
+    def extract(p):
+        meta = parse(bytes(p))
+        tracks = meta["tracks"]
+        codecs = [t["codec"] or "" for t in tracks]
+        yield meta[kind], meta["duration_ms"], len(tracks), codecs
+
+    return map_rows(
+        df,
+        [payload_column],
+        extract,
+        [
+            "media_id",
+            (kind, StringType()),
+            ("duration_ms", LongType()),
+            ("num_tracks", IntegerType()),
+            ("codecs", ArrayType(StringType())),
+        ],
+    )
+
+
 def mp4_metadata(df: DataFrame, payload_column: str = "payload") -> DataFrame:
     """Container-metadata extraction over a binary MP4 column via
     mapInPandas: (media_id, brand, duration_ms, num_tracks, codecs)."""
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"media_id": [], "brand": [], "duration_ms": [],
-                    "num_tracks": [], "codecs": []}
-            for mid, p in zip(pdf["media_id"], pdf[payload_column]):
-                meta = parse_mp4_metadata(bytes(p))
-                rows["media_id"].append(mid)
-                rows["brand"].append(meta["brand"])
-                rows["duration_ms"].append(meta["duration_ms"])
-                rows["num_tracks"].append(len(meta["tracks"]))
-                rows["codecs"].append(
-                    [t["codec"] or "" for t in meta["tracks"]]
-                )
-            yield pd.DataFrame(rows)
-
-    return df.select("media_id", payload_column).mapInPandas(
-        extract,
-        schema="media_id long, brand string, duration_ms long, "
-        "num_tracks int, codecs array<string>",
-    )
+    return _track_metadata(df, payload_column, parse_mp4_metadata, "brand")
 
 
 # -- WebM / Matroska (EBML) container metadata ----------------------------
@@ -2025,27 +1934,7 @@ def webm_metadata(df: DataFrame, payload_column: str = "payload") -> DataFrame:
     """Container-metadata extraction over a binary WebM/MKV column via
     mapInPandas: (media_id, doctype, duration_ms, num_tracks, codecs)
     — the EBML twin of :func:`mp4_metadata`."""
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"media_id": [], "doctype": [], "duration_ms": [],
-                    "num_tracks": [], "codecs": []}
-            for mid, p in zip(pdf["media_id"], pdf[payload_column]):
-                meta = parse_webm_metadata(bytes(p))
-                rows["media_id"].append(mid)
-                rows["doctype"].append(meta["doctype"])
-                rows["duration_ms"].append(meta["duration_ms"])
-                rows["num_tracks"].append(len(meta["tracks"]))
-                rows["codecs"].append(
-                    [t["codec"] or "" for t in meta["tracks"]]
-                )
-            yield pd.DataFrame(rows)
-
-    return df.select("media_id", payload_column).mapInPandas(
-        extract,
-        schema="media_id long, doctype string, duration_ms long, "
-        "num_tracks int, codecs array<string>",
-    )
+    return _track_metadata(df, payload_column, parse_webm_metadata, "doctype")
 
 
 # -- AVI (RIFF) container: REAL MJPEG frame decode ------------------------
@@ -2232,26 +2121,25 @@ def avi_metadata(df: DataFrame, payload_column: str = "payload") -> DataFrame:
     mapInPandas: (media_id, width, height, total_frames, fps_rate,
     fps_scale, codecs) — the RIFF twin of :func:`mp4_metadata`."""
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"media_id": [], "width": [], "height": [],
-                    "total_frames": [], "fps_rate": [], "fps_scale": [],
-                    "codecs": []}
-            for mid, p in zip(pdf["media_id"], pdf[payload_column]):
-                meta = parse_avi_metadata(bytes(p))
-                rows["media_id"].append(mid)
-                rows["width"].append(meta["width"])
-                rows["height"].append(meta["height"])
-                rows["total_frames"].append(meta["total_frames"])
-                rows["fps_rate"].append(meta["rate"])
-                rows["fps_scale"].append(meta["scale"])
-                rows["codecs"].append(
-                    [s["codec"] or "" for s in meta["streams"]]
-                )
-            yield pd.DataFrame(rows)
+    def extract(p):
+        meta = parse_avi_metadata(bytes(p))
+        codecs = [s["codec"] or "" for s in meta["streams"]]
+        yield (
+            meta["width"], meta["height"], meta["total_frames"],
+            meta["rate"], meta["scale"], codecs,
+        )
 
-    return df.select("media_id", payload_column).mapInPandas(
+    return map_rows(
+        df,
+        [payload_column],
         extract,
-        schema="media_id long, width int, height int, total_frames int, "
-        "fps_rate long, fps_scale long, codecs array<string>",
+        [
+            "media_id",
+            ("width", IntegerType()),
+            ("height", IntegerType()),
+            ("total_frames", IntegerType()),
+            ("fps_rate", LongType()),
+            ("fps_scale", LongType()),
+            ("codecs", ArrayType(StringType())),
+        ],
     )

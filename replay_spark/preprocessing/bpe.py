@@ -40,8 +40,10 @@ from typing import Iterator, Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, StringType
 
 from replay_spark.preprocessing.text import tokenize_expr
+from replay_spark.utils.spark_utils import map_rows
 
 __all__ = ["BPETokenizer", "ByteLevelBPETokenizer", "WordPieceTokenizer"]
 
@@ -250,16 +252,11 @@ class BPETokenizer:
                 bound = max(bound, adj)
             merges.extend(selected)
 
-            def apply_merges(batches, batch=tuple(selected)):
-                for pdf in batches:
-                    out = []
-                    for s in pdf["syms"]:
-                        t = tuple(s)
-                        for p in batch:
-                            t = _merge_word(t, p)
-                        out.append(list(t))
-                    pdf["syms"] = out
-                    yield pdf
+            def apply_merges(s, batch=tuple(selected)):
+                t = tuple(s)
+                for p in batch:
+                    t = _merge_word(t, p)
+                yield (list(t),)
 
             # localCheckpoint (eager) materializes AND truncates the
             # logical plan: without it every round chains another
@@ -267,8 +264,11 @@ class BPETokenizer:
             # O(rounds)-deep lineage (driver OOM well before 32k
             # merges); with it each round starts from a flat scan of
             # the checkpointed partitions
-            new_words = words.mapInPandas(
-                apply_merges, schema="syms array<string>, freq long"
+            new_words = map_rows(
+                words,
+                ["syms"],
+                apply_merges,
+                [("syms", ArrayType(StringType())), "freq"],
             ).localCheckpoint(eager=True)
             words.unpersist()
             words = new_words
@@ -297,32 +297,29 @@ class BPETokenizer:
         if self.merges is None:
             raise ValueError("BPETokenizer must be fit before transform")
         ranks = {pair: i for i, pair in enumerate(self.merges)}
-        text_column, lowercase = self.text_column, self.lowercase
+        lowercase = self.lowercase
         encode_word = self._encode_word
-        out_schema = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields
-        ) + f", `{output_column}` array<string>"
+        cache: dict = {}  # one per partition (see map_rows)
 
-        def process(batches: Iterator) -> Iterator:
-            cache: dict = {}
-            for pdf in batches:
-                toks = []
-                for text in pdf[text_column]:
-                    words = (
-                        (text or "").lower() if lowercase else (text or "")
-                    ).split()
-                    doc = []
-                    for w in words:
-                        hit = cache.get(w)
-                        if hit is None:
-                            hit = encode_word(w, ranks)
-                            cache[w] = hit
-                        doc.extend(hit)
-                    toks.append(doc)
-                pdf[output_column] = toks
-                yield pdf
+        def process(text):
+            words = (
+                (text or "").lower() if lowercase else (text or "")
+            ).split()
+            doc = []
+            for w in words:
+                hit = cache.get(w)
+                if hit is None:
+                    hit = encode_word(w, ranks)
+                    cache[w] = hit
+                doc.extend(hit)
+            yield (doc,)
 
-        return df.mapInPandas(process, schema=out_schema)
+        return map_rows(
+            df,
+            [self.text_column],
+            process,
+            [*df.columns, (output_column, ArrayType(StringType()))],
+        )
 
     def vocabulary(self, df: DataFrame) -> DataFrame:
         """(token, token_id) over the corpus' realized BPE tokens —
@@ -416,41 +413,30 @@ class WordPieceTokenizer:
         whitespace-split word, concatenated in document order."""
         spark = df.sparkSession
         bc = spark.sparkContext.broadcast(frozenset(self.vocab))
-        text_col = self.text_column
-        out_col = self.output_column
         unk = self.unk_token
         cont = self.continuation_prefix
         max_chars = self.max_input_chars_per_word
         lower = self.lowercase
         tokenize_word = WordPieceTokenizer.tokenize_word
-        out_schema = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}"
-            for f in df.schema.fields
-        ) + f", `{out_col}` array<string>"
 
-        def process(batches: Iterator) -> Iterator:
+        def process(text):
+            if text is None:
+                yield ([],)
+                return
             vocab = bc.value
-            for pdf in batches:
-                toks = []
-                for text in pdf[text_col]:
-                    if text is None:
-                        toks.append([])
-                        continue
-                    if lower:
-                        text = text.lower()
-                    doc = []
-                    for word in text.split():
-                        doc.extend(
-                            tokenize_word(
-                                word, vocab, unk, cont, max_chars
-                            )
-                        )
-                    toks.append(doc)
-                pdf = pdf.copy()
-                pdf[out_col] = toks
-                yield pdf
+            if lower:
+                text = text.lower()
+            doc = []
+            for word in text.split():
+                doc.extend(tokenize_word(word, vocab, unk, cont, max_chars))
+            yield (doc,)
 
-        return df.mapInPandas(process, schema=out_schema)
+        return map_rows(
+            df,
+            [self.text_column],
+            process,
+            [*df.columns, (self.output_column, ArrayType(StringType()))],
+        )
 
 
 def bytes_to_unicode() -> dict:
@@ -588,32 +574,27 @@ class ByteLevelBPETokenizer(BPETokenizer):
                 "ByteLevelBPETokenizer must be fit before transform"
             )
         ranks = {pair: i for i, pair in enumerate(self.merges)}
-        text_column = self.text_column
         encode_word = self._encode_word
         pretokens = self._pretokens
-        out_schema = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}"
-            for f in df.schema.fields
-        ) + f", `{output_column}` array<string>"
+        cache: dict = {}  # one per partition (see map_rows)
 
-        def process(batches: Iterator) -> Iterator:
-            cache: dict = {}
-            for pdf in batches:
-                toks = []
-                for text in pdf[text_column]:
-                    doc = []
-                    for w in pretokens(text):
-                        m = _byte_map_word(w)
-                        hit = cache.get(m)
-                        if hit is None:
-                            hit = encode_word(m, ranks)
-                            cache[m] = hit
-                        doc.extend(hit)
-                    toks.append(doc)
-                pdf[output_column] = toks
-                yield pdf
+        def process(text):
+            doc = []
+            for w in pretokens(text):
+                m = _byte_map_word(w)
+                hit = cache.get(m)
+                if hit is None:
+                    hit = encode_word(m, ranks)
+                    cache[m] = hit
+                doc.extend(hit)
+            yield (doc,)
 
-        return df.mapInPandas(process, schema=out_schema)
+        return map_rows(
+            df,
+            [self.text_column],
+            process,
+            [*df.columns, (output_column, ArrayType(StringType()))],
+        )
 
     @staticmethod
     def decode_tokens(tokens) -> str:

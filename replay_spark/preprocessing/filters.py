@@ -81,6 +81,7 @@ class InteractionEntriesFilter(_BaseFilter):
             assert min_inter_per_item < max_inter_per_item
 
     def _filter(self, interactions: DataFrame) -> DataFrame:
+        source = interactions
         count = interactions.count()
         dropped = [True, True]
         idx = 0
@@ -104,7 +105,8 @@ class InteractionEntriesFilter(_BaseFilter):
                 filtered = filtered.drop("_cnt")
                 if self.allow_caching:
                     filtered.cache()
-                    interactions.unpersist()
+                    if interactions is not source:  # never the caller's
+                        interactions.unpersist()
                 new_count = filtered.count()
                 dropped[idx] = new_count != count
                 interactions, count = filtered, new_count

@@ -28,12 +28,14 @@ with the promoted-phrase set broadcast. No reference counterpart
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
 from replay_spark.preprocessing.text import tokenize_expr
+from replay_spark.utils.spark_utils import map_rows
 
 __all__ = ["PhraseMiner"]
 
@@ -167,39 +169,29 @@ class PhraseMiner:
             raise RuntimeError("fit() first")
         spark = df.sparkSession
         bc = spark.sparkContext.broadcast(frozenset(self._promoted))
-        text_col = self.text_column
-        out_col = self.output_column
         joiner = self.joiner
         lower = self.lowercase
-        out_schema = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}"
-            for f in df.schema.fields
-        ) + f", `{out_col}` string"
 
-        def process(batches: Iterator) -> Iterator:
+        def process(text):
+            if text is None:
+                yield (None,)
+                return
             phrases = bc.value
-            for pdf in batches:
-                out = []
-                for text in pdf[text_col]:
-                    if text is None:
-                        out.append(None)
-                        continue
-                    toks = (text.lower() if lower else text).split()
-                    res = []
-                    i = 0
-                    while i < len(toks):
-                        if (
-                            i + 1 < len(toks)
-                            and (toks[i], toks[i + 1]) in phrases
-                        ):
-                            res.append(toks[i] + joiner + toks[i + 1])
-                            i += 2
-                        else:
-                            res.append(toks[i])
-                            i += 1
-                    out.append(" ".join(res))
-                pdf = pdf.copy()
-                pdf[out_col] = out
-                yield pdf
+            toks = (text.lower() if lower else text).split()
+            res = []
+            i = 0
+            while i < len(toks):
+                if i + 1 < len(toks) and (toks[i], toks[i + 1]) in phrases:
+                    res.append(toks[i] + joiner + toks[i + 1])
+                    i += 2
+                else:
+                    res.append(toks[i])
+                    i += 1
+            yield (" ".join(res),)
 
-        return df.mapInPandas(process, schema=out_schema)
+        return map_rows(
+            df,
+            [self.text_column],
+            process,
+            [*df.columns, (self.output_column, StringType())],
+        )

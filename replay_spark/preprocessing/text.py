@@ -14,9 +14,11 @@ from typing import Optional
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, LongType, StringType
 
 from replay_spark.utils.spark_utils import (
     bucketed_apply_in_pandas,
+    map_rows,
     stable_round,
 )
 
@@ -1201,20 +1203,13 @@ class TextNormalizer:
         self.lowercase = lowercase
 
     def transform(self, df: DataFrame) -> DataFrame:
-        tc, oc = self.text_column, self.output_column
+        import unicodedata
+
         form, strip, lower = self.form, self.strip_accents, self.lowercase
-        out_schema = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}" for f in df.schema
-        ) + f", {oc} string"
+        recompose = form if form in ("NFC", "NFKC") else "NFC"
 
-        def normalize(batches):
-            import unicodedata
-
-            recompose = form if form in ("NFC", "NFKC") else "NFC"
-
-            def one(s):
-                if s is None:
-                    return None
+        def normalize(s):
+            if s is not None:
                 s = unicodedata.normalize(form, s)
                 if strip:
                     s = "".join(
@@ -1225,14 +1220,14 @@ class TextNormalizer:
                     s = unicodedata.normalize(recompose, s)
                 if lower:
                     s = s.lower()
-                return s
+            yield (s,)
 
-            for pdf in batches:
-                pdf = pdf.copy()
-                pdf[oc] = [one(s) for s in pdf[tc]]
-                yield pdf
-
-        return df.mapInPandas(normalize, schema=out_schema)
+        return map_rows(
+            df,
+            [self.text_column],
+            normalize,
+            [*df.columns, (self.output_column, StringType())],
+        )
 
 
 class CompressionRatioScorer:
@@ -1264,37 +1259,25 @@ class CompressionRatioScorer:
         self.level = level
 
     def transform(self, df: DataFrame) -> DataFrame:
-        idc, tc, level = self.id_column, self.text_column, self.level
+        import zlib
 
-        def score(batches):
-            import zlib
+        level = self.level
 
-            import pandas as pd  # noqa: F811
+        def score(text):
+            raw = (text or "").encode("utf-8")
+            comp = len(zlib.compress(raw, level))
+            yield len(raw), comp, comp / len(raw) if raw else None
 
-            for pdf in batches:
-                raw_len, comp_len, ratio = [], [], []
-                for text in pdf[tc]:
-                    raw = (text or "").encode("utf-8")
-                    comp = zlib.compress(raw, level)
-                    raw_len.append(len(raw))
-                    comp_len.append(len(comp))
-                    ratio.append(
-                        len(comp) / len(raw) if raw else None
-                    )
-                yield pd.DataFrame(
-                    {
-                        idc: pdf[idc].values,
-                        "raw_bytes": raw_len,
-                        "compressed_bytes": comp_len,
-                        "compression_ratio": ratio,
-                    }
-                )
-
-        id_type = df.schema[idc].dataType.simpleString()
-        return df.select(idc, tc).mapInPandas(
+        return map_rows(
+            df,
+            [self.text_column],
             score,
-            schema=f"{idc} {id_type}, raw_bytes long, "
-            "compressed_bytes long, compression_ratio double",
+            [
+                self.id_column,
+                ("raw_bytes", LongType()),
+                ("compressed_bytes", LongType()),
+                ("compression_ratio", DoubleType()),
+            ],
         )
 
 

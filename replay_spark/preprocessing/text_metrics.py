@@ -33,10 +33,11 @@ metrics tier scores recommendations, not text generation).
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType
+
+from replay_spark.utils.spark_utils import map_rows
 
 __all__ = ["BleuScorer", "RougeScorer", "clipped_ngram_matches"]
 
@@ -235,21 +236,15 @@ class RougeScorer:
 
     def _with_lcs(self, df: DataFrame) -> DataFrame:
         lcs = RougeScorer.lcs_length
-        out_schema = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}"
-            for f in df.schema.fields
-        ) + ", `lcs_len` int"
 
-        def run(batches: Iterator) -> Iterator:
-            for pdf in batches:
-                pdf = pdf.copy()
-                pdf["lcs_len"] = [
-                    lcs(
-                        list(c) if c is not None else [],
-                        list(r) if r is not None else [],
-                    )
-                    for c, r in zip(pdf["_c"], pdf["_r"])
-                ]
-                yield pdf
+        def run(c, r):
+            yield (
+                lcs(
+                    list(c) if c is not None else [],
+                    list(r) if r is not None else [],
+                ),
+            )
 
-        return df.mapInPandas(run, schema=out_schema)
+        return map_rows(
+            df, ["_c", "_r"], run, [*df.columns, ("lcs_len", IntegerType())]
+        )

@@ -52,8 +52,10 @@ from typing import Dict, Iterator, List, Optional, Tuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, StringType
 
 from replay_spark.preprocessing.text import tokenize_expr
+from replay_spark.utils.spark_utils import map_rows
 
 __all__ = ["UnigramTokenizer"]
 
@@ -406,40 +408,31 @@ class UnigramTokenizer:
             raise RuntimeError("fit() or from_vocab() first")
         spark = df.sparkSession
         bc = spark.sparkContext.broadcast(self.pieces)
-        text_col = self.text_column
-        out_col = self.output_column
         max_len = self.max_piece_length
         unk = self.unk_token
         unk_score = self.unk_score
         lower = self.lowercase
-        out_schema = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}"
-            for f in df.schema.fields
-        ) + f", `{out_col}` array<string>"
 
-        def process(batches: Iterator) -> Iterator:
+        def process(cache: Dict[str, List[str]], text):
+            if text is None:
+                yield ([],)
+                return
             model = bc.value
-            for pdf in batches:
-                cache: Dict[str, List[str]] = {}
-                toks = []
-                for text in pdf[text_col]:
-                    if text is None:
-                        toks.append([])
-                        continue
-                    if lower:
-                        text = text.lower()
-                    doc: List[str] = []
-                    for word in text.split():
-                        got = cache.get(word)
-                        if got is None:
-                            got = viterbi_segment(
-                                word, model, max_len, unk, unk_score
-                            )
-                            cache[word] = got
-                        doc.extend(got)
-                    toks.append(doc)
-                pdf = pdf.copy()
-                pdf[out_col] = toks
-                yield pdf
+            if lower:
+                text = text.lower()
+            doc: List[str] = []
+            for word in text.split():
+                got = cache.get(word)
+                if got is None:
+                    got = viterbi_segment(word, model, max_len, unk, unk_score)
+                    cache[word] = got
+                doc.extend(got)
+            yield (doc,)
 
-        return df.mapInPandas(process, schema=out_schema)
+        return map_rows(
+            df,
+            [self.text_column],
+            process,
+            [*df.columns, (self.output_column, ArrayType(StringType()))],
+            per_batch=dict,
+        )

@@ -76,57 +76,46 @@ def build_file_blooms(
     bpk, k = int(bits_per_key), int(num_hashes)
     if bpk < 1 or k < 1:
         raise ValueError("need bits_per_key >= 1 and num_hashes >= 1")
-    from replay_spark.utils.spark_utils import local_df
+    from pyspark.sql.types import LongType, StringType
+
+    from replay_spark.utils.spark_utils import local_df, map_rows
 
     file_df = local_df(spark, [(f,) for f in files], "file string")
 
-    def tasks(batches):
-        import pandas as pd
+    def blooms(fname):
         import pyarrow.parquet as pq
 
-        for pdf in batches:
-            rows = []
-            for fname in pdf["file"]:
-                pf = pq.ParquetFile(fname)
-                avail = [
-                    c for c in cols if c in pf.schema_arrow.names
-                ]
-                tbl = pf.read(columns=avail) if avail else None
-                for c in avail:
-                    vals = {
-                        v
-                        for v in tbl.column(c).to_pylist()
-                        if v is not None
-                    }
-                    m = max(64, bpk * max(1, len(vals)))
-                    m = (m + 7) // 8 * 8
-                    bits = bytearray(m // 8)
-                    for v in vals:
-                        for p in _positions(v, m, k):
-                            bits[p >> 3] |= 1 << (p & 7)
-                    rows.append(
-                        {
-                            "file": fname,
-                            "column": c,
-                            "m": m,
-                            "k": k,
-                            "n_keys": len(vals),
-                            "bits": base64.b64encode(
-                                bytes(bits)
-                            ).decode("ascii"),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["file", "column", "m", "k", "n_keys", "bits"],
+        pf = pq.ParquetFile(fname)
+        avail = [c for c in cols if c in pf.schema_arrow.names]
+        tbl = pf.read(columns=avail) if avail else None
+        for c in avail:
+            vals = {v for v in tbl.column(c).to_pylist() if v is not None}
+            m = max(64, bpk * max(1, len(vals)))
+            m = (m + 7) // 8 * 8
+            bits = bytearray(m // 8)
+            for v in vals:
+                for p in _positions(v, m, k):
+                    bits[p >> 3] |= 1 << (p & 7)
+            yield (
+                c,
+                m,
+                k,
+                len(vals),
+                base64.b64encode(bytes(bits)).decode("ascii"),
             )
 
-    out = file_df.mapInPandas(
-        tasks,
-        schema=(
-            "file string, column string, m long, k long, "
-            "n_keys long, bits string"
-        ),
+    out = map_rows(
+        file_df,
+        ["file"],
+        blooms,
+        [
+            "file",
+            ("column", StringType()),
+            ("m", LongType()),
+            ("k", LongType()),
+            ("n_keys", LongType()),
+            ("bits", StringType()),
+        ],
     )
     return [r.asDict() for r in out.collect()]
 

@@ -33,6 +33,13 @@ from typing import Dict, List, Optional, Sequence, Tuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DoubleType,
+    IntegerType,
+    LongType,
+    StringType,
+    TimestampType,
+)
 
 __all__ = [
     "ZOrderLayout",
@@ -174,13 +181,20 @@ class ZOrderLayout:
 
 # -- data-skipping manifests ----------------------------------------------
 
-_STATS_SCHEMA = (
-    "file string, n_rows long, n_row_groups int, column string, "
-    "null_count long, min_long long, max_long long, "
-    "min_double double, max_double double, "
-    "min_str string, max_str string, "
-    "min_ts timestamp, max_ts timestamp"
-)
+_STATS_FIELDS = [
+    ("n_rows", LongType()),
+    ("n_row_groups", IntegerType()),
+    ("column", StringType()),
+    ("null_count", LongType()),
+    ("min_long", LongType()),
+    ("max_long", LongType()),
+    ("min_double", DoubleType()),
+    ("max_double", DoubleType()),
+    ("min_str", StringType()),
+    ("max_str", StringType()),
+    ("min_ts", TimestampType()),
+    ("max_ts", TimestampType()),
+]
 
 
 def _footer_rows(fname: str, wanted) -> list:
@@ -323,29 +337,17 @@ def collect_file_stats(spark, path: str, columns=None) -> "DataFrame":
         )
     if not files:
         raise ValueError(f"no parquet files under {path!r}")
-    from replay_spark.utils.spark_utils import local_df
+    from replay_spark.utils.spark_utils import local_df, map_rows
 
     file_df = local_df(spark, [(f,) for f in files], "file string")
     wanted = set(columns) if columns else None
+    names = [name for name, _ in _STATS_FIELDS]
 
-    def footers(batches):
-        import pandas as pd
+    def footers(fname):
+        for row in _footer_rows(fname, wanted):
+            yield tuple(row[n] for n in names)
 
-        for pdf in batches:
-            rows = []
-            for fname in pdf["file"]:
-                rows.extend(_footer_rows(fname, wanted))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "file", "n_rows", "n_row_groups", "column",
-                    "null_count", "min_long", "max_long", "min_double",
-                    "max_double", "min_str", "max_str", "min_ts",
-                    "max_ts",
-                ],
-            )
-
-    return file_df.mapInPandas(footers, schema=_STATS_SCHEMA)
+    return map_rows(file_df, ["file"], footers, ["file", *_STATS_FIELDS])
 
 
 def prune_files(manifest: "DataFrame", bounds: dict) -> "DataFrame":

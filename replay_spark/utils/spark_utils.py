@@ -16,10 +16,11 @@ from __future__ import annotations
 
 import os
 import shutil
-from typing import Iterable, Optional, Union
+from typing import Any, Callable, Iterable, Optional, Sequence, Tuple, Union
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType, StructField, StructType
 
 __all__ = [
     "get_top_k",
@@ -50,6 +51,7 @@ __all__ = [
     "diagnose_skew",
     "local_df",
     "bucketed_apply_in_pandas",
+    "map_rows",
 ]
 
 
@@ -69,7 +71,7 @@ def local_df(spark: SparkSession, rows, schema) -> DataFrame:
     """
     import pandas as pd
 
-    from pyspark.sql.types import NumericType, StructType
+    from pyspark.sql.types import NumericType
 
     rows = list(rows)
     if not rows or not all(isinstance(row, (tuple, list)) for row in rows):
@@ -456,7 +458,7 @@ def drop_temp_view(name: str) -> None:
 
 
 def bucketed_apply_in_pandas(
-    df: DataFrame, key: str, fn, schema: str
+    df: DataFrame, key: str, fn, schema: Union[str, StructType]
 ) -> DataFrame:
     """Run the CPU-bound pandas ``fn`` over buckets of whole ``key``
     groups: ``pmod(xxhash64(key), n)`` with
@@ -483,6 +485,73 @@ def bucketed_apply_in_pandas(
         .groupBy("_bucket")
         .applyInPandas(fn, schema)
     )
+
+
+def map_rows(
+    df: DataFrame,
+    inputs: Sequence[str],
+    fn: Callable[..., Iterable[tuple]],
+    columns: Sequence[Union[str, Tuple[str, DataType]]],
+    per_batch: Optional[Callable[[], Any]] = None,
+) -> DataFrame:
+    """Row-wise Python stage: ``fn(*values)`` gets the ``inputs``
+    values of one row and yields one tuple per output row (zero, one
+    or many), and each output row is laid out as ``columns``:
+
+    * a name is a column of ``df`` carried through unchanged from the
+      row that produced it, typed by its ``df.schema`` field;
+    * a ``(name, DataType)`` pair is a column ``fn`` computes; its
+      tuples hold these columns' values in order.
+
+    The stage reads only the kept and the input columns, and its
+    schema is a ``StructType`` (no DDL text, so any column name
+    works). It runs as one ``mapInPandas``, so the plan holds it as an
+    opaque node: a filter on an output column never re-runs ``fn``
+    (a scalar pandas UDF under such a filter is evaluated twice).
+
+    State: ``fn`` is unpickled once per task, so a cache in its
+    closure lives for one partition; ``per_batch``, when given, is
+    called at the start of every Arrow batch and its result is passed
+    to ``fn`` as the first argument, for state that must not outlive
+    the batch.
+    """
+    inputs = list(inputs)
+    names = [c if isinstance(c, str) else c[0] for c in columns]
+    kept = [c for c in columns if isinstance(c, str)]
+    made = [c[0] for c in columns if not isinstance(c, str)]
+    schema = StructType(
+        [
+            df.schema[c] if isinstance(c, str) else StructField(c[0], c[1])
+            for c in columns
+        ]
+    )
+    read = list(dict.fromkeys(kept + inputs))
+    if read != df.columns:
+        df = df.select(
+            *[F.col("`" + c.replace("`", "``") + "`") for c in read]
+        )
+
+    def run(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            state = (per_batch(),) if per_batch is not None else ()
+            rows, src = [], []
+            for i, values in enumerate(zip(*(pdf[c] for c in inputs))):
+                before = len(rows)
+                rows.extend(fn(*state, *values))
+                src += [i] * (len(rows) - before)
+            # an empty list makes a float64 column, which Arrow cannot
+            # convert to an array, map or timestamp; object can
+            out = {c: pd.Series([], dtype=object) for c in made}
+            out.update(zip(made, map(list, zip(*rows))))
+            one_each = src == list(range(len(pdf)))
+            for c in kept:
+                s = pdf[c]
+                out[c] = s if one_each else s.take(src).reset_index(drop=True)
+            yield pd.DataFrame({c: out[c] for c in names})
+
+    return df.mapInPandas(run, schema=schema)
 
 
 def sample_top_k_recs(
@@ -529,12 +598,8 @@ def sample_top_k_recs(
         ]
         return pd.concat(out).drop(columns=["_bucket", "_prob"])
 
-    schema_fields = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in pairs.drop("_prob").schema.fields
-    )
     return bucketed_apply_in_pandas(
-        pairs, query_column, sample_bucket, schema_fields
+        pairs, query_column, sample_bucket, pairs.drop("_prob").schema
     )
 
 

@@ -29,11 +29,19 @@ import gzip
 import io
 import zlib
 from html.parser import HTMLParser
-from typing import Iterator, Optional
+from typing import Optional
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    BinaryType,
+    BooleanType,
+    IntegerType,
+    LongType,
+    StringType,
+)
+
+from replay_spark.utils.spark_utils import map_rows
 
 __all__ = [
     "parse_warc",
@@ -167,35 +175,33 @@ def warc_records(
     detected per payload by magic. Runs in ``mapInPandas``; archives
     never leave the executor."""
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"_id": [], "record_index": [], "warc_type": [],
-                    "target_uri": [], "content_type": [], "content": []}
-            for mid, p in zip(pdf[id_column], pdf[payload_column]):
-                raw = bytes(p)
-                if raw[:2] == b"\x1f\x8b":
-                    raw = split_warc_gz(raw)
-                for i, rec in enumerate(parse_warc(raw)):
-                    hdr = {
-                        k.casefold(): v for k, v in rec["headers"].items()
-                    }
-                    wtype = hdr.get("warc-type", "")
-                    body = rec["content"]
-                    if wtype == "response":
-                        body = _strip_http(body)
-                    rows["_id"].append(mid)
-                    rows["record_index"].append(i)
-                    rows["warc_type"].append(wtype)
-                    rows["target_uri"].append(hdr.get("warc-target-uri"))
-                    rows["content_type"].append(hdr.get("content-type"))
-                    rows["content"].append(body)
-            out = pd.DataFrame(rows)
-            yield out.rename(columns={"_id": id_column})
+    def extract(payload):
+        raw = bytes(payload)
+        if raw[:2] == b"\x1f\x8b":
+            raw = split_warc_gz(raw)
+        for i, rec in enumerate(parse_warc(raw)):
+            hdr = {k.casefold(): v for k, v in rec["headers"].items()}
+            wtype = hdr.get("warc-type", "")
+            body = rec["content"]
+            if wtype == "response":
+                body = _strip_http(body)
+            yield (
+                i, wtype, hdr.get("warc-target-uri"),
+                hdr.get("content-type"), body,
+            )
 
-    return df.select(id_column, payload_column).mapInPandas(
+    return map_rows(
+        df,
+        [payload_column],
         extract,
-        schema=f"{id_column} long, record_index int, warc_type string, "
-        "target_uri string, content_type string, content binary",
+        [
+            id_column,
+            ("record_index", IntegerType()),
+            ("warc_type", StringType()),
+            ("target_uri", StringType()),
+            ("content_type", StringType()),
+            ("content", BinaryType()),
+        ],
     )
 
 
@@ -276,28 +282,24 @@ class HtmlTextExtractor:
         return text, title
 
     def transform(self, df: DataFrame) -> DataFrame:
-        hc, oc, tc = self.html_column, self.output_column, self.title_column
-        out_schema = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}"
-            for f in df.schema.fields
-        ) + f", `{oc}` string, `{tc}` string"
         extract = self.extract
 
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                texts, titles = [], []
-                for h in pdf[hc]:
-                    try:
-                        text, title = extract(h)
-                    except Exception:
-                        text, title = "", ""
-                    texts.append(text)
-                    titles.append(title)
-                pdf[oc] = texts
-                pdf[tc] = titles
-                yield pdf
+        def run(h):
+            try:
+                yield extract(h)
+            except Exception:
+                yield "", ""
 
-        return df.mapInPandas(run, schema=out_schema)
+        return map_rows(
+            df,
+            [self.html_column],
+            run,
+            [
+                *df.columns,
+                (self.output_column, StringType()),
+                (self.title_column, StringType()),
+            ],
+        )
 
 
 # -- URL filtering --------------------------------------------------------
@@ -612,31 +614,24 @@ class RobotsFilter:
         return path
 
     def transform(self, df: DataFrame) -> DataFrame:
-        url_col, robots_col = self.url_column, self.robots_column
         agent = self.user_agent
         path_of = self._path_of
-        out_schema = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}" for f in df.schema
-        ) + ", robots_allowed boolean"
 
-        def evaluate(
-            batches: Iterator[pd.DataFrame],
-        ) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                cache: dict[str, RobotsMatcher] = {}
-                flags = []
-                for url, robots in zip(pdf[url_col], pdf[robots_col]):
-                    body = robots or ""
-                    m = cache.get(body)
-                    if m is None:
-                        m = RobotsMatcher(body, agent)
-                        cache[body] = m
-                    flags.append(m.allowed(path_of(url)))
-                pdf = pdf.copy()
-                pdf["robots_allowed"] = flags
-                yield pdf
+        def evaluate(cache: dict, url, robots):
+            body = robots or ""
+            m = cache.get(body)
+            if m is None:
+                m = RobotsMatcher(body, agent)
+                cache[body] = m
+            yield (m.allowed(path_of(url)),)
 
-        return df.mapInPandas(evaluate, schema=out_schema)
+        return map_rows(
+            df,
+            [self.url_column, self.robots_column],
+            evaluate,
+            [*df.columns, ("robots_allowed", BooleanType())],
+            per_batch=dict,
+        )
 
     def filter(self, df: DataFrame) -> DataFrame:
         return (
@@ -699,46 +694,35 @@ class HtmlLinkExtractor:
     def transform(self, df: DataFrame) -> DataFrame:
         from urllib.parse import urljoin
 
-        idc, hc, bc = self.id_column, self.html_column, self.base_url_column
-        id_type = df.schema[idc].dataType.simpleString()
+        hc, bc = self.html_column, self.base_url_column
 
-        def extract(
-            batches: Iterator[pd.DataFrame],
-        ) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                ids, idxs, hrefs, resolved, anchors = [], [], [], [], []
-                bases = pdf[bc] if bc else [None] * len(pdf)
-                for rid, html_text, base in zip(pdf[idc], pdf[hc], bases):
-                    parser = _LinkParser()
-                    parser.feed(html_text or "")
-                    parser.close()
-                    li = 0
-                    for href, parts in parser.links:
-                        if href is None:
-                            continue
-                        ids.append(rid)
-                        idxs.append(li)
-                        hrefs.append(href)
-                        resolved.append(
-                            urljoin(base, href) if base else href
-                        )
-                        anchors.append(" ".join("".join(parts).split()))
-                        li += 1
-                yield pd.DataFrame(
-                    {
-                        idc: ids,
-                        "link_index": idxs,
-                        "href": hrefs,
-                        "resolved_url": resolved,
-                        "anchor": anchors,
-                    }
+        def extract(html_text, base=None):
+            parser = _LinkParser()
+            parser.feed(html_text or "")
+            parser.close()
+            li = 0
+            for href, parts in parser.links:
+                if href is None:
+                    continue
+                yield (
+                    li,
+                    href,
+                    urljoin(base, href) if base else href,
+                    " ".join("".join(parts).split()),
                 )
+                li += 1
 
-        cols = [idc, hc] + ([bc] if bc else [])
-        return df.select(*cols).mapInPandas(
+        return map_rows(
+            df,
+            [hc] + ([bc] if bc else []),
             extract,
-            schema=f"{idc} {id_type}, link_index long, href string, "
-            "resolved_url string, anchor string",
+            [
+                self.id_column,
+                ("link_index", LongType()),
+                ("href", StringType()),
+                ("resolved_url", StringType()),
+                ("anchor", StringType()),
+            ],
         )
 
 

@@ -45,6 +45,20 @@ def test_interaction_entries_filter(spark):
     assert sorted(r.user_id for r in out.collect()) == [3, 3, 3, 3]
 
 
+def test_interaction_entries_filter_keeps_caller_cache(spark):
+    """The filter releases only the passes it cached itself: a cached
+    input is still cached after ``transform``."""
+    rows = [(u, i) for u in range(4) for i in range(u + 2)]
+    log = spark.createDataFrame(rows, "user_id int, item_id int").cache()
+    log.count()
+    out = InteractionEntriesFilter(
+        min_inter_per_user=3, min_inter_per_item=2
+    ).transform(log)
+    assert out.count() > 0
+    assert log.is_cached and log.storageLevel.useMemory
+    log.unpersist()
+
+
 def test_min_count_filter(spark):
     df = spark.createDataFrame([(1,), (1,), (2,)], "user_id int")
     out = MinCountFilter(2, "user_id").transform(df)

@@ -164,6 +164,23 @@ def test_offline_metrics_and_experiment(recs, ground_truth, spark):
     assert "NDCG@2" in exp.results.columns
 
 
+def test_experiment_release_drops_ground_truth_cache(recs, spark):
+    # a ground truth no other test caches: equal plans share one cache
+    gt = spark.createDataFrame(
+        [(1, 7), (2, 8), (3, 9), (3, 4)], "query_id int, item_id int"
+    )
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    exp = Experiment([NDCG(2), HitRate(2)], gt)
+    exp.add_result("model_a", recs)
+    assert jsc.getPersistentRDDs().size() > before
+    exp.release()
+    assert jsc.getPersistentRDDs().size() == before
+    exp.add_result("model_b", recs)  # rebuilds the grouping
+    assert set(exp.results.index) == {"model_a", "model_b"}
+    exp.release()
+
+
 def test_sampled_ranking_evaluator(spark):
     """Deterministic md5 negatives (seen + self excluded), positive
     rank by score with item tie-break, NULL scores rank last, and

@@ -3,9 +3,10 @@
 
 Builds the same session as bench.py, with an uncompressed event log,
 then for each named query runs it once cold and ``--runs`` times warm
-(query function plus a ``count()`` action, like the bench), each run
-under its own job group. After the session stops it reads the log
-with ``perfbench/ledger.py`` and reports, per run:
+(query function plus one action that reads every row, see
+:func:`read_all`), each run under its own job group. After the
+session stops it reads the log with ``perfbench/ledger.py`` and
+reports, per run:
 
 * wall seconds, of which ``build`` is the query function itself
   (plan construction plus any eager fit/predict actions inside it);
@@ -38,6 +39,25 @@ from ledger import GroupCost, driver_seconds, read_ledger  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
+
+
+def read_all(df) -> int:
+    """Row count of ``df`` from an action that reads every column of
+    every row: ``bit_xor(xxhash64(*cols))``. A plain ``count()`` lets
+    Spark prune every column, and with it every per-row expression
+    that computes one. ``xxhash64`` takes no maps, so a column holding
+    one is hashed as its JSON text."""
+    from pyspark.sql import functions as F
+
+    cols = [
+        F.col("`" + f.name.replace("`", "``") + "`") for f in df.schema.fields
+    ]
+    cols = [
+        F.to_json(c) if "map<" in f.dataType.simpleString() else c
+        for c, f in zip(cols, df.schema.fields)
+    ]
+    row = df.agg(F.count(F.lit(1)), F.bit_xor(F.xxhash64(*cols))).first()
+    return row[0]
 
 
 def main():
@@ -80,7 +100,7 @@ def main():
                     start = time.time()
                     df = fn(spark, SF_DIR)
                     build_s = time.time() - start
-                    rows = df.count()
+                    rows = read_all(df)
                     end = time.time()
                 finally:
                     for key in ("spark.jobGroup.id", "spark.job.description"):
