@@ -3,7 +3,8 @@
 All fit as one ``groupBy(item).agg(sum, count)`` over binary ratings
 followed by a closed-form (or numeric) per-item score — a monoid
 aggregate, which is why ``UCB.refit`` can fold new batches in by
-union + re-aggregation (streaming-friendly).
+union + re-aggregation (streaming-friendly). The per-item counts also
+carry the 0/1 rating check, so it rides the fit's one action.
 """
 
 from __future__ import annotations
@@ -14,6 +15,7 @@ from typing import Optional
 import numpy as np
 import pandas as pd
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
@@ -58,6 +60,18 @@ def _norm_isf(q: float) -> float:
     )
 
 
+def _binary_counts(model: NonPersonalizedRecommender, log: DataFrame) -> DataFrame:
+    """Per item: positives, rated rows, all rows, and whether some
+    rating is neither 0 nor 1 (``_bad``, the fit's rating check)."""
+    r = F.col(model.rating_column)
+    return log.groupBy(model.item_column).agg(
+        F.sum(r).alias("pos"),
+        F.count(r).alias("total"),
+        F.count(F.lit(1)).alias("_rows"),
+        F.max((r != 1) & (r != 0)).alias("_bad"),
+    )
+
+
 class Wilson(NonPersonalizedRecommender):
     """Wilson score lower bound on binary ratings.
 
@@ -77,38 +91,21 @@ class Wilson(NonPersonalizedRecommender):
         self.seed = seed
         super().__init__(add_cold_items=add_cold_items, cold_weight=cold_weight)
 
-    @property
-    def _init_args(self):
-        return {
-            "alpha": self.alpha,
-            "add_cold_items": self.add_cold_items,
-            "cold_weight": self.cold_weight,
-            "sample": self.sample,
-            "seed": self.seed,
-        }
-
     def _fit(self, dataset: Dataset) -> None:
-        self._check_rating(dataset)
         crit = _norm_isf(self.alpha / 2.0)
-        counts = dataset.interactions.groupBy(self.item_column).agg(
-            F.sum(self.rating_column).alias("pos"),
-            F.count(self.rating_column).alias("total"),
+        score = (F.col("pos") + F.lit(0.5 * crit**2)) / (
+            F.col("total") + F.lit(crit**2)
+        ) - F.lit(crit) / (F.col("total") + F.lit(crit**2)) * F.sqrt(
+            (F.col("total") - F.col("pos")) * F.col("pos") / F.col("total")
+            + crit**2 / 4
         )
-        self.item_popularity = counts.withColumn(
-            self.rating_column,
-            (F.col("pos") + F.lit(0.5 * crit**2))
-            / (F.col("total") + F.lit(crit**2))
-            - F.lit(crit)
-            / (F.col("total") + F.lit(crit**2))
-            * F.sqrt(
-                (F.col("total") - F.col("pos")) * F.col("pos") / F.col("total")
-                + crit**2 / 4
-            ),
-        ).drop("pos", "total")
-        self.item_popularity.cache().count()
-        self.fill = self._calc_fill(
-            self.item_popularity, self.cold_weight, self.rating_column
+        row = self._cache_popularity(
+            _binary_counts(self, dataset.interactions), _min=F.min(score)
         )
+        self.item_popularity = self._popularity.select(
+            self.item_column, score.alias(self.rating_column)
+        )
+        self.fill = row["_min"] * self.cold_weight
 
 
 class UCB(NonPersonalizedRecommender):
@@ -133,46 +130,36 @@ class UCB(NonPersonalizedRecommender):
         self.seed = seed
         super().__init__(add_cold_items=add_cold_items, cold_weight=cold_weight)
 
-    @property
-    def _init_args(self):
-        return {
-            "coef": self.coef,
-            "add_cold_items": self.add_cold_items,
-            "cold_weight": self.cold_weight,
-            "sample": self.sample,
-            "seed": self.seed,
-        }
-
     def _fit(self, dataset: Dataset) -> None:
-        self._check_rating(dataset)
-        self.items_counts_aggr = dataset.interactions.groupBy(self.item_column).agg(
-            F.sum(self.rating_column).alias("pos"),
-            F.count(self.rating_column).alias("total"),
-        )
-        self.full_count = dataset.interaction_count
-        self._calc_item_popularity()
+        self._fit_counts(_binary_counts(self, dataset.interactions))
 
     def refit(self, dataset: Dataset) -> None:
-        self._check_rating(dataset)
-        new_aggr = dataset.interactions.groupBy(self.item_column).agg(
-            F.sum(self.rating_column).alias("pos"),
-            F.count(self.rating_column).alias("total"),
-        )
-        self.items_counts_aggr = (
-            self.items_counts_aggr.union(new_aggr)
+        previous = self._popularity
+        counts = (
+            previous.unionByName(_binary_counts(self, dataset.interactions))
             .groupBy(self.item_column)
-            .agg(F.sum("pos").alias("pos"), F.sum("total").alias("total"))
+            .agg(
+                *(F.sum(c).alias(c) for c in ("pos", "total", "_rows")),
+                F.max("_bad").alias("_bad"),
+            )
         )
-        self.full_count += dataset.interaction_count
-        self._calc_item_popularity()
+        self._fit_counts(counts)
+        # new items are scored, but predict keeps the fit universe
+        self._popularity_items = None
+        previous.unpersist()  # only now: the new table keeps its cache
 
-    def _calc_item_popularity(self):
-        self.item_popularity = self.items_counts_aggr.withColumn(
-            self.rating_column,
-            F.col("pos") / F.col("total")
-            + F.sqrt(F.lit(self.coef) * F.log(F.lit(self.full_count)) / F.col("total")),
-        ).drop("pos", "total")
-        self.item_popularity.cache().count()
+    def _fit_counts(self, counts: DataFrame) -> None:
+        row = self._cache_popularity(counts, _rows=F.sum("_rows"))
+        self.full_count = row["_rows"]
+        self.item_popularity = self._popularity.select(
+            self.item_column,
+            (
+                F.col("pos") / F.col("total")
+                + F.sqrt(
+                    F.lit(self.coef) * F.log(F.lit(self.full_count)) / F.col("total")
+                )
+            ).alias(self.rating_column),
+        )
         self.fill = 1 + math.sqrt(self.coef * math.log(self.full_count))
 
 
@@ -209,12 +196,10 @@ class KLUCB(NonPersonalizedRecommender):
         }
 
     def _fit(self, dataset: Dataset) -> None:
-        self._check_rating(dataset)
-        full_count = dataset.interaction_count
-        counts = dataset.interactions.groupBy(self.item_column).agg(
-            F.sum(self.rating_column).alias("pos"),
-            F.count(self.rating_column).alias("total"),
+        row = self._cache_popularity(
+            _binary_counts(self, dataset.interactions), _rows=F.sum("_rows")
         )
+        full_count = row["_rows"]
         coef = self.coef
 
         rhs_const = math.log(full_count) + coef * math.log(math.log(max(full_count, 2)))
@@ -255,13 +240,13 @@ class KLUCB(NonPersonalizedRecommender):
                 np.array([solve(p, int(t)) for p, t in zip(p_hat, n)])
             )
 
-        self.item_popularity = counts.select(
+        # it needs the row count the action read: solved on each read
+        self.item_popularity = self._popularity.select(
             self.item_column,
             kl_ucb_bound(F.col("pos").cast("double"), F.col("total").cast("double")).alias(
                 self.rating_column
             ),
         )
-        self.item_popularity.cache().count()
         # reference kl_ucb.py:173 — optimistic cold-item fill
         self.fill = 1.0 + math.sqrt(self.coef * math.log(full_count))
 
@@ -286,27 +271,7 @@ class ThompsonSampling(NonPersonalizedRecommender):
         self.sample = sample
         super().__init__(add_cold_items=add_cold_items, cold_weight=cold_weight)
 
-    @property
-    def _init_args(self):
-        return {
-            "seed": self.seed,
-            "add_cold_items": self.add_cold_items,
-            "cold_weight": self.cold_weight,
-            "sample": self.sample,
-        }
-
     def _fit(self, dataset: Dataset) -> None:
-        self._check_rating(dataset)
-        counts = dataset.interactions.groupBy(self.item_column).agg(
-            F.sum(self.rating_column).alias("pos"),
-            F.count(self.rating_column).alias("total"),
-        ).withColumn("neg", F.col("total") - F.col("pos"))
-        # deterministic posterior state (the Beta draw below is seeded);
-        # exposed so the aggregates are oracle-checkable independently
-        self.posterior_params = counts.select(
-            self.item_column, "pos", "neg"
-        )
-
         seed = self.seed
 
         @pandas_udf(DoubleType())
@@ -314,26 +279,37 @@ class ThompsonSampling(NonPersonalizedRecommender):
             item: pd.Series, pos: pd.Series, neg: pd.Series
         ) -> pd.Series:
             # one generator per (seed, item): an item's draw does not
-            # depend on which Arrow batch it lands in, or where
+            # depend on which Arrow batch it lands in, or where. A
+            # rating outside 0/1 fails the fit after the draws, so a
+            # negative count draws nothing rather than raising here
             return pd.Series(
                 [
                     np.random.default_rng(
                         None if seed is None else [seed, int(i) & (2**64 - 1)]
                     ).beta(a + 1.0, b + 1.0)
+                    if min(a, b) >= 0
+                    else np.nan
                     for i, a, b in zip(item, pos, neg)
                 ],
                 dtype="float64",
             )
 
-        self.item_popularity = counts.select(
-            self.item_column,
+        neg = F.col("total") - F.col("pos")
+        per_item = _binary_counts(self, dataset.interactions).withColumn(
+            self.rating_column,
             beta_sample(
                 F.col(self.item_column),
                 F.col("pos").cast("double"),
-                F.col("neg").cast("double"),
-            ).alias(self.rating_column),
+                neg.cast("double"),
+            ),
         )
-        self.item_popularity.cache().count()
-        self.fill = self._calc_fill(
-            self.item_popularity, self.cold_weight, self.rating_column
+        row = self._cache_popularity(per_item, _min=F.min(self.rating_column))
+        # deterministic posterior state (the Beta draw is seeded);
+        # exposed so the aggregates are oracle-checkable independently
+        self.posterior_params = self._popularity.select(
+            self.item_column, "pos", neg.alias("neg")
         )
+        self.item_popularity = self._popularity.select(
+            self.item_column, self.rating_column
+        )
+        self.fill = row["_min"] * self.cold_weight

@@ -13,11 +13,12 @@ Personalized models filter seen items with an anti join on
 models predict in one seen-aware stage: the catalog, ranked once,
 rides a broadcast 1-row array, and each query drops its seen items
 (one ``collect_set`` per query) with array functions — no window,
-join chain or scalar pull.
+join chain or scalar pull — and fit in one action.
 """
 
 from __future__ import annotations
 
+import inspect
 import json
 from abc import ABC, abstractmethod
 from pathlib import Path
@@ -25,7 +26,7 @@ from typing import Iterable, Optional, Union
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType
 
@@ -472,9 +473,8 @@ class BaseRecommender(ABC):
         # a fit model always persists its universe sizes (loaded
         # models have no interactions to recount) — force the lazy
         # computation here so saved artifacts match the eager era
-        if not hasattr(self, "_num_items") and getattr(
-            self, "_fit_queries_base", None
-        ) is not None:
+        counted = hasattr(self, "_num_queries") and hasattr(self, "_num_items")
+        if not counted and getattr(self, "_fit_queries_base", None) is not None:
             self._compute_universe_counts()
         out = {}
         for attr in ("fill", "_num_queries", "_num_items", "full_count"):
@@ -510,9 +510,14 @@ class BaseRecommender(ABC):
 class NonPersonalizedRecommender(BaseRecommender, ABC):
     """Popularity-table models (reference ``base_rec.py:1143-1398``).
 
-    ``_fit`` must set ``self.item_popularity``
-    (``[item_id, rating]``) and ``self.fill`` (rating assigned to
-    cold items = min(pop) * cold_weight).
+    Fit runs one Spark action. ``_fit`` builds a per-item table over
+    the log and hands it to ``_cache_popularity`` with the scalars the
+    model needs (the fill, the totals its scores divide by, the 0/1
+    rating check); that caches the table and reads every scalar in one
+    ``first()``. ``_fit`` then sets ``self.item_popularity``
+    (``[item_id, rating]``, a projection of the cached table) and
+    ``self.fill`` (the rating of cold items, min(pop) * cold_weight
+    unless the model defines its own).
 
     Every score is the item's, whoever the query is, so predict skips
     the generic candidates → anti join → window chain. It builds the
@@ -521,7 +526,10 @@ class NonPersonalizedRecommender(BaseRecommender, ABC):
     array of the catalog ranked by rating desc, item desc. Each query
     slices ``k + |seen|`` entries, drops its seen items and keeps the
     k best by rating desc, item asc — the rows the generic chain
-    returns. Sampling predict draws from the same seen sets.
+    returns. Sampling predict draws from the same seen sets. When the
+    candidate items are the fit universe and the fit saw no
+    ``item_features``, ``item_popularity`` already has one row per
+    candidate, so the catalog is read from it without the universe.
     """
 
     can_predict_cold_queries = True
@@ -544,21 +552,57 @@ class NonPersonalizedRecommender(BaseRecommender, ABC):
     def _dataframes(self):
         return {"item_popularity": self.item_popularity}
 
-    @staticmethod
-    def _calc_fill(item_popularity: DataFrame, weight: float, rating_column: str) -> float:
-        return item_popularity.agg(F.min(rating_column)).first()[0] * weight
+    @property
+    def _init_args(self):
+        # every constructor argument is kept under its own name
+        names = list(inspect.signature(type(self).__init__).parameters)[1:]
+        return {name: getattr(self, name) for name in names}
 
-    @staticmethod
-    def _check_rating(dataset: Dataset):
-        rating_column = dataset.feature_schema.interactions_rating_column
-        bad = dataset.interactions.where(
-            (F.col(rating_column) != 1) & (F.col(rating_column) != 0)
-        )
-        if bad.count() > 0:
+    def fit(self, dataset: Dataset) -> "NonPersonalizedRecommender":
+        self._clear_cache()
+        super().fit(dataset)
+        self._popularity_items = None
+        if dataset.item_features is None:
+            # one popularity row per log item: the fit item universe
+            self._popularity_items = self.fit_items
+            self._num_items = self._fit_scalars["_ni"]
+        return self
+
+    def _cache_popularity(self, per_item: DataFrame, **scalars) -> Row:
+        """The fit's one action: cache ``per_item`` and read ``scalars``
+        (aggregates over it, by name) in one ``first()``, with ``_ni``,
+        its row count, unless given. A ``_bad`` column is a 0/1 rating
+        check: true in any row, the new cache is released and the model
+        keeps the table it had."""
+        scalars.setdefault("_ni", F.count(F.lit(1)))
+        if "_bad" in per_item.columns:
+            scalars["_bad"] = F.max("_bad")
+        cached = per_item.cache()
+        row = cached.agg(*(c.alias(name) for name, c in scalars.items())).first()
+        if "_bad" in scalars and row["_bad"]:
+            cached.unpersist()
             raise ValueError("Rating values in interactions must be 0 or 1")
+        self._popularity, self._fit_scalars = cached, row
+        return row
+
+    def _clear_cache(self) -> None:
+        # `item_popularity` is a projection: its cache is this table
+        if getattr(self, "_popularity", None) is not None:
+            self._popularity.unpersist()
+        self._popularity = None
 
     def _get_selected_item_popularity(self, items: DataFrame) -> DataFrame:
-        if self.add_cold_items:
+        known = F.col(self.item_column).isNotNull()
+        if items is getattr(self, "_popularity_items", None):
+            # the null id is the one a join on the universe misses
+            selected = (
+                self.item_popularity.withColumn(
+                    self.rating_column, F.when(known, F.col(self.rating_column))
+                )
+                if self.add_cold_items
+                else self.item_popularity.where(known)
+            )
+        elif self.add_cold_items:
             # a left join can build its right side, so this hint holds
             selected = items.join(
                 F.broadcast(self.item_popularity), on=self.item_column, how="left"

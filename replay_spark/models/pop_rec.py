@@ -17,6 +17,13 @@ class PopRec(NonPersonalizedRecommender):
     popularity(i) = countDistinct(users who interacted with i) / n_users,
     or sum(rating)/n_users when ``use_rating``. Parity: reference
     ``models/pop_rec.py:10-140``.
+
+    Fit is one ``rollup(item)`` over the log: the per-item rows carry
+    the score's numerator, and the grand-total row the query universe
+    size ``n_users`` (queries in ``query_features`` and a null query
+    id count, as in ``queries_count``). One ``first()`` over that
+    cached table reads the divisor, the fill and the item count;
+    ``item_popularity`` is its item rows divided by the divisor.
     """
 
     def __init__(
@@ -28,63 +35,40 @@ class PopRec(NonPersonalizedRecommender):
         self.use_rating = use_rating
         super().__init__(add_cold_items=add_cold_items, cold_weight=cold_weight)
 
-    @property
-    def _init_args(self):
-        return {
-            "use_rating": self.use_rating,
-            "add_cold_items": self.add_cold_items,
-            "cold_weight": self.cold_weight,
-        }
-
     def _fit(self, dataset: Dataset) -> None:
-        if self.use_rating:
-            agg = F.sum(self.rating_column).alias(self.rating_column)
-        else:
-            agg = F.countDistinct(self.query_column).alias(self.rating_column)
-        # the popularity divisor (universe query count) rides the plan
-        # as a broadcast 1-row aggregate instead of a driver-pulled
-        # literal: the count of the cached fit-time query universe is
-        # the same value queries_count computes (interactions plus the
-        # optional feature union, distinct), but reading it eagerly
-        # cost a whole extra action chain per fit — a full
-        # distinct-shuffle of the log at scale
-        n_q = F.broadcast(
-            self._fit_queries_base.agg(F.count(F.lit(1)).alias("_nq"))
-        )
-        # the cached frame keeps `_nq`, so the one action below reads
-        # it back instead of broadcasting the count a second time
-        self._popularity = (
-            dataset.interactions.groupBy(self.item_column)
-            .agg(agg)
-            .crossJoin(n_q)
-            .withColumn(
-                self.rating_column, F.col(self.rating_column) / F.col("_nq")
+        q, i, r = self.query_column, self.item_column, self.rating_column
+        log, in_log = dataset.interactions, F.lit(True)
+        if dataset.query_features is not None:
+            # feature-only queries count in the divisor, in no item
+            log = log.withColumn("_in_log", in_log).unionByName(
+                dataset.query_features.select(q, F.lit(False).alias("_in_log")),
+                allowMissingColumns=True,
             )
-            .cache()
+            in_log = F.col("_in_log")
+        if self.use_rating:
+            score = F.sum(F.when(in_log, F.col(r)))
+        else:
+            score = F.countDistinct(F.when(in_log, F.col(q)))
+        per_item = log.rollup(i).agg(
+            score.alias(r),
+            ((F.grouping(i) == 0) & F.max(in_log)).alias("_item"),
+            # countDistinct skips the null id that queries_count counts;
+            # the grand total covers every group, so it is the max
+            (F.countDistinct(q) + F.max(F.col(q).isNull()).cast("long")).alias("_nq"),
         )
-        self.item_popularity = self._popularity.drop("_nq")
-        # ONE action materializes the popularity cache and pulls every
-        # scalar the lifecycle needs: the fill value, the exact item
-        # universe size (the per-item grouping already IS the distinct
-        # item set of the log) and the query universe size
-        row = self._popularity.agg(
-            F.min(self.rating_column).alias("_fill"),
-            F.count(F.lit(1)).alias("_ni"),
-            F.max("_nq").alias("_nq"),
-        ).first()
-        self.fill = row["_fill"] * self.cold_weight
-        if row["_nq"] is not None:
-            self._num_queries = row["_nq"]
-        if dataset.item_features is None:
-            self._num_items = row["_ni"]
-
-    def _clear_cache(self) -> None:
-        # `item_popularity` is a projection of the cached frame, and
-        # unpersisting a projection does not release the cache
-        super()._clear_cache()
-        cached = getattr(self, "_popularity", None)
-        if cached is not None:
-            cached.unpersist()
+        row = self._cache_popularity(
+            per_item,
+            _min=F.min(F.when(F.col("_item"), F.col(r))),
+            _ni=F.count(F.when(F.col("_item"), F.lit(1))),
+            _nq=F.max("_nq"),
+        )
+        n_q = row["_nq"]
+        self.item_popularity = self._popularity.where("_item").select(
+            i, (F.col(r) / F.lit(n_q)).alias(r)
+        )
+        # a positive divisor keeps the order: min(x) / n = min(x / n)
+        self.fill = row["_min"] / n_q * self.cold_weight
+        self._num_queries = n_q
 
 
 class QueryPopRec(BaseRecommender):

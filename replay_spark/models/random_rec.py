@@ -51,16 +51,6 @@ class RandomRec(NonPersonalizedRecommender):
         self.seed = seed
         super().__init__(add_cold_items=add_cold_items, cold_weight=cold_weight)
 
-    @property
-    def _init_args(self):
-        return {
-            "distribution": self.distribution,
-            "alpha": self.alpha,
-            "seed": self.seed,
-            "add_cold_items": self.add_cold_items,
-            "cold_weight": self.cold_weight,
-        }
-
     def _fit(self, dataset: Dataset) -> None:
         if self.distribution == "popular_based":
             pop = (
@@ -83,11 +73,15 @@ class RandomRec(NonPersonalizedRecommender):
                 .distinct()
                 .withColumn(self.rating_column, F.lit(1.0))
             )
-        total = pop.agg(F.sum(self.rating_column)).first()[0]
-        self.item_popularity = pop.withColumn(
-            self.rating_column, F.col(self.rating_column) / F.lit(total)
+        r = self.rating_column
+        row = self._cache_popularity(
+            pop, _total=F.sum(r), _min=F.min(r), _max=F.max(r)
         )
-        self.item_popularity.cache().count()
-        self.fill = self._calc_fill(
-            self.item_popularity, self.cold_weight, self.rating_column
+        total = row["_total"]
+        self.item_popularity = self._popularity.select(
+            self.item_column, (F.col(r) / F.lit(total)).alias(r)
         )
+        # dividing by the total keeps the weights' order when it is
+        # positive and reverses it when negative
+        lowest = row["_min"] if total > 0 else row["_max"]
+        self.fill = lowest / total * self.cold_weight

@@ -105,9 +105,11 @@ class InteractionEntriesFilter(_BaseFilter):
                 filtered = filtered.drop("_cnt")
                 if self.allow_caching:
                     filtered.cache()
-                    if interactions is not source:  # never the caller's
-                        interactions.unpersist()
                 new_count = filtered.count()
+                # only once this pass's cache has run: an unpersist
+                # before it re-plans the pass over the whole chain
+                if self.allow_caching and interactions is not source:
+                    interactions.unpersist()
                 dropped[idx] = new_count != count
                 interactions, count = filtered, new_count
             idx = (idx + 1) % 2

@@ -1,5 +1,7 @@
+import itertools
 import os
 import sys
+from typing import Any, NamedTuple
 
 import pytest
 
@@ -45,3 +47,39 @@ def interactions(spark):
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+class SparkWork(NamedTuple):
+    result: Any
+    jobs: int
+    actions: int
+
+
+@pytest.fixture(scope="session")
+def spark_work(spark):
+    """``spark_work(fn)`` runs ``fn`` under a job group of its own and
+    returns ``SparkWork(result, jobs, actions)``: what ``fn`` returned,
+    the Spark jobs it ran and its SQL actions (query executions, each
+    of which may run several jobs under AQE)."""
+    sc = spark.sparkContext
+    store = spark._jsparkSession.sharedState().statusStore()
+    labels = itertools.count()
+
+    def run(fn):
+        group = f"spark_work_{next(labels)}"
+        sc.setJobGroup(group, group)
+        try:
+            result = fn()
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description"):
+                sc.setLocalProperty(key, None)
+        # an execution takes the job description as its own
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        executions = store.executionsList().iterator()
+        actions = 0
+        while executions.hasNext():
+            actions += executions.next().description() == group
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        return SparkWork(result, jobs, actions)
+
+    return run

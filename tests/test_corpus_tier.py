@@ -54,37 +54,25 @@ def vectors(spark):
     return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
 
-def _jobs(spark, group, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        result = fn()
-    finally:
-        for key in ("spark.jobGroup.id", "spark.job.description"):
-            sc.setLocalProperty(key, None)
-    return result, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_ngram_pairs_job_count(spark, docs):
+def test_ngram_pairs_job_count(spark_work, docs):
     """Tripwire: both sides of the pair self-join and the per-document
     sizes reuse one shingle exchange; a cache in between adds its own
     materialization jobs and splits that reuse."""
-    n_pairs, jobs = _jobs(
-        spark,
-        "test_ngram_pairs_job_count",
-        lambda: NGramJaccardDeduplicator(n=3, threshold=0.2).pairs(docs).count(),
+    n_pairs, jobs, _ = spark_work(
+        lambda: NGramJaccardDeduplicator(n=3, threshold=0.2).pairs(docs).count()
     )
     assert n_pairs >= 30
     assert jobs <= PAIRS_JOB_BOUND, jobs
 
 
-def test_quality_filter_job_count(spark, docs):
+def test_quality_filter_job_count(spark_work, docs):
     """Tripwire: the repetition signals are per-row expressions in the
     scorer's projection, with no shuffle and no join back."""
-    rows, jobs = _jobs(
-        spark,
-        "test_quality_filter_job_count",
-        lambda: QualityFilterPipeline().transform(docs).select("doc_id", "keep").collect(),
+    rows, jobs, _ = spark_work(
+        lambda: QualityFilterPipeline()
+        .transform(docs)
+        .select("doc_id", "keep")
+        .collect()
     )
     assert len(rows) == 60
     assert jobs <= QUALITY_FILTER_JOB_BOUND, jobs
@@ -169,13 +157,11 @@ def test_repetition_stats_match_reference(spark, conf):
             spark.conf.set(key, value)
 
 
-def test_hnsw_fit_job_count(spark, vectors):
+def test_hnsw_fit_job_count(spark_work, vectors):
     """Tripwire: the fit reads its corpus with one bounded collect, not
     a count followed by a sorted collect."""
-    ann, jobs = _jobs(
-        spark,
-        "test_hnsw_fit_job_count",
-        lambda: HNSWANN(M=6, ef_construction=24, seed=3).fit(vectors),
+    ann, jobs, _ = spark_work(
+        lambda: HNSWANN(M=6, ef_construction=24, seed=3).fit(vectors)
     )
     assert len(ann._ids) == 50
     assert jobs <= HNSW_FIT_JOB_BOUND, jobs

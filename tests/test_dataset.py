@@ -767,7 +767,7 @@ def test_partial_fit_keeps_shared_code_table(spark):
 JOB_BOUND = 12
 
 
-def test_dataset_label_encoder_job_count(spark):
+def test_dataset_label_encoder_job_count(spark, spark_work):
     """Tripwire: fitting and applying every rule of a two-id Dataset
     costs a fixed handful of Spark jobs. One action per rule, or an
     unknown scan per rule, pushes it over the bound."""
@@ -777,13 +777,8 @@ def test_dataset_label_encoder_job_count(spark):
         [(f"u{i % 5}", i % 7) for i in range(40)], "query_id string, item_id int"
     )
     ds = Dataset(_id_schema(), inter, check_consistency=False)
-    sc = spark.sparkContext
-    group = "test_dataset_label_encoder_job_count"
-    sc.setJobGroup(group, "DatasetLabelEncoder.fit_transform")
-    try:
-        assert DatasetLabelEncoder().fit_transform(ds).interactions.count() == 40
-    finally:
-        for key in ("spark.jobGroup.id", "spark.job.description"):
-            sc.setLocalProperty(key, None)
-    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    rows, jobs, _ = spark_work(
+        lambda: DatasetLabelEncoder().fit_transform(ds).interactions.count()
+    )
+    assert rows == 40
     assert jobs <= JOB_BOUND, jobs

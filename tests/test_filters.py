@@ -59,6 +59,24 @@ def test_interaction_entries_filter_keeps_caller_cache(spark):
     log.unpersist()
 
 
+def test_interaction_entries_filter_reads_each_pass_from_cache(spark):
+    """Each pass's cache runs before the filter releases the pass it
+    read, so pass n+1's cached plan reads pass n through an
+    InMemoryTableScan instead of recomputing the window chain from the
+    input."""
+    rows = [(u, i) for u in range(6) for i in range(u + 2)]
+    log = spark.createDataFrame(rows, "user_id int, item_id int")
+    out = InteractionEntriesFilter(
+        min_inter_per_user=3, min_inter_per_item=2
+    ).transform(log)
+    assert out.count() > 0
+    # the outer scan is the last pass's own cache, the inner one the
+    # pass before it
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("InMemoryTableScan") >= 2, plan
+    out.unpersist()
+
+
 def test_min_count_filter(spark):
     df = spark.createDataFrame([(1,), (1,), (2,)], "user_id int")
     out = MinCountFilter(2, "user_id").transform(df)

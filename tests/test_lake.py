@@ -1940,21 +1940,10 @@ READ_PLAN_JOB_BOUND = 0
 DELETE_JOB_BOUND = 3
 
 
-def test_lake_read_and_delete_job_counts(spark, tmp_path):
+def test_lake_read_and_delete_job_counts(spark, spark_work, tmp_path):
     """On a renamed + added-column table, read() builds its plan with
     no Spark job (every file is read with the recorded schema) and a
     rewrite delete stays within its job budget."""
-    sc = spark.sparkContext
-
-    def jobs(group, fn):
-        sc.setJobGroup(group, group)
-        try:
-            result = fn()
-        finally:
-            for key in ("spark.jobGroup.id", "spark.job.description"):
-                sc.setLocalProperty(key, None)
-        return result, len(sc.statusTracker().getJobIdsForGroup(group))
-
     t = LakeTable(spark, str(tmp_path / "jobs"), auto_checkpoint_every=None)
     t.append(spark.range(20).selectExpr("id", "id * 10 AS v"))
     t.rename_column("v", "vv")
@@ -1964,10 +1953,10 @@ def test_lake_read_and_delete_job_counts(spark, tmp_path):
             "id", "id * 10 AS vv", "CAST(id % 3 AS INT) AS c"
         )
     )
-    df, n = jobs("lake_read_plan", t.read)
+    df, n, _ = spark_work(t.read)
     assert n <= READ_PLAN_JOB_BOUND, n
     assert df.count() == 30
-    _, n = jobs("lake_delete", lambda: t.delete("id = 3"))
+    _, n, _ = spark_work(lambda: t.delete("id = 3"))
     assert n <= DELETE_JOB_BOUND, n
     assert t.read().filter("id = 3").count() == 0
 

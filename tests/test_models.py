@@ -428,39 +428,23 @@ def test_universe_counts_lazy_and_saved(spark, dataset):
     assert scalars["_num_items"] == row["i"]
 
 
-def _jobs(spark, group, action):
-    """Spark jobs ``action()`` runs, counted through its job group."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        action()
-    finally:
-        for key in ("spark.jobGroup.id", "spark.job.description"):
-            sc.setLocalProperty(key, None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+POP_REC_JOB_BOUND = 4
 
 
-POP_REC_JOB_BOUND = 7
-
-
-def test_pop_rec_job_count(spark, dataset):
-    """Tripwire: PopRec fit pulls its scalars in one action, and
-    predict ranks the catalog once and filters each query's seen
-    items in the same stage. A second broadcast of the query count, a
-    scalar pull or a per-query window and join chain in predict pushes
-    it over the bound."""
+def test_pop_rec_job_count(spark_work, dataset):
+    """Tripwire: PopRec fit reads the popularity, the divisor and its
+    scalars in one aggregation and one action, and predict ranks
+    ``item_popularity`` as is and filters each query's seen items in
+    the same stage. A separate query count, a broadcast divisor, a
+    universe join or a per-query window and join chain in predict
+    pushes it over the bound."""
     model = PopRec()
-    fit_jobs = _jobs(spark, "test_pop_rec_fit_jobs", lambda: model.fit(dataset))
+    _, fit_jobs, _ = spark_work(lambda: model.fit(dataset))
     assert fit_jobs <= POP_REC_JOB_BOUND, fit_jobs
-    recs = []
-    predict_jobs = _jobs(
-        spark,
-        "test_pop_rec_predict_jobs",
-        lambda: recs.append(model.predict(dataset, k=2)),
-    )
+    recs, predict_jobs, _ = spark_work(lambda: model.predict(dataset, k=2))
     assert predict_jobs <= POP_REC_JOB_BOUND, predict_jobs
-    assert recs[0].count() == 5
-    recs[0].unpersist()
+    assert recs.count() == 5
+    recs.unpersist()
 
 
 # six users, eight items; popularity ties at 2/6 (items 2, 3) and at
@@ -475,38 +459,62 @@ _NP_LOG = [
 ]
 
 
-def _np_reference(k, queries=None, items=None, add_cold_items=True,
-                  filter_seen=True, with_dataset=True):
-    """pandas replica of the non-personalized predict: rank the catalog
-    by (rating desc, item desc), take the first k + |seen| entries,
-    drop the seen ones, keep the k best by (rating desc, item asc)."""
-    import pandas as pd
+def _nulls_first(value):
+    """Sort key that orders None first, as Spark orders nulls ascending."""
+    return (value is not None, value)
 
-    log = pd.DataFrame(_NP_LOG, columns=["query_id", "item_id"])
-    pop = log.groupby("item_id")["query_id"].nunique() / log["query_id"].nunique()
-    fill = pop.min() * 0.5
+
+def _np_reference(k, queries=None, items=None, add_cold_items=True,
+                  filter_seen=True, with_dataset=True, log=_NP_LOG,
+                  feature_queries=(), feature_items=()):
+    """Python replica of the non-personalized predict: rank the catalog
+    by (rating desc, item desc), take the first k + |seen| entries,
+    drop the seen ones, keep the k best by (rating desc, item asc).
+
+    popularity = distinct non-null users / distinct queries, where the
+    queries are the log's and ``feature_queries``, a null id counted
+    once. A null item id is scored like a cold item and is nobody's
+    seen item; ``feature_items`` join the universe as cold items.
+    """
+    users = {q for q, _ in log} | set(feature_queries)
+    item_users = {}
+    for q, i in log:
+        item_users.setdefault(i, set()).update({q} - {None})
+    pop = {i: len(us) / len(users) for i, us in item_users.items()}
+    fill = min(pop.values()) * 0.5
     if items is None:
-        items = sorted(log["item_id"].unique())
+        items = {i for _, i in log} | set(feature_items)
+    warm = [i for i in items if i is not None and i in pop]
     catalog = [
-        (int(i), float(pop[i]) if i in pop.index else fill)
+        (i, pop[i] if i in warm else fill)
         for i in items
-        if add_cold_items or i in pop.index
+        if add_cold_items or i in warm
     ]
-    ranked = sorted(catalog, key=lambda kv: (-kv[1], -kv[0]))
-    if queries is None:
-        queries = sorted(log["query_id"].unique())
-    seen = (
-        log.groupby("query_id")["item_id"].apply(set).to_dict()
-        if filter_seen and with_dataset
-        else {}
+    ranked = sorted(
+        catalog, key=lambda kv: (kv[1], _nulls_first(kv[0])), reverse=True
     )
+    if queries is None:
+        queries = {q for q, _ in log}
+    seen = {}
+    if filter_seen and with_dataset:
+        for q, i in log:
+            if q is not None and i is not None:
+                seen.setdefault(q, set()).add(i)
     rows = []
     for q in queries:
         s = seen.get(q, set())
         cand = [kv for kv in ranked[: k + len(s)] if kv[0] not in s]
-        best = sorted(cand, key=lambda kv: (-kv[1], kv[0]))[:k]
-        rows.extend((int(q), i, r) for i, r in best)
-    return sorted(rows)
+        best = sorted(cand, key=lambda kv: (-kv[1], _nulls_first(kv[0])))[:k]
+        rows.extend((q, i, r) for i, r in best)
+    return sorted(rows, key=lambda row: tuple(map(_nulls_first, row)))
+
+
+def _rows(recs):
+    """Collected ``[query, item, rating]`` rows in ``_np_reference`` order."""
+    return sorted(
+        ((r[0], r[1], r[2]) for r in recs.collect()),
+        key=lambda row: tuple(map(_nulls_first, row)),
+    )
 
 
 @pytest.mark.parametrize("conf", ["shipped", "aqe_off_37"])
@@ -559,11 +567,10 @@ def test_non_personalized_predict_matches_pandas(spark, schema, conf):
         ]
         for model, args, ref in cases:
             recs = model.predict(ds, **args)
-            got = sorted((r.query_id, r.item_id, r.rating) for r in recs.collect())
+            got = _rows(recs)
             assert got == _np_reference(args["k"], **ref), (args, got)
             recs.unpersist()
-        recs = warm.predict(None, k=2, queries=[0, 99])
-        got = sorted((r.query_id, r.item_id, r.rating) for r in recs.collect())
+        got = _rows(warm.predict(None, k=2, queries=[0, 99]))
         assert got == _np_reference(2, queries=[0, 99], with_dataset=False)
     finally:
         for key, value in saved.items():
@@ -592,6 +599,160 @@ def test_non_personalized_predict_releases_its_caches(spark, schema):
     assert recs.count() > 0
     recs.unpersist()
     assert jsc.getPersistentRDDs().size() <= before
+
+
+def _np_dataset(spark, schema, log, feature_queries=(), feature_items=()):
+    import datetime
+
+    ts = datetime.datetime(2019, 8, 22)
+    df = spark.createDataFrame(
+        [(q, i, ts, 1.0) for q, i in log],
+        "query_id int, item_id int, timestamp timestamp, rating double",
+    )
+    query_features = item_features = None
+    if feature_queries:
+        query_features = spark.createDataFrame(
+            [(q, 0.5) for q in feature_queries], "query_id int, age double"
+        )
+    if feature_items:
+        item_features = spark.createDataFrame(
+            [(i, 0.5) for i in feature_items], "item_id int, price double"
+        )
+    return Dataset(
+        schema,
+        df,
+        query_features=query_features,
+        item_features=item_features,
+        check_consistency=False,
+    )
+
+
+def _predict_both_ways(model, ds, **args):
+    """Rows of ``model.predict`` as fitted, and with the catalog taken
+    through the join of ``item_popularity`` onto the fit item universe."""
+    fast = _rows(model.predict(ds, **args))
+    kept, model._popularity_items = getattr(model, "_popularity_items", None), None
+    try:
+        joined = _rows(model.predict(ds, **args))
+    finally:
+        model._popularity_items = kept
+    return fast, joined
+
+
+# null query ids (one of them the only user of item 8) and null item
+# ids (one of them the only item of query 6)
+_NULL_LOG = _NP_LOG + [(None, 1), (None, 8), (2, None), (6, None)]
+
+
+@pytest.mark.parametrize(
+    "case",
+    ["plain", "nulls", "nulls_known_only", "query_features", "item_features"],
+)
+def test_predict_over_fit_universe_reads_popularity(spark, spark_work, schema, case):
+    """Over the fit item universe predict ranks ``item_popularity`` as
+    is; its rows are the universe join's and the reference's: with
+    null query and item ids in the log (the null item is scored with
+    the fill), with add_cold_items=False, with query_features that add
+    queries to the divisor, and with item_features whose feature-only
+    items take the fill (there the join runs). Each fit is one action."""
+    log = _NULL_LOG if case.startswith("nulls") else _NP_LOG
+    add_cold_items = case != "nulls_known_only"
+    features = {
+        "query_features": dict(feature_queries=[10, 11, None]),
+        "item_features": dict(feature_items=[50, 51]),
+    }.get(case, {})
+    ds = _np_dataset(spark, schema, log, **features)
+    model = PopRec(add_cold_items=add_cold_items)
+    assert spark_work(lambda: model.fit(ds)).actions == 1
+    assert (model._popularity_items is model.fit_items) == (case != "item_features")
+    queries = {q for q, _ in log} | set(features.get("feature_queries", ()))
+    assert model.queries_count == len(queries)
+    for k in (2, 4, 20):
+        fast, joined = _predict_both_ways(model, ds, k=k)
+        assert fast == joined, (k, fast, joined)
+        expected = _np_reference(
+            k, log=log, add_cold_items=add_cold_items, **features
+        )
+        assert fast == expected, (k, fast)
+
+
+def test_sampling_predict_over_fit_universe_reads_popularity(spark, schema):
+    """Sampling predict draws from the same catalog either way."""
+    ds = _np_dataset(spark, schema, _NP_LOG)
+    for distribution in ("uniform", "popular_based"):
+        model = RandomRec(distribution, seed=7).fit(ds)
+        fast, joined = _predict_both_ways(model, ds, k=3)
+        assert fast == joined and len(fast) == 18
+
+
+def test_ucb_refit_keeps_the_fit_universe(spark, schema):
+    """After a refit that adds items, predict still recommends from the
+    fit universe: the same rows as the universe join, and none of the
+    new items."""
+    first = _np_dataset(spark, schema, _NP_LOG)
+    model = UCB().fit(first)
+    model.refit(_np_dataset(spark, schema, [(0, 20), (1, 21), (2, 0)]))
+    assert model.full_count == len(_NP_LOG) + 3
+    assert {r.item_id for r in model.item_popularity.collect()} >= {20, 21}
+    fast, joined = _predict_both_ways(model, first, k=3)
+    assert fast == joined
+    explicit = _rows(model.predict(first, k=3, items=list(range(8))))
+    assert fast == explicit
+    assert not {i for _, i, _ in fast} & {20, 21}
+
+
+def test_poprec_save_load_predicts_the_same(spark, schema, tmp_path):
+    """A loaded PopRec has no fit universe cache of its own; its predict
+    joins the saved universe and returns the fitted model's rows."""
+    ds = _np_dataset(spark, schema, _NULL_LOG)
+    model = PopRec().fit(ds)
+    model.save(str(tmp_path / "pop"))
+    loaded = PopRec.load(str(tmp_path / "pop"))
+    assert getattr(loaded, "_popularity_items", None) is None
+    expected = _np_reference(3, log=_NULL_LOG)
+    assert _rows(model.predict(ds, k=3)) == expected
+    assert _rows(loaded.predict(ds, k=3)) == expected
+
+
+_FAMILY = {
+    "PopRec": PopRec,
+    "PopRec_rating": lambda: PopRec(use_rating=True),
+    "Wilson": Wilson,
+    "UCB": UCB,
+    "KLUCB": KLUCB,
+    "ThompsonSampling": lambda: ThompsonSampling(seed=3),
+    "RandomRec_uniform": RandomRec,
+    "RandomRec_popular": lambda: RandomRec("popular_based", alpha=1.0),
+    "RandomRec_relevance": lambda: RandomRec("relevance"),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_FAMILY))
+def test_non_personalized_fit_runs_one_action(spark_work, binary_dataset, name):
+    """Tripwire: a non-personalized fit caches its per-item table and
+    reads every scalar (fill, totals, item count, the 0/1 rating check)
+    in one SQL action. A separate check, count or fill pull is a
+    second."""
+    model = _FAMILY[name]()
+    _, _, actions = spark_work(lambda: model.fit(binary_dataset))
+    assert actions == 1, actions
+    if isinstance(model, UCB):
+        _, _, actions = spark_work(lambda: model.refit(binary_dataset))
+        assert actions == 1, actions
+
+
+def test_bandit_rating_check_rides_the_fit(dataset, binary_dataset):
+    """A rating outside 0/1 fails every bandit fit after its one
+    action, and a refit with such a batch leaves UCB as it was."""
+    for model in (Wilson(), UCB(), KLUCB(), ThompsonSampling(seed=1)):
+        with pytest.raises(ValueError, match="0 or 1"):
+            model.fit(dataset)
+    model = UCB().fit(binary_dataset)
+    before = sorted(map(tuple, model.item_popularity.collect()))
+    with pytest.raises(ValueError, match="0 or 1"):
+        model.refit(dataset)
+    assert model.full_count == 6
+    assert sorted(map(tuple, model.item_popularity.collect())) == before
 
 
 # 7 users x 12 items, binary ratings; many ties in every bandit score
