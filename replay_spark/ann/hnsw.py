@@ -33,7 +33,7 @@ import math
 from typing import Optional
 
 import numpy as np
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from replay_spark.utils.spark_utils import local_df, stable_round
@@ -409,7 +409,10 @@ class HNSWANN:
     ) -> DataFrame:
         """(query_id, neighbor_id, cosine, rank) — the graph walk runs
         executor-side over Arrow batches; the index rides the closure
-        broadcast.
+        broadcast. The walk emits one row per query row holding its
+        hits, and each row is ranked in place (rounded score, then
+        neighbour id) by array expressions: no window and no exchange.
+        A query id that occurs in several rows is ranked once per row.
 
         ``filter_ids`` (one-column admissible-id frame) filters in
         two regimes, the strategy real vector stores use:
@@ -427,8 +430,12 @@ class HNSWANN:
           queries that come up SHORT of k are automatically
           re-walked at doubled oversample, up to
           ``max_widen_retries`` times — each retry re-walks ONLY
-          the underfilled queries, and the common fully-filled case
-          pays a single tiny count job."""
+          the underfilled queries. The post-filter explodes the
+          hits, semi-joins them to the admissible ids and regroups
+          them by query id before the same in-row ranking; a query
+          is filled when its ranked array holds k hits, so the
+          common fully-filled case pays one checkpoint and one
+          ``limit(1)`` probe of the queries still pending."""
         import pandas as pd
 
         if self._vecs is None:
@@ -441,6 +448,28 @@ class HNSWANN:
         ]
         desc = metric != "l2"
 
+        def to_score(dists: np.ndarray) -> np.ndarray:
+            # invert the graph distance back to the metric's reported
+            # score
+            if metric == "cosine":
+                return 1.0 - dists
+            return -dists if metric == "dot" else dists
+
+        def hits_frame(qids, nids: list, dists: list):
+            """One row per query: its neighbour ids and scores as two
+            aligned arrays."""
+            return pd.DataFrame(
+                {
+                    "query_id": pd.Series(
+                        [int(q) for q in qids], dtype="int64"
+                    ),
+                    "neighbor_id": pd.Series(nids, dtype=object),
+                    "score_raw": pd.Series(
+                        [to_score(d) for d in dists], dtype=object
+                    ),
+                }
+            )
+
         def make_walk(kk: int):
             def walk(batches):
                 for pdf in batches:
@@ -449,32 +478,20 @@ class HNSWANN:
                             list(pdf[vc]), dtype=np.float64
                         ).reshape(len(pdf), -1)
                     )
-                    qids, nids, scores = [], [], []
+                    nids, dists = [], []
                     for qid, q in zip(pdf[idc], x):
-                        for dist, node in index._knn(q, kk):
-                            if int(index._ids[node]) == int(qid):
-                                continue
-                            qids.append(int(qid))
-                            nids.append(int(index._ids[node]))
-                            # invert the graph distance back to the
-                            # metric's reported score
-                            if metric == "cosine":
-                                scores.append(1.0 - dist)
-                            elif metric == "dot":
-                                scores.append(-dist)
-                            else:
-                                scores.append(dist)
-                    yield pd.DataFrame(
-                        {
-                            "query_id": pd.Series(qids, dtype="int64"),
-                            "neighbor_id": pd.Series(
-                                nids, dtype="int64"
-                            ),
-                            "score_raw": pd.Series(
-                                scores, dtype="float64"
-                            ),
-                        }
-                    )
+                        found = [
+                            (int(index._ids[node]), dist)
+                            for dist, node in index._knn(q, kk)
+                        ]
+                        found = [(n, d) for n, d in found if n != int(qid)]
+                        nids.append(
+                            np.array([n for n, _ in found], dtype=np.int64)
+                        )
+                        dists.append(
+                            np.array([d for _, d in found], dtype=np.float64)
+                        )
+                    yield hits_frame(pdf[idc], nids, dists)
 
             return walk
 
@@ -503,71 +520,84 @@ class HNSWANN:
                             list(pdf[vc]), dtype=np.float64
                         ).reshape(len(pdf), -1)
                     )
-                    qids, nids, scores = [], [], []
+                    nids, dists = [], []
                     for qid, q in zip(pdf[idc], x):
                         if metric == "l2":
                             diff = sub - q
-                            dists = np.einsum("ij,ij->i", diff, diff)
+                            d = np.einsum("ij,ij->i", diff, diff)
                         else:
                             dots = sub @ q
-                            dists = -dots if metric == "dot" else 1.0 - dots
+                            d = -dots if metric == "dot" else 1.0 - dots
                         # ties break on id so the kk cut is stable
-                        order = np.lexsort((sub_ids, dists))[:kk]
-                        for node in order:
-                            nid = int(sub_ids[node])
-                            if nid == int(qid):
-                                continue
-                            qids.append(int(qid))
-                            nids.append(nid)
-                            d = float(dists[node])
-                            if metric == "cosine":
-                                scores.append(1.0 - d)
-                            elif metric == "dot":
-                                scores.append(-d)
-                            else:
-                                scores.append(d)
-                    yield pd.DataFrame(
-                        {
-                            "query_id": pd.Series(qids, dtype="int64"),
-                            "neighbor_id": pd.Series(
-                                nids, dtype="int64"
-                            ),
-                            "score_raw": pd.Series(
-                                scores, dtype="float64"
-                            ),
-                        }
-                    )
+                        order = np.lexsort((sub_ids, d))[:kk]
+                        order = order[sub_ids[order] != int(qid)]
+                        nids.append(sub_ids[order])
+                        dists.append(d[order])
+                    yield hits_frame(pdf[idc], nids, dists)
 
             return exact
 
-        w = Window.partitionBy("query_id").orderBy(
-            F.col(out_col).desc() if desc else F.col(out_col).asc(),
-            F.col("neighbor_id").asc(),
-        )
+        def ranked(hits: Column) -> Column:
+            """A row's k best hits, best first: the rounded score (desc
+            for cosine and dot, with nulls last; asc for l2), then the
+            neighbour id asc. One sort inside the row, no window."""
+
+            def entry(x):
+                # the Arrow conversion turns a NaN score into null; a
+                # descending order puts nulls last, an ascending one
+                # first, as Spark's default null orderings do
+                score = stable_round(x["score_raw"], 6)
+                keys = [score] if not desc else [score.isNull(), -score]
+                return F.struct(
+                    *[key.alias(f"_k{i}") for i, key in enumerate(keys)],
+                    x["neighbor_id"].alias("neighbor_id"),
+                    score.alias(out_col),
+                )
+
+            return F.slice(F.sort_array(F.transform(hits, entry)), 1, k)
 
         def topk(
             qdf: DataFrame, kk: int, exact: bool = False
         ) -> DataFrame:
+            """(query_id, _top): each query row with its ranked hits."""
             raw = qdf.select(idc, vc).mapInPandas(
                 make_exact(kk) if exact else make_walk(kk),
-                schema="query_id long, neighbor_id long, "
-                "score_raw double",
+                schema="query_id long, neighbor_id array<long>, "
+                "score_raw array<double>",
             )
+            hits = F.arrays_zip("neighbor_id", "score_raw")
             if ids_rel is not None and not exact:
-                raw = raw.join(ids_rel, "neighbor_id", "left_semi")
-            return (
-                raw.withColumn(out_col, stable_round("score_raw", 6))
-                .withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= k)
-                .select("query_id", "neighbor_id", out_col, "rank")
+                # the post-filter works on single hits; regroup the
+                # survivors by query before ranking them
+                raw = (
+                    raw.select("query_id", F.inline(hits))
+                    .join(ids_rel, "neighbor_id", "left_semi")
+                    .groupBy("query_id")
+                    .agg(
+                        F.collect_list(
+                            F.struct("neighbor_id", "score_raw")
+                        ).alias("_hits")
+                    )
+                )
+                hits = F.col("_hits")
+            return raw.select("query_id", ranked(hits).alias("_top"))
+
+        def rows(top: DataFrame) -> DataFrame:
+            return top.select(
+                "query_id", F.posexplode("_top").alias("_pos", "_hit")
+            ).select(
+                "query_id",
+                "_hit.neighbor_id",
+                f"_hit.{out_col}",
+                (F.col("_pos") + 1).alias("rank"),
             )
 
         # over-fetch one so a query that finds itself still returns k
         # (times the oversample when a post-filter will drop rows)
         if filter_ids is None:
-            return topk(queries, k + 1)
+            return rows(topk(queries, k + 1))
         if exact_nodes is not None:
-            return topk(queries, k + 1, exact=True)
+            return rows(topk(queries, k + 1, exact=True))
         kk = k * max(1, int(filter_oversample)) + 1
         parts = []
         pending = queries
@@ -585,15 +615,10 @@ class HNSWANN:
             if attempt == max_widen_retries:
                 parts.append(cur)  # retry budget spent: keep best
                 break
-            filled = (
-                cur.groupBy("query_id")
-                .agg(F.count("*").alias("_n"))
-                .filter(F.col("_n") >= k)
-                .select("query_id")
-            )
-            parts.append(cur.join(filled, "query_id", "left_semi"))
+            filled = cur.filter(F.size("_top") >= k)
+            parts.append(filled)
             pending = pending.join(
-                filled.withColumnRenamed("query_id", idc),
+                filled.select(F.col("query_id").alias(idc)),
                 idc,
                 "left_anti",
             )
@@ -603,4 +628,4 @@ class HNSWANN:
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
-        return out
+        return rows(out)

@@ -755,18 +755,17 @@ class NonPersonalizedRecommender(BaseRecommender, ABC):
                 F.col(self.rating_column)
             ),
         )
-        n_items = selected.count()
-        if n_items > self.max_items_to_collect:
+        # one bounded collect: a row past the cap means too many items
+        items_pd = selected.limit(self.max_items_to_collect + 1).toPandas()
+        if len(items_pd) > self.max_items_to_collect:
             raise ValueError(
-                f"Sampling predict would collect {n_items} items to the "
-                "driver (> max_items_to_collect="
-                f"{self.max_items_to_collect}); raise the cap explicitly "
-                "or use the non-sampling predict at this item scale"
+                "Sampling predict would collect more than "
+                f"max_items_to_collect={self.max_items_to_collect} items "
+                "to the driver; raise the cap explicitly or use the "
+                "non-sampling predict at this item scale"
             )
         # draw over item order, not the partition order toPandas returns
-        items_pd = selected.toPandas().sort_values(
-            self.item_column, ignore_index=True
-        )
+        items_pd = items_pd.sort_values(self.item_column, ignore_index=True)
         if len(items_pd) == 0:
             return seen.select(
                 self.query_column,

@@ -189,8 +189,12 @@ class NGramJaccardDeduplicator:
         )
         left = shingles.withColumnRenamed(self.id_column, "id_a")
         right = shingles.withColumnRenamed(self.id_column, "id_b")
+        # the merge hint keeps the self-join on ONE shingle-keyed
+        # exchange that both sides read (the df-cap window's, when
+        # there is a cap); left to itself, AQE sees a small side and
+        # broadcasts the whole shingle table, a job of its own
         inter = (
-            left.join(right, on="shingle")
+            left.join(right.hint("merge"), on="shingle")
             .filter(F.col("id_a") < F.col("id_b"))
             .groupBy("id_a", "id_b")
             .agg(F.count(F.lit(1)).alias("_inter"))
@@ -1068,29 +1072,34 @@ class NearDupClusters:
         most expensive artifact in a dedup pipeline (an LSH/shingle
         self-join), so it must execute exactly once, fully parallel:
         the surviving pairs (a tiny projection — two id columns) are
-        persisted and sized with one plain ``count()``. A
-        ``limit(N+1)`` probe would run the final — most expensive —
-        stage in CollectLimit's serial incremental waves, and a
-        separate fetch would re-execute the subtree (the round-5 2×
-        regression). After the count, either the driver union-find
-        collects the now-cached edges for free, or the distributed
+        materialized by ONE eager ``localCheckpoint`` that carries
+        the row count as an observed metric, so sizing them costs no
+        action of its own. A ``limit(N+1)`` probe would run the final
+        — most expensive — stage in CollectLimit's serial incremental
+        waves, and a separate fetch would re-execute the subtree (the
+        round-5 2× regression). Either the driver union-find then
+        collects the checkpointed edges, or the distributed
         propagation runs — its ``src→dst ∪ dst→src`` edge-union reads
-        the cached frame twice without recomputing it. Both branches
-        unpersist once their output no longer depends on ``pairs``.
+        the checkpoint twice without recomputing the subtree. Neither
+        branch's output reads the checkpoint, so, like the
+        propagation rounds' checkpoints, its blocks go to the
+        ContextCleaner with the frame once the call returns.
         """
-        pairs = pairs.select(id_a, id_b).persist()
-        try:
-            if (
-                self.driver_threshold
-                and pairs.count() <= self.driver_threshold
-            ):
+        # a named observe read back from the checkpoint's query
+        # execution, not an ``Observation``: registering one gives the
+        # session an unserializable observation manager, and Spark ML
+        # closures that capture the session (a LogisticRegression
+        # summary) then fail to serialize
+        observed = pairs.select(id_a, id_b).observe(
+            "near_dup_pairs", F.count(F.lit(1)).alias("rows")
+        )
+        pairs = observed.localCheckpoint(eager=True)
+        if self.driver_threshold:
+            metrics = observed._jdf.queryExecution().observedMetrics()
+            rows = metrics.get("near_dup_pairs").get().getLong(0)
+            if rows <= self.driver_threshold:
                 return self._components_driver(pairs, id_a, id_b)
-            # the distributed pass materializes (and keeps) its own
-            # label cache via per-round counts, so the candidate
-            # subtree is never re-executed after this point
-            return self._components_distributed(pairs, id_a, id_b)
-        finally:
-            pairs.unpersist()
+        return self._components_distributed(pairs, id_a, id_b)
 
     def _components_driver(
         self, pairs: DataFrame, id_a: str, id_b: str

@@ -447,6 +447,23 @@ def test_pop_rec_job_count(spark_work, dataset):
     recs.unpersist()
 
 
+# the bounded catalog collect and the result cache (a count before the
+# collect made it 3)
+SAMPLING_PREDICT_ACTION_BOUND = 2
+
+
+def test_sampling_predict_collects_catalog_once(spark_work, dataset):
+    """Tripwire: sampling predict reads its catalog with one bounded
+    collect, not a count and then a collect over the same plan."""
+    from replay_spark.models import RandomRec
+
+    model = RandomRec(seed=1).fit(dataset)
+    recs, _, actions = spark_work(lambda: model.predict(dataset, k=2))
+    assert actions <= SAMPLING_PREDICT_ACTION_BOUND, actions
+    assert recs.count() > 0
+    recs.unpersist()
+
+
 # six users, eight items; popularity ties at 2/6 (items 2, 3) and at
 # 1/6 (items 4-7), so the k-th score is often a tie
 _NP_LOG = [
