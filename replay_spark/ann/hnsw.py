@@ -433,9 +433,10 @@ class HNSWANN:
           the underfilled queries. The post-filter explodes the
           hits, semi-joins them to the admissible ids and regroups
           them by query id before the same in-row ranking; a query
-          is filled when its ranked array holds k hits, so the
-          common fully-filled case pays one checkpoint and one
-          ``limit(1)`` probe of the queries still pending."""
+          is filled when its ranked array holds k hits. Each attempt's
+          checkpoint counts the queries it walked and filled as
+          observed metrics, so the common fully-filled case pays one
+          checkpoint and no probe of the queries still pending."""
         import pandas as pd
 
         if self._vecs is None:
@@ -501,12 +502,11 @@ class HNSWANN:
             ids_rel = filter_ids.select(
                 F.col(filter_ids.columns[0]).alias("neighbor_id")
             ).distinct()
-            n_adm = ids_rel.count()
-            if n_adm <= self.exact_filter_threshold:
-                adm = np.array(
-                    [r["neighbor_id"] for r in ids_rel.collect()],
-                    dtype=np.int64,
-                )
+            # one bounded collect sizes the admissible set and, when it
+            # is selective, fetches it
+            adm = ids_rel.limit(self.exact_filter_threshold + 1).collect()
+            if len(adm) <= self.exact_filter_threshold:
+                adm = np.array([r[0] for r in adm], dtype=np.int64)
                 exact_nodes = np.nonzero(np.isin(self._ids, adm))[0]
 
         def make_exact(kk: int):
@@ -611,19 +611,39 @@ class HNSWANN:
             # by the ContextCleaner once the result is dropped, so
             # repeated filtered searches in one session don't
             # accumulate storage.
-            cur = topk(pending, kk).localCheckpoint(eager=True)
+            #
+            # The checkpoint carries the attempt's sizes as named
+            # observed metrics (not an ``Observation``, see
+            # ``NearDupClusters.components``): the query rows walked and
+            # the filled ones. A query whose hits all fail the filter
+            # leaves no row, so the walked count is taken before the
+            # post-filter; when it equals the filled count nothing is
+            # left pending and no probe job runs.
+            walked = pending.observe(
+                "hnsw_walked", F.count(F.lit(1)).alias("rows")
+            )
+            observed = topk(walked, kk).observe(
+                "hnsw_filled",
+                F.count(F.when(F.size("_top") >= k, 1)).alias("rows"),
+            )
+            cur = observed.localCheckpoint(eager=True)
             if attempt == max_widen_retries:
                 parts.append(cur)  # retry budget spent: keep best
                 break
             filled = cur.filter(F.size("_top") >= k)
             parts.append(filled)
+            metrics = observed._jdf.queryExecution().observedMetrics()
+            walked_rows, filled_rows = (
+                metrics.get(name).get().getLong(0)
+                for name in ("hnsw_walked", "hnsw_filled")
+            )
+            if walked_rows == filled_rows:
+                break
             pending = pending.join(
                 filled.select(F.col("query_id").alias(idc)),
                 idc,
                 "left_anti",
             )
-            if pending.limit(1).count() == 0:
-                break
             kk = (kk - 1) * 2 + 1  # doubled oversample re-walk
         out = parts[0]
         for p in parts[1:]:

@@ -36,6 +36,8 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from replay_spark.utils.spark_utils import release
+
 __all__ = ["LakeVectorIndex"]
 
 
@@ -154,7 +156,7 @@ class LakeVectorIndex:
         )
         old = ann._indexed
         ann._indexed = combined
-        old.unpersist()
+        release(old)
         ann.save(self.path)
         self._write_cursor(latest)
         return self

@@ -32,7 +32,12 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from replay_spark.utils.spark_utils import local_df, stable_round
+from replay_spark.utils.spark_utils import (
+    local_df,
+    plan_bytes,
+    release,
+    stable_round,
+)
 
 __all__ = ["BruteForceANN", "IVFANN", "LSHANN", "PQANN", "IVFPQANN"]
 
@@ -454,7 +459,7 @@ class IVFANN:
         )
         old = self._indexed
         self._indexed = combined
-        old.unpersist()
+        release(old)
         return self
 
     def remove(self, ids: DataFrame) -> "IVFANN":
@@ -472,7 +477,7 @@ class IVFANN:
         ).localCheckpoint(eager=True)
         old = self._indexed
         self._indexed = combined
-        old.unpersist()
+        release(old)
         return self
 
     def save(self, path: str) -> None:
@@ -778,14 +783,20 @@ class IVFPQANN:
 
     * ``fit``: sample ≤ ``train_sample`` vectors to the driver
       (seeded, documented bound — codebooks are model parameters,
-      like every KMeans); cosine L2-normalizes them (so squared-L2
-      ADC order == cosine order), dot / l2 keep the RAW vectors.
-      Seeded numpy k-means gives the coarse centroids; PQ
-      sub-codebooks are trained on RESIDUALS (vector − its cell
-      centroid — the faiss construction, much tighter quantization
-      than raw-vector PQ); ONE vectorized mapInPandas pass assigns
-      every corpus vector its cell and its m-byte residual code. The
-      persisted code relation is keyed by ``cell``.
+      like every KMeans). A corpus that fits the bound is read once,
+      by one bounded collect; a larger one is counted and sampled.
+      Cosine L2-normalizes the sample (so squared-L2 ADC order ==
+      cosine order), dot / l2 keep the RAW vectors. Seeded numpy
+      k-means gives the coarse centroids; PQ sub-codebooks are
+      trained on RESIDUALS (vector − its cell centroid — the faiss
+      construction, much tighter quantization than raw-vector PQ);
+      ONE vectorized mapInPandas pass assigns every corpus vector
+      its cell and its m-byte residual code. The code relation is
+      keyed by ``cell`` and is a lazy local checkpoint: the first job
+      that reads it fills it (``load`` reads saved codes the same
+      way). The index owns it: a re-``fit`` or an ``append`` releases
+      the codes it replaces, so a search frame built before one of
+      them must be collected first.
     * ``search``: queries compute their ``nprobe`` nearest cells and
       one m×ksub LUT per probed cell (residual against that cell's
       centroid) in one Arrow pass, then JOIN the code relation ON
@@ -845,17 +856,41 @@ class IVFPQANN:
         cents = x[rng.choice(len(x), size=k, replace=False)].copy()
         return _lloyd_update(x, cents, self.iters)
 
+    def _estimated_vectors(self, corpus: DataFrame) -> float:
+        """The plan's size estimate of the vector column, in vectors
+        of ``dim`` elements; reading it runs no job."""
+        vecs = corpus.select(self.vector_column)
+        # an array type's JVM default size is one element's width
+        width = vecs._jdf.schema().apply(0).dataType().defaultSize()
+        return plan_bytes(vecs) / (self.dim * width)
+
     def _train_sample(self, corpus: DataFrame):
-        """(corpus size, prepared driver sample) for training."""
+        """(corpus size, prepared driver sample) for training.
+
+        A corpus of at most ``train_sample`` vectors is its own
+        sample, so one bounded collect of ``train_sample + 1`` rows
+        returns the same rows, in the same order, as a count followed
+        by ``sample(1.0)``, in one job instead of three. The probe is
+        taken only when the plan's size estimate fits that many
+        vectors; a larger corpus, or a probe that overflows, pays the
+        count and the seeded sample as before."""
         import numpy as np
 
-        n = corpus.count()
-        frac = min(1.0, self.train_sample / max(n, 1))
-        sample = (
-            corpus.sample(fraction=frac, seed=self.seed)
-            .select(self.vector_column)
-            .collect()
-        )
+        vecs = corpus.select(self.vector_column)
+        cap = self.train_sample + 1
+        sample = None
+        if self._estimated_vectors(corpus) <= cap:
+            sample = vecs.limit(cap).collect()
+            if len(sample) == cap:
+                sample = None
+        if sample is None:
+            n = corpus.count()
+            frac = min(1.0, self.train_sample / max(n, 1))
+            sample = corpus.sample(fraction=frac, seed=self.seed).select(
+                self.vector_column
+            ).collect()
+        else:
+            n = len(sample)
         x = np.array([r[0] for r in sample], dtype=np.float64)
         return n, _prep_fn(self.metric)(x)
 
@@ -870,9 +905,21 @@ class IVFPQANN:
             ]
         )
 
-    def _index(self, corpus: DataFrame, n: Optional[int] = None) -> None:
+    def _index(self, corpus: DataFrame, n: int) -> None:
         self._corpus = corpus
-        self._codes = self._encode(corpus, n=n).persist()
+        # a lazy local checkpoint, not persist(): the first job that
+        # reads the codes computes and stores them inside its own
+        # stage, with no separate cache-filling job, and the blocks
+        # belong to this index, not to the session's cache manager
+        self._own_codes(
+            self._encode(corpus, n=n).localCheckpoint(eager=False)
+        )
+
+    def _own_codes(self, codes: DataFrame) -> None:
+        """Make ``codes`` the code relation and release the one it
+        replaces: the index is the only owner of its codes."""
+        old, self._codes = self._codes, codes
+        release(old)
 
     def fit(self, corpus: DataFrame) -> "IVFPQANN":
         import numpy as np
@@ -951,13 +998,12 @@ class IVFPQANN:
         if self.codebooks is None or self._codes is None:
             raise ValueError(f"{type(self).__name__} must be fit before append")
         idc, vc = self.id_column, self.vector_column
-        combined = (
+        # eager, so the combined codes no longer read the old ones
+        # when those are released
+        self._own_codes(
             self._codes.unionByName(self._encode(new_corpus))
             .localCheckpoint(eager=True)
         )
-        old = self._codes
-        self._codes = combined
-        old.unpersist()
         self._corpus = self._corpus.select(idc, vc).unionByName(
             new_corpus.select(idc, vc)
         )
@@ -1049,9 +1095,11 @@ class IVFPQANN:
                 for j in range(m)
             ]
         )
-        self._codes = spark.read.parquet(
-            os.path.join(path, "codes")
-        ).persist()
+        self._own_codes(
+            spark.read.parquet(os.path.join(path, "codes")).localCheckpoint(
+                eager=False
+            )
+        )
         self._corpus = spark.read.parquet(os.path.join(path, "corpus"))
         return self
 
@@ -1279,7 +1327,6 @@ class PQANN(IVFPQANN):
         fixed coarse centroids."""
         import numpy as np
 
-        n = None
         if codebooks is not None:
             books = np.asarray(codebooks, dtype=np.float64)
             dsub = self.dim // self.m
@@ -1288,6 +1335,9 @@ class PQANN(IVFPQANN):
                     f"codebooks shape {books.shape} != ({self.m}, ksub, {dsub})"
                 )
             self.codebooks = books
+            # the encode's partitioning needs only a close row count,
+            # so the estimate stands in for a count job
+            n = int(self._estimated_vectors(corpus))
         else:
             n, x = self._train_sample(corpus)
             self.codebooks = self._train_codebooks(

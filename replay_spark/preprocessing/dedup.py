@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from replay_spark.preprocessing.text import fingerprint_expr
+from replay_spark.utils.spark_utils import release
 
 __all__ = [
     "ExactDeduplicator",
@@ -1081,9 +1082,11 @@ class NearDupClusters:
         collects the checkpointed edges, or the distributed
         propagation runs — its ``src→dst ∪ dst→src`` edge-union reads
         the checkpoint twice without recomputing the subtree. Neither
-        branch's output reads the checkpoint, so, like the
-        propagation rounds' checkpoints, its blocks go to the
-        ContextCleaner with the frame once the call returns.
+        branch's output reads the checkpoint (the driver branch
+        returns a local frame, the distributed one its last round's
+        checkpoint), so the call releases the pair blocks itself
+        before it returns; the spent rounds' checkpoints still go to
+        the ContextCleaner.
         """
         # a named observe read back from the checkpoint's query
         # execution, not an ``Observation``: registering one gives the
@@ -1094,12 +1097,15 @@ class NearDupClusters:
             "near_dup_pairs", F.count(F.lit(1)).alias("rows")
         )
         pairs = observed.localCheckpoint(eager=True)
-        if self.driver_threshold:
-            metrics = observed._jdf.queryExecution().observedMetrics()
-            rows = metrics.get("near_dup_pairs").get().getLong(0)
-            if rows <= self.driver_threshold:
-                return self._components_driver(pairs, id_a, id_b)
-        return self._components_distributed(pairs, id_a, id_b)
+        try:
+            if self.driver_threshold:
+                metrics = observed._jdf.queryExecution().observedMetrics()
+                rows = metrics.get("near_dup_pairs").get().getLong(0)
+                if rows <= self.driver_threshold:
+                    return self._components_driver(pairs, id_a, id_b)
+            return self._components_distributed(pairs, id_a, id_b)
+        finally:
+            release(pairs)
 
     def _components_driver(
         self, pairs: DataFrame, id_a: str, id_b: str

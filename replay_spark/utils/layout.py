@@ -41,6 +41,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from replay_spark.utils.spark_utils import plan_bytes
+
 __all__ = [
     "ZOrderLayout",
     "compact_parquet",
@@ -74,8 +76,8 @@ def compact_parquet(
     """
     df = spark.read.parquet(input_path)
     # logical-plan statistics reflect the file-index byte size
-    input_bytes = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    n_files = max(1, int((int(input_bytes) + target_file_mb * 2**20 - 1)
+    input_bytes = plan_bytes(df)
+    n_files = max(1, int((input_bytes + target_file_mb * 2**20 - 1)
                          // (target_file_mb * 2**20)))
     if zorder_by:
         z = ZOrderLayout(list(zorder_by))

@@ -50,6 +50,8 @@ __all__ = [
     "grouped_exact_quantiles",
     "diagnose_skew",
     "local_df",
+    "plan_bytes",
+    "release",
     "bucketed_apply_in_pandas",
     "map_rows",
 ]
@@ -455,6 +457,29 @@ def cache_temp_view(df: DataFrame, name: str) -> None:
 def drop_temp_view(name: str) -> None:
     spark = SparkSession.getActiveSession()
     spark.catalog.dropTempView(name)
+
+
+def plan_bytes(df: DataFrame) -> int:
+    """The optimizer's size estimate of ``df`` in bytes (the file
+    index's bytes for a scan, a row-width share of it for a
+    projection); reading it runs no job."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+
+def release(df: Optional[DataFrame]) -> None:
+    """Free the storage behind ``df``: a cached frame's cache entry,
+    or a local checkpoint's blocks. ``unpersist()`` does nothing on a
+    checkpoint: its blocks belong to the checkpointed RDD, not to the
+    cache manager. Anything that still reads a released checkpoint
+    fails, so only its owner calls this, once nothing reads it."""
+    if df is None:
+        return
+    if df.is_cached:
+        df.unpersist()
+        return
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
 
 
 def bucketed_apply_in_pandas(

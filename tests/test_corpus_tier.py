@@ -28,6 +28,11 @@ PAIRS_JOB_BOUND = 6
 HNSW_FIT_JOB_BOUND = 1
 CLUSTERS_JOB_BOUND = 2
 HNSW_SEARCH_JOB_BOUND = 1
+# a filtered search and its collect: 3 on the exact path (6 with a
+# count of the admissible ids before their collect), 7 on the broad
+# path (14 with a probe job for the queries still pending)
+HNSW_EXACT_FILTER_JOB_BOUND = 3
+HNSW_BROAD_FILTER_JOB_BOUND = 7
 # the verdict is per-row expressions: one job (7 with the repetition
 # signals' explode, two doc-keyed shuffles and the joins)
 QUALITY_FILTER_JOB_BOUND = 1
@@ -266,6 +271,20 @@ def test_near_dup_clusters_keep_the_session_serializable(spark, docs):
     assert len(jvm.org.apache.spark.util.Utils.serialize(spark._jsparkSession)) > 0
 
 
+def test_near_dup_clusters_release_their_pairs(spark, docs):
+    """The pair checkpoint is released before ``components`` returns:
+    the driver branch's output is a local frame, so no storage stays."""
+    from replay_spark.preprocessing.dedup import NearDupClusters
+
+    def stored():
+        return {r.id() for r in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+    pairs = NGramJaccardDeduplicator(n=3, threshold=0.2).pairs(docs)
+    before = stored()
+    assert len(NearDupClusters().components(pairs).collect()) >= 60
+    assert stored() - before == set()
+
+
 def test_hnsw_search_job_count(spark_work, vectors):
     """Tripwire: an unfiltered search ranks each query's hits inside
     the walk's own row; a per-query window adds an exchange and a job."""
@@ -274,6 +293,41 @@ def test_hnsw_search_job_count(spark_work, vectors):
     rows, jobs, _ = spark_work(lambda: ann.search(queries, k=4).collect())
     assert len(rows) == 40
     assert jobs <= HNSW_SEARCH_JOB_BOUND, jobs
+
+
+@pytest.fixture(scope="module")
+def filter_corpus(spark):
+    """300 random 8-d vectors; every id but those divisible by 4 is
+    admissible to the filtered searches."""
+    rng = np.random.default_rng(17)
+    base = rng.normal(size=(300, 8))
+    rows = [(i, [float(x) for x in v]) for i, v in enumerate(base)]
+    corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    return corpus, corpus.filter("vec_id % 4 != 0").select("vec_id")
+
+
+@pytest.mark.parametrize(
+    "threshold, bound",
+    [(50_000, HNSW_EXACT_FILTER_JOB_BOUND), (0, HNSW_BROAD_FILTER_JOB_BOUND)],
+    ids=["exact", "broad"],
+)
+def test_hnsw_filtered_search_job_count(spark_work, filter_corpus, threshold, bound):
+    """Tripwire: the exact path sizes and fetches the admissible ids in
+    one bounded collect, and the broad path reads whether any query is
+    still pending from its attempt's checkpoint, with no probe job."""
+    corpus, ids = filter_corpus
+    ann = HNSWANN(
+        M=8, ef_construction=48, ef_search=48, seed=1,
+        exact_filter_threshold=threshold,
+    ).fit(corpus)
+    rows, jobs, _ = spark_work(
+        lambda: ann.search(
+            corpus.filter("vec_id < 10"), k=4, filter_ids=ids
+        ).collect()
+    )
+    assert jobs <= bound, jobs
+    assert Counter(r["query_id"] for r in rows) == {q: 4 for q in range(10)}
+    assert all(r["neighbor_id"] % 4 for r in rows)
 
 
 RANK_K = 4
