@@ -36,7 +36,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from replay_spark.utils.spark_utils import local_df, stable_round
+from replay_spark.utils.spark_utils import local_df, observed_metrics, stable_round
 
 __all__ = ["HNSWANN"]
 
@@ -614,7 +614,7 @@ class HNSWANN:
             #
             # The checkpoint carries the attempt's sizes as named
             # observed metrics (not an ``Observation``, see
-            # ``NearDupClusters.components``): the query rows walked and
+            # ``spark_utils.observed_metrics``): the query rows walked and
             # the filled ones. A query whose hits all fail the filter
             # leaves no row, so the walked count is taken before the
             # post-filter; when it equals the filled count nothing is
@@ -632,12 +632,8 @@ class HNSWANN:
                 break
             filled = cur.filter(F.size("_top") >= k)
             parts.append(filled)
-            metrics = observed._jdf.queryExecution().observedMetrics()
-            walked_rows, filled_rows = (
-                metrics.get(name).get().getLong(0)
-                for name in ("hnsw_walked", "hnsw_filled")
-            )
-            if walked_rows == filled_rows:
+            seen = observed_metrics(observed)
+            if seen.get("hnsw_walked") == seen.get("hnsw_filled"):
                 break
             pending = pending.join(
                 filled.select(F.col("query_id").alias(idc)),

@@ -5,10 +5,10 @@ a dedup pipeline (near-dup groups, URL mirrors, entity resolution),
 but it is useful far beyond dedup — so the engine that
 :class:`replay_spark.preprocessing.dedup.NearDupClusters` proved
 hash-correct (driver union-find below ``driver_threshold`` edges,
-distributed min-label propagation with per-round convergence counts
-above it — O(graph diameter) keyed-join rounds, never a collect of
-an unbounded edge set) is exposed here under its own name, with the
-graph-standard ``src``/``dst`` column vocabulary.
+distributed min-label propagation above it, one observed
+``spark_utils.fixpoint`` round per hop — O(graph diameter) keyed-join
+rounds, never a collect of an unbounded edge set) is exposed here
+under its own name, with the graph-standard ``src``/``dst`` columns.
 
 PageRank lives in :class:`replay_spark.web.LinkGraphRank` (the crawl
 tier grew it first); re-exported here for discoverability.
@@ -16,9 +16,13 @@ tier grew it first); re-exported here for discoverability.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from replay_spark.preprocessing.dedup import NearDupClusters
+from replay_spark.utils.spark_utils import fixpoint, observed_rows, release
 from replay_spark.web import LinkGraphRank  # noqa: F401  (re-export)
 
 __all__ = [
@@ -61,6 +65,15 @@ class ConnectedComponents:
         return self._engine.components(edges, id_a=src, id_b=dst)
 
 
+def _canonical(edges: DataFrame, s: str, d: str) -> DataFrame:
+    """Each undirected edge once, as ``(a, b)`` with ``a < b``."""
+    return (
+        edges.select(F.least(s, d).alias("a"), F.greatest(s, d).alias("b"))
+        .filter(F.col("a") != F.col("b"))
+        .distinct()
+    )
+
+
 class TriangleCounter:
     """Per-node and global triangle counts on an undirected edge
     list — the clustering-coefficient / spam-farm / community
@@ -91,28 +104,14 @@ class TriangleCounter:
         self.src_column = src_column
         self.dst_column = dst_column
 
-    def _canonical(self, edges: DataFrame) -> DataFrame:
-        from pyspark.sql import functions as F
-
-        s, d = self.src_column, self.dst_column
-        return (
-            edges.select(
-                F.least(s, d).alias("a"), F.greatest(s, d).alias("b")
-            )
-            .filter(F.col("a") != F.col("b"))
-            .distinct()
-        )
-
     def triangles(self, edges: DataFrame) -> DataFrame:
         """One row per triangle: (x, y, z) with x < y < z."""
-        und = self._canonical(edges).persist()
+        und = _canonical(edges, self.src_column, self.dst_column).persist()
         return self._triangles_from(und)
 
     def _triangles_from(self, und: DataFrame) -> DataFrame:
         """Triangle enumeration over an already-persisted canonical
         edge set (``und`` is referenced four times below)."""
-        from pyspark.sql import functions as F
-
         deg = (
             und.select(F.col("a").alias("node"))
             .unionAll(und.select(F.col("b").alias("node")))
@@ -175,9 +174,7 @@ class TriangleCounter:
     def transform(self, edges: DataFrame) -> DataFrame:
         """(node, n_triangles) for every node that appears in an
         edge; nodes in no triangle report 0."""
-        from pyspark.sql import functions as F
-
-        und = self._canonical(edges).persist()
+        und = _canonical(edges, self.src_column, self.dst_column).persist()
         tri = self._triangles_from(und).persist()
         per_node = (
             tri.select(F.col("x").alias("node"))
@@ -210,18 +207,17 @@ class KCoreDecomposition:
     algebra: per round, ONE degree aggregation over the surviving
     edges plus two semi-joins to drop edges incident to sub-k nodes.
     The frontier only shrinks, so per-round cost tracks the
-    remaining subgraph, and each round's edge set is eagerly
-    localCheckpoint-ed — O(1) logical-plan size no matter how many
-    rounds (the connected-components lesson; cache alone doubles the
-    plan per round and OOMs the optimizer). Rounds are bounded by
-    the peeling depth (≤ diameter-ish in practice, ``rounds_``
-    records the actual count — the ``q_kcore`` oracle unrolls a
-    fixed superset of rounds, which is sound because peeling is
-    idempotent at its fixpoint).
+    remaining subgraph. Each round is a ``spark_utils.fixpoint``
+    checkpoint that observes the edges it reads and keeps; the first
+    that keeps none or all is the fixpoint, and running out of
+    ``max_iterations`` before it warns. Rounds are bounded by the
+    peeling depth (``rounds_`` records the actual count — the
+    ``q_kcore`` oracle unrolls a fixed superset of rounds, which is
+    sound because peeling is idempotent at its fixpoint).
 
     ``core_numbers(max_k)`` peels k = 1..max_k, feeding each k-core's
-    edges (a subset) into the next round — total cost is the sum of
-    monotonically shrinking peels, never max_k full-graph passes.
+    edges (a subset) into the next peel until one is empty — total
+    cost is the sum of shrinking peels, never max_k full passes.
     """
 
     def __init__(
@@ -237,22 +233,8 @@ class KCoreDecomposition:
         self.max_iterations = max_iterations
         self.rounds_ = 0
 
-    def _canonical(self, edges: DataFrame) -> DataFrame:
-        from pyspark.sql import functions as F
-
-        s, d = self.src_column, self.dst_column
-        return (
-            edges.select(
-                F.least(s, d).alias("a"), F.greatest(s, d).alias("b")
-            )
-            .filter(F.col("a") != F.col("b"))
-            .distinct()
-        )
-
     @staticmethod
     def _surviving(e: DataFrame, k: int) -> DataFrame:
-        from pyspark.sql import functions as F
-
         deg = (
             e.select(F.col("a").alias("node"))
             .unionAll(e.select(F.col("b").alias("node")))
@@ -261,63 +243,55 @@ class KCoreDecomposition:
         )
         return deg.filter(F.col("_deg") >= k).select("node")
 
-    def _peel(self, e: DataFrame, k: int) -> DataFrame:
-        """Edges of the k-core of an already-canonical edge set."""
-        from pyspark.sql import functions as F
+    def _peel(self, e: DataFrame, k: int) -> tuple[DataFrame, int]:
+        """Edges of the k-core of a canonical edge set, and their count."""
+        def step(e: DataFrame, seen: dict) -> DataFrame:
+            keep = self._surviving(e, k)  # reads ``e`` unobserved
+            return (
+                e.observe("kcore_in", F.count(F.lit(1)).alias("rows"))
+                .join(keep.withColumnRenamed("node", "a"), "a", "left_semi")
+                .join(keep.withColumnRenamed("node", "b"), "b", "left_semi")
+                .observe("kcore_out", F.count(F.lit(1)).alias("rows"))
+            )
 
-        e = e.localCheckpoint(eager=True)
-        prev = e.count()
-        self.rounds_ = 0
-        for _ in range(self.max_iterations):
-            if prev == 0:
-                break
-            keep = self._surviving(e, k)
-            e2 = (
-                e.join(
-                    keep.withColumnRenamed("node", "a"), "a", "left_semi"
-                ).join(
-                    keep.withColumnRenamed("node", "b"), "b", "left_semi"
-                )
-            ).localCheckpoint(eager=True)
-            n = e2.count()
-            self.rounds_ += 1
-            e = e2
-            if n == prev:
-                break
-            prev = n
-        return e
+        # done when the round kept no edge, or every edge it read
+        e, self.rounds_, seen = fixpoint(
+            e, step, self.max_iterations, "KCoreDecomposition",
+            done=lambda seen: observed_rows(seen, "kcore_out")
+            in (0, observed_rows(seen, "kcore_in")),
+        )
+        return e, observed_rows(seen, "kcore_out")
 
     def core(self, edges: DataFrame, k: int) -> DataFrame:
         """``[node]`` — every node of the k-core (each has ≥ k
         neighbors inside the core)."""
         if k < 1:
             raise ValueError("k must be >= 1")
-        return self._surviving(self._peel(self._canonical(edges), k), k)
+        canonical = _canonical(
+            edges, self.src_column, self.dst_column
+        ).localCheckpoint(eager=True)
+        peeled, _ = self._peel(canonical, k)
+        release(canonical)
+        return self._surviving(peeled, k)
 
     def core_numbers(self, edges: DataFrame, max_k: int) -> DataFrame:
         """``[node, core]`` — the largest k ≤ ``max_k`` whose k-core
         contains the node (nodes of the edge list only)."""
-        from pyspark.sql import functions as F
-
         if max_k < 1:
             raise ValueError("max_k must be >= 1")
-        e = self._canonical(edges)
-        out = None
+        canonical = _canonical(
+            edges, self.src_column, self.dst_column
+        ).localCheckpoint(eager=True)
+        e, members = canonical, []
         for k in range(1, max_k + 1):
-            e = self._peel(e, k)  # k-core edges (subset of previous)
-            members = self._surviving(e, k).select(
-                "node", F.lit(k).alias("core")
-            )
-            if members.isEmpty():
+            e, n_edges = self._peel(e, k)  # a subset of the previous
+            if n_edges == 0:
                 break
-            out = (
-                members
-                if out is None
-                else out.unionByName(members)
-            )
-        if out is None:
-            schema = "node long, core int"
-            return edges.sparkSession.createDataFrame([], schema)
+            members.append(self._surviving(e, k).withColumn("core", F.lit(k)))
+        release(canonical)
+        if not members:
+            return edges.sparkSession.createDataFrame([], "node long, core int")
+        out = reduce(DataFrame.unionByName, members)
         return out.groupBy("node").agg(
             F.max("core").cast("int").alias("core")
         )

@@ -3,7 +3,7 @@
 Recommend items popular inside a category (or any of its leaf
 descendants). The category tree is expanded to a
 ``category → leaf_cat`` mapping by iterative self-join until
-fixpoint (driver-side loop over tree depth, each step a join).
+fixpoint (one observed ``spark_utils.fixpoint`` round per tree level).
 Parity: reference ``models/cat_pop_rec.py:23-293``.
 """
 
@@ -13,6 +13,8 @@ from typing import Iterable, Optional, Union
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from replay_spark.utils.spark_utils import fixpoint, observed_rows, release
 
 __all__ = ["CatPopRec"]
 
@@ -43,51 +45,44 @@ class CatPopRec:
             F.col("parent_cat").alias("anc"), F.col("category").alias("desc")
         )
         # leaves: categories that are never parents
-        leaves = (
-            edges.select(F.col("desc").alias("cat"))
-            .union(edges.select(F.col("anc").alias("cat")))
-            .distinct()
-            .join(
-                edges.select(F.col("anc").alias("cat")).distinct(),
-                on="cat",
-                how="left_anti",
-            )
+        leaves = edges.select(F.col("desc").alias("cat")).distinct().join(
+            edges.select(F.col("anc").alias("cat")), on="cat", how="left_anti"
         )
-        # transitive closure from each node down to leaves
-        mapping = edges.select(F.col("anc").alias("category"), F.col("desc"))
-        closure = mapping
-        for _ in range(self.max_iter):
-            expanded = (
-                closure.join(
-                    edges.select(
-                        F.col("anc").alias("desc"), F.col("desc").alias("next_desc")
-                    ),
-                    on="desc",
-                )
-                .select("category", F.col("next_desc").alias("desc"))
+        # transitive closure from each node down to leaves, done when
+        # a round adds no pair (counted on the union branch only)
+        children = edges.select(
+            F.col("anc").alias("desc"), F.col("desc").alias("next_desc")
+        )
+
+        def step(closure: DataFrame, seen: dict) -> DataFrame:
+            expanded = closure.join(children, on="desc").select(
+                "category", F.col("next_desc").alias("desc")
             )
-            new_closure = closure.union(expanded).distinct()
-            if new_closure.count() == closure.count():
-                closure = new_closure
-                break
-            closure = new_closure
+            return (
+                closure.observe("closure_in", F.count(F.lit(1)).alias("rows"))
+                .union(expanded)
+                .distinct()
+                .observe("closure_out", F.count(F.lit(1)).alias("rows"))
+            )
+
+        closure, _, _ = fixpoint(
+            edges.select(F.col("anc").alias("category"), F.col("desc")),
+            step,
+            self.max_iter,
+            "CatPopRec category closure",
+            done=lambda seen: observed_rows(seen, "closure_out")
+            == observed_rows(seen, "closure_in"),
+        )
         leaf_map = closure.join(
             leaves.select(F.col("cat").alias("desc")), on="desc", how="left_semi"
         ).select("category", F.col("desc").alias("leaf_cat"))
-        # every category/leaf also maps to itself
-        self_map = (
-            edges.select(F.col("anc").alias("category"))
-            .union(edges.select(F.col("desc").alias("category")))
-            .distinct()
-            .join(
-                leaves.select(F.col("cat").alias("category")),
-                on="category",
-                how="left_semi",
-            )
-            .select("category", F.col("category").alias("leaf_cat"))
+        # every leaf also maps to itself
+        self_map = leaves.select(
+            F.col("cat").alias("category"), F.col("cat").alias("leaf_cat")
         )
         self.leaf_cat_mapping = leaf_map.union(self_map).distinct().cache()
         self.leaf_cat_mapping.count()
+        release(closure)
 
     def fit(self, interactions: DataFrame) -> "CatPopRec":
         """``interactions``: [query_id, item_id, category(, rating)]."""

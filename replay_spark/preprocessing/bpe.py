@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType
 
 from replay_spark.preprocessing.text import tokenize_expr
-from replay_spark.utils.spark_utils import map_rows
+from replay_spark.utils.spark_utils import fixpoint, map_rows, release
 
 __all__ = ["BPETokenizer", "ByteLevelBPETokenizer", "WordPieceTokenizer"]
 
@@ -193,10 +193,13 @@ class BPETokenizer:
                 ).otherwise(c),
             ).alias("syms"),
             "freq",
-        ).persist()
+        )
         merges: list = []
         K = self.batch_candidates
-        while len(merges) < self.num_merges:
+
+        def step(words: DataFrame, seen: dict) -> Optional[DataFrame]:
+            if len(merges) >= self.num_merges:
+                return None
             pairs = words.select(
                 F.explode(
                     F.arrays_zip(
@@ -218,7 +221,7 @@ class BPETokenizer:
                 .collect()
             )
             if not top or top[0]["n"] < self.min_pair_count:
-                break
+                return None
             counts = {(r["a"], r["b"]): r["n"] for r in top}
             # pairs beyond the collected list have count <= the K-th
             # collected count; if the list is complete, none exist
@@ -258,21 +261,20 @@ class BPETokenizer:
                     t = _merge_word(t, p)
                 yield (list(t),)
 
-            # localCheckpoint (eager) materializes AND truncates the
-            # logical plan: without it every round chains another
-            # mapInPandas onto the plan and a deep merge run grows an
-            # O(rounds)-deep lineage (driver OOM well before 32k
-            # merges); with it each round starts from a flat scan of
-            # the checkpointed partitions
-            new_words = map_rows(
+            return map_rows(
                 words,
                 ["syms"],
                 apply_merges,
                 [("syms", ArrayType(StringType())), "freq"],
-            ).localCheckpoint(eager=True)
-            words.unpersist()
-            words = new_words
-        words.unpersist()
+            )
+
+        # each round's checkpoint truncates the plan, which would
+        # otherwise chain one Python stage per round (driver OOM well
+        # before 32k merges); every round merges at least one pair
+        words, _, _ = fixpoint(
+            words, step, self.num_merges, "BPETokenizer merge rounds"
+        )
+        release(words)
         return merges
 
     # -- inference -----------------------------------------------------------

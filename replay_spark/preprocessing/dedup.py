@@ -31,14 +31,20 @@ from __future__ import annotations
 
 import math
 import random
-import warnings
 from typing import Optional
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from replay_spark.preprocessing.text import fingerprint_expr
-from replay_spark.utils.spark_utils import release
+from replay_spark.utils.spark_utils import (
+    fixpoint,
+    local_df,
+    observed_metrics,
+    observed_rows,
+    release,
+    stable_round,
+)
 
 __all__ = [
     "ExactDeduplicator",
@@ -944,8 +950,6 @@ class SemanticDeduplicator:
     def flags(self, df: DataFrame, centroids=None) -> DataFrame:
         """(id, cluster, kept) for every input row: ``kept`` is false
         when an earlier same-cluster row is within the threshold."""
-        from replay_spark.utils.spark_utils import stable_round
-
         idx = self._index(df, centroids)
         left = idx.select(
             F.col("neighbor_id").alias("_ida"),
@@ -1020,9 +1024,8 @@ class NearDupClusters:
     O(graph diameter) rounds with one shuffle-join + one aggregate
     per round. Near-dup candidate graphs are near-cliques (diameter
     2-4 in practice), so the loop exits after a handful of rounds;
-    the driver only ever pulls a one-row convergence count. Each
-    round's result is cached and the previous round unpersisted to
-    keep lineage flat. For adversarially deep graphs (chains) raise
+    each round runs on ``spark_utils.fixpoint`` and observes its own
+    label-change count. For adversarially deep graphs (chains) raise
     ``max_iterations`` or pre-bucket; the round count — not the data
     volume — is the only scale sensitivity, every round being a
     plain key-partitioned join.
@@ -1085,22 +1088,15 @@ class NearDupClusters:
         branch's output reads the checkpoint (the driver branch
         returns a local frame, the distributed one its last round's
         checkpoint), so the call releases the pair blocks itself
-        before it returns; the spent rounds' checkpoints still go to
-        the ContextCleaner.
+        before it returns.
         """
-        # a named observe read back from the checkpoint's query
-        # execution, not an ``Observation``: registering one gives the
-        # session an unserializable observation manager, and Spark ML
-        # closures that capture the session (a LogisticRegression
-        # summary) then fail to serialize
         observed = pairs.select(id_a, id_b).observe(
             "near_dup_pairs", F.count(F.lit(1)).alias("rows")
         )
         pairs = observed.localCheckpoint(eager=True)
         try:
             if self.driver_threshold:
-                metrics = observed._jdf.queryExecution().observedMetrics()
-                rows = metrics.get("near_dup_pairs").get().getLong(0)
+                rows = observed_metrics(observed)["near_dup_pairs"]["rows"]
                 if rows <= self.driver_threshold:
                     return self._components_driver(pairs, id_a, id_b)
             return self._components_distributed(pairs, id_a, id_b)
@@ -1136,8 +1132,6 @@ class NearDupClusters:
         schema = pairs.select(
             F.col(id_a).alias("node"), F.col(id_a).alias("component")
         ).schema
-        from replay_spark.utils.spark_utils import local_df
-
         return local_df(spark, out, schema)
 
     def _components_distributed(
@@ -1155,32 +1149,20 @@ class NearDupClusters:
             .withColumn("label", F.col("node"))
             .cache()
         )
-        # each round materializes its labels with an EAGER
-        # localCheckpoint — a cache() alone keeps the logical plan,
-        # and the self-referencing join DOUBLES that plan every
-        # round: by round ~10 merely rendering the explain string for
-        # AQE OOMs the driver (observed on a 20-chain diameter-9
-        # graph). The checkpoint truncates lineage to the
-        # materialized blocks, so plan size, optimizer time, and the
-        # convergence count all stay O(1) per round regardless of
-        # graph diameter; spent rounds' blocks are reclaimed by the
-        # ContextCleaner when their RDDs fall out of scope
-        changed = 0
-        auto = self.jump_after_rounds == "auto"
-        jump_on = False
-        prev_changed: Optional[int] = None
-        self.last_rounds_ = 0
-        for round_idx in range(self.max_iterations):
-            self.last_rounds_ = round_idx + 1
+        changed = F.count(F.when(F.col("label") < F.col("_old"), 1)).alias("rows")
+        history: list = []  # each finished round's label-change count
+        jumped: list = []  # the jump rounds' stored propagation steps
+
+        def step(labels: DataFrame, seen: dict) -> DataFrame:
+            if seen:
+                history.append(observed_rows(seen, "near_dup_changed"))
             # one round = ONE shuffle: the neighbor label contributions
             # (edges ⋈ labels, re-keyed to the receiving node) union
             # the node's own labeled row and fold in a single
             # groupBy(node) aggregation — min over {own label} ∪
             # {neighbor labels} IS the propagation step, and the own
             # row carries the previous label through max(_old) (unique
-            # per node) for the convergence count. The previous shape
-            # (join → groupBy min → left join back onto labels) paid a
-            # second key-shuffle join every round for the same result.
+            # per node) for the change count
             contrib = edges.join(
                 labels.select(
                     F.col("node").alias("dst"),
@@ -1206,83 +1188,54 @@ class NearDupClusters:
                 )
             )
             # pointer jumping (shortcutting): follow each node's label
-            # to ITS label in the same round — the reachable-minimum
-            # distance doubles per iteration, so convergence is
-            # O(log diameter) rounds instead of O(diameter) on deep
-            # (chain-like) graphs. But the jump is a second full
-            # label-to-label self-join per round, and near-dup
-            # candidate graphs are near-cliques (diameter 2-4): there
-            # plain propagation already converges within ~3 rounds and
-            # the extra join is pure fixed cost (measured: the
-            # unconditional jump regressed the sf1 dedup-clusters
-            # bench 3.9s -> 6.1s while saving zero rounds). ADAPTIVE
-            # rule: run plain propagation for the first
-            # ``jump_after_rounds`` rounds; if still unconverged the
-            # graph is provably deeper than the common case (min-label
-            # distance covered so far >= round count), so enable the
-            # jump from then on and converge in O(log diameter).
-            plain_round = (
-                not jump_on if auto else round_idx < self.jump_after_rounds
-            )
-            if plain_round:
-                new_labels = stepped.localCheckpoint(eager=True)
+            # to ITS label in the same round — O(log diameter) rounds
+            # instead of O(diameter) on deep (chain-like) graphs, for a
+            # second self-join per round that near-clique candidate
+            # graphs never need (the unconditional jump regressed the
+            # sf1 dedup-clusters bench 3.9s -> 6.1s saving zero
+            # rounds). "auto" turns it on for good once a round's
+            # change count fails to halve: the frontier is advancing
+            # hop by hop
+            if self.jump_after_rounds == "auto":
+                jump = any(b <= 2 * a for a, b in zip(history[1:], history))
             else:
-                # labels table maps node -> label; look the label up
-                # as a node to jump one level toward the root — labels
-                # only ever take existing node ids, so the lookup
-                # always hits. Materialize the propagation step FIRST
-                # so the self-join reads the checkpointed blocks twice
-                # instead of recomputing the join+agg subtree on both
-                # sides.
+                jump = len(history) >= self.jump_after_rounds
+            if jump:
+                # labels only ever take existing node ids, so looking the
+                # label up as a node always hits; the step is stored first
+                # so the self-join reads it twice without recomputing it
                 base = stepped.localCheckpoint(eager=True)
-                jump = base.alias("a").join(
+                jumped.append(base)
+                stepped = base.alias("a").join(
                     base.select(
-                        F.col("node").alias("_jn"),
-                        F.col("label").alias("_jl"),
+                        F.col("node").alias("_jn"), F.col("label").alias("_jl")
                     ),
                     F.col("a.label") == F.col("_jn"),
                     how="left",
-                )
-                new_labels = jump.select(
+                ).select(
                     F.col("a.node").alias("node"),
                     F.least(
-                        F.col("a.label"),
-                        F.coalesce(F.col("_jl"), F.col("a.label")),
+                        F.col("a.label"), F.coalesce(F.col("_jl"), F.col("a.label"))
                     ).alias("label"),
                     F.col("a._old").alias("_old"),
-                ).localCheckpoint(eager=True)
-            changed = new_labels.filter(F.col("label") < F.col("_old")).count()
-            if labels.is_cached:
-                labels.unpersist()
-            labels = new_labels.select("node", "label")
-            if changed == 0:
-                break
-            if (
-                auto
-                and not jump_on
-                and prev_changed is not None
-                and changed * 2 >= prev_changed
-            ):
-                # change rate not collapsing -> the frontier is
-                # advancing hop-by-hop (deep graph); switch to
-                # pointer jumping for every remaining round
-                jump_on = True
-            prev_changed = changed
-        else:
-            if changed > 0:
-                warnings.warn(
-                    f"NearDupClusters: label propagation did not converge "
-                    f"within max_iterations={self.max_iterations} "
-                    f"({changed} labels still changing); components may be "
-                    f"split — raise max_iterations for deep (chain-like) "
-                    f"candidate graphs",
-                    RuntimeWarning,
-                    stacklevel=2,
                 )
-        edges.unpersist()
-        # the final round's checkpoint blocks back the returned frame
-        # (callers get memoized components, as before)
-        return labels.select("node", F.col("label").alias("component"))
+            return stepped.observe("near_dup_changed", changed)
+
+        # the fixpoint stores each round with an eager localCheckpoint
+        # — a cache() alone keeps the logical plan, and the
+        # self-referencing join DOUBLES that plan every round: by
+        # round ~10 merely rendering the explain string for AQE OOMs
+        # the driver (observed on a 20-chain diameter-9 graph)
+        final, self.last_rounds_, _ = fixpoint(
+            labels,
+            step,
+            self.max_iterations,
+            "NearDupClusters label propagation",
+            done=lambda seen: observed_rows(seen, "near_dup_changed") == 0,
+        )
+        for spent in (edges, labels, *jumped):
+            release(spent)
+        return final.select("node", F.col("label").alias("component"))
 
     def transform(
         self,

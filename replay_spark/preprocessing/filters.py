@@ -12,19 +12,21 @@ Scale notes (100 TB design):
 * ``QuantileItemsFilter`` computes its count-distribution quantile
   distributedly (``percentile``) instead of the reference's
   ``toPandas()`` pull (``filters.py:972``);
-* the fixpoint loop in ``InteractionEntriesFilter`` caches each
-  iteration and unpersists the previous one, exactly like the
-  reference (``filters.py:221-223``), so lineage doesn't grow
-  unboundedly.
+* the fixpoint loop in ``InteractionEntriesFilter`` stores each
+  round with ``spark_utils.fixpoint``, which releases the round
+  before it, so lineage doesn't grow unboundedly.
 """
 
 from __future__ import annotations
 
+import sys
 from datetime import datetime, timedelta
 from typing import Literal, Optional, Union
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from replay_spark.utils.spark_utils import fixpoint, observed_rows
 
 __all__ = [
     "InteractionEntriesFilter",
@@ -53,8 +55,10 @@ class _BaseFilter:
 class InteractionEntriesFilter(_BaseFilter):
     """Iterated min/max interactions per user AND per item until fixpoint.
 
-    Alternates user-pass and item-pass (each pass can re-violate the
-    other's constraint) until neither drops a row. Parity: reference
+    A round is a user pass and then an item pass (each pass can
+    re-violate the other's constraint), stored by one observed
+    ``spark_utils.fixpoint`` checkpoint; the first round that drops
+    no row is the fixpoint. Parity: reference
     ``filters.py:57-227``.
     """
 
@@ -66,7 +70,6 @@ class InteractionEntriesFilter(_BaseFilter):
         max_inter_per_user: Optional[int] = None,
         min_inter_per_item: Optional[int] = None,
         max_inter_per_item: Optional[int] = None,
-        allow_caching: bool = True,
     ):
         self.query_column = query_column
         self.item_column = item_column
@@ -74,46 +77,45 @@ class InteractionEntriesFilter(_BaseFilter):
         self.max_inter_per_user = max_inter_per_user
         self.min_inter_per_item = min_inter_per_item
         self.max_inter_per_item = max_inter_per_item
-        self.allow_caching = allow_caching
         if min_inter_per_user is not None and max_inter_per_user is not None:
             assert min_inter_per_user < max_inter_per_user
         if min_inter_per_item is not None and max_inter_per_item is not None:
             assert min_inter_per_item < max_inter_per_item
 
     def _filter(self, interactions: DataFrame) -> DataFrame:
-        source = interactions
-        count = interactions.count()
-        dropped = [True, True]
-        idx = 0
-        while dropped[0] or dropped[1]:
-            if idx == 0:
-                min_i, max_i = self.min_inter_per_user, self.max_inter_per_user
-                agg_col, other_col = self.query_column, self.item_column
-            else:
-                min_i, max_i = self.min_inter_per_item, self.max_inter_per_item
-                agg_col, other_col = self.item_column, self.query_column
-            if min_i is None and max_i is None:
-                dropped[idx] = False
-            else:
-                filtered = interactions.withColumn(
+        # a pass with neither bound filters nothing, and its window
+        # is pruned with the column it would add
+        passes = (
+            (self.query_column, self.item_column,
+             self.min_inter_per_user, self.max_inter_per_user),
+            (self.item_column, self.query_column,
+             self.min_inter_per_item, self.max_inter_per_item),
+        )
+
+        def step(log: DataFrame, seen: dict) -> DataFrame:
+            log = log.observe("filter_in", F.count(F.lit(1)).alias("rows"))
+            for agg_col, other_col, min_i, max_i in passes:
+                log = log.withColumn(
                     "_cnt", F.count(other_col).over(Window.partitionBy(agg_col))
                 )
                 if min_i:
-                    filtered = filtered.filter(F.col("_cnt") >= min_i)
+                    log = log.filter(F.col("_cnt") >= min_i)
                 if max_i:
-                    filtered = filtered.filter(F.col("_cnt") <= max_i)
-                filtered = filtered.drop("_cnt")
-                if self.allow_caching:
-                    filtered.cache()
-                new_count = filtered.count()
-                # only once this pass's cache has run: an unpersist
-                # before it re-plans the pass over the whole chain
-                if self.allow_caching and interactions is not source:
-                    interactions.unpersist()
-                dropped[idx] = new_count != count
-                interactions, count = filtered, new_count
-            idx = (idx + 1) % 2
-        return interactions
+                    log = log.filter(F.col("_cnt") <= max_i)
+                log = log.drop("_cnt")
+            return log.observe("filter_out", F.count(F.lit(1)).alias("rows"))
+
+        # every round but the last drops a row, so the log's size
+        # bounds the rounds
+        filtered, _, _ = fixpoint(
+            interactions,
+            step,
+            sys.maxsize,
+            "InteractionEntriesFilter",
+            done=lambda seen: observed_rows(seen, "filter_out")
+            == observed_rows(seen, "filter_in"),
+        )
+        return filtered
 
 
 class MinCountFilter(_BaseFilter):

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import os
 import shutil
+import warnings
 from typing import Any, Callable, Iterable, Optional, Sequence, Tuple, Union
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -52,6 +53,9 @@ __all__ = [
     "local_df",
     "plan_bytes",
     "release",
+    "observed_metrics",
+    "observed_rows",
+    "fixpoint",
     "bucketed_apply_in_pandas",
     "map_rows",
 ]
@@ -480,6 +484,62 @@ def release(df: Optional[DataFrame]) -> None:
     plan = df._jdf.queryExecution().analyzed()
     if plan.getClass().getSimpleName() == "LogicalRDD":
         plan.rdd().unpersist(False)
+
+
+def observed_metrics(df: DataFrame) -> dict:
+    """``{name: {metric: value}}`` of the named ``observe``s that ran in
+    ``df``'s own execution (not in a checkpoint's); a branch AQE pruned
+    has no entry. Never an ``Observation``: it leaves the session an
+    unserializable manager that breaks Spark ML closures."""
+    out = {}
+    entries = df._jdf.queryExecution().observedMetrics().iterator()
+    while entries.hasNext():
+        entry = entries.next()
+        row = entry._2()
+        fields = row.schema().fieldNames()
+        out[entry._1()] = {f: row.get(i) for i, f in enumerate(fields)}
+    return out
+
+
+def observed_rows(seen: dict, name: str) -> int:
+    """The ``rows`` metric of the observe ``name``; 0 if it did not run."""
+    return seen.get(name, {}).get("rows", 0)
+
+
+def fixpoint(
+    state: DataFrame,
+    step: Callable[[DataFrame, dict], Optional[DataFrame]],
+    max_rounds: int,
+    name: str,
+    done: Optional[Callable[[dict], bool]] = None,
+) -> Tuple[DataFrame, int, dict]:
+    """Iterate ``state = step(state, seen)``; return ``(state, rounds,
+    seen)``. Each round is one eager ``localCheckpoint`` of ``step``'s
+    frame, and ``seen`` is that frame's :func:`observed_metrics` (``{}``
+    before the first round), so a round's convergence figures cost no
+    action of their own. Each spent round is released once the next is
+    stored; the input ``state`` and the returned one are the caller's.
+    Stops when ``done(seen)`` holds or ``step`` returns ``None``; runs
+    out of ``max_rounds`` with ``done`` still false, it warns."""
+    current, rounds, seen = state, 0, {}
+    while rounds < max_rounds:
+        frame = step(current, seen)
+        if frame is None:
+            return current, rounds, seen
+        stored, seen = frame.localCheckpoint(eager=True), observed_metrics(frame)
+        if current is not state:
+            release(current)
+        current, rounds = stored, rounds + 1
+        if done is not None and done(seen):
+            return current, rounds, seen
+    if done is not None:
+        warnings.warn(
+            f"{name} did not converge within {max_rounds} rounds (the last "
+            f"one observed {seen}); raise its round limit",
+            RuntimeWarning,
+            stacklevel=2,
+        )
+    return current, rounds, seen
 
 
 def bucketed_apply_in_pandas(

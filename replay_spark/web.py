@@ -41,7 +41,7 @@ from pyspark.sql.types import (
     StringType,
 )
 
-from replay_spark.utils.spark_utils import map_rows
+from replay_spark.utils.spark_utils import fixpoint, map_rows, release
 
 __all__ = [
     "parse_warc",
@@ -736,12 +736,13 @@ class LinkGraphRank:
     output: ``rank(v) = (1−d)/N + d·(Σ_{u→v} rank(u)/deg(u) +
     dangling/N)``.
 
-    Plan shape per iteration: ranks join the (src, out-degree) edge
-    table (one shuffle on src), a dst-keyed sum, and the dangling
-    mass folded in via a broadcast 1-row aggregate — NO driver-side
-    loops over data, no collect; ``iterations`` fixed jobs total,
-    with an eager ``localCheckpoint`` per iteration so lineage stays
-    flat (the BPE deep-lineage lesson). Float summation order makes
+    The distinct edge list is stored once, and rounds run on
+    ``spark_utils.fixpoint``: round 0 stores the (node, out-degree)
+    table and observes N; each iteration joins the ranks to the edges
+    (one shuffle on src), sums them per dst and joins back onto the
+    nodes, with N and the dangling mass the previous round observed
+    as literals — no broadcast aggregate, no collect, and no action
+    besides the stores. Float summation order makes
     ranks reproducible only to ~1e-15, so the contract gate is
     rows-only; convergence and closed-form graph values are pinned
     by tests. No reference counterpart (LLM-pipeline extension).
@@ -768,53 +769,61 @@ class LinkGraphRank:
         ranks sum to 1."""
         d = self.damping
         src, dst = self.src_column, self.dst_column
-        e = edges.select(
-            F.col(src).alias("_s"), F.col(dst).alias("_d")
-        ).distinct()
+        e = (
+            edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
+            .distinct()
+            .localCheckpoint(eager=True)
+        )
+        deg = e.groupBy("_s").agg(F.count("*").alias("_deg"))
         nodes = (
             e.select(F.col("_s").alias("node"))
             .union(e.select(F.col("_d").alias("node")))
             .distinct()
-            .persist()
         )
-        n_df = nodes.agg(F.count("*").alias("_n"))
-        deg = e.groupBy("_s").agg(F.count("*").alias("_deg"))
-        ranks = nodes.crossJoin(F.broadcast(n_df)).select(
-            "node", (F.lit(1.0) / F.col("_n")).alias("rank")
-        )
-        for _ in range(self.iterations):
-            with_deg = ranks.join(
-                deg, ranks["node"] == deg["_s"], how="left"
-            )
+        dangling = F.coalesce(
+            F.sum(F.when(F.col("_deg").isNull(), F.col("rank"))), F.lit(0.0)
+        ).alias("dangling")
+        size: dict = {}  # N, observed by round 0
+
+        def step(ranks: DataFrame, seen: dict) -> Optional[DataFrame]:
+            if not seen:  # round 0: every rank is 1 until N is known
+                return (
+                    nodes.join(deg, nodes["node"] == deg["_s"], how="left")
+                    .select("node", "_deg", F.lit(1.0).alias("rank"))
+                    .observe("pagerank", F.count("*").alias("n"), dangling)
+                )
+            observed = seen["pagerank"]
+            if observed.get("n") == 0:
+                return None
+            # round 1 reads round 0's unit ranks as 1/N
+            scale = 1.0 / observed["n"] if "n" in observed else 1.0
+            n = size.setdefault("n", observed.get("n"))
+            dm = observed["dangling"] * scale
             contrib = (
-                with_deg.filter(F.col("_deg").isNotNull())
-                .join(e, on="_s")
+                ranks.filter(F.col("_deg").isNotNull())
+                .join(e, ranks["node"] == e["_s"])
                 .select(
                     F.col("_d").alias("node"),
-                    (F.col("rank") / F.col("_deg")).alias("_c"),
+                    (F.col("rank") * scale / F.col("_deg")).alias("_c"),
                 )
                 .groupBy("node")
                 .agg(F.sum("_c").alias("_in"))
             )
-            dangling = with_deg.filter(F.col("_deg").isNull()).agg(
-                F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dm")
-            )
-            ranks = (
-                nodes.join(contrib, on="node", how="left")
-                .crossJoin(F.broadcast(n_df))
-                .crossJoin(F.broadcast(dangling))
+            return (
+                ranks.join(contrib, on="node", how="left")
                 .select(
                     "node",
+                    "_deg",
                     (
-                        (1.0 - d) / F.col("_n")
-                        + d
-                        * (
-                            F.coalesce(F.col("_in"), F.lit(0.0))
-                            + F.col("_dm") / F.col("_n")
-                        )
+                        (1.0 - d) / n
+                        + d * (F.coalesce(F.col("_in"), F.lit(0.0)) + dm / n)
                     ).alias("rank"),
                 )
-                .localCheckpoint(eager=True)
+                .observe("pagerank", dangling)
             )
-        nodes.unpersist()
-        return ranks
+
+        ranks, _, _ = fixpoint(
+            e, step, self.iterations + 1, "LinkGraphRank"
+        )
+        release(e)
+        return ranks.select("node", "rank")
